@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-stability fingerprints: for every `SparkEntry.queries` entry,
   * print one line of physical-plan node counts (join strategies,
-  * exchanges, cartesians, top-k) WITHOUT executing the query. Run at
-  * two scale factors and diff the outputs — identical fingerprints
-  * mean the optimizer picked the same strategy shape at both scales;
+  * exchanges, cartesians, top-k, hash and sort aggregates) WITHOUT
+  * executing the query. Run at two scale factors and diff the
+  * outputs — identical fingerprints mean the optimizer picked the
+  * same strategy shape at both scales;
   * a broadcast→SortMergeJoin flip on a grown build side is the only
   * diff a healthy decade step should show (and `cart` must stay 0
   * everywhere). Used for the sf0.1→sf1 plan audit (README scale
@@ -43,7 +44,8 @@ object PlanFingerprint {
         println(s"FP $name bhj=${n("BroadcastHashJoin")} smj=${n("SortMergeJoin")} " +
           s"shj=${n("ShuffledHashJoin")} bnlj=${n("BroadcastNestedLoopJoin")} " +
           s"cart=${n("CartesianProduct")} exch=${n("Exchange")} " +
-          s"top=${n("TakeOrderedAndProject")}")
+          s"top=${n("TakeOrderedAndProject")} hagg=${n("\\bHashAggregate")} " +
+          s"sagg=${n("SortAggregate")}")
       } catch { case e: Throwable =>
         println(s"FP $name ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
       }

@@ -34,6 +34,16 @@ object Relational {
   private def money(c: Column): Column = (sum(dec(c)) * 100).cast("long")
   private def money4(c: Column): Column = (sum(c) * 10000).cast("long")
 
+  /** Synthetic datom log for the store-semantics queries: one datom
+    * per row of `src` (an orders frame) on entity `o_orderkey`.
+    * `op = None` leaves the op column out — the store reads a log
+    * without one as all asserts. */
+  private def orderLog(src: DataFrame, v: Column, tx: Long, a: String = "order/price",
+      vLong: Column = lit(null).cast("long"), op: Option[Boolean] = None): DataFrame =
+    src.select(Seq(col("o_orderkey").cast("string").as("e"), lit(a).as("a"),
+      v.cast("string").as("v"), vLong.as("v_long"), lit(false).as("is_ref"),
+      lit(tx).as("tx")) ++ op.map(lit(_).as("op")): _*)
+
   /** Scratch dirs for the physical-layout queries (q83/q84/q85/q88):
     * one STABLE directory per (tag, source dir) instead of a fresh
     * createTempDirectory per invocation — repeated bench passes at
@@ -390,12 +400,8 @@ object Relational {
   def q30_time_travel(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val cents = (dec(col("o_totalprice")) * 100).cast("long")
-    def asLog(v: Column, tx: Long) = o
-      .select(col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-        v.cast("string").as("v"), lit(null).cast("long").as("v_long"),
-        lit(false).as("is_ref"), lit(tx).as("tx"))
-    val log = asLog(cents, 1L).unionByName(
-      asLog(cents * 2, 2L).filter(pmod(col("e").cast("long"), lit(10)) === 0))
+    val log = orderLog(o, cents, 1L).unionByName(
+      orderLog(o, cents * 2, 2L).filter(pmod(col("e").cast("long"), lit(10)) === 0))
     graft.store.Store.resolveAtHorizons(log, Seq(1L, 2L), Seq.empty)
       .groupBy(col("asof_tx"))
       .agg(count(lit(1)).as("n_entities"),
@@ -417,14 +423,10 @@ object Relational {
   def q66_since(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val k = col("o_orderkey")
-    def asLog(v: Column, tx: Long, pred: Column) = o.filter(pred)
-      .select(col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-        v.cast("string").as("v"), lit(null).cast("long").as("v_long"),
-        lit(false).as("is_ref"), lit(tx).as("tx"))
     val c = cents(col("o_totalprice"))
-    val log = asLog(c, 1L, lit(true))
-      .unionByName(asLog(c * 2, 2L, pmod(k, lit(10)) === 0))
-      .unionByName(asLog(c + 1, 3L, pmod(k, lit(100)) === 0))
+    val log = orderLog(o, c, 1L)
+      .unionByName(orderLog(o.filter(pmod(k, lit(10)) === 0), c * 2, 2L))
+      .unionByName(orderLog(o.filter(pmod(k, lit(100)) === 0), c + 1, 3L))
     graft.store.Store.sinceAtHorizons(log, Seq(0L, 1L, 2L), Seq.empty)
       .groupBy(col("since_tx"))
       .agg(count(lit(1)).as("n_entities"),
@@ -465,14 +467,10 @@ object Relational {
   def q39_retraction(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val cents = (dec(col("o_totalprice")) * 100).cast("long")
-    def asLog(v: Column, tx: Long, op: Boolean, pred: Column) = o.filter(pred)
-      .select(col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-        v.cast("string").as("v"), lit(null).cast("long").as("v_long"),
-        lit(false).as("is_ref"), lit(tx).as("tx"), lit(op).as("op"))
     val key = col("o_orderkey")
-    val log = asLog(cents, 1L, op = true, lit(true))
-      .unionByName(asLog(cents, 2L, op = false, pmod(key, lit(10)) === 0))
-      .unionByName(asLog(cents * 2, 3L, op = true, pmod(key, lit(20)) === 0))
+    val log = orderLog(o, cents, 1L, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(key, lit(10)) === 0), cents, 2L, op = Some(false)))
+      .unionByName(orderLog(o.filter(pmod(key, lit(20)) === 0), cents * 2, 3L, op = Some(true)))
     graft.store.Store.resolveAtHorizons(log, Seq(1L, 2L, 3L), Seq.empty)
       .groupBy(col("asof_tx"))
       .agg(count(lit(1)).as("n_entities"),
@@ -953,7 +951,7 @@ object Relational {
     // 21 s line item; state is now scanned with broadcast probes and
     // never re-shuffled, which is the point of a live index.
     val resolved = graft.store.Store.resolveIncrementalHybrid(
-      snapshot = log, basisTx = 1L, delta = retractions,
+      snapshot = log, delta = retractions,
       fullLog = log.unionByName(retractions), manyAttrs = manyAttrs)
       .select(col("a"), col("e"), col("v_long"))
     val isMany = col("a").isInCollection(manyAttrs)
@@ -1313,17 +1311,14 @@ object Relational {
     * only; the price rows never re-shuffle. */
   def q74_nohistory(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
-    val oe = col("o_orderkey").cast("string")
     val c = cents(col("o_totalprice"))
-    def dat(a: String, v: Column, vl: Column, tx: Long, op: Boolean, src: DataFrame) =
-      src.select(oe.as("e"), lit(a).as("a"), v.cast("string").as("v"),
-        vl.as("v_long"), lit(false).as("is_ref"), lit(tx).as("tx"), lit(op).as("op"))
-    val log = dat("order/price", c, c, 1L, op = true, o)
-      .unionByName(dat("order/heartbeat", lit("h1"), lit(null).cast("long"), 1L, op = true, o))
-      .unionByName(dat("order/heartbeat", lit("h2"), lit(null).cast("long"), 2L, op = true,
-        o.filter(pmod(col("o_orderkey"), lit(2)) === 0)))
-      .unionByName(dat("order/heartbeat", lit("h2"), lit(null).cast("long"), 3L, op = false,
-        o.filter(pmod(col("o_orderkey"), lit(10)) === 0)))
+    val hb = "order/heartbeat"
+    val log = orderLog(o, c, 1L, vLong = c, op = Some(true))
+      .unionByName(orderLog(o, lit("h1"), 1L, a = hb, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(col("o_orderkey"), lit(2)) === 0),
+        lit("h2"), 2L, a = hb, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(col("o_orderkey"), lit(10)) === 0),
+        lit("h2"), 3L, a = hb, op = Some(false)))
     graft.store.Store.dropNoHistory(log, Seq("order/heartbeat"), Seq.empty)
       .groupBy(col("a"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1376,7 +1371,7 @@ object Relational {
     val many = Seq("order/tag")
     val snapshot = Store.resolve(hist, many).localCheckpoint()
     val full = hist.unionByName(delta)
-    Store.resolveIncrementalHybrid(snapshot, 2L, delta, full, many)
+    Store.resolveIncrementalHybrid(snapshot, delta, full, many)
       .groupBy(col("a"))
       .agg(count(lit(1)).as("n_datoms"),
         coalesce(sum(col("v_long")), lit(0L)).cast("long").as("total_cents"),
@@ -1514,18 +1509,15 @@ object Relational {
   def q61_asof_instant(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    def asLog(v: Column, tx: Long) = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      v.cast("string").as("v"), v.as("v_long"),
-      lit(false).as("is_ref"), lit(tx).as("tx"), lit(true).as("op"))
     def txInstant(ms: Long, tx: Long) = s.range(1).select(
       lit(s"tx|$tx").as("e"), lit(graft.store.Store.txInstantAttr).as("a"),
       lit(java.time.Instant.ofEpochMilli(ms).toString).as("v"), lit(ms).as("v_long"),
       lit(false).as("is_ref"), lit(tx).as("tx"), lit(true).as("op"))
     val t1 = java.time.Instant.parse("2020-01-15T00:00:00Z").toEpochMilli
     val t2 = java.time.Instant.parse("2020-03-10T00:00:00Z").toEpochMilli
-    val log = asLog(c, 1L)
-      .unionByName(asLog(c * 2, 2L).filter(pmod(col("e").cast("long"), lit(10)) === 0))
+    val log = orderLog(o, c, 1L, vLong = c, op = Some(true))
+      .unionByName(orderLog(o, c * 2, 2L, vLong = c * 2, op = Some(true))
+        .filter(pmod(col("e").cast("long"), lit(10)) === 0))
       .unionByName(txInstant(t1, 1L))
       .unionByName(txInstant(t2, 2L))
     val horizons = Seq(
@@ -1556,12 +1548,9 @@ object Relational {
   def q58_excision(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    def asLog(v: Column, tx: Long, pred: Column) = o.filter(pred).select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      v.cast("string").as("v"), v.as("v_long"),
-      lit(false).as("is_ref"), lit(tx).as("tx"), lit(true).as("op"))
-    val log = asLog(c, 1L, lit(true))
-      .unionByName(asLog(c * 2, 2L, pmod(col("o_orderkey"), lit(10)) === 0))
+    val log = orderLog(o, c, 1L, vLong = c, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(col("o_orderkey"), lit(10)) === 0),
+        c * 2, 2L, vLong = c * 2, op = Some(true)))
     val targets = o.filter(pmod(col("o_orderkey"), lit(20)) === 0)
       .select(col("o_orderkey").cast("string").as("e"))
     val excised = graft.store.Store.excise(log, targets, tx = 3L)
@@ -1940,7 +1929,7 @@ object Relational {
     val full = hist.unionByName(delta)
     val restored = Store.resolve(full, many)                       // cold path
     val snapshot = Store.resolve(hist, many).localCheckpoint()
-    val live = Store.resolveIncrementalHybrid(snapshot, 2L, delta, full, many)
+    val live = Store.resolveIncrementalHybrid(snapshot, delta, full, many)
     def audit(df: DataFrame) = df.groupBy(col("a")).agg(
       count(lit(1)).as("n_datoms"),
       coalesce(sum(col("v_long")), lit(0L)).cast("long").as("total_cents"),

@@ -856,8 +856,7 @@ object Datalog {
             case td: TxDataClause =>
               require(eav.columns.contains("tx"),
                 "(tx-data …) needs a log view with a tx column")
-              val withOp =
-                if (eav.columns.contains("op")) eav else eav.withColumn("op", lit(true))
+              val withOp = graft.store.Store.withOp(eav)
               val base = resolve(td.t) match {
                 case TConst(ELong(v)) => withOp.filter(col("tx") === v)
                 case TVar(_) => withOp // a shared var joins below

@@ -88,15 +88,13 @@ object Explore {
     val withTx =
       if (eav.columns.contains("tx")) eav
       else eav.withColumn("tx", lit(null).cast("long"))
-    val withOp =
-      if (withTx.columns.contains("op")) withTx
-      else withTx.withColumn("op", lit(true))
+    val withOp = graft.store.Store.withOp(withTx)
     val inSet = tokens.map(t => s"'$t'").mkString(", ") // tokens are [a-z0-9]+, safe to inline
     withOp
       .filter(col("a").isInCollection(ftAttrs))
       .filter(tokens.map(t => array_contains(valueTokens, t)).reduce(_ && _))
       .groupBy(col("e"), col("a"), col("v"))
-      // same visibility + tiebreak as resolveCore: the latest (tx, op)
+      // same visibility + tiebreak as Store.resolve: the latest (tx, op)
       // event must be an assert, tx binds the last assert
       .agg(max_by(col("op"), struct(col("tx"), col("op"))).as("__vis"),
         max(when(col("op"), col("tx"))).as("tx"))

@@ -15,13 +15,11 @@ import graft.model.Mbrainz.{EntityType, InField}
   * numbering and contiguous grouping (SURVEY.md §2.5 "input order is
   * load-bearing").
   *
-  * Two scan paths:
-  *  - `readEntities`: driver-side streaming parse for single
-  *    golden-scale files (≤ 12 MB here);
-  *  - `readEntitiesDistributed`: one task per file — the 100 TB shape,
-  *    where a corpus is many files and each parses in parallel on
-  *    executors; `row_idx` is (fileOrdinal << 40) | formOrdinal so
-  *    order stays total without any cross-partition coordination.
+  * Scan paths:
+  *  - `readEntities`: the DataSource V2 connector, one partition per
+  *    file (the multi-file, 100 TB shape);
+  *  - `readEntitiesDriver`: driver-side parse, the reference the
+  *    connector is tested against.
   */
 object EdnSource {
 
@@ -95,23 +93,6 @@ object EdnSource {
       .map { case (form, i) => formToRow(i.toLong, form, t.inFields) }.toSeq
     spark.createDataFrame(spark.sparkContext.parallelize(rows, math.max(1, rows.size / 20000)),
       schemaFor(t))
-  }
-
-  /** One task per file; ordering token keeps a total order across the
-    * corpus (file order ≪ form order). RDD-based alternative kept for
-    * comparison — the DataSource V2 connector (sources.v2) is the
-    * primary multi-file path and adds column pruning. */
-  def readEntitiesDistributed(spark: SparkSession, paths: Seq[String], t: EntityType): DataFrame = {
-    val fields = t.inFields
-    val rdd = spark.sparkContext
-      .parallelize(paths.zipWithIndex, math.max(1, paths.size))
-      .flatMap { case (path, fileIdx) =>
-        val base = fileIdx.toLong << 40
-        parseFile(path).zipWithIndex.map { case (form, i) =>
-          formToRow(base | i.toLong, form, fields)
-        }
-      }
-    spark.createDataFrame(rdd, schemaFor(t))
   }
 
   // ── Dictionaries (`create-importer`, importer.clj:257-269) ─────────

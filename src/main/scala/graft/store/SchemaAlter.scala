@@ -38,8 +38,8 @@ object SchemaAlter {
   def resolveCardFlip(log: DataFrame, attr: String, alterTx: Long,
       manyAttrs: Seq[String]): DataFrame = {
     val pre = Store.resolve(log.filter(col("tx") <= alterTx), manyAttrs)
-    Store.resolveIncrementalHybrid(pre, alterTx, log.filter(col("tx") > alterTx),
-      log, manyAttrs :+ attr)
+    Store.resolveIncrementalHybrid(pre, log.filter(col("tx") > alterTx), log,
+      manyAttrs :+ attr)
   }
 
   /** Precondition for ADDING `:db/unique` to an existing attribute:

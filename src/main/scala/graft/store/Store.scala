@@ -44,13 +44,11 @@ final class Store(spark: SparkSession, val dir: String) {
       if (exists) spark.read.parquet(eavPath)
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Store.schema)
     // logs written before retraction support have no op column: assert
-    if (raw.columns.contains("op")) raw else raw.withColumn("op", lit(true))
+    Store.withOp(raw)
   }
 
   def append(datoms: DataFrame): Unit = {
-    val withOp =
-      if (datoms.columns.contains("op")) datoms else datoms.withColumn("op", lit(true))
-    withOp.select(Store.schema.fieldNames.map(col): _*)
+    Store.withOp(datoms).select(Store.schema.fieldNames.map(col): _*)
       .write.mode(SaveMode.Append).partitionBy("a").parquet(eavPath)
     markSnapshotStale()
   }
@@ -86,9 +84,7 @@ final class Store(spark: SparkSession, val dir: String) {
   def appendWithTupleAttrs(datoms: DataFrame, registry: SchemaRegistry): Unit = {
     val composites = registry.attrs.values.filter(_.tupleAttrs.nonEmpty).toSeq.sortBy(_.ident)
     if (composites.isEmpty) { append(datoms); return }
-    val withOp =
-      if (datoms.columns.contains("op")) datoms else datoms.withColumn("op", lit(true))
-    val batch = withOp.localCheckpoint()
+    val batch = Store.withOp(datoms).localCheckpoint()
     append(batch)
     val txRow = batch.agg(max(col("tx"))).collect()(0)
     val tx = if (txRow.isNullAt(0)) 0L else txRow.getLong(0)
@@ -188,9 +184,9 @@ final class Store(spark: SparkSession, val dir: String) {
   /** Cached resolved snapshot behind `current` — Datomic's live-index-
     * vs-log distinction: the log is the durable record, the current
     * view is a MAINTAINED index, not something every query rebuilds.
-    * Without it each query pays resolve's two full-log shuffles; with
-    * it the first `current` call materializes the snapshot and every
-    * later read scans it. Keyed by the registry's card-many attr set
+    * Without it each query pays a full-log resolve; with it the first
+    * `current` call materializes the snapshot and every later read
+    * scans it. Keyed by the registry's card-many attr set
     * (a different registry is a different resolution). Invalidated by
     * `append`/`retract`/`compact`. On a cluster the same role is
     * played by persisting to storage — `compact` is the offline form —
@@ -220,8 +216,8 @@ final class Store(spark: SparkSession, val dir: String) {
   private def markSnapshotStale(): Unit = synchronized { snapStale = true }
 
   /** Current-state view: card-many attrs accumulate (distinct union),
-    * card-one attrs resolve last-writer-wins by tx — one shuffle,
-    * grouped by (e, a). Served from the maintained snapshot when the
+    * card-one attrs resolve last-writer-wins by tx (`Store.resolve`,
+    * one shuffle). Served from the maintained snapshot when the
     * store hasn't changed since the last call. */
   def current(registry: SchemaRegistry): DataFrame = synchronized {
     val many = registry.attrs.values.filter(_.many).map(_.ident).toSet
@@ -261,19 +257,20 @@ final class Store(spark: SparkSession, val dir: String) {
         val newBasis = if (g.isNullAt(3)) 0L else g.getLong(3)
         val delta = eav.filter(isDelta)
         if (snapRows + deltaRows == newRows) {
-          // card-ONE retractions in the delta can resurface an older
-          // value the snapshot no longer carries — those (e, a) keys
-          // re-resolve from full history (hybrid), everything else
-          // merges snapshot + tail. Eager localCheckpoint:
-          // materializes BEFORE the old snapshot is dropped AND cuts
-          // lineage, so the plan doesn't grow with every increment
-          // (cluster note: swap for reliable checkpoint, same caveat
-          // as the Datalog fixpoints).
+          // unsafeRows == 0 is resolveIncremental's contract (no
+          // card-ONE retraction in the delta). Otherwise a retraction
+          // can resurface an older value the snapshot no longer
+          // carries — those (e, a) keys re-resolve from full history
+          // (hybrid), everything else merges snapshot + tail. Eager
+          // localCheckpoint: materializes BEFORE the old snapshot is
+          // dropped AND cuts lineage, so the plan doesn't grow with
+          // every increment (cluster note: swap for reliable
+          // checkpoint, same caveat as the Datalog fixpoints).
           val merged0 =
             if (unsafeRows == 0L)
-              Store.resolveIncremental(df, snapBasis, delta, many.toSeq.sorted)
+              Store.resolveIncremental(df, delta, many.toSeq.sorted)
             else
-              Store.resolveIncrementalHybrid(df, snapBasis, delta, eav, many.toSeq.sorted)
+              Store.resolveIncrementalHybrid(df, delta, eav, many.toSeq.sorted)
           val merged = merged0.localCheckpoint()
           df.unpersist(blocking = false)
           snapshot = Some((many, merged)); snapBasis = newBasis; snapRows = newRows
@@ -406,7 +403,12 @@ object Store {
     if (r.isNullAt(0)) -1L else r.getLong(0)
   }
 
-  /** Resolution core shared by `current` / `asOf` (and the q30/q39
+  /** A log without an `op` column (written before retraction support,
+    * or synthesized) is all asserts. */
+  private[graft] def withOp(df: DataFrame): DataFrame =
+    if (df.columns.contains("op")) df else df.withColumn("op", lit(true))
+
+  /** Resolution shared by `current` / `asOf` (and the q30/q39
     * harness queries), retraction-aware:
     *  - a value (e, a, v) is VISIBLE iff its latest op by tx is an
     *    assert (a retraction hides exactly the value it names; a
@@ -414,109 +416,71 @@ object Store {
     *  - card-many current = all visible values;
     *  - card-one current = the visible value with the greatest
     *    last-assert tx.
-    * Two keyed aggregations — (e, a, v) then (e, a) — both with
-    * map-side partials; the first collapses the log before the
-    * second, so the shape holds at scale. A log without retractions
-    * resolves identically to plain last-writer-wins. */
-  def resolve(log: DataFrame, manyAttrs: Seq[String]): DataFrame = {
-    // single-horizon fast path: no horizon explode, no asof_tx riding
-    // the two wide aggregations — the common current-state read should
-    // not pay the audit machinery
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    resolveCore(withOp, manyAttrs)
-  }
+    * A log without retractions resolves identically to plain
+    * last-writer-wins. Precondition: every tx is non-negative — a
+    * negative tx fails the job (see [[resolveKernel]]). */
+  def resolve(log: DataFrame, manyAttrs: Seq[String]): DataFrame =
+    resolveKernel(log, manyAttrs, Seq(lit(true)))
+      .select(col("e"), col("a"), col("s0.v").as("v"),
+        col("s0.v_long").as("v_long"), col("s0.is_ref").as("is_ref"))
 
   /** INCREMENTAL resolution — Datomic's live-index model: merge an
-    * already-resolved snapshot with a log DELTA (datoms with
-    * tx > `basisTx`) instead of re-resolving the full history.
-    * Snapshot rows re-enter the resolution as asserts AT the basis —
-    * sound because (a) the snapshot already collapsed everything at or
-    * before the basis, and (b) every delta event is strictly later, so
-    * per-(e,a,v) latest-event and per-(e,a) latest-assert orderings
-    * against snapshot rows are decided by the basis/delta tx gap
-    * alone. Delta retractions of card-MANY values kill their snapshot
-    * rows; stale retractions (naming a value the snapshot no longer
-    * carries) land in their own empty group and are no-ops, exactly
-    * as in a full resolve.
+    * already-resolved snapshot with a log DELTA (datoms strictly later
+    * than every datom the snapshot resolved) instead of re-resolving
+    * the full history.
     *
-    * SOUNDNESS LIMIT — card-ONE retractions: full resolution lets an
-    * older unretracted value RESURFACE when the current one is
-    * retracted (the PropertySpec reference model), but the snapshot
-    * has already discarded superseded values, so a delta that retracts
-    * a card-one datom cannot be merged by THIS path — `current`
-    * detects that shape and routes it to
-    * [[resolveIncrementalHybrid]], which re-resolves only the touched
-    * (e, a) keys from full history and merges the rest incrementally.
-    * Loader workloads are assert-only, so this pure-merge path is the
-    * common case. Cost: shuffle ∝ |current state| + |delta| — on a
-    * history-heavy 100 TB log this is the difference between
-    * re-reading every superseded version and touching only live rows
-    * plus the tail. */
-  def resolveIncremental(snapshot: DataFrame, basisTx: Long, delta: DataFrame,
-      manyAttrs: Seq[String]): DataFrame =
-    resolveIncremental(snapshot, basisTx, delta, manyAttrs,
-      deltaMayRetractCardOne = true)
-
-  /** `deltaMayRetractCardOne = false` is the LIVE-INDEX fast path: the
-    * caller asserts the delta contains no card-one retractions (the
-    * hybrid's safe branch guarantees it by construction — those keys
-    * were carved out; assert-only loader batches satisfy it trivially).
-    * Under that contract the merge needs NO snapshot shuffle at all:
-    * every delta event is strictly later than every snapshot row, so a
+    * Contract: the delta holds no card-ONE retractions. Full
+    * resolution lets an older unretracted value RESURFACE when the
+    * current one is retracted (the PropertySpec reference model), but
+    * the snapshot has already discarded superseded values. `current`
+    * proves the contract with its guard aggregation and routes any
+    * other delta to [[resolveIncrementalHybrid]], whose safe branch
+    * satisfies it by construction; assert-only loader batches satisfy
+    * it trivially.
+    *
+    * Under that contract the merge needs NO snapshot shuffle: every
+    * delta event is strictly later than every snapshot row, so a
     * snapshot row survives iff the delta never touches its key —
     * card-one (e, a) superseded by any delta assert, card-many
-    * (e, a, v) owned by whichever delta event is latest — and the
-    * delta resolves among itself. One scan of the snapshot with two
-    * anti-join probes of delta-derived key sets (AQE broadcasts them
-    * when the batch is small — un-hinted, the set size follows the
-    * batch) plus a resolveCore ∝ |delta|: shuffle cost follows the
-    * BATCH, not the store. The generic path (default) shuffles
-    * snapshot ∪ delta through the two keyed aggregations — correct
-    * for any delta, but at 100 TB it re-shuffles the entire live
-    * state per merge, which is exactly what a live index must not do. */
-  def resolveIncremental(snapshot: DataFrame, basisTx: Long, delta: DataFrame,
-      manyAttrs: Seq[String], deltaMayRetractCardOne: Boolean,
-      broadcastDeltaKeysMaxRows: Long = 5000000L): DataFrame = {
+    * (e, a, v) owned by whichever delta event is latest (a card-many
+    * retraction kills its snapshot row; a stale one is a no-op) — and
+    * the delta resolves among itself. One scan of the snapshot with
+    * two anti-join probes of delta-derived key sets plus a `resolve`
+    * ∝ |delta|: shuffle cost follows the BATCH, not the store — at
+    * 100 TB, re-shuffling the live state per merge is exactly what a
+    * live index must not do. */
+  def resolveIncremental(snapshot: DataFrame, delta: DataFrame,
+      manyAttrs: Seq[String], broadcastDeltaKeysMaxRows: Long = 5000000L): DataFrame = {
     val snapState = snapshot
       .select(col("e"), col("a"), col("v"), col("v_long"), col("is_ref"))
-    val withOp =
-      if (delta.columns.contains("op")) delta else delta.withColumn("op", lit(true))
-    val deltaLog = withOp.select(
+    val deltaLog = withOp(delta).select(
       col("e"), col("a"), col("v"), col("v_long"), col("is_ref"), col("tx"), col("op"))
-    if (deltaMayRetractCardOne) {
-      val snapAsLog = snapState
-        .withColumn("tx", lit(basisTx)).withColumn("op", lit(true))
-      resolveCore(snapAsLog.unionByName(deltaLog), manyAttrs)
-    } else {
-      val manyCol =
-        if (manyAttrs.isEmpty) lit(false) else col("a").isInCollection(manyAttrs)
-      // size-guarded broadcast pin on the key probes (the
-      // retractEntityTx discipline): the fast path's contract is a
-      // batch-sized delta, so one count (∝ batch) buys map-side
-      // anti-joins — without the pin AQE abandons the conversion past
-      // its ~10 MB threshold and plans SortMergeJoin shuffles of the
-      // full snapshot, the exact cost this path exists to remove
-      // (measured at sf10: +2 state shuffles, execution OOM
-      // in-suite). Outsize deltas fall back to shuffle joins, which
-      // stay correct at any scale.
-      val nDelta = deltaLog.count()
-      def hinted(df: DataFrame): DataFrame =
-        if (nDelta <= broadcastDeltaKeysMaxRows) broadcast(df) else df
-      val oneTouched = deltaLog.filter(!manyCol)
-        .select(col("e"), col("a")).distinct()
-      val manyTouched = deltaLog.filter(manyCol)
-        .select(col("e"), col("a"), col("v")).distinct()
-      val snapKept = snapState.filter(!manyCol)
-        .join(hinted(oneTouched), Seq("e", "a"), "left_anti")
-        .unionByName(snapState.filter(manyCol)
-          .join(hinted(manyTouched), Seq("e", "a", "v"), "left_anti"))
-      snapKept.unionByName(resolveCore(deltaLog, manyAttrs))
-    }
+    val manyCol =
+      if (manyAttrs.isEmpty) lit(false) else col("a").isInCollection(manyAttrs)
+    // size-guarded broadcast pin on the key probes (the
+    // retractEntityTx discipline): the contract is a batch-sized
+    // delta, so one count (∝ batch) buys map-side anti-joins — without
+    // the pin AQE abandons the conversion past its ~10 MB threshold
+    // and plans SortMergeJoin shuffles of the full snapshot, the exact
+    // cost this path exists to remove (measured at sf10: +2 state
+    // shuffles, execution OOM in-suite). Outsize deltas fall back to
+    // shuffle joins, which stay correct at any scale.
+    val nDelta = deltaLog.count()
+    def hinted(df: DataFrame): DataFrame =
+      if (nDelta <= broadcastDeltaKeysMaxRows) broadcast(df) else df
+    val oneTouched = deltaLog.filter(!manyCol)
+      .select(col("e"), col("a")).distinct()
+    val manyTouched = deltaLog.filter(manyCol)
+      .select(col("e"), col("a"), col("v")).distinct()
+    val snapKept = snapState.filter(!manyCol)
+      .join(hinted(oneTouched), Seq("e", "a"), "left_anti")
+      .unionByName(snapState.filter(manyCol)
+        .join(hinted(manyTouched), Seq("e", "a", "v"), "left_anti"))
+    snapKept.unionByName(resolve(deltaLog, manyAttrs))
   }
 
   /** Incremental resolution WITH card-one retractions in the delta —
-    * the hybrid path closing [[resolveIncremental]]'s soundness limit.
+    * the hybrid path closing [[resolveIncremental]]'s contract.
     * A card-ONE retraction needs the pre-snapshot runner-up value
     * (full resolution lets an older unretracted value resurface), so
     * the (e, a) keys it touches are carved out and re-resolved from
@@ -528,14 +492,13 @@ object Store {
     * touched ATTRIBUTES' partitions (a driver-side distinct over the
     * key set's attrs — bounded by the schema's card-one attr count),
     * so re-resolution reads the touched attrs' history, not the log. */
-  def resolveIncrementalHybrid(snapshot: DataFrame, basisTx: Long, delta: DataFrame,
+  def resolveIncrementalHybrid(snapshot: DataFrame, delta: DataFrame,
       fullLog: DataFrame, manyAttrs: Seq[String],
       broadcastTouchedMaxRows: Long = 5000000L): DataFrame = {
-    val withOp =
-      if (delta.columns.contains("op")) delta else delta.withColumn("op", lit(true))
+    val deltaLog = withOp(delta)
     val manyCol =
       if (manyAttrs.isEmpty) lit(false) else col("a").isInCollection(manyAttrs)
-    val touchedKeys = withOp.filter(!col("op") && !manyCol)
+    val touchedKeys = deltaLog.filter(!col("op") && !manyCol)
       .select(col("e"), col("a")).distinct().localCheckpoint(false)
     // ONE driver job answers both bounded questions: the attr list
     // (attr-level pruning for the history re-read — retraction
@@ -543,7 +506,6 @@ object Store {
     // key count for the broadcast size guard. The per-attr rollup is
     // bounded by the schema's card-one attr count, so the collect
     // stays driver-safe; it also materializes the checkpoint.
-    // Previously these were two jobs (attrs distinct + count).
     val attrCounts = touchedKeys.groupBy(col("a"))
       .agg(count(lit(1)).as("n")).collect()
     val touchedAttrs = attrCounts.map(_.getString(0)).toSeq
@@ -558,13 +520,12 @@ object Store {
     val tk = if (attrCounts.map(_.getLong(1)).sum <= broadcastTouchedMaxRows)
       broadcast(touchedKeys) else touchedKeys
     // the safe branch's delta has NO card-one retractions BY
-    // CONSTRUCTION (exactly those keys were carved out above) → the
-    // no-snapshot-shuffle merge applies: the live state is scanned
+    // CONSTRUCTION (exactly those keys were carved out above), which
+    // is resolveIncremental's contract: the live state is scanned
     // once with anti-join probes, never re-shuffled
     val safe = resolveIncremental(
-      snapshot.join(tk, Seq("e", "a"), "left_anti"), basisTx,
-      withOp.join(tk, Seq("e", "a"), "left_anti"), manyAttrs,
-      deltaMayRetractCardOne = false)
+      snapshot.join(tk, Seq("e", "a"), "left_anti"),
+      deltaLog.join(tk, Seq("e", "a"), "left_anti"), manyAttrs)
     val touched = resolve(
       fullLog.filter(col("a").isInCollection(touchedAttrs))
         .join(tk, Seq("e", "a"), "left_semi"), manyAttrs)
@@ -573,35 +534,52 @@ object Store {
 
   /** Resolution at SEVERAL transaction horizons in ONE pass — the
     * audit/reporting shape ("state at end of each month"): the log
-    * scans once, each datom fans out to the horizons that can see it,
-    * and the same two keyed aggregations run with `asof_tx` prefixed
-    * to their keys. N horizons cost one scan + shuffle ∝ visible
-    * rows, not N separate resolve jobs. Output adds `asof_tx`. */
+    * scans once and each horizon is a set of conditional aggregate
+    * columns over the same collapse (see [[resolveKernel]]), so N
+    * horizons cost one scan + shuffle ∝ the log, not N separate
+    * resolve jobs. Duplicate horizons collapse. Output adds `asof_tx`.
+    * Precondition: every tx is non-negative (checked per row). */
   def resolveAtHorizons(log: DataFrame, horizons: Seq[Long],
-      manyAttrs: Seq[String]): DataFrame = {
-    require(horizons.nonEmpty, "need at least one horizon")
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    resolveCoreHorizons(withOp, horizons, "asof_tx", since = false, manyAttrs)
-  }
+      manyAttrs: Seq[String]): DataFrame =
+    resolveHorizons(log, horizons, "asof_tx", h => col("tx") <= h, manyAttrs)
 
   /** `d/since` resolution at several horizons in one pass — the
-    * incremental-consumer mirror of [[resolveAtHorizons]]: each datom
-    * fans out to the horizons it was asserted AFTER (`tx > since_tx`),
-    * and latest-wins resolution runs over only that suffix of the
-    * log. Matches Datomic's since-db semantics: an entity whose
-    * current value predates the horizon is invisible, not stale —
-    * since filters the log, it does not rewind it. Same cost shape:
-    * one scan, shuffle ∝ visible rows. Output adds `since_tx`. */
+    * incremental-consumer mirror of [[resolveAtHorizons]]: horizon h
+    * sees the datoms asserted AFTER it (`tx > h`), and latest-wins
+    * resolution runs over only that suffix of the log. Matches
+    * Datomic's since-db semantics: an entity whose current value
+    * predates the horizon is invisible, not stale — since filters the
+    * log, it does not rewind it. Same cost shape: one scan, shuffle ∝
+    * the log. Output adds `since_tx`. Precondition: every tx is
+    * non-negative (checked per row, visible or not). */
   def sinceAtHorizons(log: DataFrame, horizons: Seq[Long],
-      manyAttrs: Seq[String]): DataFrame = {
+      manyAttrs: Seq[String]): DataFrame =
+    resolveHorizons(log, horizons, "since_tx", h => col("tx") > h, manyAttrs)
+
+  /** The kernel at each horizon's visibility predicate; the horizon
+    * column materializes by exploding the COLLAPSED state at the very
+    * end. */
+  private def resolveHorizons(log: DataFrame, horizons: Seq[Long], hname: String,
+      vis: Long => Column, manyAttrs: Seq[String]): DataFrame = {
     require(horizons.nonEmpty, "need at least one horizon")
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    resolveCoreHorizons(withOp, horizons, "since_tx", since = true, manyAttrs)
+    val hs = horizons.distinct
+    resolveKernel(log, manyAttrs, hs.map(vis))
+      .select(col("e"), col("a"), explode(array(hs.zipWithIndex.map { case (h, i) =>
+        struct(lit(h).as("h"), col(s"s$i").as("s")) }: _*)).as("x"))
+      .filter(col("x.s").isNotNull)
+      .select(col("x.h").as(hname), col("e"), col("a"),
+        col("x.s.v").as("v"), col("x.s.v_long").as("v_long"),
+        col("x.s.is_ref").as("is_ref"))
   }
 
-  /** The shared two-aggregation core.
+  /** THE resolution kernel behind `resolve`, the multi-horizon reads
+    * and `dropNoHistory`. `vis(i)` is horizon i's visibility predicate
+    * over log rows (`lit(true)`: the whole log). Output: `e`, `a` and
+    * one struct column `s<i>` per horizon holding the visible
+    * (v, v_long, is_ref, tx) — `tx` the value's last assert — or null
+    * where nothing is visible; one row per (e, a) for card-one attrs
+    * (the pick), per visible (e, a, v) for card-many.
+    *
     * Tiebreaks are EXPLICIT in both pick orderings — a bare max_by
     * keeps the first-encountered row among ties, which is partition-
     * order-dependent (caught by PropertySpec's reference model):
@@ -610,156 +588,81 @@ object Store {
     *    we resolve it deterministically;
     *  - same-tx double-assert on a card-one attr → max v wins.
     *
-    * Plan shape (round 13): the old form aggregated with
-    * `max_by(struct(op, v_long, is_ref), struct(tx, op))` — struct-typed
-    * aggregation buffers are not UnsafeRow-mutable, so BOTH aggregations
-    * planned as SortAggregate (a full sort of the log by (e, a, v) and a
-    * second sort of the collapsed state by (e, a)), behind two separate
-    * exchanges. Decomposed as below, every first-aggregation buffer is a
-    * mutable primitive — HashAggregate, no sort — and the explicit
-    * repartition on `e` (a subset of BOTH aggregations' grouping keys;
-    * NOT (e, a) — single-attr logs constant-fold `a` to a literal,
-    * which breaks the exchange/grouping semantic match and re-inserts
-    * the second exchange) satisfies both distributions, so the whole
-    * resolve runs behind ONE exchange; only the card-one pick still
-    * sorts, over the collapsed state rather than the raw log. Semantics are unchanged:
+    * Plan shape: every buffer of the per-(e, a, v) collapse is a
+    * mutable primitive — HashAggregate, no sort (a struct-typed buffer
+    * is not UnsafeRow-mutable and would force a SortAggregate over the
+    * raw log):
     *  - visible iff latest event by (tx, op) is an assert ⇔
-    *    max assert-tx ≥ max retract-tx (tie → assert, as before);
+    *    max assert-tx ≥ max retract-tx (tie → assert);
     *  - the surviving (v_long, is_ref) ride a max_by ordered by the
     *    (tx, op) pair packed into one long — exact, not an assumption
-    *    of per-(e,a,v) constancy. Store txs are non-negative and far
-    *    below 2^62 (Datomic t's fit in 2^42), so the shift is safe. */
-  private def resolveCore(tagged: DataFrame,
-      manyAttrs: Seq[String]): DataFrame = {
+    *    of per-(e, a, v) constancy.
+    * The explicit repartition on `e` (a subset of BOTH aggregations'
+    * grouping keys; NOT (e, a) — single-attr logs constant-fold `a` to
+    * a literal, which breaks the exchange/grouping semantic match and
+    * re-inserts a second exchange) satisfies both distributions, so
+    * the whole resolve runs behind ONE exchange; only the card-one
+    * pick sorts, over the collapsed state rather than the raw log.
+    *
+    * The packed ordering needs tx ≥ 0 (Datomic t's fit in 2^42, far
+    * below 2^62). The check rides the projection every input row
+    * passes through, so a negative tx fails the job instead of
+    * misordering, at no extra job. */
+  private def resolveKernel(log: DataFrame, manyAttrs: Seq[String],
+      vis: Seq[Column]): DataFrame = {
+    val checked = withOp(log).withColumn("tx", when(col("tx") < 0,
+      raise_error(concat(lit("negative tx in a resolved log: "), col("tx").cast("string"))))
+      .otherwise(col("tx")))
     val ord = shiftleft(col("tx"), 1) + col("op").cast("long")
-    val latest = tagged.repartition(col("e"))
-      .groupBy(col("e"), col("a"), col("v"))
-      .agg(
-        max(when(col("op"), col("tx"))).as("assert_tx"),
-        max(when(!col("op"), col("tx"))).as("retract_tx"),
-        max_by(col("v_long"), ord).as("v_long"),
-        max_by(col("is_ref"), ord).as("is_ref"))
-      .filter(col("assert_tx").isNotNull &&
-        (col("retract_tx").isNull || col("assert_tx") >= col("retract_tx")))
-    val one = latest.filter(!col("a").isInCollection(manyAttrs))
-      .groupBy(col("e"), col("a"))
-      .agg(max_by(struct(col("v"), col("v_long"), col("is_ref")),
-        struct(col("assert_tx"), col("v"))).as("s"))
-      .select(col("e"), col("a"), col("s.v").as("v"),
-        col("s.v_long").as("v_long"), col("s.is_ref").as("is_ref"))
-    val many = latest.filter(col("a").isInCollection(manyAttrs))
-      .select(col("e"), col("a"), col("v"), col("v_long"), col("is_ref"))
-    one.unionByName(many)
-  }
-
-  /** Multi-horizon resolution WITHOUT the horizon explode: the old
-    * shape fanned every log row out to its visible horizons BEFORE the
-    * first aggregation, so N horizons shuffled and aggregated N× the
-    * log. Here the single (e, a, v) collapse computes each horizon's
-    * latest-event state as N conditional aggregate columns (all
-    * primitive buffers — HashAggregate), the card-one pick runs per
-    * horizon inside one sorted pass keyed (e, a), and the horizon
-    * column materializes by exploding the COLLAPSED state at the very
-    * end. One exchange total (see [[resolveCore]]), shuffle ∝ the log,
-    * not N× the log. `since = true` flips the visibility predicate to
-    * `tx > h` (d/since); duplicate horizons collapse as the explode
-    * form did. Output and tiebreak semantics are byte-identical. */
-  private def resolveCoreHorizons(withOp: DataFrame, horizons: Seq[Long],
-      hname: String, since: Boolean, manyAttrs: Seq[String]): DataFrame = {
-    val hs = horizons.distinct.zipWithIndex
-    def vis(h: Long) = if (since) col("tx") > h else col("tx") <= h
-    val ord = shiftleft(col("tx"), 1) + col("op").cast("long")
-    val aggs = hs.flatMap { case (h, i) => Seq(
-      max(when(col("op") && vis(h), col("tx"))).as(s"at$i"),
-      max(when(!col("op") && vis(h), col("tx"))).as(s"rt$i"),
-      max_by(col("v_long"), when(vis(h), ord)).as(s"vl$i"),
-      max_by(col("is_ref"), when(vis(h), ord)).as(s"ir$i")) }
-    val grouped = withOp.repartition(col("e"))
-      .groupBy(col("e"), col("a"), col("v"))
-      .agg(aggs.head, aggs.tail: _*)
+    val hs = vis.indices
+    val aggs = hs.flatMap { i => Seq(
+      max(when(col("op") && vis(i), col("tx"))).as(s"at$i"),
+      max(when(!col("op") && vis(i), col("tx"))).as(s"rt$i"),
+      max_by(col("v_long"), when(vis(i), ord)).as(s"vl$i"),
+      max_by(col("is_ref"), when(vis(i), ord)).as(s"ir$i")) }
     def visible(i: Int) = col(s"at$i").isNotNull &&
       (col(s"rt$i").isNull || col(s"at$i") >= col(s"rt$i"))
-    def state(i: Int) = struct(col("v").as("v"),
-      col(s"vl$i").as("v_long"), col(s"ir$i").as("is_ref"))
-    def unpack(df: DataFrame) = df
-      .filter(col("x.s").isNotNull)
-      .select(col("x.h").as(hname), col("e"), col("a"),
-        col("x.s.v").as("v"), col("x.s.v_long").as("v_long"),
-        col("x.s.is_ref").as("is_ref"))
-    val onePicks = hs.map { case (_, i) =>
-      max_by(when(visible(i), state(i)),
-        when(visible(i), struct(col(s"at$i"), col("v")))).as(s"pick$i") }
-    val one = unpack(grouped.filter(!col("a").isInCollection(manyAttrs))
+    // each horizon's state and pick ordering (null where invisible —
+    // max_by skips null orderings) are built once per collapsed row,
+    // so the card-one pick aggregates plain columns
+    val collapsed = checked.repartition(col("e"))
+      .groupBy(col("e"), col("a"), col("v"))
+      .agg(aggs.head, aggs.tail: _*)
+      .filter(hs.map(visible).reduce(_ || _))
+      .select(col("e") +: col("a") +: hs.flatMap { i => Seq(
+        struct(col("v"), col(s"vl$i").as("v_long"), col(s"ir$i").as("is_ref"),
+          col(s"at$i").as("tx")).as(s"st$i"),
+        when(visible(i), struct(col(s"at$i"), col("v"))).as(s"o$i")) }: _*)
+    val picks = hs.map(i => max_by(col(s"st$i"), col(s"o$i")).as(s"s$i"))
+    val one = collapsed.filter(!col("a").isInCollection(manyAttrs))
       .groupBy(col("e"), col("a"))
-      .agg(onePicks.head, onePicks.tail: _*)
-      .select(col("e"), col("a"), explode(array(hs.map { case (h, i) =>
-        struct(lit(h).as("h"), col(s"pick$i").as("s")) }: _*)).as("x")))
-    val many = unpack(grouped.filter(col("a").isInCollection(manyAttrs))
-      .select(col("e"), col("a"), explode(array(hs.map { case (h, i) =>
-        struct(lit(h).as("h"), when(visible(i), state(i)).as("s")) }: _*)).as("x")))
+      .agg(picks.head, picks.tail: _*)
+    val many = collapsed.filter(col("a").isInCollection(manyAttrs))
+      .select(col("e") +: col("a") +: hs.map { i =>
+        when(col(s"o$i").isNotNull, col(s"st$i")).as(s"s$i") }: _*)
     one.unionByName(many)
   }
 
-  /** Core of `:db/noHistory` trimming over any log: rows of `nhAttrs`
-    * reduce to their currently-VISIBLE datoms (same per-value
-    * resolution as `resolve` — latest (tx, op) event per (e, a, v)
-    * must be an assert; card-one then keeps the latest assert per
-    * (e, a)); retraction markers and superseded values vanish. Every
-    * other attr passes through untouched. Shuffles key on the
-    * noHistory attrs' datoms only — the full log never re-shuffles. */
+  /** Core of `:db/noHistory` trimming over a datom log (exactly the
+    * `Store.schema` columns; `op` may be absent): rows of `nhAttrs`
+    * reduce to their currently-VISIBLE datoms — the kernel's
+    * resolution, with the winner's last assert-tx restored as `tx`
+    * and op = true by construction; retraction markers and superseded
+    * values vanish. Every other attr passes through untouched. The
+    * shuffle keys on the noHistory attrs' datoms only — the full log
+    * never re-shuffles. Precondition: every noHistory datom's tx is
+    * non-negative (checked per row). */
   def dropNoHistory(log: DataFrame, nhAttrs: Seq[String],
       nhManyAttrs: Seq[String]): DataFrame = {
-    val withOp =
-      if (log.columns.contains("op")) log else log.withColumn("op", lit(true))
-    val cols = withOp.columns
-    val nhRows = withOp.filter(col("a").isInCollection(nhAttrs))
-    val isMany =
-      if (nhManyAttrs.isEmpty) lit(false) else col("a").isInCollection(nhManyAttrs)
-    // Fast shape for the standard datom schema (see resolveCore's plan
-    // note): primitive-buffer aggregates → HashAggregate for the
-    // per-value collapse, one shared (e, a) exchange for both
-    // aggregations. The surviving row's tx is its last assert-tx (the
-    // visible winner by (tx, op) IS the latest assert) and its op is
-    // true by construction, so the row reconstructs exactly. Logs with
-    // extra caller columns keep the generic struct-pick shape.
-    val kept = if (cols.toSet == Set("e", "a", "v", "v_long", "is_ref", "tx", "op")) {
-      val ord = shiftleft(col("tx"), 1) + col("op").cast("long")
-      val perValue = nhRows.repartition(col("e"))
-        .groupBy(col("e"), col("a"), col("v"))
-        .agg(
-          max(when(col("op"), col("tx"))).as("assert_tx"),
-          max(when(!col("op"), col("tx"))).as("retract_tx"),
-          max_by(col("v_long"), ord).as("v_long"),
-          max_by(col("is_ref"), ord).as("is_ref"))
-        .filter(col("assert_tx").isNotNull &&
-          (col("retract_tx").isNull || col("assert_tx") >= col("retract_tx")))
-      def restore(df: DataFrame) = df.select(
-        col("e"), col("a"), col("v"), col("v_long"), col("is_ref"),
-        col("assert_tx").as("tx"), lit(true).as("op"))
-      restore(perValue.filter(isMany))
-        .unionByName(restore(perValue
-          .filter(!isMany)
-          .groupBy(col("e"), col("a"))
-          .agg(max_by(struct(col("v"), col("v_long"), col("is_ref"),
-            col("assert_tx")), struct(col("assert_tx"), col("v"))).as("s"))
-          .select(col("e"), col("a"), col("s.v").as("v"),
-            col("s.v_long").as("v_long"), col("s.is_ref").as("is_ref"),
-            col("s.assert_tx").as("assert_tx"))))
-    } else {
-      def all = struct(cols.map(col): _*)
-      val perValue = nhRows
-        .groupBy(col("e"), col("a"), col("v"))
-        .agg(max_by(all, struct(col("tx"), col("op"))).as("s"))
-        .select(col("s.*"))
-        .filter(col("op"))
-      perValue.filter(isMany)
-        .unionByName(perValue
-          .filter(!isMany)
-          .groupBy(col("e"), col("a"))
-          .agg(max_by(all, struct(col("tx"), col("v"))).as("s"))
-          .select(col("s.*")))
-    }
-    withOp.filter(!col("a").isInCollection(nhAttrs)).unionByName(kept)
+    val datoms = withOp(log)
+    require(datoms.columns.toSet == schema.fieldNames.toSet,
+      s"dropNoHistory needs a datom log with columns ${schema.fieldNames.mkString(", ")}; " +
+        s"got ${datoms.columns.mkString(", ")}")
+    val kept = resolveKernel(datoms.filter(col("a").isInCollection(nhAttrs)),
+      nhManyAttrs, Seq(lit(true)))
+      .select(col("e"), col("a"), col("s0.*"))
+      .withColumn("op", lit(true))
+    datoms.filter(!col("a").isInCollection(nhAttrs)).unionByName(kept)
   }
 
   /** AVET index-range scan (Datomic `d/index-range`): the datoms of
@@ -965,9 +868,7 @@ object Store {
     * resolution pass over (visible state + tx rows) — the tx side is
     * typically tiny, so the union adds no shuffle of its own. */
   def withDb(state: DataFrame, txData: DataFrame, manyAttrs: Seq[String]): DataFrame = {
-    val aligned =
-      if (txData.columns.contains("op")) txData else txData.withColumn("op", lit(true))
-    resolve(state.unionByName(aligned, allowMissingColumns = true), manyAttrs)
+    resolve(state.unionByName(withOp(txData), allowMissingColumns = true), manyAttrs)
   }
 
   /** The maintenance datoms ONE batch implies for ONE composite — the
@@ -985,9 +886,7 @@ object Store {
     * set; cost follows the batch, not the log. */
   def tupleMaintenanceTx(logAfter: DataFrame, batch: DataFrame, tupleAttr: String,
       srcAttrs: Seq[String], tx: Long): DataFrame = {
-    val withOp =
-      if (batch.columns.contains("op")) batch else batch.withColumn("op", lit(true))
-    val touched = withOp.filter(col("a").isInCollection(srcAttrs))
+    val touched = withOp(batch).filter(col("a").isInCollection(srcAttrs))
       .select(col("e")).distinct()
     val srcState = resolve(
       logAfter.filter(col("a").isInCollection(srcAttrs))
@@ -1207,10 +1106,10 @@ object Store {
       if (deadRows <= broadcastDeadMaxRows) broadcast(deadUnion) else deadUnion
     // One scan of state: mark entity hits and inbound-ref hits via two
     // map-side probes of the same broadcast dead set, then dedupe on
-    // the (e, a, v) KEY over a narrow projection. v_long/is_ref are
+    // the (e, a, v) KEY over a narrow projection: v_long/is_ref are
     // functionally determined by (e, a, v) and tx/op are rewritten
-    // here, so a row-level distinct over full-width rows (the old
-    // shape) shuffled the long entity-id strings twice for nothing.
+    // here, so a row-level distinct over full-width rows would shuffle
+    // the long entity-id strings for nothing.
     state
       .join(dead.select(col("e").as("__dead_e")),
         col("e") === col("__dead_e"), "left")

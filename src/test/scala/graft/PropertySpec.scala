@@ -201,7 +201,7 @@ class PropertySpec extends AnyFunSuite {
     val basis = 3L
     samples(genLog, 60).foreach { rows0 =>
       // the incremental contract excludes card-ONE retractions in the
-      // delta (current() guards and rebuilds there) — flip those to
+      // delta (current() routes those to the hybrid) — flip them to
       // asserts so every generated case is a mergeable shape
       val rows = rows0.map { case (e, a, v, tx, op) =>
         if (tx > basis && !op && a != "many1") (e, a, v, tx, true) else (e, a, v, tx, op)
@@ -214,16 +214,11 @@ class PropertySpec extends AnyFunSuite {
           .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
       val full = toSet(graft.store.Store.resolve(df, Seq("many1")))
       val snap = graft.store.Store.resolve(df.filter(col("tx") <= basis), Seq("many1"))
+      // the no-snapshot-shuffle merge's anti-join formulation must
+      // agree with full resolution on every mergeable delta
       val inc = toSet(graft.store.Store.resolveIncremental(
-        snap, basis, df.filter(col("tx") > basis), Seq("many1")))
+        snap, df.filter(col("tx") > basis), Seq("many1")))
       assert(inc === full, s"log: $rows")
-      // same contract through the no-snapshot-shuffle merge (the
-      // deltas here are mergeable by construction, so the fast path's
-      // anti-join formulation must agree with the generic re-resolve)
-      val incFast = toSet(graft.store.Store.resolveIncremental(
-        snap, basis, df.filter(col("tx") > basis), Seq("many1"),
-        deltaMayRetractCardOne = false))
-      assert(incFast === full, s"fast-path log: $rows")
     }
   }
 
@@ -254,7 +249,7 @@ class PropertySpec extends AnyFunSuite {
       val full = toSet(graft.store.Store.resolve(df, Seq("many1")))
       val snap = graft.store.Store.resolve(df.filter(col("tx") <= basis), Seq("many1"))
       val hyb = toSet(graft.store.Store.resolveIncrementalHybrid(
-        snap, basis, df.filter(col("tx") > basis), df, Seq("many1")))
+        snap, df.filter(col("tx") > basis), df, Seq("many1")))
       assert(hyb === full, s"log: $rows")
     }
   }
@@ -268,6 +263,8 @@ class PropertySpec extends AnyFunSuite {
     val st = new Store(spark, java.nio.file.Files.createTempDirectory("hybinc").toString)
     val reg = new SchemaRegistry(Map(
       "p/one" -> AttrDef("p/one", "string", many = false, uniqueIdentity = false,
+        uniqueValue = false, component = false, fulltext = false),
+      "p/many" -> AttrDef("p/many", "string", many = true, uniqueIdentity = false,
         uniqueValue = false, component = false, fulltext = false)))
     def datoms(rows: Seq[(String, String, String, Long, Boolean)]) =
       rows.toDF("e", "a", "v", "tx", "op")
@@ -285,10 +282,48 @@ class PropertySpec extends AnyFunSuite {
     assert(st.lastCurrentIncremental,
       "card-one retraction should take the hybrid incremental path")
     assert(got === Set(("e1", "p/one", "v1")))
-    val fullResolve = Store.resolve(st.eav, Seq.empty)
+    def fullResolve = Store.resolve(st.eav, Seq("p/many"))
       .select("e", "a", "v").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(got === fullResolve)
+    // tx4 asserts a new card-one value and two card-many values, tx5
+    // retracts a card-many value the snapshot now holds: no card-ONE
+    // retraction, so both merges take the live-index path (no
+    // snapshot shuffle)
+    st.append(datoms(Seq(("e2", "p/one", "w1", 4L, true),
+      ("e1", "p/many", "m1", 4L, true), ("e1", "p/many", "m2", 4L, true))))
+    st.current(reg).count()
+    assert(st.lastCurrentIncremental, "an assert-only append should merge incrementally")
+    st.retract(datoms(Seq(("e1", "p/many", "m1", 5L, true))).drop("op"))
+    val got2 = st.current(reg).select("e", "a", "v").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(st.lastCurrentIncremental, "a card-many retraction should merge incrementally")
+    assert(got2 === Set(("e1", "p/one", "v1"), ("e2", "p/one", "w1"), ("e1", "p/many", "m2")))
+    assert(got2 === fullResolve)
+  }
+
+  test("every resolve entry point fails loudly on a negative tx") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.store.Store
+    // the packed (tx << 1) + op ordering misorders a negative tx, so
+    // the kernel rejects one instead of resolving it silently wrong
+    val log = Seq(("e1", "nh1", "v1", -1L, true), ("e1", "nh1", "v2", 1L, true))
+      .toDF("e", "a", "v", "tx", "op")
+      .withColumn("v_long", lit(null).cast("long"))
+      .withColumn("is_ref", lit(false))
+    val entryPoints = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "resolve" -> (() => Store.resolve(log, Seq.empty)),
+      "resolveAtHorizons" -> (() => Store.resolveAtHorizons(log, Seq(1L), Seq.empty)),
+      "sinceAtHorizons" -> (() => Store.sinceAtHorizons(log, Seq(0L), Seq.empty)),
+      "dropNoHistory" -> (() => Store.dropNoHistory(log, Seq("nh1"), Seq.empty)))
+    entryPoints.foreach { case (name, run) =>
+      val err = intercept[Exception](run().collect())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("negative tx")), s"$name: $err")
+    }
   }
 
   test("tuple encode/decode round-trips over generated slot values") {
