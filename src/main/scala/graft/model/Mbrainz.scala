@@ -172,8 +172,10 @@ object Mbrainz {
   val media: EntityType = EntityType("media", mediaInFields,
     mediumMappings ++ trackMappings, required = Seq("id", "release"))
 
-  /** Import order (`importer.clj:40-44`) — sequential because of FK /
-    * upsert dependencies between types. */
+  /** Import order (`importer.clj:40-44`). The reference needs it for FK
+    * / upsert dependencies between types; graft's one-pass loader does
+    * not (`pipeline.Loader`), but a type's index here fixes its tx
+    * range. */
   val importOrder: Seq[String] = Seq("schema", "enums", "super-enums",
     "artists", "areleases", "areleases-artists", "labels", "releases",
     "releases-artists", "media")

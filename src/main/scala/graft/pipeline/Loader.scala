@@ -1,27 +1,48 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Mbrainz, SchemaRegistry}
 import graft.store.{Datoms, Store}
 
-/** Row shape of the EAV log (matches Store.schema column names). */
-final case class DatomRow(e: String, a: String, v: String, v_long: Option[Long],
-    is_ref: Boolean, tx: Long)
+/** One datom of a load: a row of the EAV log (`Store.schema` column
+  * names, `op` defaulted on append) tagged with the entity type whose
+  * batch file it came from. `tx_row` marks the one `:db/txInstant`
+  * datom the loader adds per transaction, so counting it counts txes. */
+private[pipeline] final case class LoadRow(tpe: String, e: String, a: String, v: String,
+    v_long: Option[Long], is_ref: Boolean, tx: Long, tx_row: Boolean)
 
 /** E2 — the loader pipeline (reference `-main`/`load-type`,
-  * importer.clj:298-352): batch EDN → anti-join already-applied →
-  * transact into the store → fold `{txes, datoms}` metrics.
+  * importer.clj:298-352): batch EDN → skip already-applied batches →
+  * transact into the store → fold `{txes, datoms}` metrics per type.
   *
-  * Spark shape per type: distributed line parse (one batch per line →
-  * `spark.read.text` splits cleanly), `left_anti` against the applied
-  * set (J5), datom expansion on executors, ONE append to the EAV log
-  * wrapped in retry/backoff. The reference's `pipeline-blocking n`
-  * bounded parallelism maps to `repartition(concurrency)` on the
-  * write; per-batch transactional conflicts can't arise because the
-  * whole type-load is a single atomic append (conflict-as-success,
-  * batch.clj:97-101, degenerates to the anti-join).
-  * Types stay sequential — FK/upsert dependencies (importer.clj:343-348).
+  * An import is ONE Spark pass and ONE append, whatever the number of
+  * batch files ([[load]]):
+  *  - the applied batch-id set is read from the log once and collected
+  *    to the driver (bounded by the number of batches, not datoms);
+  *  - the files' lines are unioned, each tagged with its type and type
+  *    index, and lines whose batch id is applied are filtered out with
+  *    that set (a broadcast; no join, no shuffle);
+  *  - the rest expand to datoms on executors behind
+  *    `repartition(concurrency)` — the reference's `pipeline-blocking n`
+  *    bounded write parallelism;
+  *  - one aggregate grouped by type yields every type's [[LoadStats]],
+  *    and the accepted datoms land in one `store.append`, retried with
+  *    backoff on transient IO errors. Per-batch transactional conflicts
+  *    cannot arise because the append is the whole load
+  *    (conflict-as-success, batch.clj:97-101, degenerates to the
+  *    applied-id filter).
+  *
+  * Why the types need no order here: the reference imports them one
+  * after another because Datomic resolves lookup refs against existing
+  * entities at transact time (importer.clj:343-348). Graft resolves
+  * nothing at load time — e-keys are deterministic strings
+  * (`store/Datoms`), refs are stored as those keys, and each tx is
+  * fixed by `typeIdx * 1e6 + n` — so the resolved state does not depend
+  * on the order in which types are written.
+  *
+  * `:db/txInstant` is one wall-clock instant per [[load]] call, shared
+  * by every transaction of that call (of every type in it).
   */
 final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     concurrency: Int = 8,
@@ -31,70 +52,76 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     * predicates are declared). */
   final case class LoadStats(txes: Long, datoms: Long, rejected: Long = 0L)
 
-  def loadBatchFile(tpe: String, path: String): LoadStats = {
-    val typeIdx = math.max(Mbrainz.importOrder.indexOf(tpe), 0)
+  /** Transact the fresh batches of every `(type, batch file)` in one
+    * pass; returns each type's stats (zeros for a type with nothing
+    * fresh). Each type may appear once. */
+  def load(files: Seq[(String, String)]): Map[String, LoadStats] = {
+    val types = files.map(_._1)
+    require(types.distinct.size == types.size,
+      s"load: a type may appear once, repeated: ${types.diff(types.distinct).distinct.mkString(", ")}")
+    val zeros = types.map(_ -> LoadStats(0, 0)).toMap
+    if (files.isEmpty) return zeros
     val reg = registry
-    val lines = spark.read.textFile(path).filter(length(trim(col("value"))) > 0)
 
-    val applied = store.appliedBatchIds
-    // Cheap batch-id extraction BEFORE the anti-join: the batcher
-    // renders a canonical `{:batch-ident {:db/id "datomic.tx", :attr
-    // "id"}, ...` prefix, so a regex reads the id without parsing the
-    // batch EDN at all — already-applied batches are never parsed on
-    // resume, and fresh batches parse exactly once (below). Non-
-    // canonical lines fall back to the full parse.
+    val applied = spark.sparkContext.broadcast(
+      store.appliedBatchIds.as(Encoders.STRING).collect().toSet)
+    // Cheap batch-id extraction: the batcher renders a canonical
+    // `{:batch-ident {:db/id "datomic.tx", :attr "id"}, ...` prefix, so
+    // a regex reads the id without parsing the batch EDN at all —
+    // already-applied batches are never parsed on resume, and fresh
+    // batches parse exactly once (below). Non-canonical lines fall back
+    // to the full parse.
     val prefixRe = ("^\\{:batch-ident \\{:db/id \"datomic.tx\", :" +
       java.util.regex.Pattern.quote(Mbrainz.batchIdAttr) + " \"([^\"]+)\"").r
-    val parsed = lines.map { line =>
+    val lines = files.map { case (tpe, path) =>
+      spark.read.textFile(path).filter(length(trim(col("value"))) > 0)
+        .select(lit(tpe).as("_1"), lit(math.max(Mbrainz.importOrder.indexOf(tpe), 0)).as("_2"),
+          col("value").as("_3"))
+    }.reduce(_ union _).as(Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.STRING))
+    val fresh = lines.filter { case (_, typeIdx, line) =>
       val batchId = prefixRe.findFirstMatchIn(line).map(_.group(1))
         .getOrElse(Datoms.batchDatoms(line, reg, typeIdx)._1)
-      (batchId, line)
-    }(Encoders.tuple(Encoders.STRING, Encoders.STRING)).toDF("batch_id", "line")
+      !applied.value.contains(batchId)
+    }.repartition(concurrency)
 
-    val fresh = parsed.join(applied, Seq("batch_id"), "left_anti")
-      .repartition(concurrency)
-      .persist()
+    // `:db/txInstant` — one wall-clock datom per transaction entity
+    // (Datomic's transactor stamps exactly this). Captured ONCE on the
+    // driver so every batch of this load shares an instant and reruns
+    // of the same executor task emit identical rows.
+    val loadedAtMs = System.currentTimeMillis()
+    val loadedAtIso = java.time.Instant.ofEpochMilli(loadedAtMs).toString
+    val datoms = fresh.flatMap { case (tpe, typeIdx, line) =>
+      val (batchId, ds) = Datoms.batchDatoms(line, reg, typeIdx)
+      ds.map(d => LoadRow(tpe, d.e, d.a, d.v, d.vLong, d.isRef, d.tx, tx_row = false)) :+
+        LoadRow(tpe, s"tx|$batchId", Store.txInstantAttr, loadedAtIso,
+          Some(loadedAtMs), is_ref = false, ds.head.tx, tx_row = true)
+    }(Encoders.product[LoadRow]).toDF()
+    // `:db.attr/preds` enforcement point (Datomic validates attr preds
+    // on every assert at transact time): rejected datoms are counted
+    // and kept OUT of the log; the accepted set appends. Retractions
+    // pass unchecked (attrPreds' own rule) — moot here, the batcher
+    // emits asserts only.
+    val annotated = graft.ops.Validate.attrPreds(datoms, attrPreds).persist()
     try {
-      val txes = fresh.count()
-      if (txes == 0) return LoadStats(0, 0)
-
-      // `:db/txInstant` — one wall-clock datom per transaction entity
-      // (Datomic's transactor stamps exactly this). Captured ONCE on
-      // the driver so every batch of this load shares an instant and
-      // reruns of the same executor task emit identical rows.
-      val loadedAtMs = System.currentTimeMillis()
-      val loadedAtIso = java.time.Instant.ofEpochMilli(loadedAtMs).toString
-      val datoms = fresh.select("line").as(Encoders.STRING).flatMap { line =>
-        val (batchId, ds) = Datoms.batchDatoms(line, reg, typeIdx)
-        ds.map(d => DatomRow(d.e, d.a, d.v, d.vLong, d.isRef, d.tx)) :+
-          DatomRow(s"tx|$batchId", Store.txInstantAttr, loadedAtIso,
-            Some(loadedAtMs), is_ref = false, ds.head.tx)
-      }(Encoders.product[DatomRow])
-        .toDF()
-        .persist()
-      // `:db.attr/preds` enforcement point (Datomic validates attr
-      // preds on every assert at transact time): rejected datoms are
-      // counted and kept OUT of the log; the accepted set appends.
-      // Retractions pass unchecked (attrPreds' own rule) — moot here,
-      // the batcher emits asserts only.
-      val annotated =
-        if (attrPreds.isEmpty) datoms.withColumn("errors", array().cast("array<string>"))
-        else graft.ops.Validate.attrPreds(datoms, attrPreds)
-      val accepted = annotated.filter(size(col("errors")) === 0).drop("errors")
-      val nDatoms = accepted.count()
-      val nRejected =
-        if (attrPreds.isEmpty) 0L
-        else annotated.filter(size(col("errors")) > 0).count()
-      Retry.retrying(() => { store.append(accepted); () }, Retry.transientIo)
-      datoms.unpersist()
-      LoadStats(txes, nDatoms, nRejected)
-    } finally { fresh.unpersist(); () }
+      val ok = size(col("errors")) === 0
+      val stats = annotated.groupBy(col("tpe")).agg(
+        count(when(col("tx_row"), 1)), count(when(ok, 1)), count(when(!ok, 1)))
+        .collect().map(r => r.getString(0) -> LoadStats(r.getLong(1), r.getLong(2), r.getLong(3)))
+      // append keeps only the log's columns: `tpe`, `tx_row` and
+      // `errors` drop there
+      if (stats.nonEmpty)
+        Retry.retrying(() => { store.append(annotated.filter(ok)); () }, Retry.transientIo)
+      zeros ++ stats
+    } finally { annotated.unpersist(); applied.destroy() }
   }
+
+  /** One batch file of one type: [[load]] of that file alone. */
+  def loadBatchFile(tpe: String, path: String): LoadStats = load(Seq(tpe -> path))(tpe)
 
   /** The import-schema the reference transacts before any data
     * (importer.clj:271-277): the batch-id attribute itself. Loaded
     * through the normal batch machinery, so it is idempotent via the
-    * same anti-join. */
+    * same applied-id filter. */
   def ensureImportSchema(): LoadStats = {
     val line =
       "{:batch-ident {:db/id \"datomic.tx\", :" + Mbrainz.batchIdAttr +
@@ -109,12 +136,10 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     finally java.nio.file.Files.delete(f)
   }
 
-  /** Sequential import order over a directory of batch files. */
+  /** The import-schema, then one [[load]] over every type's batch file
+    * in `batchesDir` that exists. */
   def loadAll(batchesDir: String, types: Seq[String] = Mbrainz.importOrder): Map[String, LoadStats] = {
     ensureImportSchema()
-    types.flatMap { tpe =>
-      val f = new java.io.File(s"$batchesDir/$tpe.edn")
-      if (f.exists()) Some(tpe -> loadBatchFile(tpe, f.getPath)) else None
-    }.toMap
+    load(types.map(t => t -> s"$batchesDir/$t.edn").filter(f => new java.io.File(f._2).exists()))
   }
 }

@@ -60,6 +60,8 @@ object Manifest {
       case None => graft.model.Mbrainz.importOrder
       case Some(o) => fail(s":import-order must be a vector: $o")
     }
+    val repeated = order.diff(order.distinct).distinct
+    if (repeated.nonEmpty) fail(s":import-order names a type twice: ${repeated.mkString(", ")}")
     Manifest(storeDir, basedir, conc, order)
   }
   private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
@@ -67,7 +69,7 @@ object Manifest {
 
 /** E2 CLI: `graft.pipeline.ImportMain <manifest.edn>`
   * (reference `-main`, importer.clj:318-352). Idempotent: re-running
-  * skips applied batches via the ledger anti-join. */
+  * skips applied batches (`Loader.loadAll`). */
 object ImportMain {
   def main(args: Array[String]): Unit = {
     val Array(manifestPath) = args
@@ -76,16 +78,15 @@ object ImportMain {
     val registry = SchemaRegistry.load(s"${manifest.basedir}/entities/schema.edn")
     val store = new Store(spark, manifest.storeDir)
     val loader = new Loader(spark, registry, store, manifest.concurrency)
-    loader.ensureImportSchema()
+    val t0 = System.nanoTime()
+    val stats = loader.loadAll(s"${manifest.basedir}/batches", manifest.importOrder)
     manifest.importOrder.foreach { tpe =>
-      val f = new java.io.File(s"${manifest.basedir}/batches/$tpe.edn")
-      if (f.exists()) {
-        val t0 = System.nanoTime()
-        val stats = loader.loadBatchFile(tpe, f.getPath)
-        println(f"$tpe: {:txes ${stats.txes} :datoms ${stats.datoms}} " +
-          f"(${(System.nanoTime() - t0) / 1e9}%.1f s)")
-      } else println(s"$tpe: no batch file, skipped")
+      stats.get(tpe) match {
+        case Some(s) => println(s"$tpe: {:txes ${s.txes} :datoms ${s.datoms}}")
+        case None => println(s"$tpe: no batch file, skipped")
+      }
     }
+    println(f"elapsed ${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }
 }

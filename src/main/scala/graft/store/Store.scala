@@ -39,13 +39,14 @@ final class Store(spark: SparkSession, val dir: String) {
     there
   }
 
-  def eav: DataFrame = {
-    val raw =
-      if (exists) spark.read.parquet(eavPath)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Store.schema)
-    // logs written before retraction support have no op column: assert
-    Store.withOp(raw)
-  }
+  /** The log, read with the fixed `Store.schema`: no schema-inference
+    * job per read. Files written before retraction support have no
+    * `op` column; their rows read as asserts. */
+  def eav: DataFrame =
+    if (exists)
+      spark.read.schema(Store.schema).parquet(eavPath)
+        .withColumn("op", coalesce(col("op"), lit(true)))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Store.schema)
 
   def append(datoms: DataFrame): Unit = {
     Store.withOp(datoms).select(Store.schema.fieldNames.map(col): _*)
@@ -223,10 +224,14 @@ final class Store(spark: SparkSession, val dir: String) {
     val many = registry.attrs.values.filter(_.many).map(_.ident).toSet
     def rebuild(): DataFrame = {
       snapshot.foreach(_._2.unpersist(blocking = false))
-      val rows = eav.count() // parquet metadata count, no data pages
-      val df = Store.resolve(eav, many.toSeq.sorted)
+      // one log listing: the row count and the basis tx come from one
+      // aggregate over the same DataFrame the resolve reads
+      val log = eav
+      val g = log.agg(count(lit(1)), max(col("tx"))).collect()(0)
+      val df = Store.resolve(log, many.toSeq.sorted)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      snapshot = Some((many, df)); snapBasis = basisT; snapRows = rows
+      snapshot = Some((many, df)); snapRows = g.getLong(0)
+      snapBasis = if (g.isNullAt(1)) 0L else g.getLong(1)
       snapStale = false; lastCurrentIncremental = false
       df
     }
@@ -246,7 +251,8 @@ final class Store(spark: SparkSession, val dir: String) {
         val isDelta = col("tx") > snapBasis
         val isUnsafeRetract = isDelta && !col("op") &&
           (if (many.isEmpty) lit(true) else !col("a").isInCollection(many.toSeq))
-        val g = eav.agg(
+        val log = eav
+        val g = log.agg(
           count(lit(1)).as("total"),
           sum(isDelta.cast("long")).as("delta_rows"),
           sum(isUnsafeRetract.cast("long")).as("unsafe_rows"),
@@ -255,7 +261,7 @@ final class Store(spark: SparkSession, val dir: String) {
         val deltaRows = if (g.isNullAt(1)) 0L else g.getLong(1)
         val unsafeRows = if (g.isNullAt(2)) 0L else g.getLong(2)
         val newBasis = if (g.isNullAt(3)) 0L else g.getLong(3)
-        val delta = eav.filter(isDelta)
+        val delta = log.filter(isDelta)
         if (snapRows + deltaRows == newRows) {
           // unsafeRows == 0 is resolveIncremental's contract (no
           // card-ONE retraction in the delta). Otherwise a retraction
@@ -270,7 +276,7 @@ final class Store(spark: SparkSession, val dir: String) {
             if (unsafeRows == 0L)
               Store.resolveIncremental(df, delta, many.toSeq.sorted)
             else
-              Store.resolveIncrementalHybrid(df, delta, eav, many.toSeq.sorted)
+              Store.resolveIncrementalHybrid(df, delta, log, many.toSeq.sorted)
           val merged = merged0.localCheckpoint()
           df.unpersist(blocking = false)
           snapshot = Some((many, merged)); snapBasis = newBasis; snapRows = newRows

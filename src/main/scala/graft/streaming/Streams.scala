@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * no event-time semantics; this module supplies the streaming shapes a
   * production engine needs: watermarked windowed aggregation, session
   * windows, custom state (flatMapGroupsWithState), and an idempotent
-  * foreachBatch sink that reuses the loader's ledger anti-join
+  * foreachBatch sink that reuses the loader's applied-batch resume
   * semantics (exactly-once-ish resume, batch.clj:42-60).
   */
 object Streams {
@@ -165,7 +165,7 @@ object Streams {
   /** Idempotent foreachBatch sink: micro-batches land in a parquet
     * table partitioned by batch_id, written with DYNAMIC PARTITION
     * OVERWRITE, and are then ledgered — the streaming form of the
-    * loader's anti-join resume. A ledgered batch id replays as a
+    * loader's applied-batch resume. A ledgered batch id replays as a
     * no-op; a crash BETWEEN data write and ledger write replays as an
     * overwrite of that batch's own partition (idempotent, not
     * duplicating — the write-then-ledger gap is closed by making the
