@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every harness query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   * A warmup action first, so JVM/Spark startup doesn't land on the
@@ -9,24 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle/spill on tmpfs: this host's disk intermittently
-      // degrades to ~20 MB/s for minutes, and a timing run stuck in
-      // kernel write syscalls measures the host, not the engine (a
-      // real cluster writes shuffle to local NVMe). Shuffle volume
-      // per query is ≪ RAM here.
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // warmup: touch every table once (codegen + IO caches + thread pools)
     Seq("lineitem", "orders", "documents", "embeddings").foreach { t =>
@@ -42,22 +23,19 @@ object Bench {
     // local-iteration filter: SPARK_GRAFT_ONLY=q57,q60 times only the
     // matching queries (comma-separated substrings). The driver never
     // sets it, so the recorded BENCH artifacts always cover everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
+    val names = Harness.selected()
 
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
       "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory) {
       val t0 = System.nanoTime()
-      selected.foreach { case (name, fn) =>
+      names.foreach { case (name, fn) =>
         // noop sink, matching the timed action — count() would skip
         // JIT-compiling the projection paths the timed run executes
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable =>
           System.err.println(s"[bench] warmup $name: ${e.getMessage}") }
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        Harness.clearCaches(spark)
       }
       System.err.println(f"[bench] warmup pass done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
@@ -71,16 +49,6 @@ object Bench {
     // query's samples are then minutes apart, so a window poisons at
     // most one sample per query instead of all of them.
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "5").toInt.max(1)
-    def cleanup(): Unit = {
-      // queries are independent: drop cached plans and any blocks left
-      // behind (localCheckpoint fixpoints, bucketed temp tables) so a
-      // long run measures each query, not the residue of the previous
-      // 80 — without this, late queries read 10-20x slower than they
-      // run in isolation
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-    val names = selected
     val samples = scala.collection.mutable.Map[String, List[(Double, Boolean)]]()
       .withDefaultValue(Nil)
     val passSecs = scala.collection.mutable.ListBuffer[Double]()
@@ -102,7 +70,7 @@ object Bench {
         // per-query progress: a stalled/straggling query must be
         // identifiable from stderr while the run is still going
         System.err.println(f"[bench] p$pass $name%-26s $sec%7.2f s")
-        cleanup()
+        Harness.clearCaches(spark)
         samples(name) = (sec, ok) :: samples(name)
       }
       passSecs += (System.nanoTime() - t0) / 1e9

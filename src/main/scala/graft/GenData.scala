@@ -195,13 +195,7 @@ object GenData {
       case _ => throw new IllegalArgumentException(
         "usage: GenData <sf> <outDir> [skew]")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     generate(spark, sf, out, skew)
     spark.stop()
   }

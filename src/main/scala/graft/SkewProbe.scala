@@ -8,11 +8,12 @@ import org.apache.spark.sql.expressions.Window
   * round-13 skew A/B the round-12 verdict asked for: time the OLD
   * content-keyed-window census shapes (eradicated in r12 for d20/d37/
   * mm5) against the CURRENT partial-aggregated groupBy shapes, on a
-  * corpus with a genuinely hot key (`GenData <sf> <dir> skew`: 40% of
-  * docs share one text, so one span/gram/phash key owns 40% of the
-  * corpus — the distribution AQE's skew handling cannot split, because
-  * it is a single window partition, not an oversized shuffle
-  * partition).
+  * corpus with genuinely hot keys. `GenData <sf> <dir> skew` opens
+  * EVERY doc with the same ~120-word boilerplate prefix and lets docs
+  * differ only in their tails, so each span/gram key of the prefix
+  * owns one row per doc — the distribution AQE's skew handling cannot
+  * split, because it is a single window partition, not an oversized
+  * shuffle partition.
   *
   *   sbt -batch "runMain graft.GenData 0.1 /tmp/sf01skew skew"
   *   SPARK_GRAFT_SF_DIR=/tmp/sf01skew sbt -batch "runMain graft.SkewProbe"
@@ -20,54 +21,30 @@ import org.apache.spark.sql.expressions.Window
   * Old shapes are verbatim from the pre-r12 tree (cce66e2^): d37's
   * count-over-Window(span) census, d20's string-keyed gram census
   * (the window variant for the hot-key comparison). Timings print per
-  * rep; compare medians. Each timed run also reports the guide-§2.5
-  * skew diagnostic from a task listener: the max/median task duration
-  * ratio and the max task shuffle-read rows — the window shape must
-  * co-locate every row of a hot key in ONE task, the census shape
-  * partial-aggregates it away map-side, and that difference shows in
-  * these numbers even when the fixture is too small for wall-clock
-  * separation.
+  * rep; compare medians. The last timed rep also prints its
+  * [[QueryMetrics]] counters, whose skew diagnostic — max/median task
+  * time and max task shuffle-read rows — is the point: the window
+  * shape must co-locate every row of a hot key in ONE task, the census
+  * shape partial-aggregates it away map-side, and that difference
+  * shows in these numbers even when the fixture is too small for
+  * wall-clock separation.
   */
 object SkewProbe {
-  private final class TaskStats extends org.apache.spark.scheduler.SparkListener {
-    val durs = new scala.collection.mutable.ArrayBuffer[Long]
-    val reads = new scala.collection.mutable.ArrayBuffer[Long]
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      synchronized {
-        if (t.taskMetrics != null) {
-          durs += t.taskMetrics.executorRunTime
-          reads += t.taskMetrics.shuffleReadMetrics.recordsRead
-        }
-      }
-  }
-
   private def time(label: String, reps: Int)(mk: => DataFrame): Unit = {
-    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val spark = SparkSession.active
     val secs = (1 to reps).map { i =>
-      val st = new TaskStats
-      sc.addSparkListener(st)
-      val t0 = System.nanoTime()
-      mk.write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      sc.removeSparkListener(st)
-      if (i == reps) st.synchronized {
-        val d = st.durs.sorted
-        if (d.nonEmpty) {
-          val medD = d(d.size / 2) max 1L
-          println(f"[skewprobe] $label%-28s tasks=${d.size}%4d  " +
-            f"task-dur max/med=${d.last}%6d/${medD}%4d ms (x${d.last.toDouble / medD}%5.1f)  " +
-            f"max-shuffle-read-rows=${if (st.reads.isEmpty) 0L else st.reads.max}%,d")
-        }
-      }
+      val (_, dt, c) = QueryMetrics.measure(spark)(
+        mk.write.format("noop").mode("overwrite").save())
+      if (i == reps) println(f"[skewprobe] $label%-28s $c")
       dt
     }
     println(f"[skewprobe] $label%-28s ${secs.sorted.apply(reps / 2)}%7.2f s  " +
       s"(reps: ${secs.map(x => f"$x%.2f").mkString(" ")})")
+    Harness.clearCaches(spark)
   }
 
   /** d37 census via count-over-window on the span key (pre-r12). */
   private def d37WindowShape(docs: DataFrame, w: Int): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val wins = docs
       .select(col("doc_id"), explode(expr(s"word_ngrams(lower(text), $w)")).as("span"))
       .select(col("doc_id"), xxhash64(col("span")).as("span"))
@@ -83,7 +60,6 @@ object SkewProbe {
   /** d20 gram census via count-over-window on the gram key (the
     * content-keyed window variant the r12 rework replaced). */
   private def d20WindowShape(docs: DataFrame, minDocs: Int): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val grams = docs.select(col("doc_id"), explode(expr("ngram_set(text)")).as("g"))
       .select(col("doc_id"), xxhash64(col("g")).as("gram"))
     val withNDocs = grams.withColumn("n_docs",
@@ -96,32 +72,16 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf01skew")
     val reps = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     def docs = graft.sources.Tables.documents(spark, d)
-    def cleanup(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     // warmup (codegen/JIT) then timed reps, old vs new per operator
-    time("d37 window (warm)", 1)(d37WindowShape(docs, 8)); cleanup()
-    time("d37 window census", reps)(d37WindowShape(docs, 8)); cleanup()
+    time("d37 window (warm)", 1)(d37WindowShape(docs, 8))
+    time("d37 window census", reps)(d37WindowShape(docs, 8))
     time("d37 groupBy census", reps)(
-      graft.queries.Llm.duplicateSpans(docs, window = 8, hashSpans = true)); cleanup()
-    time("d20 window census", reps)(d20WindowShape(docs, 3)); cleanup()
+      graft.queries.Llm.duplicateSpans(docs, window = 8, hashSpans = true))
+    time("d20 window census", reps)(d20WindowShape(docs, 3))
     time("d20 groupBy census", reps)(
-      graft.queries.Curate.d20_boilerplate(spark, d)); cleanup()
+      graft.queries.Curate.d20_boilerplate(spark, d))
     spark.stop()
   }
 }

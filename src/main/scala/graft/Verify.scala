@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,36 +8,16 @@ object Verify {
       case Array(s, o) => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f)) // substring filter(s), local iteration
     }
-    // comma-separated substrings, same contract as Bench's SPARK_GRAFT_ONLY
-    val onlySubs = only.map(_.split(",").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same tmpfs shuffle dirs as Bench (this host's disk stalls
-      // intermittently; correctness runs shouldn't take the hit)
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => onlySubs.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
+    // comma-separated substrings, same contract as Bench's SPARK_GRAFT_ONLY
+    Harness.selected(only).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same hygiene as Bench: queries are independent; don't let one
-      // query's leftover blocks (checkpoint fixpoints, cached plans)
-      // pressure the rest of the run
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Harness.clearCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

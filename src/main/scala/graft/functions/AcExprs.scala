@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -150,7 +149,7 @@ object AhoCorasick {
 }
 
 /** `ac_counts(text)` → array<long> of per-blocklist-pattern match
-  * counts (spec fixed at construction; the SQL registration binds the
+  * counts (spec fixed at construction; the one-argument SQL form binds the
   * default [[AhoCorasick.Blocklist]]). */
 case class AcCounts(child: Expression, spec: String) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -165,15 +164,4 @@ case class AcCounts(child: Expression, spec: String) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): AcCounts =
     copy(child = newChild)
   override def prettyName: String = "ac_counts"
-}
-
-object AcExprs {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("ac_counts", {
-      case Seq(text) => AcCounts(text, AhoCorasick.BlocklistSpec)
-      case Seq(text, spec) => AcCounts(text,
-        spec.eval(null).asInstanceOf[UTF8String].toString)
-    }, "scala_udf")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -520,80 +519,4 @@ case class CharStatsExpr(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): CharStatsExpr =
     copy(child = newChild)
   override def prettyName: String = "char_stats"
-}
-
-/** SQL registration (idempotent): `minhash_sig(text)`, `simhash64(text)`. */
-object HashExprs {
-  /** Registration-time gate for size-like int args (ngram n, band
-    * count, frame width): must be a foldable positive literal.
-    * Without it a non-foldable arg NPEs at `eval(null)` and n <= 0
-    * reaches `new Array(n-1)` / malformed spans at runtime — both
-    * should fail analysis with a clear message instead. */
-  private def foldablePositiveInt(e: Expression, fn: String, arg: String): Int = {
-    require(e.foldable, s"$fn: $arg must be a literal integer, got non-foldable ${e.sql}")
-    val v = e.eval(null)
-    require(v != null, s"$fn: $arg must not be null")
-    val n = v.asInstanceOf[Number].intValue
-    require(n > 0, s"$fn: $arg must be positive, got $n")
-    n
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSignature(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_hash64", es => RollingHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("ngram_set", es => NGramSet(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_agree",
-      es => MinhashAgree(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_dot",
-      es => VecDot(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("char_stats",
-      es => CharStatsExpr(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("word_ngrams", {
-      case Seq(text) => WordNgramsExpr(text, 3)
-      case Seq(text, n) => WordNgramsExpr(text,
-        foldablePositiveInt(n, "word_ngrams", "n"))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_bands", {
-      case Seq(text) => LshBands(text, 8)
-      case Seq(text, b) => LshBands(text,
-        foldablePositiveInt(b, "lsh_bands", "bands"))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_bands_from_sig", {
-      case Seq(sig) => LshBandsFromSig(sig, 8)
-      case Seq(sig, b) => LshBandsFromSig(sig,
-        foldablePositiveInt(b, "lsh_bands_from_sig", "bands"))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("frame_energies", {
-      case Seq(text) => FrameEnergies(text, 64)
-      case Seq(text, w) => FrameEnergies(text,
-        foldablePositiveInt(w, "frame_energies", "window"))
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("ahash_bits",
-      es => AHashBits(es.head, es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_count", es => BpeCount(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_count_learned", {
-      case Seq(text, spec) => BpeCountLearned(text, Bpe.parseMergeSpec(
-        spec.eval(null).asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString))
-    }, "scala_udf")
-    // Spark's own runtime-filter bloom sketch, surfaced as callable
-    // functions: bloom_agg(xxhash64(key)[, items[, bits]]) builds the
-    // binary sketch, bloom_might_contain(bf, xxhash64(key)) probes it.
-    // The probe side requires a FOLDABLE sketch (literal or scalar
-    // subquery) — collect the bounded sketch and inline via lit(),
-    // exactly how InjectRuntimeFilter ships it to the probe side.
-    reg.createOrReplaceTempFunction("bloom_agg", {
-      case Seq(child) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(child)
-      case Seq(child, items) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(child, items)
-      case Seq(child, items, bits) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(child, items, bits)
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_might_contain", {
-      case Seq(bf, v) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bf, v)
-    }, "scala_udf")
-  }
 }

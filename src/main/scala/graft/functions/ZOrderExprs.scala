@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -54,11 +53,4 @@ case class ZOrder64(left: Expression, right: Expression) extends BinaryExpressio
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): ZOrder64 = copy(left = l, right = r)
   override def prettyName: String = "zorder64"
-}
-
-object ZOrderExprs {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder64", es => ZOrder64(es.head, es(1)), "scala_udf")
-  }
 }

@@ -73,7 +73,6 @@ object ClassifierTrain {
     * train→infer round trip). Columns: round, n_mistakes, acc_bp,
     * w_l1, w_sum — all BIGINT, engine-exact. */
   def train(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val toks = docs.select(col("doc_id"),
       expr("word_ngrams(lower(text), 1)").as("toks"))
     val labeled = toks.select(col("doc_id"),

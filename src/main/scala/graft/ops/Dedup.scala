@@ -18,7 +18,6 @@ object Dedup {
   def minhashSignatures(df: DataFrame, id: Column, textCol: Column,
       bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
     require(bands * rowsPerBand == 32, "bands × rowsPerBand must equal 32")
-    graft.functions.HashExprs.register(df.sparkSession)
     df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
       .select(id.as("doc_id"), textCol.as("__text"))
       .select(col("doc_id"),
@@ -36,7 +35,6 @@ object Dedup {
   def lshCandidatePairs(df: DataFrame, id: Column, textCol: Column,
       bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
     require(bands * rowsPerBand == 32, "bands × rowsPerBand must equal 32")
-    graft.functions.HashExprs.register(df.sparkSession)
     val sig = df
       .repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
       .select(id.as("doc_id"), textCol.as("__text"))
@@ -57,7 +55,6 @@ object Dedup {
     * (pigeonhole — choose chunks > maxHamming·…/16 appropriately). */
   def simhashPairs(df: DataFrame, id: Column, textCol: Column,
       chunks: Int = 4, maxHamming: Int = 16): DataFrame = {
-    graft.functions.HashExprs.register(df.sparkSession)
     val bits = 64 / chunks
     val sh = df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
       .select(id.as("doc_id"), textCol.as("__text"))
@@ -118,7 +115,6 @@ object Dedup {
     * two-level quantizer at a small recall cost. */
   def annIvf(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       nprobe: Int, k: Int): DataFrame = {
-    graft.functions.HashExprs.register(corpus.sparkSession)
     val cent = withNorm(centroids, "embedding", "c_norm")
       .select(col("cid"), col("embedding").as("c_vec"), col("c_norm"))
     def ccos = expr("vec_dot(embedding, c_vec)") / (col("norm") * col("c_norm"))
@@ -148,7 +144,6 @@ object Dedup {
   def annIvfCoarse(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       nprobe: Int, k: Int, coarseEvery: Int): DataFrame = {
     require(coarseEvery >= 1, s"coarseEvery must be ≥ 1, got $coarseEvery")
-    graft.functions.HashExprs.register(corpus.sparkSession)
     val cent = withNorm(centroids, "embedding", "c_norm")
       .select(col("cid"), col("embedding").as("c_vec"), col("c_norm"))
     val coarse = cent.filter(pmod(col("cid"), lit(coarseEvery)) === 0)
@@ -180,7 +175,6 @@ object Dedup {
   /** Exact top-k cosine neighbors for a bounded query set (compiled
     * `vec_dot`; float arrays stay the join currency). */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.HashExprs.register(corpus.sparkSession)
     def norm(df: DataFrame, prefix: String): DataFrame =
       df.withColumn(s"${prefix}norm", expr("sqrt(vec_dot(embedding, embedding))"))
     val c = norm(corpus, "c_").select(col("vec_id").as("neighbor_id"),

@@ -1,33 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import graft.edn.Edn
 import graft.edn.Edn._
 import graft.model.SchemaRegistry
 import graft.store.Store
-
-/** CLI parity with the reference's two entry points. */
-object Mains {
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
 
 /** E1 CLI: `graft.pipeline.BatchMain <basedir> <batch-size>`
   * (reference `src/datomic/mbrainz/importer/batch.clj:10-20`). */
 object BatchMain {
   def main(args: Array[String]): Unit = {
     val Array(basedir, batchSize) = args
-    val spark = Mains.session()
+    val spark = graft.Harness.session()
     val b = new Batcher(spark, basedir, s"$basedir/batches", batchSize.toInt)
     b.runAll().toSeq.sortBy(_._1).foreach { case (t, n) => println(s"$t: $n batches") }
     spark.stop()
@@ -74,7 +57,7 @@ object ImportMain {
   def main(args: Array[String]): Unit = {
     val Array(manifestPath) = args
     val manifest = Manifest.parse(graft.sources.EdnSource.readText(manifestPath))
-    val spark = Mains.session()
+    val spark = graft.Harness.session()
     val registry = SchemaRegistry.load(s"${manifest.basedir}/entities/schema.edn")
     val store = new Store(spark, manifest.storeDir)
     val loader = new Loader(spark, registry, store, manifest.concurrency)

@@ -87,7 +87,6 @@ object Curate {
     * grams frequent across docs) broadcasts back onto the same gram
     * table. The corpus is never joined to itself. */
   def d20_boilerplate(s: SparkSession, d: String, minDocs: Int = 3): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
     // (doc_id, gram) is already distinct (ngram_set de-dups per doc),
     // so count(*) per gram IS the distinct-doc count. The census is a
@@ -144,7 +143,6 @@ object Curate {
     * broadcast — eval sets are small by definition — so the corpus
     * side is one explode + broadcast-hash-join + per-doc count. */
   def d21_decontaminate(s: SparkSession, d: String, benchSource: String = "src0"): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
     val grams = docs.select(col("doc_id"), col("source"),
       explode(expr("ngram_set(text)")).as("gram"))
@@ -175,7 +173,6 @@ object Curate {
     * bound over clean docs. */
   def d48_bloom_decontaminate(s: SparkSession, d: String,
       benchSource: String = "src0"): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
     val grams = docs.select(col("doc_id"), col("source"),
       explode(expr("ngram_set(text)")).as("gram"))
@@ -266,7 +263,6 @@ object Curate {
     // would actually bill (`functions.Bpe` — the gated d50 entry);
     // both are single-pass codegen expressions, the pipeline shape
     // is identical
-    graft.functions.HashExprs.register(s)
     val nTok = tokenizer match {
       case "ws" => when(length(trim(col("text"))) === 0, 0L)
         .otherwise(size(split(trim(col("text")), " +")).cast("long"))
@@ -460,7 +456,6 @@ object Curate {
     * explodes once, joins on the gram key, and rolls up per doc. */
   def d40_containment(s: SparkSession, d: String,
       benchSource: String = "src0", thresholdBp: Long = 2000L): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
     val grams = docs.select(col("doc_id"), col("source"),
       explode(expr("ngram_set(text)")).as("gram"))
@@ -612,7 +607,6 @@ object Curate {
     * ∝ corpus gram count, never docs². Zero-gram docs score 10000 bp
     * (vacuously novel). */
   def d34_novelty(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
     val grams = docs.select(col("doc_id"), explode(expr("ngram_set(text)")).as("gram"))
     val firstOwner = grams.groupBy(col("gram")).agg(min(col("doc_id")).as("first_doc"))
@@ -838,7 +832,6 @@ object Curate {
     * doc-keyed agg, TakeOrderedAndProject — never a corpus shuffle. */
   def d51_dsir(s: SparkSession, d: String, k: Int = 25,
       targetSource: String = "src0"): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val toks = documents(s, d).select(col("doc_id"), col("source"),
         explode(expr("word_ngrams(lower(text), 1)")).as("w"))
       .withColumn("b", pmod(xxhash64(col("w")), lit(1024L)))
@@ -866,7 +859,6 @@ object Curate {
     * longs (deterministic — no float accumulation). Map-only scan +
     * one tiny keyed agg. */
   def d52_fertility(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     documents(s, d).select(col("source"),
         when(length(trim(col("text"))) === 0, 0L)
           .otherwise(size(split(trim(col("text")), " +")).cast("long")).as("ws"),
@@ -916,7 +908,6 @@ object Curate {
   def d53_bpe_train(s: SparkSession, d: String,
       rounds: Int = graft.ops.BpeTrain.DefaultRounds,
       vocabCap: Int = graft.ops.BpeTrain.DefaultVocabCap): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
     val learned = graft.ops.BpeTrain.learnMerges(docs, "text", rounds, vocabCap)
     val spec = graft.ops.BpeTrain.mergeSpec(learned)
@@ -1154,7 +1145,6 @@ object Curate {
     * before the keep-verdict so the threshold compare is on a
     * cross-engine-stable value (the d55 discipline). */
   def d56_char_entropy(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     documents(s, d)
       .withColumn("st", expr("char_stats(text)"))
       .select(col("doc_id"), col("st.n").as("n_chars_counted"),
@@ -1195,7 +1185,6 @@ object Curate {
     * 100 TB the key census is the same narrow shape d01/d35 scale
     * on; nothing ever joins the corpus to itself. */
   def d58_source_overlap(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val key = expr("array_join(slice(word_ngrams(lower(text), 1), 1, 8), ' ')")
     val sh = documents(s, d)
       .select(col("source"), xxhash64(key).as("h")).distinct()
@@ -1241,7 +1230,6 @@ object Curate {
     * is GENERATED from the same Scala pattern table the expression
     * compiles, so the two sides cannot drift (the d50 discipline). */
   def d63_blocklist(s: SparkSession, d: String): DataFrame = {
-    graft.functions.AcExprs.register(s)
     documents(s, d)
       .withColumn("c", expr("ac_counts(text)"))
       .select(col("doc_id"), col("source"),

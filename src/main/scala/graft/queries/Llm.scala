@@ -67,11 +67,6 @@ object Llm {
     if (estSplits >= target) df else df.repartition(target)
   }
 
-  private def spread(df: DataFrame): DataFrame = {
-    graft.functions.HashExprs.register(df.sparkSession)
-    spreadIfNarrow(df)
-  }
-
   // ── d02: MinHash signatures + LSH banding ──────────────────────────
   /** 5-char shingles → 32 minhashes → 8 bands of 4 (collision prob ≈
     * sim⁴ per band, so candidate volume stays near-linear even on a
@@ -89,7 +84,7 @@ object Llm {
     * per-row signature evaluation — measured 6× slower than this
     * shape at sf0.1. */
   def d02_minhash_signatures(s: SparkSession, d: String): DataFrame =
-    spread(documents(s, d))
+    spreadIfNarrow(documents(s, d))
       .select(col("doc_id"), posexplode(expr("lsh_bands(text, 8)")).as(Seq("band", "band_hash")))
       .select(col("doc_id"), col("band").cast("long").as("band"), col("band_hash"))
 
@@ -103,7 +98,7 @@ object Llm {
     // infer `size(...) > 0` and push it through the project as a full
     // re-evaluation of the signature at the scan (bands are never
     // empty, so outer ≡ inner here).
-    val sig = spread(documents(s, d))
+    val sig = spreadIfNarrow(documents(s, d))
       .select(col("doc_id"), expr("minhash_sig(text)").as("minhash"))
       .select(col("doc_id"), col("minhash"),
         posexplode_outer(expr("lsh_bands_from_sig(minhash, 8)")).as(Seq("band", "bh")))
@@ -140,7 +135,6 @@ object Llm {
     * gramming the whole corpus would dominate the query). Grams come
     * from the native codegen'd `ngram_set` (graft.functions.NGram). */
   def verifyJaccard(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val ids = pairs.select(col("a_id").as("doc_id"))
       .union(pairs.select(col("b_id").as("doc_id"))).distinct()
     val grams = docs.join(ids, "doc_id")
@@ -160,7 +154,6 @@ object Llm {
     * verifyJaccard, exercised by spec). Same candidate-then-verify
     * shape: bucket join produces pairs, exact Jaccard confirms. */
   def d04_ngram_jaccard(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val g = spreadIfNarrow(documents(s, d))
       .select(col("doc_id"), expr("ngram_set(text)").as("grams"))
       .filter(size(col("grams")) > 0)
@@ -179,7 +172,6 @@ object Llm {
     * via the pigeonhole principle — hamming ≤ 3 ⇒ at least one of four
     * 16-bit chunks equal, so the join key is (chunk_idx, chunk). */
   def d05_simhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     spreadIfNarrow(documents(s, d))
       .select(col("doc_id"), expr("simhash64(text)").as("simhash"))
   }
@@ -207,7 +199,6 @@ object Llm {
     * while the float arrays (half the bytes) stay the shuffle
     * currency for every downstream join. */
   private def withNorm(df: DataFrame): DataFrame = {
-    graft.functions.HashExprs.register(df.sparkSession)
     spreadIfNarrow(df)
       .withColumn("norm", expr("sqrt(vec_dot(embedding, embedding))"))
   }
@@ -401,7 +392,6 @@ object Llm {
   /** Quality scoring: length, punctuation ratio, stopword ratio,
     * mean word length — single scan, all codegen'd. */
   def d10_quality_score(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     documents(s, d)
       .withColumn("n_len", length(col("text")).cast("long"))
       .withColumn("n_punct", (length(col("text")) -
@@ -453,7 +443,6 @@ object Llm {
     * ≪ corpus, so everything after the components is a small-keyed
     * groupBy. */
   def d31_cluster_representatives(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val words = documents(s, d).select(col("doc_id"),
       expr("size(word_ngrams(lower(text), 1))")
         .cast("long").as("n_words"))
@@ -473,7 +462,6 @@ object Llm {
     * only — at 100 TB this is the classic cheap quality gate run
     * before any expensive dedup pass. */
   def d17_repetition(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     documents(s, d)
       .withColumn("tokens",
         expr("word_ngrams(lower(text), 1)"))
@@ -499,7 +487,6 @@ object Llm {
     * bytes) via the native `rolling_hash64` expression — the cheap
     * streaming fingerprint shape (one pass, no buffer). */
   def d14_rolling_fingerprint(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     documents(s, d).select(col("doc_id"), expr("rolling_hash64(text)").as("fingerprint"))
   }
 
@@ -641,9 +628,8 @@ object Llm {
     * corpus²); the top-3 window partitions by doc_id, so no global
     * sort. N (total docs) is a 1-row broadcast cross join. */
   def d28_tfidf(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
-    val tokens = spread(docs).select(col("doc_id"),
+    val tokens = spreadIfNarrow(docs).select(col("doc_id"),
         explode(expr("word_ngrams(lower(text), 1)")).as("term"))
     // tf is consumed twice (df census + scored-join probe); without
     // materialization each consumer re-ran tokenize + explode + census
@@ -691,11 +677,10 @@ object Llm {
     * Σ tf·ln p(w) / Σ tf. No corpus self-join; every shuffle keys on
     * term or doc_id. */
   def d30_unigram_logprob(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val docs = documents(s, d)
     // tf consumed twice (vocabulary census chain + scored-join probe):
     // materialize the one corpus pass, as in d60/d28
-    val tf = spread(docs).select(col("doc_id"),
+    val tf = spreadIfNarrow(docs).select(col("doc_id"),
         explode(expr("word_ngrams(lower(text), 1)")).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       .localCheckpoint()
@@ -750,7 +735,7 @@ object Llm {
     *
     * Strictly-shorter keeps exact duplicates in d01's lane. */
   def d35_prefix_dedup(s: SparkSession, d: String): DataFrame =
-    prefixDedup(spread(documents(s, d)), maxBlockSize = 10000)
+    prefixDedup(spreadIfNarrow(documents(s, d)), maxBlockSize = 10000)
 
   /** Core of d35 over any (doc_id, text) frame; `maxBlockSize` caps
     * the 64-char-block population (default generous — drop only
@@ -865,7 +850,6 @@ object Llm {
   /** Core of d37 over any (doc_id, text) frame. */
   def duplicateSpans(docs: DataFrame, window: Int,
       hashSpans: Boolean = false): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val w = window
     val spans = docs
       .select(col("doc_id"),
@@ -959,7 +943,6 @@ object Llm {
 
   /** Core of d66 over any (doc_id, text) frame. */
   def substringDedupCut(docs: DataFrame, window: Int): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     val w = window
     val wins = docs
       .select(col("doc_id"), posexplode(expr(s"word_ngrams(lower(text), $w)")))
@@ -1107,7 +1090,6 @@ object Llm {
     * callers append their own LIMIT so each plan keeps its own
     * TakeOrderedAndProject k. */
   private def bm25Scored(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val terms = Seq("hash", "join", "vector")
     val docs = documents(s, d)
       .withColumn("toks",
@@ -1383,7 +1365,6 @@ object Llm {
     * inference is embarrassingly parallel; a real weight table would
     * broadcast and the lookup stays map-side). */
   def d44_quality_classifier(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     documents(s, d)
       .withColumn("toks",
         expr("word_ngrams(lower(text), 1)"))
@@ -1408,7 +1389,6 @@ object Llm {
     * propagation ∝ edges) left-join the corpus once; assignment is a
     * map-side expression. */
   def d49_leakage_split(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val clusters = d18_dedup_clusters(s, d)
     val bucket = pmod(expr("xxhash64(group_key)"), lit(10L))
     documents(s, d).select(col("doc_id"))
@@ -1504,7 +1484,6 @@ object Llm {
     * raw doubles (the d07/d41 discipline: identical expression on
     * both engines; output keys round to 6 dp). */
   def d47_weighted_sample(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     documents(s, d)
       .withColumn("n_tokens", expr(
         "cast(size(word_ngrams(lower(text), 1)) as bigint)"))
@@ -1543,7 +1522,6 @@ object Llm {
     * census would shuffle ~50-byte keys; this ships 8-byte hashes
     * and touches strings only for ~k survivors. */
   def d57_ngram_topk(s: SparkSession, d: String, n: Int = 3, k: Int = 50): DataFrame = {
-    graft.functions.HashExprs.register(s)
     // spans via the codegen word_ngrams kernel (one tokenizer sweep,
     // one allocation per span) — the HOF chain it replaced (filter ∘
     // split, then transform ∘ slice ∘ array_join) built two boxed
@@ -1599,9 +1577,8 @@ object Llm {
     * sketch alone and only ever pay exact counting for the candidate
     * set it returns. */
   def d62_heavy_hitters(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     import s.implicits._
-    val toks = spread(documents(s, d))
+    val toks = spreadIfNarrow(documents(s, d))
       .select(explode(expr(
         "word_ngrams(lower(text), 1)")).as("term"))
     val entries = toks.as[String].mapPartitions { it =>
@@ -1659,7 +1636,6 @@ object Llm {
     * strings here since the score needs no string recovery either
     * way. */
   def d60_bigram_logprob(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     // the per-doc bigram census is consumed THREE times (bigram-count
     // model, history-count model, and the scored join's probe side);
     // unmaterialized, each consumer re-ran the tokenize + bigram
@@ -1669,7 +1645,7 @@ object Llm {
     // census). One eager localCheckpoint = one corpus pass; the model
     // censuses become re-aggs of the materialized (already collapsed)
     // tf relation.
-    val tfb = spread(documents(s, d))
+    val tfb = spreadIfNarrow(documents(s, d))
       .withColumn("ws",
         expr("word_ngrams(lower(text), 1)"))
       .select(col("doc_id"), explode(expr(
@@ -1717,12 +1693,11 @@ object Llm {
     * re-agg of THAT census (never a second scan); output is
     * |sources| rows. */
   def d61_source_drift(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     // the (source, term) census is consumed FOUR ways (corpus
     // marginals, per-source totals, the grand total via vocab, and
     // the KL join's probe side) — materialize the one tokenize pass
     // (d60 pattern); every marginal is then a re-agg of the census
-    val stf = spread(documents(s, d))
+    val stf = spreadIfNarrow(documents(s, d))
       .select(col("source"), explode(expr(
         "word_ngrams(lower(text), 1)")).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
@@ -1776,7 +1751,6 @@ object Llm {
     * double result is partition-order-independent and matches the
     * oracle bit-for-bit. */
   def d59_pq_adc(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val emb = spreadIfNarrow(embeddings(s, d)).select(col("vec_id"), col("embedding"))
     val subIdx = s.range(0, 4).select(col("id").cast("int").as("sub"))
     def subvecs(df: DataFrame) = df.crossJoin(broadcast(subIdx))

@@ -123,7 +123,6 @@ object Multimodal {
     // bit string) is ONE compiled expression (`ahash_bits`,
     // graft.functions.AHash) — the HOF history is in FrameEnergy's
     // docstring; same value semantics, oracle unchanged
-    graft.functions.HashExprs.register(s)
     // single evaluation of the (interpreted higher-order) hash
     // expression: the fingerprinted scan is locally checkpointed and
     // feeds both the cluster census and the probe — the naive
@@ -171,7 +170,6 @@ object Multimodal {
     * endpoint for this hot path. mm6/mm7's DuckDB oracles pin value
     * equality with the SQL formulation. */
   private def withFrameEnergies(docs: DataFrame, win: Int): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     docs.withColumn("energies", expr(s"frame_energies(text, $win)"))
   }
 
@@ -355,7 +353,6 @@ object Multimodal {
     * never go quadratic — the cap IS the skew guard; the Hamming
     * verify touches only surviving candidates. */
   def mm9_phash_recall(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val off = 10000000L
     val strengthVals = Seq(3, 7)
     val strengths = s.range(1)
@@ -493,7 +490,6 @@ object Multimodal {
     * per-query top-1 window are rows ∝ matched (query, ref, delta)
     * groups, never clips². */
   def mm10_audio_match(s: SparkSession, d: String): DataFrame = {
-    graft.functions.HashExprs.register(s)
     val off = 10000000L
     val src = documents(s, d).select(col("doc_id"), col("text"))
     val qry = src.select((col("doc_id") + off).as("doc_id"),

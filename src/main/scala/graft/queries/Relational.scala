@@ -1342,33 +1342,30 @@ object Relational {
   def q75_incremental_hybrid(s: SparkSession, d: String): DataFrame = {
     import graft.store.Store
     val o = orders(s, d)
-    val oe = col("o_orderkey").cast("string")
     val c = cents(col("o_totalprice"))
     val k = col("o_orderkey")
-    def dat(a: String, v: Column, vl: Column, tx: Long, op: Boolean, src: DataFrame) =
-      src.select(oe.as("e"), lit(a).as("a"), v.cast("string").as("v"),
-        vl.as("v_long"), lit(false).as("is_ref"), lit(tx).as("tx"), lit(op).as("op"))
     // NOTE (round 12): materializing hist/delta here was tried and
     // REVERTED — recomputing these scan-rooted projection unions per
     // hybrid consumer is CHEAPER than one checkpoint write + wide
     // block re-reads (sf1 matched A/B: checkpointed q75 ran ~20%
     // slower). Materialization pays only for expensive-per-row or
     // data-collapsing subtrees (see d60/d28/mm10).
-    val hist = dat("order/price", c, c, 1L, op = true, o)
-      .unionByName(dat("order/price", c * 2, c * 2, 2L, op = true,
-        o.filter(pmod(k, lit(4)) === 0)))
-      .unionByName(dat("order/tag", lit("t1"), lit(null).cast("long"), 1L, op = true, o))
-      .unionByName(dat("order/tag", lit("t2"), lit(null).cast("long"), 2L, op = true,
-        o.filter(pmod(k, lit(3)) === 0)))
-    val delta = dat("order/price", c * 3, c * 3, 3L, op = true,
-        o.filter(pmod(k, lit(5)) === 0 && pmod(k, lit(20)) =!= 0))
-      .unionByName(dat("order/price", c * 2, c * 2, 3L, op = false,
-        o.filter(pmod(k, lit(20)) === 0))) // card-one retraction → hybrid
-      .unionByName(dat("order/tag", lit("t2"), lit(null).cast("long"), 3L, op = false,
-        o.filter(pmod(k, lit(6)) === 0)))
-      .unionByName(dat("order/tag", lit("t3"), lit(null).cast("long"), 3L, op = true,
-        o.filter(pmod(k, lit(7)) === 0)))
-    val many = Seq("order/tag")
+    val tag = "order/tag"
+    val hist = orderLog(o, c, 1L, vLong = c, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(4)) === 0), c * 2, 2L,
+        vLong = c * 2, op = Some(true)))
+      .unionByName(orderLog(o, lit("t1"), 1L, a = tag, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(3)) === 0), lit("t2"), 2L,
+        a = tag, op = Some(true)))
+    val delta = orderLog(o.filter(pmod(k, lit(5)) === 0 && pmod(k, lit(20)) =!= 0),
+        c * 3, 3L, vLong = c * 3, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(20)) === 0), c * 2, 3L,
+        vLong = c * 2, op = Some(false))) // card-one retraction → hybrid
+      .unionByName(orderLog(o.filter(pmod(k, lit(6)) === 0), lit("t2"), 3L,
+        a = tag, op = Some(false)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(7)) === 0), lit("t3"), 3L,
+        a = tag, op = Some(true)))
+    val many = Seq(tag)
     val snapshot = Store.resolve(hist, many).localCheckpoint()
     val full = hist.unionByName(delta)
     Store.resolveIncrementalHybrid(snapshot, delta, full, many)

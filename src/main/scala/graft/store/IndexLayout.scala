@@ -185,7 +185,6 @@ object IndexLayout {
     * is what keeps both predicates pushable. */
   def materializeZorder(df: DataFrame, aCol: String, bCol: String,
       path: String, buckets: Int): Unit = {
-    graft.functions.ZOrderExprs.register(df.sparkSession)
     df.withColumn("__z",
         expr(s"zorder64(cast($aCol as bigint), cast($bCol as bigint))"))
       .repartitionByRange(buckets, col("__z"))

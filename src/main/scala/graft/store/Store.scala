@@ -48,8 +48,11 @@ final class Store(spark: SparkSession, val dir: String) {
         .withColumn("op", coalesce(col("op"), lit(true)))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Store.schema)
 
+  /** Appends datoms to the log. Precondition: every tx is non-negative
+    * (checked per row; a negative one fails the write). */
   def append(datoms: DataFrame): Unit = {
-    Store.withOp(datoms).select(Store.schema.fieldNames.map(col): _*)
+    Store.withOp(datoms).withColumn("tx", Store.checkedTx)
+      .select(Store.schema.fieldNames.map(col): _*)
       .write.mode(SaveMode.Append).partitionBy("a").parquet(eavPath)
     markSnapshotStale()
   }
@@ -409,6 +412,14 @@ object Store {
     if (r.isNullAt(0)) -1L else r.getLong(0)
   }
 
+  /** `tx`, failing the job on a negative one: the resolve kernel's
+    * packed (tx, op) ordering would misorder it. It rides the projection
+    * every row of a resolved log or an append passes through, so the
+    * check costs no extra job. */
+  private val checkedTx: Column = when(col("tx") < 0,
+    raise_error(concat(lit("negative tx: "), col("tx").cast("string"))))
+    .otherwise(col("tx"))
+
   /** A log without an `op` column (written before retraction support,
     * or synthesized) is all asserts. */
   private[graft] def withOp(df: DataFrame): DataFrame =
@@ -611,14 +622,10 @@ object Store {
     * pick sorts, over the collapsed state rather than the raw log.
     *
     * The packed ordering needs tx ≥ 0 (Datomic t's fit in 2^42, far
-    * below 2^62). The check rides the projection every input row
-    * passes through, so a negative tx fails the job instead of
-    * misordering, at no extra job. */
+    * below 2^62); [[checkedTx]] rejects a negative one. */
   private def resolveKernel(log: DataFrame, manyAttrs: Seq[String],
       vis: Seq[Column]): DataFrame = {
-    val checked = withOp(log).withColumn("tx", when(col("tx") < 0,
-      raise_error(concat(lit("negative tx in a resolved log: "), col("tx").cast("string"))))
-      .otherwise(col("tx")))
+    val checked = withOp(log).withColumn("tx", checkedTx)
     val ord = shiftleft(col("tx"), 1) + col("op").cast("long")
     val hs = vis.indices
     val aggs = hs.flatMap { i => Seq(

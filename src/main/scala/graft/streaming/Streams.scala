@@ -238,7 +238,6 @@ object Streams {
     * ingested without re-scanning it. `curateStream`'s exact-hash
     * dedup composes upstream (drop exact dups cheaply first). */
   def nearDupVerdictStream(docs: DataFrame): Dataset[NearDupVerdict] = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     import docs.sparkSession.implicits._
     docs
       .select(posexplode(expr("lsh_bands(text, 8)")).as(Seq("band", "bh")),
@@ -281,7 +280,6 @@ object Streams {
     * batch's windows top-k — rows ∝ emitted windows, tiny. */
   def trendingSpans(docs: DataFrame, windowDur: String = "10 minutes",
       lateness: String = "10 minutes"): DataFrame = {
-    graft.functions.HashExprs.register(docs.sparkSession)
     docs
       .select(col("ts"),
         explode(expr("word_ngrams(lower(text), 3)")).as("span"))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{Bpe, HashExprs}
+import graft.functions.Bpe
 import graft.ops.BpeTrain
 
 /** BPE training against an independent driver-side reference: a naive
@@ -73,7 +73,6 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("bpe_count_learned tokenizes exactly as the learned replace chain") {
-    HashExprs.register(spark)
     val learned = BpeTrain.learnMerges(docs, "text", rounds = 8, vocabCap = 1000)
     val spec = BpeTrain.mergeSpec(learned)
     val got = docs.select(
@@ -98,7 +97,6 @@ class BpeTrainSpec extends AnyFunSuite {
   }
 
   test("static-table bpe_count is the same machinery as the learned lane") {
-    HashExprs.register(spark)
     val spec = Bpe.Merges.map { case (x, y) => s"$x $y" }.mkString(",")
     val both = docs.select(
       call_function("bpe_count", col("text")).as("a"),

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.HashExprs
 
 /** Pins the native expressions to the higher-order-function formulas
   * they replaced — bit-identical signatures mean LSH buckets, pair
@@ -38,7 +37,6 @@ class HashExprsSpec extends AnyFunSuite {
         }.min
       }
     }
-    HashExprs.register(spark)
     val rows = docs.filter(length(col("text")) > 0)
       .select(col("text"), expr("minhash_sig(text)").as("native"))
       .collect()
@@ -48,7 +46,6 @@ class HashExprsSpec extends AnyFunSuite {
   }
 
   test("simhash64 equals the expression formula") {
-    HashExprs.register(spark)
     val formula =
       """transform(array(transform(
            filter(split(lower(text), '[^a-z0-9]+'), t -> length(t) > 0),
@@ -62,7 +59,6 @@ class HashExprsSpec extends AnyFunSuite {
   }
 
   test("lsh_bands_from_sig equals lsh_bands; d03 computes the signature once per side") {
-    HashExprs.register(spark)
     val rows = docs.select(
       expr("lsh_bands(text, 8)"), expr("lsh_bands_from_sig(minhash_sig(text), 8)")).collect()
     rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString))
@@ -76,7 +72,6 @@ class HashExprsSpec extends AnyFunSuite {
   }
 
   test("vec_dot is bit-identical to the double-cast HOF formulation") {
-    HashExprs.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val rows = emb.select(
       expr("vec_dot(embedding, embedding)"),
@@ -98,7 +93,6 @@ class HashExprsSpec extends AnyFunSuite {
 
   test("frame_energies equals the SQL higher-order formulation") {
     import spark.implicits._
-    HashExprs.register(spark)
     val rnd = new scala.util.Random(7)
     val strs = Seq("", "a", " " * 64, "x" * 63, "y" * 64, "z" * 65) ++
       (1 to 30).map(_ => (0 until rnd.nextInt(300)).map(_ => (32 + rnd.nextInt(95)).toChar).mkString)
@@ -131,7 +125,6 @@ class HashExprsSpec extends AnyFunSuite {
       }
       st.count(_ == '<').toLong
     }
-    HashExprs.register(spark)
     val corpus = Seq(
       "the", "thesis", "aaaa", "the things and others", "", "!!!",
       "a 10 100 1000 10x", "The THE the", "ünïcødé and 中文 tokens",
@@ -165,8 +158,6 @@ class HashExprsSpec extends AnyFunSuite {
       while (i >= 0) { n += 1; i = text.indexOf(p, i + 1) }
       n
     }
-    HashExprs.register(spark)
-    graft.functions.AcExprs.register(spark)
     val pats = AhoCorasick.Blocklist
     val corpus = Seq(
       "", "big data", "big databig data big data",
@@ -192,7 +183,6 @@ class HashExprsSpec extends AnyFunSuite {
   }
 
   test("word_ngrams equals the filter∘split + transform∘slice HOF chain") {
-    HashExprs.register(spark)
     val corpus = Seq(
       "", "one", "one two", "one two three", "a b c d e",
       "  leading and trailing  ", "punct!!!between,,words",
@@ -235,8 +225,7 @@ class HashExprsSpec extends AnyFunSuite {
       val zs = (0L to 64L).map(a => ZOrder.interleave(a, b))
       assert(zs == zs.sorted, s"monotone in a at b=$b")
     }
-    // SQL registration evaluates (and codegens) the same kernel
-    graft.functions.ZOrderExprs.register(spark)
+    // SQL evaluates (and codegens) the same kernel
     val r = spark.sql("SELECT zorder64(12345L, 67890L) AS z").head().getLong(0)
     assert(r == naive(12345L, 67890L))
   }
@@ -244,8 +233,6 @@ class HashExprsSpec extends AnyFunSuite {
   test("expressions participate in codegen (no fallback)") {
     // a local Seq would constant-fold via ConvertToLocalRelation; use a
     // real parquet scan so the projection actually plans
-    HashExprs.register(spark)
-    graft.functions.AcExprs.register(spark)
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(expr("minhash_sig(text)"), expr("simhash64(text)"),
         expr("ac_counts(text)"))

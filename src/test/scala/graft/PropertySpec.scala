@@ -308,18 +308,21 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.store.Store
     // the packed (tx << 1) + op ordering misorders a negative tx, so
-    // the kernel rejects one instead of resolving it silently wrong
+    // the kernel rejects one instead of resolving it silently wrong,
+    // and an append fails instead of writing one
     val log = Seq(("e1", "nh1", "v1", -1L, true), ("e1", "nh1", "v2", 1L, true))
       .toDF("e", "a", "v", "tx", "op")
       .withColumn("v_long", lit(null).cast("long"))
       .withColumn("is_ref", lit(false))
-    val entryPoints = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "resolve" -> (() => Store.resolve(log, Seq.empty)),
-      "resolveAtHorizons" -> (() => Store.resolveAtHorizons(log, Seq(1L), Seq.empty)),
-      "sinceAtHorizons" -> (() => Store.sinceAtHorizons(log, Seq(0L), Seq.empty)),
-      "dropNoHistory" -> (() => Store.dropNoHistory(log, Seq("nh1"), Seq.empty)))
+    val store = new Store(spark, java.nio.file.Files.createTempDirectory("negtx").toString)
+    val entryPoints = Seq[(String, () => Unit)](
+      "resolve" -> (() => Store.resolve(log, Seq.empty).collect()),
+      "resolveAtHorizons" -> (() => Store.resolveAtHorizons(log, Seq(1L), Seq.empty).collect()),
+      "sinceAtHorizons" -> (() => Store.sinceAtHorizons(log, Seq(0L), Seq.empty).collect()),
+      "dropNoHistory" -> (() => Store.dropNoHistory(log, Seq("nh1"), Seq.empty).collect()),
+      "append" -> (() => store.append(log)))
     entryPoints.foreach { case (name, run) =>
-      val err = intercept[Exception](run().collect())
+      val err = intercept[Exception](run())
       val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
         .map(t => String.valueOf(t.getMessage))
       assert(msgs.exists(_.contains("negative tx")), s"$name: $err")

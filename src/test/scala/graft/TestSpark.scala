@@ -4,20 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession shared across all suites (sbt runs suites in one
   * JVM; local[8] keeps test latency low while still exercising
-  * multi-partition behavior). */
+  * multi-partition behavior), built by the program's own factory. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(cpus = 8)
 
   /** Run `body` with SQL confs overridden, restoring prior values (or
     * unsetting) afterwards — for specs that flip optimizer knobs. */
