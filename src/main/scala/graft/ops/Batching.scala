@@ -1,60 +1,36 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** `tx-data->batches` (reference `src/cognitect/xform/batch.clj:31-40`):
-  * partition a dense-indexed stream into fixed-size batches with
-  * monotonically numbered batch ids `prefix-N` (N from 1).
+/** `tx-data->batches` (reference `src/cognitect/xform/batch.clj:31-40`,
+  * called from `create-batch-file`, importer.clj:279-296): one pass over
+  * an ordered stream of tx-data forms, cut every `size` forms, batch ids
+  * `prefix-N` numbered from 1.
   *
-  * Fully declarative (groupBy + collect_list + codegen'd string
-  * assembly — no UDF): batch membership is `row_idx / size`, so the
-  * grouping is a plain hash shuffle that scales with data, and in-batch
-  * order is restored by `sort_array` on the carried index.
+  * A batch file is one ordered stream, so it is written by one task:
+  * batch N is forms `(N-1)·size …`, which depends on every form before
+  * it, and the file itself is one sequential write. Only the work up
+  * to the rendered forms runs in parallel.
   */
 object Batching {
 
-  /** df must have (row_idx: dense 0-based long, edn: string).
-    * Returns (batch_n, batch_id, line) — one EDN line per batch. */
-  def batchLines(df: DataFrame, batchSize: Int, prefix: String, batchIdAttr: String): DataFrame =
-    df.withColumn("batch_n", (col("row_idx") / batchSize).cast("long"))
-      .groupBy(col("batch_n"))
-      .agg(sort_array(collect_list(struct(col("row_idx"), col("edn")))).as("items"))
-      .withColumn("batch_id", concat(lit(prefix + "-"), (col("batch_n") + 1).cast("string")))
-      .select(
-        col("batch_n"),
-        col("batch_id"),
-        concat(
-          lit("{:batch-ident {:db/id \"datomic.tx\", :" + batchIdAttr + " \""),
-          col("batch_id"),
-          lit("\"}, :data ["),
-          concat_ws(" ", transform(col("items"), x => x.getField("edn"))),
-          lit("]}")).as("line"))
-
-  /** Structured batch table for the loader path: (batch_n, batch_id,
-    * data: array<string>) — parquet-friendly, distributed. */
-  def batchTable(df: DataFrame, batchSize: Int, prefix: String): DataFrame =
-    df.withColumn("batch_n", (col("row_idx") / batchSize).cast("long"))
-      .groupBy(col("batch_n"))
-      .agg(sort_array(collect_list(struct(col("row_idx"), col("edn")))).as("items"))
-      .select(
-        col("batch_n"),
-        concat(lit(prefix + "-"), (col("batch_n") + 1).cast("string")).as("batch_id"),
-        transform(col("items"), x => x.getField("edn")).as("data"))
+  /** The one chunker: one batch line per `size` forms of `forms`, in
+    * order. */
+  def lines(forms: Iterator[String], size: Int, prefix: String, batchIdAttr: String): Iterator[String] =
+    forms.grouped(size).zipWithIndex.map { case (group, i) =>
+      EdnRender.batchLine(batchIdAttr, s"$prefix-${i + 1}", group)
+    }
 
   /** Ordered single-file batch sink (the reference's golden EDN file,
     * async_edn.clj:66-82) WITHOUT collecting the payload to the
-    * driver: a sorted single-partition write through the "edn"
-    * connector's raw-line mode, then a filesystem rename of the one
-    * part file to `path`. The driver never holds a single batch line
-    * in memory. Returns the number of batches written. */
+    * driver: `lines` — one string column in one partition, already in
+    * file order — goes through the "edn" connector's raw-line mode,
+    * then a filesystem rename of the one part file to `path`. The
+    * driver never holds a single batch line in memory. Returns the
+    * number of batches written. */
   def writeLines(lines: DataFrame, path: String): Long = {
     val stage = path + ".stage"
-    lines.select(col("batch_n"), col("line"))
-      .coalesce(1)
-      .sortWithinPartitions(col("batch_n"))
-      .select(col("line"))
-      .write.format("edn").option("raw", "true").mode("overwrite").save(stage)
+    lines.write.format("edn").option("raw", "true").mode("overwrite").save(stage)
 
     val conf = lines.sparkSession.sessionState.newHadoopConf()
     val stagePath = new org.apache.hadoop.fs.Path(stage)

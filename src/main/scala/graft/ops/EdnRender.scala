@@ -43,10 +43,19 @@ object EdnRender {
     parts.result().mkString("{", ", ", "}")
   }
 
-  def batchIdent(batchIdAttr: String, batchId: String): String =
-    "{:db/id \"datomic.tx\", :" + batchIdAttr + " \"" + batchId + "\"}"
-
+  /** The batch-line format, written here only: `{:batch-ident {:db/id
+    * "datomic.tx", :<attr> "<id>"}, :data [<forms>]}`. */
   def batchLine(batchIdAttr: String, batchId: String, data: Seq[String]): String =
-    "{:batch-ident " + batchIdent(batchIdAttr, batchId) +
-      ", :data [" + data.mkString(" ") + "]}"
+    identPrefix(batchIdAttr) + batchId + "\"}, :data [" + data.mkString(" ") + "]}"
+
+  /** The batch id of a canonical [[batchLine]], read off its prefix
+    * without parsing the line; `None` for any other line. */
+  def batchIdOf(batchIdAttr: String, line: String): Option[String] = {
+    val prefix = identPrefix(batchIdAttr)
+    val end = if (line.startsWith(prefix)) line.indexOf('"', prefix.length) else -1
+    if (end > prefix.length) Some(line.substring(prefix.length, end)) else None
+  }
+
+  private def identPrefix(batchIdAttr: String): String =
+    "{:batch-ident {:db/id \"datomic.tx\", :" + batchIdAttr + " \""
 }

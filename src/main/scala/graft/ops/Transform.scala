@@ -37,11 +37,9 @@ object Transform {
   /** Rename + resolve every mapping of `t`; output columns are
     * `mapping.col` in mapping order (plus `row_idx`). Enum/dict misses
     * become nulls with the raw input kept in `<col>__raw` for the
-    * strict check. */
-  def transform(df: DataFrame, t: EntityType, dims: Dims): DataFrame =
-    transform(df, t, dims, Nil)
-
-  def transform(df: DataFrame, t: EntityType, dims: Dims, keepCols: Seq[String]): DataFrame = {
+    * strict check. `keepCols` are input columns carried through as-is
+    * (after `row_idx`). */
+  def transform(df: DataFrame, t: EntityType, dims: Dims, keepCols: Seq[String] = Nil): DataFrame = {
     var out = df
     t.mappings.foreach { m =>
       if (!df.columns.contains(m.inputKey)) {

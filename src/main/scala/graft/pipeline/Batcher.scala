@@ -1,12 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, min, min_by, sort_array, struct, collect_list, transform => arrTransform}
+import org.apache.spark.sql.functions.{col, collect_list, min, min_by, sort_array, struct}
 import graft.edn.Edn
 import graft.edn.Edn._
 import graft.model.Mbrainz
-import graft.model.Mbrainz._
-import graft.ops.{Batching, EdnRender, GlobalIndex, Transform}
+import graft.ops.{Batching, EdnRender, Transform}
 import graft.sources.EdnSource
 
 /** E1 — the batcher pipeline (reference
@@ -15,11 +14,15 @@ import graft.sources.EdnSource
   * entity EDN → validate/transform → tx-data → size-N batches →
   * one EDN line per batch in `<outDir>/<type>.edn`.
   *
-  * The reference's channel+transducer wiring maps to a single Spark
-  * job per type: narrow transform chain (whole-stage codegen) + one
-  * shuffle for batch grouping (+ one for media assembly). Dictionary
-  * types (schema/enums/super-enums, ≤ 8k rows) are driver-side like
-  * the reference's in-memory `threaded-onto` (importer.clj:252-255).
+  * Every type's tx-data is one ordered stream of forms, cut every
+  * `batchSize` forms by [[Batching.lines]]. Dictionary types
+  * (schema/enums/super-enums, ≤ 8k rows) build that stream on the
+  * driver, like the reference's in-memory `threaded-onto`
+  * (importer.clj:252-255). Entity types read, transform and render in
+  * Spark (narrow whole-stage-codegen chain; media adds one shuffle for
+  * assembly), then the rendered forms are sorted and chunked in the
+  * one task that writes the file: the file is one sequential stream
+  * whose batch boundaries depend on every form before them.
   */
 final class Batcher(spark: SparkSession, basedir: String, val outDir: String, batchSize: Int = 100) {
 
@@ -27,57 +30,53 @@ final class Batcher(spark: SparkSession, basedir: String, val outDir: String, ba
   lazy val dims: Transform.Dims = Transform.Dims.load(spark, entitiesDir)
   new java.io.File(outDir).mkdirs()
 
-  /** Skips types whose entity file is absent (e.g. the stripped
-    * media.edn, `.MISSING_LARGE_BLOBS`) — dictionary-derived types
-    * (schema/enums/super-enums) are checked against their own files. */
+  /** Skips types whose source file is absent (e.g. the stripped
+    * media.edn, `.MISSING_LARGE_BLOBS`). */
   def runAll(types: Seq[String] = Mbrainz.importOrder): Map[String, Long] =
     types.flatMap { t =>
-      val file = t match {
-        case "enums" => "enums.edn"
-        case "super-enums" => "countries.edn"
-        case other => s"$other.edn"
-      }
-      if (new java.io.File(s"$entitiesDir/$file").exists()) Some(t -> createBatchFile(t))
-      else None
+      val (file, write) = source(t)
+      if (new java.io.File(s"$entitiesDir/$file").exists()) Some(t -> write()) else None
     }.toMap
 
   /** Returns the number of batches written for `tpe`. */
-  def createBatchFile(tpe: String): Long = tpe match {
-    case "schema" =>
-      val forms = Edn.parse(EdnSource.readText(s"$entitiesDir/schema.edn")) match {
-        case EVec(items) => items
+  def createBatchFile(tpe: String): Long = source(tpe)._2()
+
+  /** The one type table: `tpe`'s source file under `entities/` (the
+    * one [[runAll]] checks for) and how its batch file is written. */
+  private def source(tpe: String): (String, () => Long) = tpe match {
+    case "schema" => ("schema.edn", () => driverBatches(tpe,
+      Edn.parse(EdnSource.readText(s"$entitiesDir/schema.edn")) match {
+        case EVec(items) => items.map(Edn.print)
         case other => throw new IllegalArgumentException(s"schema.edn not a vector: $other")
-      }
-      driverBatches(tpe, forms.map(Edn.print))
-    case "enums" =>
-      val txs = EdnSource.readEnums(s"$entitiesDir/enums.edn").map { case (_, in, ident) =>
+      }))
+    case "enums" => ("enums.edn", () => driverBatches(tpe,
+      EdnSource.readEnums(s"$entitiesDir/enums.edn").map { case (_, in, ident) =>
         val ns = ident.substring(0, ident.indexOf('/'))
         "{:db/ident :" + ident + ", :" + ns + "/name \"" + Edn.escape(in) + "\"}"
-      }
-      driverBatches(tpe, txs)
-    case "super-enums" =>
-      val txs = Seq("countries", "langs", "scripts").flatMap { d =>
+      }))
+    case "super-enums" => ("countries.edn", () => driverBatches(tpe,
+      Seq("countries", "langs", "scripts").flatMap { d =>
         EdnSource.readSuperEnum(s"$entitiesDir/$d.edn").map { case (_, _, ent) => Edn.print(ent) }
-      }
-      driverBatches(tpe, txs)
-    case "media" => mediaBatchFile()
-    case name =>
+      }))
+    case "media" => ("media.edn", () => writeType(tpe, mediaForms()))
+    case name => (s"$name.edn", () => {
       val t = Mbrainz.byName(name)
       val raw = EdnSource.readEntities(spark, s"$entitiesDir/$name.edn", t)
       val transformed = Transform.requireStrict(Transform.transform(raw, t, dims), t)
       val mappings = t.mappings
-      val rendered = transformed.map { row =>
+      writeType(tpe, transformed.map { row =>
         (row.getLong(row.fieldIndex("row_idx")), EdnRender.renderEntity(row, mappings))
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.STRING)).toDF("row_idx", "edn")
-      writeType(name, rendered)
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.STRING)).toDF("row_idx", "edn"))
+    })
   }
 
   /** Media assembly (A1, importer.clj:236-247): contiguous rows sharing
     * `:id` form one medium; medium attrs come from the group's first
     * row; tracks carry a composite tempid so multi-artist tracks
     * coalesce; the reference `conj`s onto a list, so track order is
-    * REVERSED input order — reproduced here via a descending sort. */
-  private def mediaBatchFile(): Long = {
+    * REVERSED input order — reproduced here via a descending sort.
+    * A medium's place in the stream is its first row's `row_idx`. */
+  private def mediaForms(): DataFrame = {
     val t = Mbrainz.media
     val raw = EdnSource.readEntities(spark, s"$entitiesDir/media.edn", t)
     val transformed = Transform.requireStrict(
@@ -96,40 +95,37 @@ final class Batcher(spark: SparkSession, basedir: String, val outDir: String, ba
     }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.STRING, Encoders.STRING))
       .toDF("id", "row_idx", "medium_edn", "track_edn")
 
-    val assembled = perRow
+    perRow
       .groupBy(col("id"))
       .agg(
         min(col("row_idx")).as("medium_idx"),
         min_by(col("medium_edn"), col("row_idx")).as("medium_edn"),
         sort_array(collect_list(struct(col("row_idx"), col("track_edn"))), asc = false).as("tracks"))
-      .select(col("medium_idx"),
-        col("medium_edn"), arrTransform(col("tracks"), x => x.getField("track_edn")).as("track_edns"))
-
-    val rendered = GlobalIndex.withDenseIndex(assembled, Seq(col("medium_idx")))
       .map { row =>
         val body = row.getString(row.fieldIndex("medium_edn"))
-        val tracks = row.getSeq[String](row.fieldIndex("track_edns"))
+        val tracks = row.getSeq[Row](row.fieldIndex("tracks")).map(_.getString(1))
         val tracksEdn = ":medium/tracks [" + tracks.mkString(" ") + "]"
         val full =
           if (body == "{}") "{" + tracksEdn + "}"
           else body.dropRight(1) + ", " + tracksEdn + "}"
-        (row.getLong(row.fieldIndex("row_idx")), full)
+        (row.getLong(row.fieldIndex("medium_idx")), full)
       }(Encoders.tuple(Encoders.scalaLong, Encoders.STRING)).toDF("row_idx", "edn")
-    writeType("media", rendered)
   }
 
-  private def driverBatches(tpe: String, ednForms: Seq[String]): Long = {
-    val lines = ednForms.grouped(batchSize).zipWithIndex.map { case (group, i) =>
-      EdnRender.batchLine(Mbrainz.batchIdAttr, s"$tpe-${i + 1}", group)
-    }.toSeq
+  private def driverBatches(tpe: String, forms: Seq[String]): Long = {
     val w = new java.io.PrintWriter(new java.io.File(s"$outDir/$tpe.edn"), "UTF-8")
-    try lines.foreach(w.println)
+    try Batching.lines(forms.iterator, batchSize, tpe, Mbrainz.batchIdAttr)
+      .foldLeft(0L) { (n, line) => w.println(line); n + 1 }
     finally w.close()
-    lines.size.toLong
   }
 
+  /** `rendered` is `(row_idx, edn)`: its forms, in `row_idx` order,
+    * chunked in the one task that writes the file. */
   private def writeType(tpe: String, rendered: DataFrame): Long = {
-    val lines = Batching.batchLines(rendered, batchSize, tpe, Mbrainz.batchIdAttr)
-    Batching.writeLines(lines, s"$outDir/$tpe.edn")
+    val (size, batchIdAttr) = (batchSize, Mbrainz.batchIdAttr)
+    val lines = rendered.coalesce(1).sortWithinPartitions(col("row_idx"))
+      .select(col("edn")).as(Encoders.STRING)
+      .mapPartitions(Batching.lines(_, size, tpe, batchIdAttr))(Encoders.STRING)
+    Batching.writeLines(lines.toDF(), s"$outDir/$tpe.edn")
   }
 }

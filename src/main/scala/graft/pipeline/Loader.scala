@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Mbrainz, SchemaRegistry}
+import graft.ops.EdnRender
 import graft.store.{Datoms, Store}
 
 /** One datom of a load: a row of the EAV log (`Store.schema` column
@@ -65,21 +66,18 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
 
     val applied = spark.sparkContext.broadcast(
       store.appliedBatchIds.as(Encoders.STRING).collect().toSet)
-    // Cheap batch-id extraction: the batcher renders a canonical
-    // `{:batch-ident {:db/id "datomic.tx", :attr "id"}, ...` prefix, so
-    // a regex reads the id without parsing the batch EDN at all —
-    // already-applied batches are never parsed on resume, and fresh
-    // batches parse exactly once (below). Non-canonical lines fall back
-    // to the full parse.
-    val prefixRe = ("^\\{:batch-ident \\{:db/id \"datomic.tx\", :" +
-      java.util.regex.Pattern.quote(Mbrainz.batchIdAttr) + " \"([^\"]+)\"").r
+    // Cheap batch-id extraction: the batcher renders canonical batch
+    // lines, whose id `EdnRender.batchIdOf` reads without parsing the
+    // batch EDN at all — already-applied batches are never parsed on
+    // resume, and fresh batches parse exactly once (below).
+    // Non-canonical lines fall back to the full parse.
     val lines = files.map { case (tpe, path) =>
       spark.read.textFile(path).filter(length(trim(col("value"))) > 0)
         .select(lit(tpe).as("_1"), lit(math.max(Mbrainz.importOrder.indexOf(tpe), 0)).as("_2"),
           col("value").as("_3"))
     }.reduce(_ union _).as(Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.STRING))
     val fresh = lines.filter { case (_, typeIdx, line) =>
-      val batchId = prefixRe.findFirstMatchIn(line).map(_.group(1))
+      val batchId = EdnRender.batchIdOf(Mbrainz.batchIdAttr, line)
         .getOrElse(Datoms.batchDatoms(line, reg, typeIdx)._1)
       !applied.value.contains(batchId)
     }.repartition(concurrency)
@@ -123,13 +121,11 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     * through the normal batch machinery, so it is idempotent via the
     * same applied-id filter. */
   def ensureImportSchema(): LoadStats = {
-    val line =
-      "{:batch-ident {:db/id \"datomic.tx\", :" + Mbrainz.batchIdAttr +
-        " \"import-schema-1\"}, :data [" +
-        "{:db/ident :" + Mbrainz.batchIdAttr + ", " +
+    val line = EdnRender.batchLine(Mbrainz.batchIdAttr, "import-schema-1", Seq(
+      "{:db/ident :" + Mbrainz.batchIdAttr + ", " +
         ":db/valueType :db.type/string, :db/cardinality :db.cardinality/one, " +
         ":db/unique :db.unique/value, " +
-        ":db/doc \"Identifies batches from the initial import\"}]}"
+        ":db/doc \"Identifies batches from the initial import\"}"))
     val f = java.nio.file.Files.createTempFile("import-schema", ".edn")
     java.nio.file.Files.write(f, line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     try loadBatchFile("import-schema", f.toString)

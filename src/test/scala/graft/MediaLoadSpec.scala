@@ -18,13 +18,8 @@ class MediaLoadSpec extends AnyFunSuite {
   private def uuid(n: Int): String = f"00000000-0000-4000-8000-${n}%012d"
 
   test("media batches load into component track entities") {
-    val base = java.nio.file.Files.createTempDirectory("mlbase")
+    val base = EdnFixtures.basedir()
     val entities = base.resolve("entities")
-    java.nio.file.Files.createDirectory(entities)
-    Seq("enums.edn", "countries.edn", "langs.edn", "scripts.edn", "schema.edn").foreach { f =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"/root/reference/subsets/entities/$f"), entities.resolve(f))
-    }
     val media =
       s"""{:id 10, :release #uuid "${uuid(1)}", :position 1, :track_count 2, :format "CD",
          | :name "Track A", :tracknum 1, :length 180000, :artist #uuid "${uuid(2)}"}

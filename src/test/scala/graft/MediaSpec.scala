@@ -18,13 +18,8 @@ class MediaSpec extends AnyFunSuite {
 
   test("media assembly end-to-end") {
     val spark = TestSpark.spark
-    val base = java.nio.file.Files.createTempDirectory("mediabase")
+    val base = EdnFixtures.basedir()
     val entities = base.resolve("entities")
-    java.nio.file.Files.createDirectory(entities)
-    Seq("enums.edn", "countries.edn", "langs.edn", "scripts.edn").foreach { f =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"/root/reference/subsets/entities/$f"), entities.resolve(f))
-    }
     val media =
       s"""{:id 10, :release #uuid "${uuid(1)}", :position 1, :track_count 3, :format "CD",
          | :name "Track A", :tracknum 1, :length 180000, :artist #uuid "${uuid(2)}"}
@@ -71,13 +66,8 @@ class MediaSpec extends AnyFunSuite {
 
   test("strict enum miss fails the import") {
     val spark = TestSpark.spark
-    val base = java.nio.file.Files.createTempDirectory("mediabad")
+    val base = EdnFixtures.basedir()
     val entities = base.resolve("entities")
-    java.nio.file.Files.createDirectory(entities)
-    Seq("enums.edn", "countries.edn", "langs.edn", "scripts.edn").foreach { f =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"/root/reference/subsets/entities/$f"), entities.resolve(f))
-    }
     java.nio.file.Files.write(entities.resolve("media.edn"),
       s"""{:id 1, :release #uuid "${uuid(1)}", :position 1, :track_count 1,
          | :format "NotAFormat", :name "X", :tracknum 1, :length 1000,

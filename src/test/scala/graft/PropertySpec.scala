@@ -43,22 +43,20 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("batching invariants: sizes, ids, order, content") {
-    val spark = TestSpark.spark
-    import spark.implicits._
     val cases = samples(for {
       size <- Gen.chooseNum(1, 50)
       n <- Gen.chooseNum(0, 120)
     } yield (size, n), 12)
     cases.foreach { case (batchSize, n) =>
-      val df = (0 until n).map(i => (i.toLong, s"e$i")).toDF("row_idx", "edn")
-      val batches = graft.ops.Batching.batchTable(df, batchSize, "t")
-        .orderBy("batch_n").collect()
+      val lines = graft.ops.Batching.lines(
+        (0 until n).iterator.map(i => s"{:e $i}"), batchSize, "t", "b/id").toVector
+      val batches = lines.map(l => Edn.parse(l).asInstanceOf[EMap])
       assert(batches.length == (n + batchSize - 1) / batchSize)
-      val all = batches.flatMap(_.getSeq[String](2))
-      assert(all.toSeq == (0 until n).map(i => s"e$i"), "order-preserving concat")
+      val data = batches.map(_.getKw("data").get.asInstanceOf[EVec].items)
+      assert(data.flatten == (0 until n).map(i => EMap(kw("e") -> ELong(i))), "order-preserving concat")
       batches.zipWithIndex.foreach { case (b, i) =>
-        assert(b.getString(1) == s"t-${i + 1}")
-        if (i < batches.length - 1) assert(b.getSeq[String](2).size == batchSize)
+        assert(b.getKw("batch-ident").get.asInstanceOf[EMap].getKw("b/id").contains(EStr(s"t-${i + 1}")))
+        if (i < batches.length - 1) assert(data(i).size == batchSize)
       }
     }
   }
