@@ -9,18 +9,20 @@ import graft.query.Datalog
 import graft.store.Store
 
 /** The Datalog front-end runs the reference's own example queries
-  * (`examples/explore_db.clj`) verbatim against a loaded store. */
+  * (`examples/explore_db.clj`) verbatim against a store loaded from the
+  * generated mbrainz input ([[MbrainzFixture]]); expected values come
+  * from the generator's `Truth` and a plain `Edn` parse of the input. */
 class DatalogSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-  private val basedir = "/root/reference/subsets"
-  private lazy val registry = SchemaRegistry.load(s"$basedir/entities/schema.edn")
+  private val fx = MbrainzFixture
+  private lazy val registry = SchemaRegistry.load(fx.schemaPath)
+  private val types = Seq("schema", "enums", "super-enums", "artists", "areleases",
+    "areleases-artists", "labels", "releases", "releases-artists")
 
   private lazy val store: Store = {
     val batches = java.nio.file.Files.createTempDirectory("dlbatches").toString
-    val b = new Batcher(spark, basedir, batches, batchSize = 1000)
-    val types = Seq("schema", "enums", "super-enums", "artists", "areleases",
-      "areleases-artists", "labels", "releases", "releases-artists")
+    val b = new Batcher(spark, fx.basedir, batches, batchSize = 1000)
     types.foreach(b.createBatchFile)
     val st = new Store(spark, java.nio.file.Files.createTempDirectory("dlstore").toString)
     val loader = new Loader(spark, registry, st)
@@ -38,7 +40,8 @@ class DatalogSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows("artist/gid") == "db.unique/identity")
     assert(rows("mbrainz.initial-import/batch-id") == "db.unique/value")
-    assert(rows.size >= 7)
+    // exactly the generated schema's :db/unique attrs plus the import schema's
+    assert(rows == fx.uniqueAttrs + (Mbrainz.batchIdAttr -> "db.unique/value"))
   }
 
   test("explore query 2: parameterized entity count per attr") {
@@ -48,9 +51,9 @@ class DatalogSpec extends AnyFunSuite {
         | :where [?e ?attr _]]""".stripMargin)
     def countFor(attr: String): Long =
       Datalog.run(store, registry, q, Map("attr" -> Edn.kw(attr))).collect()(0).getLong(0)
-    assert(countFor("artist/gid") == 4601)
-    assert(countFor("label/gid") == 1207)
-    assert(countFor("abstractRelease/gid") == 10180)
+    assert(countFor("artist/gid") == fx.truth.artistGids.size)
+    assert(countFor("label/gid") == fx.truth.labelGids.size)
+    assert(countFor("abstractRelease/gid") == fx.truth.areleaseGids.size)
   }
 
   test("explore query 3: all batch ids (wildcard entity)") {
@@ -58,17 +61,21 @@ class DatalogSpec extends AnyFunSuite {
       "[:find ?v :where [_ :mbrainz.initial-import/batch-id ?v]]")
     val ids = Datalog.run(store, registry, q).collect().map(_.getString(0)).toSet
     assert(ids.contains("artists-1") && ids.contains("schema-1"))
-    assert(ids.size == 1 + 1 + 1 + 9 + 5 + 11 + 11 + 2 + 12 + 12) // import-schema + size-1000 batches
+    // import-schema + ⌈rows / 1000⌉ batches per type
+    assert(ids.size == 1 + types.map(fx.batches(_, 1000)).sum)
   }
 
   test("constants in value position, including enum refs") {
+    val code = fx.pickedField("country")
     val q = Datalog.parse(
-      """[:find ?name
-        | :where [?e :artist/country :country/IT]
+      s"""[:find ?name
+        | :where [?e :artist/country :country/$code]
         |        [?e :artist/name ?name]]""".stripMargin)
     val names = Datalog.run(store, registry, q).collect().map(_.getString(0))
-    assert(names.contains("Adamo"))
-    assert(names.length > 50)
+    assert(names.contains(fx.pickedField("name")))
+    val expected = fx.artists.filter(fx.field(_, "country").contains(code))
+      .map(fx.field(_, "name").get).distinct
+    assert(names.sorted.toSeq == expected.sorted)
   }
 
   test("aggregates: min/max/count-distinct with grouping") {
@@ -79,7 +86,10 @@ class DatalogSpec extends AnyFunSuite {
     val rows = Datalog.run(store, registry, q).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toList
     val person = rows.find(_._1 == "ident|artist.type/person").get
-    assert(person._2 > 100)
+    val persons = fx.artists.filter(a => fx.field(a, "type").contains("Person") &&
+      a.getKw("begin_date_year").isDefined)
+    assert(person._2 == persons.size)
+    assert(person._3 == persons.map(fx.field(_, "begin_date_year").get).min)
   }
 
   test("cross-pattern join through a ref: artists of a release") {
@@ -89,7 +99,17 @@ class DatalogSpec extends AnyFunSuite {
         |        [?r :release/name ?release-name]
         |        [?a :artist/name ?artist-name]]""".stripMargin)
     val rows = Datalog.run(store, registry, q).collect()
-    assert(rows.length > 10000)
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    // over the log: a duplicate-gid release contributes every name it
+    // was ever asserted with
+    val releaseNames = fx.releases.groupBy(fx.field(_, "gid").get)
+      .map { case (g, rs) => g -> rs.map(fx.field(_, "name").get) }
+    val artistName = fx.artists.map(a => fx.field(a, "gid").get -> fx.field(a, "name").get).toMap
+    val expected = fx.releasesArtists.flatMap { ra =>
+      val artist = artistName(fx.field(ra, "artist").get)
+      releaseNames(fx.field(ra, "release").get).map(_ -> artist)
+    }.toSet
+    assert(rows == expected)
   }
 
   test("unbound :in parameter is a clear error") {

@@ -9,12 +9,13 @@ import graft.sources.EdnSource
 class EdnSourceV2Spec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-  private val artistsPath = "/root/reference/subsets/entities/artists.edn"
+  private lazy val artistsPath = MbrainzFixture.entityPath("artists")
+  private lazy val nArtists = MbrainzFixture.truth.artistGids.size.toLong
 
   test("v2 scan equals driver-side parse on artists.edn") {
     val v2 = EdnSource.readEntities(spark, artistsPath, Mbrainz.artists)
     val drv = EdnSource.readEntitiesDriver(spark, artistsPath, Mbrainz.artists)
-    assert(v2.count() == 4601)
+    assert(v2.count() == nArtists)
     assert(v2.schema == drv.schema)
     val a = v2.orderBy("row_idx").collect()
     val b = drv.orderBy("row_idx").collect()
@@ -25,7 +26,7 @@ class EdnSourceV2Spec extends AnyFunSuite {
     val v2 = EdnSource.readEntities(spark, artistsPath, Mbrainz.artists).select(col("gid"))
     val p = v2.queryExecution.executedPlan.toString
     assert(p.contains("readSchema=[gid]"), p.take(800))
-    assert(v2.distinct().count() == 4601)
+    assert(v2.distinct().count() == nArtists)
   }
 
   test("multi-file scan keeps total order via row_idx") {

@@ -77,10 +77,10 @@ class EdnSpec extends AnyFunSuite {
 
   test("reference entity files parse completely") {
     val artists = Edn.parseAll(graft.sources.EdnSource.readText(
-      "/root/reference/subsets/entities/artists.edn"))
-    assert(artists.size == 4601)
+      MbrainzFixture.entityPath("artists")))
+    assert(artists.size == MbrainzFixture.truth.artistGids.size)
     val schema = Edn.parse(graft.sources.EdnSource.readText(
-      "/root/reference/subsets/entities/schema.edn")).asInstanceOf[EVec]
-    assert(schema.items.size == 66)
+      MbrainzFixture.schemaPath)).asInstanceOf[EVec]
+    assert(schema.items.size == MbrainzFixture.truth.nSchemaAttrs)
   }
 }

@@ -6,21 +6,22 @@ import graft.pipeline.{Batcher, Loader, Manifest, Retry}
 import graft.query.Explore
 import graft.store.Store
 
-/** E2 loader + store + E3 queries, end-to-end on the reference data:
-  * batch (E1) → load (E2) → explore (E3), plus the idempotency and
-  * resume properties (SURVEY §5.5). */
+/** E2 loader + store + E3 queries, end-to-end on the generated mbrainz
+  * input ([[MbrainzFixture]]): batch (E1) → load (E2) → explore (E3),
+  * plus the idempotency and resume properties (SURVEY §5.5). Expected
+  * counts come from the generator's `Truth` and a plain `Edn` parse of the input. */
 class LoaderSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-  private val basedir = "/root/reference/subsets"
-  private lazy val registry = SchemaRegistry.load(s"$basedir/entities/schema.edn")
+  private val fx = MbrainzFixture
+  private lazy val registry = SchemaRegistry.load(fx.schemaPath)
 
   private val types = Seq("schema", "enums", "super-enums", "artists", "areleases",
     "areleases-artists", "labels", "releases", "releases-artists")
 
   private lazy val batchesDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("loaderbatches").toString
-    val b = new Batcher(spark, basedir, dir, batchSize = 100)
+    val b = new Batcher(spark, fx.basedir, dir, batchSize = 100)
     types.foreach(b.createBatchFile)
     dir
   }
@@ -35,15 +36,9 @@ class LoaderSpec extends AnyFunSuite {
 
   test("full import applies every batch once") {
     val (_, stats) = loaded
-    assert(stats("schema") == 1)
-    assert(stats("enums") == 1)
-    assert(stats("super-enums") == 82)
-    assert(stats("artists") == 47)
-    assert(stats("areleases") == 102)
-    assert(stats("labels") == 13)
-    assert(stats("areleases-artists") == 106)
-    assert(stats("releases-artists") == 119)
-    assert(stats("releases") == 116) // 11510 rows / 100
+    // one tx per batch: ⌈rows / 100⌉ per type, releases counting the
+    // appended duplicate-gid rows
+    assert(stats == types.map(t => t -> fx.batches(t, 100)).toMap)
   }
 
   test("idempotency: re-running is a no-op") {
@@ -59,13 +54,16 @@ class LoaderSpec extends AnyFunSuite {
     val storeDir = java.nio.file.Files.createTempDirectory("store2").toString
     val store = new Store(spark, storeDir)
     val loader = new Loader(spark, registry, store)
-    // simulate a crashed run: first 10 batches of artists already in
-    val firstTen = java.nio.file.Files.createTempFile("partial", ".edn")
+    // simulate a crashed run: the first half of the artist batches already in
+    val n = fx.batches("artists", 100)
+    val k = (n / 2).toInt
+    assert(k >= 1 && k < n, s"need a proper prefix of $n artist batches")
+    val firstK = java.nio.file.Files.createTempFile("partial", ".edn")
     val all = graft.sources.EdnSource.readText(s"$batchesDir/artists.edn").split('\n')
-    java.nio.file.Files.write(firstTen, all.take(10).mkString("\n").getBytes)
-    assert(loader.loadBatchFile("artists", firstTen.toString).txes == 10)
+    java.nio.file.Files.write(firstK, all.take(k).mkString("\n").getBytes)
+    assert(loader.loadBatchFile("artists", firstK.toString).txes == k)
     val rest = loader.loadBatchFile("artists", s"$batchesDir/artists.edn")
-    assert(rest.txes == 37)
+    assert(rest.txes == n - k)
   }
 
   test("explore: unique attrs self-join finds schema uniques") {
@@ -74,31 +72,35 @@ class LoaderSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows("artist/gid") == "db.unique/identity")
     assert(rows("label/gid") == "db.unique/identity")
-    assert(rows.size >= 6)
+    // exactly the generated schema's :db/unique attrs, with their kind
+    assert(rows == fx.uniqueAttrs)
   }
 
   test("explore: entity counts per unique attr match source data") {
     val (store, _) = loaded
     val counts = Explore.entityCountsByUniqueAttr(store, registry).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts("artist/gid") == 4601)
-    assert(counts("label/gid") == 1207)
-    assert(counts("abstractRelease/gid") == 10180)
-    // releases.edn has 11510 rows but only 11434 distinct gids —
+    assert(counts("artist/gid") == fx.truth.artistGids.size)
+    assert(counts("label/gid") == fx.truth.labelGids.size)
+    assert(counts("abstractRelease/gid") == fx.truth.areleaseGids.size)
+    // releases.edn has more rows than distinct gids —
     // :db.unique/identity upserts merge the duplicates, as Datomic would
-    assert(counts("release/gid") == 11434)
+    val gids = fx.releases.map(fx.field(_, "gid").get)
+    assert(gids.distinct.size < gids.size)
+    assert(counts("release/gid") == gids.distinct.size)
   }
 
   test("explore: batch frequencies (first-dash prefix, faithful)") {
     val (store, _) = loaded
     val freq = Explore.batchFrequencies(store).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // "areleases" merges areleases(102) + areleases-artists(106);
-    // "releases" merges releases(116) + releases-artists(119)
-    assert(freq("artists") == 47)
-    assert(freq("areleases") == 208)
-    assert(freq("releases") == 235)
-    assert(freq("super") == 82) // "super-enums-N" → "super"
+    def b(t: String): Long = fx.batches(t, 100)
+    // "areleases" merges areleases + areleases-artists;
+    // "releases" merges releases + releases-artists
+    assert(freq("artists") == b("artists"))
+    assert(freq("areleases") == b("areleases") + b("areleases-artists"))
+    assert(freq("releases") == b("releases") + b("releases-artists"))
+    assert(freq("super") == b("super-enums")) // "super-enums-N" → "super"
   }
 
   test("upsert: releases-artists hoist adds refs to existing releases") {
@@ -107,7 +109,8 @@ class LoaderSpec extends AnyFunSuite {
     val cur = store.current(registry)
     val withArtists = cur.filter(col("a") === "release/artists")
       .select(col("e")).distinct().count()
-    assert(withArtists > 10000, s"releases with artists: $withArtists")
+    val expected = fx.releasesArtists.map(fx.field(_, "release").get).distinct.size
+    assert(withArtists == expected, s"releases with artists: $withArtists")
     // card-many union: no duplicate (e,a,v)
     val dups = cur.filter(col("a") === "release/artists")
       .groupBy("e", "a", "v").count().filter(col("count") > 1).count()

@@ -84,7 +84,7 @@ class PullSpec extends AnyFunSuite {
   }
 
   test("pull over a loaded store: release hydrated with its artists") {
-    val mb = SchemaRegistry.load("/root/reference/subsets/entities/schema.edn")
+    val mb = SchemaRegistry.load(MbrainzFixture.schemaPath)
     assert(mb.isRef("release/artists") && mb.isMany("release/artists"),
       "pull relies on schema ref/cardinality metadata")
   }

@@ -690,8 +690,7 @@ class TxFnSpec extends AnyFunSuite {
   }
 
   test(":db.attr/preds: the loader path drops rejected datoms and counts them") {
-    val registry = graft.model.SchemaRegistry.load(
-      "/root/reference/subsets/entities/schema.edn")
+    val registry = graft.model.SchemaRegistry.load(MbrainzFixture.schemaPath)
     val st = new Store(spark,
       java.nio.file.Files.createTempDirectory("loaderpreds").toString)
     // predicate: artist names must not start with lowercase 'z' —
@@ -718,8 +717,7 @@ class TxFnSpec extends AnyFunSuite {
   }
 
   test("loader stamps one txInstant per transaction; asOfInstant reads through it") {
-    val registry = graft.model.SchemaRegistry.load(
-      "/root/reference/subsets/entities/schema.edn")
+    val registry = graft.model.SchemaRegistry.load(MbrainzFixture.schemaPath)
     val st = new Store(spark,
       java.nio.file.Files.createTempDirectory("txinst").toString)
     val loader = new graft.pipeline.Loader(spark, registry, st)

@@ -13,8 +13,7 @@ import graft.store.Store
 class UpsertSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-  private lazy val registry =
-    SchemaRegistry.load("/root/reference/subsets/entities/schema.edn")
+  private lazy val registry = SchemaRegistry.load(MbrainzFixture.schemaPath)
 
   private def batchFile(lines: String*): String = {
     val f = java.nio.file.Files.createTempFile("upsert", ".edn")
