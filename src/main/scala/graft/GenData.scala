@@ -32,8 +32,7 @@ object GenData {
     date_from_unix_date((unix_date(lit(base).cast("date")) + days).cast("int"))
       .cast("timestamp_ntz")
 
-  def generate(spark: SparkSession, sf: Double, outDir: String,
-      skew: Boolean = false): Unit = {
+  def generate(spark: SparkSession, sf: Double, outDir: String): Unit = {
     val nCust = (150000 * sf).toLong max 10
     val nSupp = (10000 * sf).toLong max 5
     val nPart = (200000 * sf).toLong max 10
@@ -126,22 +125,10 @@ object GenData {
       "table", "the", "value", "vector", "window")
     val vocabArr = array(vocab.map(lit): _*)
     val nWords = (hmod(k, "dlen", 100) + 8).cast("int")
-    // skew mode (round-13 fixture, NOT driver testdata): EVERY doc
-    // opens with one shared ~120-word boilerplate block (the chrome a
-    // crawler re-crawls on every page of a template site), so each
-    // boilerplate span/gram key owns n_docs rows — the hot-key
-    // distribution a content-keyed window partition cannot split
-    // (guide §2.5: AQE skew handling applies to joins, never to a
-    // single window key) and a partial-aggregated census absorbs
-    // map-side.
-    val randomText = array_join(transform(sequence(lit(1), nWords),
+    val docText = array_join(transform(sequence(lit(1), nWords),
       j => element_at(vocabArr,
         (pmod(xxhash64(k * 1000 + j, lit("dword")), lit(vocab.size.toLong)) + 1)
           .cast("int"))), " ")
-    val hotPrefix = (1 to 120).map(j =>
-      vocab((j * 2654435761L % vocab.size.toLong).toInt)).mkString(" ")
-    val docText =
-      if (skew) concat(lit(hotPrefix), lit(" "), randomText) else randomText
     write(outDir, "documents", id(nDocs)
       .select(k.as("doc_id"),
         docText.as("text"),
@@ -189,14 +176,12 @@ object GenData {
   }
 
   def main(args: Array[String]): Unit = {
-    val (sf, out, skew) = args match {
-      case Array(s, o) => (s.toDouble, o, false)
-      case Array(s, o, "skew") => (s.toDouble, o, true)
-      case _ => throw new IllegalArgumentException(
-        "usage: GenData <sf> <outDir> [skew]")
+    val (sf, out) = args match {
+      case Array(s, o) => (s.toDouble, o)
+      case _ => throw new IllegalArgumentException("usage: GenData <sf> <outDir>")
     }
     val spark = Harness.session()
-    generate(spark, sf, out, skew)
+    generate(spark, sf, out)
     spark.stop()
   }
 }

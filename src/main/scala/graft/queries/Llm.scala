@@ -1056,20 +1056,6 @@ object Llm {
       |  coalesce(pd.text_kept, '') AS text_kept
       |FROM documents d LEFT JOIN pd USING (doc_id)""".stripMargin
 
-  /** Exact all-pairs variant on a deterministic sample — the recall
-    * baseline d15 is measured against in LlmSpec; NOT a gated query
-    * (a BroadcastNestedLoopJoin is quadratic work however you sample). */
-  def embeddingNearDupExact(s: SparkSession, d: String): DataFrame = {
-    val emb = withNorm(embeddings(s, d)).filter(pmod(col("vec_id"), lit(10)) === 0)
-      .select(col("vec_id"), col("embedding"), col("norm"))
-    val a = emb.select(col("vec_id").as("a_id"), col("embedding").as("a_vec"), col("norm").as("a_norm"))
-    val b = emb.select(col("vec_id").as("b_id"), col("embedding").as("b_vec"), col("norm").as("b_norm"))
-    a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cosine", round(expr("vec_dot(a_vec, b_vec) / (a_norm * b_norm)"), 6))
-      .filter(col("cosine") >= 0.3)
-      .select(col("a_id"), col("b_id"), col("cosine"))
-  }
-
   // ── d41: BM25 top-k retrieval ─────────────────────────────────────
   /** Lexical retrieval scoring — BM25 (k1 = 1.2, b = 0.75) for a fixed
     * query over the corpus, top-20 by score: the data-selection /

@@ -2,16 +2,17 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface. The reference pipeline is genuinely
   * streaming (bounded memory over arbitrary files, SURVEY §2.6) but has
-  * no event-time semantics; this module supplies the streaming shapes a
-  * production engine needs: watermarked windowed aggregation, session
-  * windows, custom state (flatMapGroupsWithState), and an idempotent
-  * foreachBatch sink that reuses the loader's applied-batch resume
-  * semantics (exactly-once-ish resume, batch.clj:42-60).
+  * no event-time semantics. This module holds the event-stream reader
+  * (`readEvents`/`withEventTime`), the watermarked stream-stream click
+  * attribution join (batch twin q42), streaming curation (batch twin
+  * d38's prefix), and the Datomic stream surface: the tx-report queue,
+  * live db-stats, `d/sync` and a streaming datom sink that reuses the
+  * loader's in-log idempotency (batch.clj:42-60).
   */
 object Streams {
 
@@ -53,49 +54,6 @@ object Streams {
   def withEventTime(events: DataFrame): DataFrame =
     events.withColumn("ets", timestamp_micros(expr("ts div 1000")))
 
-  /** Watermarked tumbling-window aggregate: late data beyond 1 hour is
-    * dropped, state is bounded — the 100 TB streaming posture (state
-    * size ∝ open windows × event types, not stream length). */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    withEventTime(events)
-      .withWatermark("ets", "1 hour")
-      .groupBy(window(col("ets"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(unix_millis(col("window.start")).as("hour_ms"), col("event_type"),
-        col("n"), col("sum_value"))
-
-  /** Built-in session windows (30-minute gap) per user. */
-  def userSessions(events: DataFrame): DataFrame =
-    withEventTime(events)
-      .withWatermark("ets", "1 hour")
-      .groupBy(session_window(col("ets"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("user_id"),
-        unix_millis(col("session_window.start")).as("start_ms"),
-        unix_millis(col("session_window.end")).as("end_ms"),
-        col("n_events"), col("sum_value"))
-
-  /** Streaming exact-dedup on ingest: state is bounded by the
-    * watermark (an id is only remembered while late duplicates can
-    * still arrive) — the streaming form of d01's content-hash dedup,
-    * keyed here on event_id + the dedup column of choice. */
-  def dedupStream(events: DataFrame, idCols: Seq[String], lateness: String): DataFrame =
-    withEventTime(events)
-      .withWatermark("ets", lateness)
-      .dropDuplicates(idCols :+ "ets")
-
-  /** Dedup on the ID ALONE within the watermark window: a replayed
-    * record whose timestamp drifted (retry after seconds, clock skew
-    * between producers) still dedups — `dropDuplicates` above keys on
-    * (id, ets) and would pass both copies through. State per id is
-    * dropped once the watermark passes its first-seen time, so memory
-    * stays bounded on an unbounded stream — this is the streaming
-    * twin of d01 for at-least-once upstream delivery. */
-  def dedupStreamById(events: DataFrame, idCols: Seq[String], lateness: String): DataFrame =
-    withEventTime(events)
-      .withWatermark("ets", lateness)
-      .dropDuplicatesWithinWatermark(idCols)
-
   /** Stream-stream interval join (click attribution): every click joins
     * the same user's impressions within the look-back horizon. BOTH
     * sides carry watermarks and the join condition is time-bounded, so
@@ -127,82 +85,6 @@ object Streams {
         unix_millis(col("imp_ts")).as("imp_ms"))
   }
 
-  // ── Custom state: hand-rolled sessionizer ──────────────────────────
-  final case class Ev(user_id: Long, ts_ms: Long, value: Double)
-  final case class SessionState(start: Long, last: Long, n: Long, sum: Double)
-  final case class SessionOut(user_id: Long, start_ms: Long, end_ms: Long,
-      n_events: Long, sum_value: Double)
-
-  /** flatMapGroupsWithState sessionizer — the shape for session logic
-    * the built-in window can't express (per-session custom predicates,
-    * early emission, enrichment). Sessions close when a later event
-    * arrives past the gap; state per user is O(1). */
-  def statefulSessions(ds: Dataset[Ev], gapMs: Long): Dataset[SessionOut] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, events: Iterator[Ev], state: GroupState[SessionState]) =>
-          val sorted = events.toSeq.sortBy(_.ts_ms)
-          val out = Seq.newBuilder[SessionOut]
-          var cur = state.getOption
-          sorted.foreach { e =>
-            cur match {
-              case Some(s) if e.ts_ms - s.last <= gapMs =>
-                cur = Some(SessionState(s.start, e.ts_ms, s.n + 1, s.sum + e.value))
-              case Some(s) =>
-                out += SessionOut(user, s.start, s.last, s.n, s.sum)
-                cur = Some(SessionState(e.ts_ms, e.ts_ms, 1, e.value))
-              case None =>
-                cur = Some(SessionState(e.ts_ms, e.ts_ms, 1, e.value))
-            }
-          }
-          cur.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  /** Idempotent foreachBatch sink: micro-batches land in a parquet
-    * table partitioned by batch_id, written with DYNAMIC PARTITION
-    * OVERWRITE, and are then ledgered — the streaming form of the
-    * loader's applied-batch resume. A ledgered batch id replays as a
-    * no-op; a crash BETWEEN data write and ledger write replays as an
-    * overwrite of that batch's own partition (idempotent, not
-    * duplicating — the write-then-ledger gap is closed by making the
-    * write itself a replace). */
-  def idempotentParquetSink(df: DataFrame, outPath: String, ledgerPath: String)(
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyMicroBatch(batch.toDF(), batchId, outPath, ledgerPath); ()
-      }
-      .start()
-
-  /** One micro-batch application; returns true if the batch was new.
-    * Replays of an already-ledgered batch id are no-ops; replays of a
-    * half-applied batch (crash before the ledger write) overwrite
-    * exactly their own batch_id partition. */
-  def applyMicroBatch(batch: DataFrame, batchId: Long, outPath: String,
-      ledgerPath: String): Boolean = {
-    val spark = batch.sparkSession
-    val lp = new org.apache.hadoop.fs.Path(ledgerPath)
-    val ledgerFs = lp.getFileSystem(spark.sessionState.newHadoopConf())
-    val applied = ledgerFs.exists(lp) &&
-      spark.read.parquet(ledgerPath).filter(col("batch_id") === batchId).count() > 0
-    if (!applied) {
-      batch.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(outPath)
-      import spark.implicits._
-      Seq(batchId).toDF("batch_id").write.mode("append").parquet(ledgerPath)
-    }
-    !applied
-  }
-
   /** Streaming curation: the batch pipeline's map-only prefix
     * (`Curate.curatePrefix` — gopher gate → PII scrub → content hash →
     * token count, the EXACT Column expressions d38 runs) applied to a
@@ -217,85 +99,6 @@ object Streams {
   def curateStream(docs: DataFrame): DataFrame =
     graft.queries.Curate.curatePrefix(docs)
       .dropDuplicates("clean_hash")
-
-  // ── Streaming NEAR-dup dedup: cross-batch MinHash-LSH state ───────
-  final case class BandHit(band: Int, bh: Long, doc_id: Long)
-  final case class NearDupVerdict(doc_id: Long, band: Int, rep_doc: Long)
-
-  /** Cross-batch NEAR-duplicate detection on a document stream — the
-    * ingest-time analog of batch d03: each arriving doc's MinHash-LSH
-    * band hashes (the same `lsh_bands` expression, so stream and
-    * batch agree on candidates) key a flatMapGroupsWithState over
-    * band-buckets whose state is the bucket's REPRESENTATIVE (the
-    * first-ever doc to occupy it, min doc_id on a first-batch tie).
-    * Every (doc, band) emits a verdict carrying that representative;
-    * [[nearDupKeptOfBatch]] folds a micro-batch's verdicts per doc —
-    * a doc is a near-dup iff ANY of its buckets was already owned by
-    * an earlier doc. State is one long per occupied bucket (∝ corpus
-    * distinct bands, NOT pairs), lives in the state store
-    * (RocksDB-backed at scale), and never returns to the driver —
-    * this is how a 100 TB ingest dedups against everything already
-    * ingested without re-scanning it. `curateStream`'s exact-hash
-    * dedup composes upstream (drop exact dups cheaply first). */
-  def nearDupVerdictStream(docs: DataFrame): Dataset[NearDupVerdict] = {
-    import docs.sparkSession.implicits._
-    docs
-      .select(posexplode(expr("lsh_bands(text, 8)")).as(Seq("band", "bh")),
-        col("doc_id").cast("long").as("doc_id"))
-      .select(col("band").cast("int").as("band"), col("bh").cast("long").as("bh"),
-        col("doc_id"))
-      .as[BandHit]
-      .groupByKey(h => (h.band, h.bh))
-      .flatMapGroupsWithState[Long, NearDupVerdict](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Int, Long), hits: Iterator[BandHit], state: GroupState[Long]) =>
-          val ids = hits.map(_.doc_id).toSeq.sorted
-          val rep = state.getOption.getOrElse(ids.min)
-          if (!state.exists) state.update(rep)
-          ids.iterator.map(d => NearDupVerdict(d, key._1, rep))
-      }
-  }
-
-  /** Fold one micro-batch of [[nearDupVerdictStream]] verdicts into
-    * per-doc keep/drop decisions (use inside foreachBatch; a doc's
-    * verdicts all land in its own micro-batch, so the fold is local
-    * to the batch). `rep_doc` is the doc it duplicates (the smallest
-    * representative across its bands) when `is_dup`. */
-  def nearDupKeptOfBatch(verdicts: DataFrame): DataFrame =
-    verdicts.groupBy(col("doc_id"))
-      .agg(min(col("rep_doc")).as("rep_doc"))
-      .withColumn("is_dup", col("rep_doc") < col("doc_id"))
-
-  // ── Trending n-grams: watermarked window census ───────────────────
-  /** "What is the crawl saying RIGHT NOW" — per-event-time-window
-    * trigram counts on a document stream, with the state problem
-    * solved the idiomatic Structured-Streaming way: the census is a
-    * watermarked windowed aggregate, so state holds only spans whose
-    * window can still receive data (the watermark EXPIRES old
-    * windows' state — bounded by the active horizon, not the stream's
-    * lifetime) and append mode emits each window exactly once, when
-    * it finalizes. No driver-side counting anywhere: counts are
-    * partial-aggregated map-side, the state store shards by
-    * (window, span). [[trendingTopkOfBatch]] ranks a finalized
-    * batch's windows top-k — rows ∝ emitted windows, tiny. */
-  def trendingSpans(docs: DataFrame, windowDur: String = "10 minutes",
-      lateness: String = "10 minutes"): DataFrame = {
-    docs
-      .select(col("ts"),
-        explode(expr("word_ngrams(lower(text), 3)")).as("span"))
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), windowDur).as("win"), col("span"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("win.start").as("window_start"), col("span"), col("cnt"))
-  }
-
-  /** Rank one finalized micro-batch of [[trendingSpans]] output to the
-    * top-k spans per window (count desc, span asc — total order). */
-  def trendingTopkOfBatch(windows: DataFrame, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("window_start")).orderBy(col("cnt").desc, col("span"))
-    windows.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
 
   /** One transaction's report — Datomic `tx-report-queue` entry shape:
     * the basis `t` and the transaction's datoms (full Store.schema

@@ -12,14 +12,28 @@ class EdnSourceV2Spec extends AnyFunSuite {
   private lazy val artistsPath = MbrainzFixture.entityPath("artists")
   private lazy val nArtists = MbrainzFixture.truth.artistGids.size.toLong
 
+  /** Forms in a generated entity file: `Truth`'s rows, and for media
+    * one row per (track, artist). */
+  private def inputRows(file: String): Long =
+    if (file == "media")
+      MbrainzFixture.truth.media.iterator.flatten.flatMap(_.tracks).map(_.artists.size.toLong).sum
+    else MbrainzFixture.rows(file)
+
   test("v2 scan equals driver-side parse on artists.edn") {
-    val v2 = EdnSource.readEntities(spark, artistsPath, Mbrainz.artists)
-    val drv = EdnSource.readEntitiesDriver(spark, artistsPath, Mbrainz.artists)
-    assert(v2.count() == nArtists)
-    assert(v2.schema == drv.schema)
-    val a = v2.orderBy("row_idx").collect()
-    val b = drv.orderBy("row_idx").collect()
-    assert(a.sameElements(b))
+    // every generated entity file, artists.edn among them
+    val files = Mbrainz.importOrder.filter(Mbrainz.byName.contains)
+    assert(files.size == 7)
+    files.foreach { file =>
+      val t = Mbrainz.byName(file)
+      val path = MbrainzFixture.entityPath(file)
+      val v2 = EdnSource.readEntities(spark, path, t)
+      val drv = EdnSource.readEntitiesDriver(spark, path, t)
+      assert(v2.count() == inputRows(file), file)
+      assert(v2.schema == drv.schema, file)
+      val a = v2.orderBy("row_idx").collect()
+      val b = drv.orderBy("row_idx").collect()
+      assert(a.sameElements(b), file)
+    }
   }
 
   test("column pruning reaches the parser") {

@@ -76,18 +76,6 @@ class EntityTableSpec extends AnyFunSuite {
     assert(graft.query.Explore.fulltext(store, registry, sub).collect().isEmpty)
   }
 
-  test("progress heartbeat reports while a job runs") {
-    val ticks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val p = new graft.ops.Progress(spark, "test", intervalMs = 0, _ => { ticks.incrementAndGet(); () })
-    try {
-      store.eav.groupBy("a").count().collect()
-      // listener events are async; wait briefly for delivery
-      val deadline = System.currentTimeMillis() + 5000
-      while (ticks.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(ticks.get() > 0)
-    } finally p.close()
-  }
-
   test("compaction collapses history but preserves current state") {
     // separate store so the shared fixture stays intact
     val st = new Store(spark, java.nio.file.Files.createTempDirectory("cstore").toString)

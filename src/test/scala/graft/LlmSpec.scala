@@ -106,66 +106,6 @@ class LlmSpec extends AnyFunSuite {
     assert(lang.length == 6)
   }
 
-  test("parameterized Dedup library cores equal the harness defaults") {
-    import org.apache.spark.sql.functions.col
-    val docs = graft.sources.Tables.documents(spark, fixtureDir)
-    val viaLib = graft.ops.Dedup.lshCandidatePairs(docs, col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaQuery = Llm.d03_minhash_lsh_pairs(spark, fixtureDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(viaLib == viaQuery)
-
-    val shLib = graft.ops.Dedup.simhashPairs(docs, col("doc_id"), col("text"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue())).toSet
-    val shQuery = Llm.d06_simhash_pairs(spark, fixtureDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).longValue())).toSet
-    assert(shLib == shQuery)
-
-    val emb = graft.sources.Tables.embeddings(spark, fixtureDir)
-    val topkLib = graft.ops.Dedup.cosineTopK(
-      emb.filter(col("vec_id") >= 8), emb.filter(col("vec_id") < 8), 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val topkQuery = Llm.d07_cosine_topk(spark, fixtureDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(topkLib == topkQuery)
-
-    val ivfLib = graft.ops.Dedup.annIvf(
-      emb.filter(col("vec_id") >= 8), emb.filter(col("vec_id") < 8),
-      emb.filter(col("vec_id").between(8, 23)).select(col("vec_id").as("cid"), col("embedding")),
-      nprobe = 2, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val ivfQuery = Llm.d16_ann_ivf(spark, fixtureDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(ivfLib == ivfQuery)
-  }
-
-  test("annIvfCoarse: coarseEvery=1 is bit-identical to exact assignment; two-level keeps recall") {
-    val emb = graft.sources.Tables.embeddings(spark, fixtureDir)
-    val corpus = emb.filter(col("vec_id") >= 8)
-    val queries = emb.filter(col("vec_id") < 8)
-    val cents = emb.filter(col("vec_id").between(8, 23))
-      .select(col("vec_id").as("cid"), col("embedding"))
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val exact = pairs(graft.ops.Dedup.annIvf(corpus, queries, cents, nprobe = 2, k = 5))
-    // degenerate two-level: every centroid is its own coarse entry →
-    // assignment (and therefore the whole result) is EXACTLY annIvf's
-    val degen = pairs(graft.ops.Dedup.annIvfCoarse(
-      corpus, queries, cents, nprobe = 2, k = 5, coarseEvery = 1))
-    assert(degen == exact)
-    // real two-level (4 coarse entries over 16 centroids): same output
-    // contract, and the approximation keeps most of the exact result
-    val coarse = graft.ops.Dedup.annIvfCoarse(
-      corpus, queries, cents, nprobe = 2, k = 5, coarseEvery = 4)
-    val coarseRows = pairs(coarse)
-    val perQuery = coarse.groupBy("query_id").count().collect().map(_.getLong(1))
-    assert(perQuery.forall(_ <= 5) && perQuery.nonEmpty)
-    val keys = (s: Set[(Long, Long, Long)]) => s.map(t => (t._1, t._3))
-    val overlap = keys(coarseRows).intersect(keys(exact)).size.toDouble /
-      keys(exact).size.max(1)
-    assert(overlap >= 0.5, f"two-level recall vs exact assignment too low: $overlap%.2f")
-  }
-
   test("d04 library path: exact jaccard verifies LSH candidates (semi-join first)") {
     val docs = graft.sources.Tables.documents(spark, fixtureDir)
     val pairs = Llm.d03_minhash_lsh_pairs(spark, fixtureDir).select("a_id", "b_id")

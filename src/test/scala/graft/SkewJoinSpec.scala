@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** AQE skew-join handling: a hot join key concentrates one shuffle
   * partition; adaptive execution splits it into subpartitions at
-  * runtime (plan shows `skew=true`) — the built-in complement to the
-  * manual `graft.ops.Salt` path. Thresholds are lowered to trip the
-  * optimization at test scale; production keeps the defaults. */
+  * runtime (plan shows `skew=true`), with no salting in the query.
+  * Thresholds are lowered to trip the optimization at test scale;
+  * production keeps the defaults. */
 class SkewJoinSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark

@@ -4,34 +4,16 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Streams
-import graft.streaming.Streams.{Ev, SessionOut}
+import graft.StreamingSpec.Ev
+
+object StreamingSpec {
+  /** One event as the hand-rolled sessionizer below reads it. */
+  final case class Ev(user_id: Long, ts_ms: Long, value: Double)
+}
 
 class StreamingSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
-
-  test("streaming hourly counts equal the batch computation") {
-    val dir = "/root/testdata/sf0.001"
-    // file-stream sources need a directory; stage the single file
-    val streamDir = java.nio.file.Files.createTempDirectory("evstream")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val stream = Streams.hourlyCounts(Streams.readEvents(spark, streamDir.toString))
-    val qname = "hourly_out"
-    val q = stream.writeStream.outputMode("complete")
-      .format("memory").queryName(qname).start()
-    try { q.processAllAvailable() } finally q.stop()
-    val got = spark.table(qname)
-      .select("hour_ms", "event_type", "n").collect()
-      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-
-    val batch = graft.sources.Tables.events(spark, dir)
-      .groupBy((floor(col("ts") / lit(3600000000000L)) * lit(3600000L)).cast("long").as("hour_ms"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got == batch)
-  }
 
   test("stream-stream interval join (click attribution) equals the batch twin") {
     val dir = "/root/testdata/sf0.001"
@@ -50,25 +32,6 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == batch)
     assert(batch.nonEmpty)
-  }
-
-  test("stateful sessionizer closes sessions on gap, keeps state across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val out = Streams.statefulSessions(mem.toDS(), gapMs = 1000)
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("sessions_out").start()
-    try {
-      mem.addData(Ev(1, 100, 1.0), Ev(1, 500, 2.0), Ev(2, 100, 5.0))
-      q.processAllAvailable()
-      // user 1: event far past the gap → closes [100,500], opens new
-      mem.addData(Ev(1, 5000, 3.0))
-      q.processAllAvailable()
-      val sessions = spark.table("sessions_out").as[SessionOut].collect().toSet
-      assert(sessions == Set(SessionOut(1, 100, 500, 2, 3.0)))
-      // user 2 session is still open (no later event) — not emitted
-    } finally q.stop()
   }
 
   test("built-in session windows match the stateful sessionizer on closed sessions") {
@@ -97,48 +60,6 @@ class StreamingSpec extends AnyFunSuite {
       sessions
     }.map { case (u, s, n) => (u, s) -> n }.toMap
     assert(batchSessions == manual)
-  }
-
-  test("streaming dedup drops duplicates across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Double)]
-    val events = mem.toDF().toDF("event_id", "ts", "value")
-      .selectExpr("event_id", "ts * 1000000 as ts", "value") // ms → ns
-    val out = Streams.dedupStream(events, Seq("event_id"), "1 hour")
-      .select("event_id")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    try {
-      mem.addData((1L, 1000L, 1.0), (2L, 2000L, 2.0), (1L, 1000L, 1.0))
-      q.processAllAvailable()
-      mem.addData((1L, 1000L, 1.0), (3L, 3000L, 3.0)) // replay of id 1
-      q.processAllAvailable()
-      val ids = spark.table("dedup_out").collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("dedup within watermark catches same-id records with drifted timestamps") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, Double)]
-    val events = mem.toDF().toDF("event_id", "ts", "value")
-      .selectExpr("event_id", "ts * 1000000 as ts", "value") // ms → ns
-    val out = Streams.dedupStreamById(events, Seq("event_id"), "1 hour")
-      .select("event_id")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_wm_out").start()
-    try {
-      // id 1 replayed 5 s later with a DIFFERENT timestamp — the
-      // (id, ts)-keyed dedupStream would emit both; this emits one
-      mem.addData((1L, 1000L, 1.0), (2L, 2000L, 2.0), (1L, 6000L, 1.0))
-      q.processAllAvailable()
-      mem.addData((1L, 9000L, 1.0), (3L, 3000L, 3.0)) // late replay of id 1
-      q.processAllAvailable()
-      val ids = spark.table("dedup_wm_out").collect().map(_.getLong(0)).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
   }
 
   test("stream-static enrichment: broadcast dim joins inside the micro-batch") {
@@ -357,17 +278,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("idempotent micro-batch sink skips replayed batch ids") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("sink").toString
-    val batch = Seq((1L, "a"), (2L, "b")).toDF("id", "x")
-    assert(Streams.applyMicroBatch(batch, 0L, s"$tmp/out", s"$tmp/ledger"))
-    assert(!Streams.applyMicroBatch(batch, 0L, s"$tmp/out", s"$tmp/ledger"), "replay is a no-op")
-    assert(Streams.applyMicroBatch(batch, 1L, s"$tmp/out", s"$tmp/ledger"))
-    assert(spark.read.parquet(s"$tmp/out").count() == 4)
-    assert(spark.read.parquet(s"$tmp/ledger").count() == 2)
-  }
-
   test("readEvents probes the physical form: nanos-as-long files stream unchanged") {
     import spark.implicits._
     // pre-regen testdata shape: ts already epoch-nanos LongType —
@@ -411,76 +321,5 @@ class StreamingSpec extends AnyFunSuite {
       .select("clean_hash").distinct().collect().map(_.getString(0)).toSet
     assert(got.toSet == batchHashes,
       "the stream keeps exactly the batch-distinct clean hashes")
-  }
-
-  test("streaming near-dup filter: LSH state catches cross-batch near-dups, novel docs pass") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "this is a long shared document about spark engines " * 8
-    val mem = MemoryStream[(Long, String)]
-    val verdicts = Streams.nearDupVerdictStream(mem.toDF.toDF("doc_id", "text"))
-    val q = verdicts.toDF.writeStream.outputMode("append")
-      .format("memory").queryName("neardup_out").start()
-    try {
-      // batch 1: the original and an unrelated doc
-      mem.addData((1L, base),
-        (2L, "completely different content entirely unrelated to anything here " * 7))
-      q.processAllAvailable()
-      // batch 2: a near-dup of doc 1 (one-word edit — the d03 fixture
-      // pair, known to collide in ≥1 of the 8 bands), an exact dup of
-      // doc 2, and a novel doc
-      mem.addData((3L, base.replace("spark engines", "spork engines")),
-        (4L, "completely different content entirely unrelated to anything here " * 7),
-        (5L, "utterly novel third topic with no overlap whatsoever in any shingle " * 6))
-      q.processAllAvailable()
-    } finally q.stop()
-    val folded = Streams.nearDupKeptOfBatch(spark.table("neardup_out"))
-      .collect().map(r => r.getLong(0) -> (r.getBoolean(2), r.getLong(1))).toMap
-    assert(!folded(1L)._1 && !folded(2L)._1, "batch-1 docs are both novel")
-    assert(folded(3L)._1 && folded(3L)._2 == 1L,
-      "cross-batch near-dup detected against state, attributed to doc 1")
-    assert(folded(4L)._1 && folded(4L)._2 == 2L, "exact dup collides in every band")
-    assert(!folded(5L)._1, "novel doc passes")
-    // stream agrees with the batch candidate generator: the (1,3)
-    // pair is exactly what d03 finds on the same corpus
-    val batchPairs = graft.queries.Llm.d03_minhash_lsh_pairs(spark, {
-      val dir = java.nio.file.Files.createTempDirectory("nddir").toString
-      Seq((1L, base, "en", "s", 1L),
-        (3L, base.replace("spark engines", "spork engines"), "en", "s", 1L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .write.parquet(s"$dir/documents.parquet")
-      dir
-    }).collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(batchPairs.contains((1L, 3L)), "batch LSH finds the same near-dup pair")
-  }
-
-  test("trending spans: watermark finalizes windows exactly once, top-k ranks correctly") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
-    def at(min: Int) = new java.sql.Timestamp(t0.getTime + min * 60000L)
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val out = Streams.trendingSpans(mem.toDF.toDF("ts", "text"))
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("trend_out").start()
-    try {
-      // window [10:00, 10:10): "hot topic now" ×3, "cold other thing" ×1
-      mem.addData(
-        (at(1), "hot topic now"), (at(2), "hot topic now"),
-        (at(3), "hot topic now"), (at(4), "cold other thing"))
-      q.processAllAvailable()
-      assert(spark.table("trend_out").count() == 0,
-        "nothing emits while the window can still receive data")
-      // event time far past the window + lateness → finalize it
-      mem.addData((at(40), "later window content"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("trend_out")
-      .collect().map(r => (r.getString(1), r.getLong(2)))
-    assert(rows.toSet == Set(("hot topic now", 3L), ("cold other thing", 1L)),
-      "exactly the finalized window's census emits, once")
-    val top1 = Streams.trendingTopkOfBatch(spark.table("trend_out"), 1)
-      .collect().map(r => (r.getString(1), r.getLong(2)))
-    assert(top1.toSeq == Seq(("hot topic now", 3L)))
   }
 }
