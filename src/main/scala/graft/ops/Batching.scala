@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 
 /** `tx-data->batches` (reference `src/cognitect/xform/batch.clj:31-40`,
   * called from `create-batch-file`, importer.clj:279-296): one pass over
@@ -21,36 +22,34 @@ object Batching {
       EdnRender.batchLine(batchIdAttr, s"$prefix-${i + 1}", group)
     }
 
-  /** Ordered single-file batch sink (the reference's golden EDN file,
-    * async_edn.clj:66-82) WITHOUT collecting the payload to the
-    * driver: `lines` — one string column in one partition, already in
-    * file order — goes through the "edn" connector's raw-line mode,
-    * then a filesystem rename of the one part file to `path`. The
-    * driver never holds a single batch line in memory. Returns the
-    * number of batches written. */
-  def writeLines(lines: DataFrame, path: String): Long = {
-    val stage = path + ".stage"
-    lines.write.format("edn").option("raw", "true").mode("overwrite").save(stage)
+  /** The one batch-file writer (the reference's `aedn/writer`,
+    * async_edn.clj:66-82, which prints one form per line and returns
+    * `{:forms n}`): drains `lines` into `file` through Hadoop FS, `\n`
+    * after each, and returns the number of lines. Runs wherever the
+    * lines are, on the driver or in the one task that chunks them. */
+  def write(lines: Iterator[String], file: String, conf: Configuration): Long = {
+    val p = new Path(file)
+    val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      p.getFileSystem(conf).create(p, true), java.nio.charset.StandardCharsets.UTF_8))
+    try lines.foldLeft(0L) { (n, line) => out.write(line); out.write('\n'); n + 1 }
+    finally out.close()
+  }
 
-    val conf = lines.sparkSession.sessionState.newHadoopConf()
-    val stagePath = new org.apache.hadoop.fs.Path(stage)
-    val fs = stagePath.getFileSystem(conf)
-    val part = fs.listStatus(stagePath)
-      .map(_.getPath).filter(_.getName.endsWith(".edn")) match {
-        case Array(one) => one
-        case parts => throw new IllegalStateException(
-          s"expected exactly one part file in $stage, got ${parts.mkString(",")}")
-      }
-    val dest = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(dest)) fs.delete(dest, false)
-    if (!fs.rename(part, dest))
-      throw new java.io.IOException(s"rename $part -> $dest failed")
-    fs.delete(stagePath, true)
-
-    // count lines by streaming the (metadata-scale) batch file
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(dest), java.nio.charset.StandardCharsets.UTF_8))
-    try Iterator.continually(in.readLine()).takeWhile(_ != null).size.toLong
-    finally in.close()
+  /** Commits one batch file: `writeStaged(stage)` [[write]]s it under
+    * `<path>.stage` (a task writes one file per attempt, so retried or
+    * speculative attempts never share one) and returns that file and
+    * its line count. That file replaces `path`; the stage is deleted
+    * either way, so a failed write leaves `path` as it was. */
+  def commit(path: String, conf: Configuration)(writeStaged: String => (String, Long)): Long = {
+    val dest = new Path(path)
+    val stage = new Path(path + ".stage")
+    val fs = dest.getFileSystem(conf)
+    try {
+      val (file, n) = writeStaged(stage.toString)
+      fs.delete(dest, false)
+      if (!fs.rename(new Path(file), dest))
+        throw new java.io.IOException(s"rename $file -> $dest failed")
+      n
+    } finally fs.delete(stage, true)
   }
 }

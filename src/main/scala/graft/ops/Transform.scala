@@ -11,9 +11,9 @@ import graft.sources.EdnSource
   *
   * The reference resolves enums via in-memory maps per record; the
   * Spark shape is a broadcast hash join per enum-typed column (J1) —
-  * the fact side never shuffles, and misses surface as nulls checked by
-  * `strictMisses` (the reference throws `could-not-import`;
-  * importer.clj:212-214).
+  * the fact side never shuffles, and misses surface as nulls that
+  * `requireStrict` turns into a `could-not-import` task failure, like
+  * the reference's throw (importer.clj:212-214).
   */
 object Transform {
 
@@ -79,24 +79,17 @@ object Transform {
     case _ => "string"
   }
 
-  /** Strict-lookup gate: one pass counting rows whose dictionary input
-    * was present but resolved to nothing. The reference dies on the
-    * first miss (`could-not-import`); we aggregate all misses in one
-    * action and fail with the full picture. */
-  def strictMisses(df: DataFrame, t: EntityType): Map[String, Long] = {
-    val dictCols = t.mappings.filter(m => isDict(m.kind) && df.columns.contains(s"${m.col}__raw"))
-    if (dictCols.isEmpty) return Map.empty
-    val aggs = dictCols.map { m =>
-      sum(when(col(s"${m.col}__raw").isNotNull && col(m.col).isNull, 1L).otherwise(0L)).as(m.col)
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    dictCols.map(m => m.attr -> row.getAs[Long](m.col)).filter(_._2 > 0).toMap
-  }
-
-  def requireStrict(df: DataFrame, t: EntityType, keepCols: Seq[String] = Nil): DataFrame = {
-    val misses = strictMisses(df, t)
-    if (misses.nonEmpty)
-      throw new IllegalStateException(s"Importer failed (dictionary misses): $misses")
-    df.select(col("row_idx") +: keepCols.map(col) ++: t.mappings.map(m => col(m.col)): _*)
-  }
+  /** Strict-lookup gate (`as-enum`, importer.clj:212-219): each
+    * dictionary column whose input was present but resolved to nothing
+    * raises `could-not-import <attr> <value>` when the row is computed,
+    * in whatever job computes it: no pass of its own. Like the
+    * reference, it fails on the first miss. The `__raw` columns drop. */
+  def requireStrict(df: DataFrame, t: EntityType, keepCols: Seq[String] = Nil): DataFrame =
+    df.select(col("row_idx") +: keepCols.map(col) ++: t.mappings.map { m =>
+      val raw = s"${m.col}__raw"
+      if (!df.columns.contains(raw)) col(m.col)
+      else when(col(raw).isNotNull && col(m.col).isNull,
+        raise_error(concat(lit(s"could-not-import ${m.attr} "), col(raw).cast("string"))))
+        .otherwise(col(m.col)).as(m.col)
+    }: _*)
 }

@@ -1,7 +1,10 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_list, min, min_by, sort_array, struct}
+import org.apache.spark.util.SerializableConfiguration
 import graft.edn.Edn
 import graft.edn.Edn._
 import graft.model.Mbrainz
@@ -22,20 +25,23 @@ import graft.sources.EdnSource
   * Spark (narrow whole-stage-codegen chain; media adds one shuffle for
   * assembly), then the rendered forms are sorted and chunked in the
   * one task that writes the file: the file is one sequential stream
-  * whose batch boundaries depend on every form before them.
+  * whose batch boundaries depend on every form before them. That one
+  * job reads the entity file once; a dictionary miss fails it.
   */
 final class Batcher(spark: SparkSession, basedir: String, val outDir: String, batchSize: Int = 100) {
 
   private val entitiesDir = s"$basedir/entities"
-  lazy val dims: Transform.Dims = Transform.Dims.load(spark, entitiesDir)
-  new java.io.File(outDir).mkdirs()
+  private val hadoopConf = spark.sessionState.newHadoopConf()
+  private lazy val dims: Transform.Dims = Transform.Dims.load(spark, entitiesDir)
+  locally { val p = new Path(outDir); p.getFileSystem(hadoopConf).mkdirs(p) }
 
   /** Skips types whose source file is absent (e.g. the stripped
     * media.edn, `.MISSING_LARGE_BLOBS`). */
   def runAll(types: Seq[String] = Mbrainz.importOrder): Map[String, Long] =
     types.flatMap { t =>
       val (file, write) = source(t)
-      if (new java.io.File(s"$entitiesDir/$file").exists()) Some(t -> write()) else None
+      val p = new Path(s"$entitiesDir/$file")
+      if (p.getFileSystem(hadoopConf).exists(p)) Some(t -> write()) else None
     }.toMap
 
   /** Returns the number of batches written for `tpe`. */
@@ -112,20 +118,34 @@ final class Batcher(spark: SparkSession, basedir: String, val outDir: String, ba
       }(Encoders.tuple(Encoders.scalaLong, Encoders.STRING)).toDF("row_idx", "edn")
   }
 
-  private def driverBatches(tpe: String, forms: Seq[String]): Long = {
-    val w = new java.io.PrintWriter(new java.io.File(s"$outDir/$tpe.edn"), "UTF-8")
-    try Batching.lines(forms.iterator, batchSize, tpe, Mbrainz.batchIdAttr)
-      .foldLeft(0L) { (n, line) => w.println(line); n + 1 }
-    finally w.close()
-  }
+  private def driverBatches(tpe: String, forms: Seq[String]): Long =
+    Batching.commit(s"$outDir/$tpe.edn", hadoopConf) { stage =>
+      val file = s"$stage/driver"
+      file -> Batching.write(
+        Batching.lines(forms.iterator, batchSize, tpe, Mbrainz.batchIdAttr), file, hadoopConf)
+    }
 
   /** `rendered` is `(row_idx, edn)`: its forms, in `row_idx` order,
-    * chunked in the one task that writes the file. */
+    * chunked and written in one task, which reports its file. A
+    * dictionary miss raised in that job (`Transform.requireStrict`)
+    * reaches the driver as Spark's `USER_RAISED_EXCEPTION`; it is
+    * rethrown as the batcher's `IllegalStateException`. */
   private def writeType(tpe: String, rendered: DataFrame): Long = {
     val (size, batchIdAttr) = (batchSize, Mbrainz.batchIdAttr)
-    val lines = rendered.coalesce(1).sortWithinPartitions(col("row_idx"))
-      .select(col("edn")).as(Encoders.STRING)
-      .mapPartitions(Batching.lines(_, size, tpe, batchIdAttr))(Encoders.STRING)
-    Batching.writeLines(lines.toDF(), s"$outDir/$tpe.edn")
+    val conf = new SerializableConfiguration(hadoopConf)
+    try Batching.commit(s"$outDir/$tpe.edn", hadoopConf) { stage =>
+      rendered.coalesce(1).sortWithinPartitions(col("row_idx"))
+        .select(col("edn")).as(Encoders.STRING)
+        .mapPartitions { forms =>
+          val file = s"$stage/attempt-${TaskContext.get.taskAttemptId}"
+          Iterator(file -> Batching.write(Batching.lines(forms, size, tpe, batchIdAttr), file, conf.value))
+        }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+        .collect().head
+    } catch {
+      case e: Exception => throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case u: SparkThrowable if u.getCondition == "USER_RAISED_EXCEPTION" =>
+          new IllegalStateException("Importer failed: " + u.getMessageParameters.get("errorMessage"), e)
+        }.getOrElse(e)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Mbrainz, SchemaRegistry}
@@ -136,6 +137,7 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     * in `batchesDir` that exists. */
   def loadAll(batchesDir: String, types: Seq[String] = Mbrainz.importOrder): Map[String, LoadStats] = {
     ensureImportSchema()
-    load(types.map(t => t -> s"$batchesDir/$t.edn").filter(f => new java.io.File(f._2).exists()))
+    val fs = new Path(batchesDir).getFileSystem(spark.sessionState.newHadoopConf())
+    load(types.map(t => t -> s"$batchesDir/$t.edn").filter(f => fs.exists(new Path(f._2))))
   }
 }

@@ -23,6 +23,8 @@ import graft.edn.Edn._
   * `src/cognitect/xform/async_edn.clj:27-51`), and COLUMN PRUNING
   * pushed into the parse — unrequested keys are never converted.
   *
+  * Read-only: batch files are written by `graft.ops.Batching`.
+  *
   * The virtual `row_idx` column carries file order:
   * (fileOrdinal << 40) | formOrdinal — dense 0-based for a single
   * file, totally ordered across a corpus.
@@ -55,18 +57,13 @@ object EdnDataSource {
   }
 }
 
-final class EdnTable(schema: StructType, paths: Seq[String])
-    extends Table with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
+final class EdnTable(schema: StructType, paths: Seq[String]) extends Table with SupportsRead {
   override def name(): String = s"edn(${paths.mkString(",")})"
   override def schema(): StructType = schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE)
+    util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new EdnScanBuilder(schema, paths, options)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new EdnWriteBuilder(info.schema(), paths.head, info.options())
 }
 
 final class EdnScanBuilder(fullSchema: StructType, paths: Seq[String],
@@ -93,11 +90,11 @@ final class EdnScan(required: StructType, paths: Seq[String], limit: Int,
     s"EdnScan readSchema=[${required.fieldNames.mkString(",")}]" +
       (if (limit >= 0) s" limit=$limit" else "")
   /** Paths may be files, directories (every visible file inside,
-    * name-sorted — the write side's part-NNNNN naming keeps partition
-    * order) or globs; expansion happens driver-side through Hadoop
-    * FileSystem so object stores behave like local disk. A path that
-    * matches nothing fails HERE with the offending path, not as a
-    * FileNotFound inside some executor. */
+    * name-sorted, so `part-NNNNN` names keep partition order) or globs;
+    * expansion happens driver-side through Hadoop FileSystem so object
+    * stores behave like local disk. A path that matches nothing fails
+    * HERE with the offending path, not as a FileNotFound inside some
+    * executor. */
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
     def visible(name: String) = !name.startsWith(".") && !name.startsWith("_")

@@ -101,6 +101,8 @@ class BatcherSpec extends AnyFunSuite {
     // tracks in reversed input order within each medium
     assert(media.map(m => attr(m, "medium/tracks").asInstanceOf[EVec].items.map(attr(_, "track/name"))) ==
       ids.map(id => Vector(EStr(s"Track $id-2"), EStr(s"Track $id-1"))))
+    // no media: no batch, and an empty batch file
+    assert(batch(2, "media", "media.edn" -> "") == (0L, Nil))
   }
 
   test("runAll writes the types whose source file exists") {
@@ -109,6 +111,29 @@ class BatcherSpec extends AnyFunSuite {
     val written = new Batcher(spark, base, out, 100).runAll(Seq("enums", "super-enums", "artists", "media"))
     assert(written == Map("enums" -> 1L, "super-enums" -> 1L, "artists" -> 1L))
     assert(!new java.io.File(s"$out/media.edn").exists())
+  }
+
+  test("runAll resolves a file: URI basedir and outDir like plain paths") {
+    val types = Seq("enums", "super-enums", "artists", "media")
+    val base = EdnFixtures.basedir("artists.edn" -> artist(1)).toString
+    val plainOut = java.nio.file.Files.createTempDirectory("batcherspecplain").toString
+    val uriOut = java.nio.file.Files.createTempDirectory("batcherspecuri").toString + "/out"
+    val plain = new Batcher(spark, base, plainOut, 100).runAll(types)
+    val uri = new Batcher(spark, "file:" + base, "file:" + uriOut, 100).runAll(types)
+    assert(plain == Map("enums" -> 1L, "super-enums" -> 1L, "artists" -> 1L))
+    assert(uri == plain)
+    plain.keys.foreach { t =>
+      assert(EdnSource.readText(s"$uriOut/$t.edn") == EdnSource.readText(s"$plainOut/$t.edn"), t)
+    }
+  }
+
+  test("createBatchFile reads an entity file once: records read equal its forms") {
+    val out = java.nio.file.Files.createTempDirectory("batcherspecreads").toString
+    val b = new Batcher(spark, MbrainzFixture.basedir, out, 100)
+    Seq("artists", "media").foreach { tpe =>
+      val (_, _, counters) = QueryMetrics.measure(spark)(b.createBatchFile(tpe))
+      assert(counters.inputRows == MbrainzFixture.forms(tpe), tpe)
+    }
   }
 
   test("batchIdOf reads the id of every batchLine and of nothing else") {

@@ -12,13 +12,6 @@ class EdnSourceV2Spec extends AnyFunSuite {
   private lazy val artistsPath = MbrainzFixture.entityPath("artists")
   private lazy val nArtists = MbrainzFixture.truth.artistGids.size.toLong
 
-  /** Forms in a generated entity file: `Truth`'s rows, and for media
-    * one row per (track, artist). */
-  private def inputRows(file: String): Long =
-    if (file == "media")
-      MbrainzFixture.truth.media.iterator.flatten.flatMap(_.tracks).map(_.artists.size.toLong).sum
-    else MbrainzFixture.rows(file)
-
   test("v2 scan equals driver-side parse on artists.edn") {
     // every generated entity file, artists.edn among them
     val files = Mbrainz.importOrder.filter(Mbrainz.byName.contains)
@@ -28,7 +21,7 @@ class EdnSourceV2Spec extends AnyFunSuite {
       val path = MbrainzFixture.entityPath(file)
       val v2 = EdnSource.readEntities(spark, path, t)
       val drv = EdnSource.readEntitiesDriver(spark, path, t)
-      assert(v2.count() == inputRows(file), file)
+      assert(v2.count() == MbrainzFixture.forms(file), file)
       assert(v2.schema == drv.schema, file)
       val a = v2.orderBy("row_idx").collect()
       val b = drv.orderBy("row_idx").collect()
@@ -53,27 +46,23 @@ class EdnSourceV2Spec extends AnyFunSuite {
     assert(rows.toSeq == Seq("n1", "n2"))
   }
 
-  test("batch write: one EDN file per partition, round-trips") {
-    import org.apache.spark.sql.functions.lit
-    val spark0 = spark
-    import spark0.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ednwrite").toString + "/out"
-    val df = Seq((1L, "a \"quoted\"", 1.5), (2L, "b", 2.5), (3L, "c", 3.5))
-      .toDF("id", "name", "score").withColumn("flag", lit(true)).repartition(2)
-    df.write.format("edn").mode("overwrite").save(dir)
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".edn"))
-    assert(files.length == 2)
-    val forms = files.flatMap(f => graft.edn.Edn.parseAll(EdnSource.readText(f.getPath)))
-    assert(forms.length == 3)
-    val byId = forms.map(_.asInstanceOf[graft.edn.Edn.EMap])
-      .map(m => m.getKw("id").get -> m).toMap
-    assert(byId(graft.edn.Edn.ELong(1)).getKw("name")
-      .contains(graft.edn.Edn.EStr("a \"quoted\"")))
-    // overwrite truncates
-    df.limit(1).repartition(1).write.format("edn").mode("overwrite").save(dir)
-    val after = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".edn"))
-      .flatMap(f => graft.edn.Edn.parseAll(EdnSource.readText(f.getPath)))
-    assert(after.length == 1)
+  test("a directory reads its visible files in name order, .edn.gz among them") {
+    val dir = java.nio.file.Files.createTempDirectory("edndir")
+    def form(n: Int) = s"{:gid \"g$n\" :name \"n$n\" :sortname \"s$n\"}\n"
+    // created out of name order, so the listing order shows nothing
+    java.nio.file.Files.write(dir.resolve("b.edn"), form(2).getBytes)
+    java.nio.file.Files.write(dir.resolve("a.edn"), (form(0) + form(1)).getBytes)
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(dir.resolve("c.edn.gz")))
+    gz.write(form(3).getBytes)
+    gz.close()
+    java.nio.file.Files.write(dir.resolve(".hidden.edn"), form(8).getBytes)
+    java.nio.file.Files.write(dir.resolve("_meta"), "not edn ]]]".getBytes)
+    val rows = spark.read.format("edn").schema(EdnSource.schemaFor(Mbrainz.artists))
+      .load(dir.toString).select("row_idx", "name").collect()
+      .map(r => (r.getLong(0) >> 40, r.getLong(0) & ((1L << 40) - 1), r.getString(1)))
+    // (file ordinal, form ordinal, name): a.edn is file 0, b.edn 1, c.edn.gz 2
+    assert(rows.sorted.toSeq == Seq((0L, 0L, "n0"), (0L, 1L, "n1"), (1L, 0L, "n2"), (2L, 0L, "n3")))
   }
 
   test("limit pushdown stops parsing at the limit (eio/top semantics)") {
@@ -126,20 +115,6 @@ class EdnSourceV2Spec extends AnyFunSuite {
       .load(gz.toString)
     val rows = df.orderBy("row_idx").select("name").collect().map(_.getString(0))
     assert(rows.toSeq == Seq("n1", "n2"))
-  }
-
-  test("gzip write round-trips through the extension-detecting scan") {
-    val dir = java.nio.file.Files.createTempDirectory("gzw").toString + "/out"
-    val src = EdnSource.readEntities(spark, artistsPath, Mbrainz.artists)
-      .select("gid", "name", "sortname")
-    src.write.format("edn").option("compression", "gzip").mode("overwrite").save(dir)
-    val files = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("part-"))
-    assert(files.nonEmpty && files.forall(_.endsWith(".edn.gz")), files.mkString(","))
-    val schema = org.apache.spark.sql.types.StructType(
-      EdnSource.schemaFor(Mbrainz.artists).filterNot(_.name == "row_idx"))
-    val back = spark.read.format("edn").schema(schema).load(dir)
-    assert(back.count() == src.count())
-    assert(back.select("gid").except(src.select("gid")).count() == 0)
   }
 
   test("missing schema is a clear error") {

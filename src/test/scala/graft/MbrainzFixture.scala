@@ -74,6 +74,12 @@ object MbrainzFixture {
   def rows(tpe: String): Long =
     truth.rowsPerType(tpe) + (if (tpe == "releases") nDuplicateReleases else 0)
 
+  /** Forms in a generated entity file: [[rows]], and for media one
+    * row per (track, artist). */
+  def forms(file: String): Long =
+    if (file == "media") truth.media.iterator.flatten.flatMap(_.tracks).map(_.artists.size.toLong).sum
+    else rows(file)
+
   /** Batches the `Batcher` cuts a type into: one per `size` forms. */
   def batches(tpe: String, size: Int): Long = (rows(tpe) + size - 1) / size
 

@@ -67,15 +67,33 @@ class MediaSpec extends AnyFunSuite {
   test("strict enum miss fails the import") {
     val spark = TestSpark.spark
     val base = EdnFixtures.basedir()
-    val entities = base.resolve("entities")
-    java.nio.file.Files.write(entities.resolve("media.edn"),
-      s"""{:id 1, :release #uuid "${uuid(1)}", :position 1, :track_count 1,
-         | :format "NotAFormat", :name "X", :tracknum 1, :length 1000,
+    val out = java.nio.file.Files.createTempDirectory("mediabadout")
+    val b = new Batcher(spark, base.toString, out.toString, batchSize = 100)
+    def track(id: Int, format: String) =
+      s"""{:id $id, :release #uuid "${uuid(1)}", :position 1, :track_count 1,
+         | :format "$format", :name "X", :tracknum 1, :length 1000,
          | :artist #uuid "${uuid(2)}"}""".stripMargin
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val out = java.nio.file.Files.createTempDirectory("mediabadout").toString
-    val b = new Batcher(spark, base.toString, out, batchSize = 100)
-    val ex = intercept[IllegalStateException](b.createBatchFile("media"))
-    assert(ex.getMessage.contains("medium/format"))
+    def artist(n: Int, country: String) =
+      s"""{:gid #uuid "${uuid(n)}", :name "A$n", :sortname "A$n", :country "$country"}"""
+    // (type, forms that resolve, a last form that misses, its attr and raw value):
+    // an enum miss and a super-enum miss
+    Seq(("media", Seq(track(1, "CD"), track(2, "Vinyl")), track(3, "NotAFormat"), "medium/format", "NotAFormat"),
+      ("artists", Seq(artist(1, "GB"), artist(2, "US")), artist(3, "ZZ"), "artist/country", "ZZ"))
+      .foreach { case (tpe, good, miss, attr, value) =>
+        def input(forms: Seq[String]) = java.nio.file.Files.write(base.resolve(s"entities/$tpe.edn"),
+          forms.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        input(good)
+        assert(b.createBatchFile(tpe) == 1L)
+        val dest = out.resolve(s"$tpe.edn")
+        val before = java.nio.file.Files.readAllBytes(dest)
+        // a rerun whose input misses on its last form fails and leaves
+        // the previous batch file as it was
+        input(good :+ miss)
+        val ex = intercept[IllegalStateException](b.createBatchFile(tpe))
+        assert(ex.getMessage.contains(attr), ex.getMessage)
+        assert(ex.getMessage.contains(value), ex.getMessage)
+        assert(java.nio.file.Files.readAllBytes(dest).sameElements(before), tpe)
+        assert(!java.nio.file.Files.exists(out.resolve(s"$tpe.edn.stage")), tpe)
+      }
   }
 }
