@@ -23,8 +23,10 @@ private[pipeline] final case class LoadRow(tpe: String, e: String, a: String, v:
   *  - the applied batch-id set is read from the log once and collected
   *    to the driver (bounded by the number of batches, not datoms);
   *  - the files' lines are unioned, each tagged with its type and type
-  *    index, and lines whose batch id is applied are filtered out with
-  *    that set (a broadcast; no join, no shuffle);
+  *    index, with one in-memory line: the import-schema (the batch-id
+  *    attribute the reference transacts first, importer.clj:271-277);
+  *    lines whose batch id is applied, the import-schema's included,
+  *    are filtered out with that set (a broadcast; no join, no shuffle);
   *  - the rest expand to datoms on executors behind
   *    `repartition(concurrency)` — the reference's `pipeline-blocking n`
   *    bounded write parallelism;
@@ -41,10 +43,11 @@ private[pipeline] final case class LoadRow(tpe: String, e: String, a: String, v:
   * nothing at load time — e-keys are deterministic strings
   * (`store/Datoms`), refs are stored as those keys, and each tx is
   * fixed by `typeIdx * 1e6 + n` — so the resolved state does not depend
-  * on the order in which types are written.
+  * on the order in which types are written. The import-schema takes
+  * tx 0, unused by data batches (`n >= 1`), so it sorts first.
   *
   * `:db/txInstant` is one wall-clock instant per [[load]] call, shared
-  * by every transaction of that call (of every type in it).
+  * by every transaction of that call, the import-schema's included.
   */
 final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     concurrency: Int = 8,
@@ -54,15 +57,14 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     * predicates are declared). */
   final case class LoadStats(txes: Long, datoms: Long, rejected: Long = 0L)
 
-  /** Transact the fresh batches of every `(type, batch file)` in one
-    * pass; returns each type's stats (zeros for a type with nothing
-    * fresh). Each type may appear once. */
+  /** Transact the fresh import-schema and batches of every `(type,
+    * batch file)` in one pass; returns each given type's stats (zeros
+    * for a type with nothing fresh). Each type may appear once. */
   def load(files: Seq[(String, String)]): Map[String, LoadStats] = {
     val types = files.map(_._1)
     require(types.distinct.size == types.size,
       s"load: a type may appear once, repeated: ${types.diff(types.distinct).distinct.mkString(", ")}")
     val zeros = types.map(_ -> LoadStats(0, 0)).toMap
-    if (files.isEmpty) return zeros
     val reg = registry
 
     val applied = spark.sparkContext.broadcast(
@@ -72,11 +74,12 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     // batch EDN at all — already-applied batches are never parsed on
     // resume, and fresh batches parse exactly once (below).
     // Non-canonical lines fall back to the full parse.
-    val lines = files.map { case (tpe, path) =>
+    val lines = (files.map { case (tpe, path) =>
       spark.read.textFile(path).filter(length(trim(col("value"))) > 0)
         .select(lit(tpe).as("_1"), lit(math.max(Mbrainz.importOrder.indexOf(tpe), 0)).as("_2"),
           col("value").as("_3"))
-    }.reduce(_ union _).as(Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.STRING))
+    } :+ spark.createDataFrame(Seq((Loader.importSchemaType, 0, Loader.importSchemaLine))))
+      .reduce(_ union _).as(Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.STRING))
     val fresh = lines.filter { case (_, typeIdx, line) =>
       val batchId = EdnRender.batchIdOf(Mbrainz.batchIdAttr, line)
         .getOrElse(Datoms.batchDatoms(line, reg, typeIdx)._1)
@@ -91,9 +94,10 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     val loadedAtIso = java.time.Instant.ofEpochMilli(loadedAtMs).toString
     val datoms = fresh.flatMap { case (tpe, typeIdx, line) =>
       val (batchId, ds) = Datoms.batchDatoms(line, reg, typeIdx)
-      ds.map(d => LoadRow(tpe, d.e, d.a, d.v, d.vLong, d.isRef, d.tx, tx_row = false)) :+
+      val tx = if (tpe == Loader.importSchemaType) 0L else ds.head.tx
+      ds.map(d => LoadRow(tpe, d.e, d.a, d.v, d.vLong, d.isRef, tx, tx_row = false)) :+
         LoadRow(tpe, s"tx|$batchId", Store.txInstantAttr, loadedAtIso,
-          Some(loadedAtMs), is_ref = false, ds.head.tx, tx_row = true)
+          Some(loadedAtMs), is_ref = false, tx, tx_row = true)
     }(Encoders.product[LoadRow]).toDF()
     // `:db.attr/preds` enforcement point (Datomic validates attr preds
     // on every assert at transact time): rejected datoms are counted
@@ -110,34 +114,28 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
       // `errors` drop there
       if (stats.nonEmpty)
         Retry.retrying(() => { store.append(annotated.filter(ok)); () }, Retry.transientIo)
-      zeros ++ stats
+      zeros ++ stats.filter { case (t, _) => zeros.contains(t) }
     } finally { annotated.unpersist(); applied.destroy() }
   }
 
   /** One batch file of one type: [[load]] of that file alone. */
   def loadBatchFile(tpe: String, path: String): LoadStats = load(Seq(tpe -> path))(tpe)
 
-  /** The import-schema the reference transacts before any data
-    * (importer.clj:271-277): the batch-id attribute itself. Loaded
-    * through the normal batch machinery, so it is idempotent via the
-    * same applied-id filter. */
-  def ensureImportSchema(): LoadStats = {
-    val line = EdnRender.batchLine(Mbrainz.batchIdAttr, "import-schema-1", Seq(
-      "{:db/ident :" + Mbrainz.batchIdAttr + ", " +
-        ":db/valueType :db.type/string, :db/cardinality :db.cardinality/one, " +
-        ":db/unique :db.unique/value, " +
-        ":db/doc \"Identifies batches from the initial import\"}"))
-    val f = java.nio.file.Files.createTempFile("import-schema", ".edn")
-    java.nio.file.Files.write(f, line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try loadBatchFile("import-schema", f.toString)
-    finally java.nio.file.Files.delete(f)
-  }
-
-  /** The import-schema, then one [[load]] over every type's batch file
-    * in `batchesDir` that exists. */
+  /** One [[load]] over every type's batch file in `batchesDir` that
+    * exists (the import-schema rides it even when none does). */
   def loadAll(batchesDir: String, types: Seq[String] = Mbrainz.importOrder): Map[String, LoadStats] = {
-    ensureImportSchema()
     val fs = new Path(batchesDir).getFileSystem(spark.sessionState.newHadoopConf())
     load(types.map(t => t -> s"$batchesDir/$t.edn").filter(f => fs.exists(new Path(f._2))))
   }
+}
+
+private object Loader {
+  /** The import-schema batch the reference transacts before any data
+    * (importer.clj:271-277): the batch-id attribute itself. */
+  val importSchemaType = "import-schema"
+  val importSchemaLine: String = EdnRender.batchLine(Mbrainz.batchIdAttr, "import-schema-1", Seq(
+    "{:db/ident :" + Mbrainz.batchIdAttr + ", " +
+      ":db/valueType :db.type/string, :db/cardinality :db.cardinality/one, " +
+      ":db/unique :db.unique/value, " +
+      ":db/doc \"Identifies batches from the initial import\"}"))
 }

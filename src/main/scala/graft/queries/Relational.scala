@@ -2218,7 +2218,7 @@ object Relational {
     * DEPENDENT: small here (a bounded page universe), unbounded on an
     * arbitrary event log. So the broadcast is a size-GUARDED hint,
     * not unconditional (the [[graft.store.Store.retractEntityTx]]
-    * `broadcastDeadMaxRows` discipline): node count is measured once
+    * dead-set discipline): node count is measured once
     * (one cheap distinct-count over the edge keys, amortized across
     * all 3 rounds) and oversize graphs fall back to shuffle joins —
     * rank-partitioned SortMergeJoin per round, correct at any scale.

@@ -49,11 +49,12 @@ object Explore {
   /** Fulltext search honoring `:db/fulltext` schema metadata
     * (schema.edn marks e.g. :artist/name, :release/name): tokenized
     * case-insensitive match over values of fulltext-indexed attrs
-    * only — Datomic's `fulltext` Datalog function shape. The scan
-    * prunes to the fulltext attrs' partitions before matching. */
+    * only — Datomic's `fulltext` Datalog function shape. It searches
+    * the current state, as Datomic's fulltext index does: a card-one
+    * value an upsert superseded no longer matches. */
   def fulltext(store: Store, registry: SchemaRegistry, needle: String): DataFrame = {
     val ftAttrs = registry.attrs.values.filter(_.fulltext).map(_.ident).toSeq
-    fulltextOn(store.eav, ftAttrs, needle)
+    fulltextOn(store.current(registry), ftAttrs, needle)
   }
 
   /** The fulltext core over any EAV-shaped frame: only datoms of the

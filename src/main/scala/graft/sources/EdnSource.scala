@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import graft.edn.Edn
@@ -55,9 +57,8 @@ object EdnSource {
 
   /** Iterate forms of one file without materializing them all: a
     * streaming Reader parse (bounded memory for any file size — the
-    * reference never slurps, `async_edn.clj:39-48`), resolved through
-    * Hadoop FileSystem so object-store URIs work. The stream closes
-    * when the iterator exhausts. */
+    * reference never slurps, `async_edn.clj:39-48`) over [[openReader]].
+    * The stream closes when the iterator exhausts. */
   def parseFile(path: String): Iterator[Edn] = {
     val reader = openReader(path)
     val p = new Edn.Parser(reader)
@@ -73,11 +74,18 @@ object EdnSource {
     }
   }
 
-  private def openReader(path: String): java.io.BufferedReader = {
+  /** The one EDN stream opener (driver-side reads and the V2
+    * connector's partitions): UTF-8 text through Hadoop FileSystem, so
+    * object-store URIs work, decompressed by extension (.gz, .bz2, …).
+    * `conf` defaults to the active session's, or a plain one before any
+    * session exists (`ImportMain` reads its manifest first). */
+  private[sources] def openReader(path: String, conf: Configuration = SparkSession.getActiveSession
+      .map(_.sessionState.newHadoopConf()).getOrElse(new Configuration())): java.io.BufferedReader = {
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val raw = hPath.getFileSystem(conf).open(hPath)
+    val codec = new CompressionCodecFactory(conf).getCodec(hPath)
     new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(hPath), java.nio.charset.StandardCharsets.UTF_8))
+      if (codec == null) raw else codec.createInputStream(raw), java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** Primary path: the DataSource V2 connector (graft.sources.v2) —

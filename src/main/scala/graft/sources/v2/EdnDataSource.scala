@@ -161,18 +161,9 @@ final class EdnPartitionReader(path: String, fileIdx: Int, required: StructType,
     limit: Int, permissive: Boolean, hadoopConf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
-  private val hPath = new org.apache.hadoop.fs.Path(path)
-  private val reader = {
-    // transparent decompression by extension (.gz, .bz2, …) via the
-    // Hadoop codec registry — compressed EDN is the normal shape for
-    // bulk text ingest; the stream stays form-at-a-time either way
-    val raw: java.io.InputStream = hPath.getFileSystem(hadoopConf).open(hPath)
-    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(hadoopConf)
-      .getCodec(hPath)
-    val in = if (codec != null) codec.createInputStream(raw) else raw
-    new java.io.BufferedReader(new java.io.InputStreamReader(
-      in, java.nio.charset.StandardCharsets.UTF_8))
-  }
+  // compressed EDN is the normal shape for bulk text ingest; the
+  // stream stays form-at-a-time either way
+  private val reader = graft.sources.EdnSource.openReader(path, hadoopConf)
   private val parser = new Edn.Parser(reader)
   private val corruptIdx = required.fieldNames.indexOf("_corrupt_record")
   private var i = -1L

@@ -420,6 +420,17 @@ object Store {
     raise_error(concat(lit("negative tx: "), col("tx").cast("string"))))
     .otherwise(col("tx"))
 
+  /** Row limit of the broadcast pins in [[resolveIncremental]],
+    * [[resolveIncrementalHybrid]] and [[retractEntityTx]], whose probe
+    * sets are bounded by the transaction, not the store. Unpinned, AQE
+    * drops the broadcast past its ~10 MB threshold and plans
+    * SortMergeJoin shuffles of the full state: measured at sf10, two
+    * extra state shuffles and an execution-memory OOM in-suite. A larger
+    * set falls back to shuffle joins, correct at any scale. */
+  private val broadcastMaxRows = 5000000L
+  private def broadcastIfSmall(df: DataFrame, rows: Long): DataFrame =
+    if (rows <= broadcastMaxRows) broadcast(df) else df
+
   /** A log without an `op` column (written before retraction support,
     * or synthesized) is all asserts. */
   private[graft] def withOp(df: DataFrame): DataFrame =
@@ -467,32 +478,24 @@ object Store {
     * 100 TB, re-shuffling the live state per merge is exactly what a
     * live index must not do. */
   def resolveIncremental(snapshot: DataFrame, delta: DataFrame,
-      manyAttrs: Seq[String], broadcastDeltaKeysMaxRows: Long = 5000000L): DataFrame = {
+      manyAttrs: Seq[String]): DataFrame = {
     val snapState = snapshot
       .select(col("e"), col("a"), col("v"), col("v_long"), col("is_ref"))
     val deltaLog = withOp(delta).select(
       col("e"), col("a"), col("v"), col("v_long"), col("is_ref"), col("tx"), col("op"))
     val manyCol =
       if (manyAttrs.isEmpty) lit(false) else col("a").isInCollection(manyAttrs)
-    // size-guarded broadcast pin on the key probes (the
-    // retractEntityTx discipline): the contract is a batch-sized
-    // delta, so one count (∝ batch) buys map-side anti-joins — without
-    // the pin AQE abandons the conversion past its ~10 MB threshold
-    // and plans SortMergeJoin shuffles of the full snapshot, the exact
-    // cost this path exists to remove (measured at sf10: +2 state
-    // shuffles, execution OOM in-suite). Outsize deltas fall back to
-    // shuffle joins, which stay correct at any scale.
+    // the contract is a batch-sized delta, so one count (∝ batch) buys
+    // map-side anti-joins instead of snapshot shuffles
     val nDelta = deltaLog.count()
-    def hinted(df: DataFrame): DataFrame =
-      if (nDelta <= broadcastDeltaKeysMaxRows) broadcast(df) else df
     val oneTouched = deltaLog.filter(!manyCol)
       .select(col("e"), col("a")).distinct()
     val manyTouched = deltaLog.filter(manyCol)
       .select(col("e"), col("a"), col("v")).distinct()
     val snapKept = snapState.filter(!manyCol)
-      .join(hinted(oneTouched), Seq("e", "a"), "left_anti")
+      .join(broadcastIfSmall(oneTouched, nDelta), Seq("e", "a"), "left_anti")
       .unionByName(snapState.filter(manyCol)
-        .join(hinted(manyTouched), Seq("e", "a", "v"), "left_anti"))
+        .join(broadcastIfSmall(manyTouched, nDelta), Seq("e", "a", "v"), "left_anti"))
     snapKept.unionByName(resolve(deltaLog, manyAttrs))
   }
 
@@ -510,8 +513,7 @@ object Store {
     * key set's attrs — bounded by the schema's card-one attr count),
     * so re-resolution reads the touched attrs' history, not the log. */
   def resolveIncrementalHybrid(snapshot: DataFrame, delta: DataFrame,
-      fullLog: DataFrame, manyAttrs: Seq[String],
-      broadcastTouchedMaxRows: Long = 5000000L): DataFrame = {
+      fullLog: DataFrame, manyAttrs: Seq[String]): DataFrame = {
     val deltaLog = withOp(delta)
     val manyCol =
       if (manyAttrs.isEmpty) lit(false) else col("a").isInCollection(manyAttrs)
@@ -526,16 +528,8 @@ object Store {
     val attrCounts = touchedKeys.groupBy(col("a"))
       .agg(count(lit(1)).as("n")).collect()
     val touchedAttrs = attrCounts.map(_.getString(0)).toSeq
-    // size-GUARDED broadcast of the touched keys (the retractEntityTx
-    // broadcastDeadMaxRows discipline): the set is ∝ the tx batch, so
-    // pin map-side probes while it is measurably small, and fall back
-    // to shuffle joins for outsize batches. Without the pin, AQE's
-    // conversion threshold (~10 MB) abandons the broadcast on larger
-    // batches and plans SortMergeJoin shuffles of the full snapshot —
-    // measured at sf10: two extra state shuffles and an
-    // execution-memory OOM in-suite.
-    val tk = if (attrCounts.map(_.getLong(1)).sum <= broadcastTouchedMaxRows)
-      broadcast(touchedKeys) else touchedKeys
+    // the touched keys are ∝ the tx batch: map-side probes while small
+    val tk = broadcastIfSmall(touchedKeys, attrCounts.map(_.getLong(1)).sum)
     // the safe branch's delta has NO card-one retractions BY
     // CONSTRUCTION (exactly those keys were carved out above), which
     // is resolveIncremental's contract: the live state is scanned
@@ -1071,17 +1065,15 @@ object Store {
     * The dead set is bounded by the RETRACTION REQUEST (targets plus
     * their component closure), not by corpus size, so the dead-datom
     * scan pins `broadcast(dead)` whenever the closure-loop row counts
-    * (already computed to answer the emptiness check) stay under
-    * `broadcastDeadMaxRows` — one pass over state, two map-side hash
+    * (already computed to answer the emptiness check) stay within
+    * [[broadcastMaxRows]] — one pass over state, two map-side hash
     * probes, ZERO shuffles of state. Without the pin, size estimation
     * over the localCheckpointed frontiers crossed the broadcast
     * threshold at sf1 and planned two SortMergeJoins, i.e. two full
     * shuffles of the multi-M-row state (the 42.6 s q49 line item in
-    * BENCH_sf1 r9). Oversized requests fall back to shuffle joins,
-    * which stay correct at any scale. */
+    * BENCH_sf1 r9). */
   def retractEntityTx(state: DataFrame, targets: DataFrame,
-      componentAttrs: Seq[String], tx: Long,
-      broadcastDeadMaxRows: Long = 5000000L): DataFrame = {
+      componentAttrs: Seq[String], tx: Long): DataFrame = {
     // Each closure frontier is materialized ONCE (lazy localCheckpoint
     // forced by the count that also answers the emptiness check and
     // feeds the broadcast-size guard); the accumulated dead set stays
@@ -1115,8 +1107,7 @@ object Store {
       }
     }
     val deadUnion = frontiers.reduce(_ unionByName _)
-    val dead =
-      if (deadRows <= broadcastDeadMaxRows) broadcast(deadUnion) else deadUnion
+    val dead = broadcastIfSmall(deadUnion, deadRows)
     // One scan of state: mark entity hits and inbound-ref hits via two
     // map-side probes of the same broadcast dead set, then dedupe on
     // the (e, a, v) KEY over a narrow projection: v_long/is_ref are

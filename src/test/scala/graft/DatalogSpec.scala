@@ -26,7 +26,6 @@ class DatalogSpec extends AnyFunSuite {
     types.foreach(b.createBatchFile)
     val st = new Store(spark, java.nio.file.Files.createTempDirectory("dlstore").toString)
     val loader = new Loader(spark, registry, st)
-    loader.ensureImportSchema()
     types.foreach(t => loader.loadBatchFile(t, s"$batches/$t.edn"))
     st
   }

@@ -117,6 +117,17 @@ class EdnSourceV2Spec extends AnyFunSuite {
     assert(rows.toSeq == Seq("n1", "n2"))
   }
 
+  test("driver-side reads decompress by extension too: readEnums on enums.edn.gz") {
+    val plain = MbrainzFixture.entityPath("enums")
+    val gz = java.nio.file.Files.createTempDirectory("gzenums").resolve("enums.edn.gz")
+    val out = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(gz))
+    out.write(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(plain)))
+    out.close()
+    val enums = EdnSource.readEnums(plain)
+    assert(enums.nonEmpty)
+    assert(EdnSource.readEnums(gz.toString) == enums)
+  }
+
   test("missing schema is a clear error") {
     val e = intercept[Exception](spark.read.format("edn").load(artistsPath).count())
     assert(e.getMessage.contains("explicit schema"))

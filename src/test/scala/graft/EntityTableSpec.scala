@@ -22,7 +22,6 @@ class EntityTableSpec extends AnyFunSuite {
     Seq("schema", "enums", "super-enums", "artists").foreach(b.createBatchFile)
     val st = new Store(spark, java.nio.file.Files.createTempDirectory("etstore").toString)
     val loader = new Loader(spark, registry, st)
-    loader.ensureImportSchema()
     Seq("schema", "enums", "super-enums", "artists").foreach(t =>
       loader.loadBatchFile(t, s"$batches/$t.edn"))
     st

@@ -72,8 +72,9 @@ class LoaderSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows("artist/gid") == "db.unique/identity")
     assert(rows("label/gid") == "db.unique/identity")
-    // exactly the generated schema's :db/unique attrs, with their kind
-    assert(rows == fx.uniqueAttrs)
+    // exactly the generated schema's :db/unique attrs, with their kind,
+    // plus the import schema's, which every load carries
+    assert(rows == fx.uniqueAttrs + (Mbrainz.batchIdAttr -> "db.unique/value"))
   }
 
   test("explore: entity counts per unique attr match source data") {
@@ -115,6 +116,24 @@ class LoaderSpec extends AnyFunSuite {
     val dups = cur.filter(col("a") === "release/artists")
       .groupBy("e", "a", "v").count().filter(col("count") > 1).count()
     assert(dups == 0)
+  }
+
+  test("fulltext searches the current state: a release's superseded name no longer matches") {
+    val (store, _) = loaded
+    import org.apache.spark.sql.functions.col
+    // each duplicate row renames its release to "<name> Remaster" in a
+    // later tx, so the original name's tokens match only the new name
+    val renamed = fx.releases.takeRight(fx.nDuplicateReleases)
+    assert(renamed.size == fx.nDuplicateReleases)
+    renamed.foreach { dup =>
+      val gid = fx.field(dup, "gid").get
+      val original = fx.field(fx.releases.find(fx.field(_, "gid").contains(gid)).get, "name").get
+      assert(fx.field(dup, "name").get == s"$original Remaster")
+      val names = Explore.fulltext(store, registry, original)
+        .filter(col("e") === s"release/gid|$gid" && col("a") === "release/name")
+        .collect().map(_.getString(2)).toSeq
+      assert(names == Seq(s"$original Remaster"), s"release $gid")
+    }
   }
 
   // ── inline fixtures: a small schema and batch files written here ──
@@ -177,7 +196,6 @@ class LoaderSpec extends AnyFunSuite {
     val all = new Loader(spark, inlineRegistry, onePass).loadAll(dir)
     val perFile = freshStore()
     val loader = new Loader(spark, inlineRegistry, perFile)
-    loader.ensureImportSchema()
     val each = inlineTypes.map(t => t -> loader.loadBatchFile(t, s"$dir/$t.edn")).toMap
     assert(txesOf(all) == Map("artists" -> 4L, "labels" -> 3L, "releases" -> 5L))
     assert(all.map { case (t, s) => t -> (s.txes, s.datoms, s.rejected) } ==
@@ -185,11 +203,41 @@ class LoaderSpec extends AnyFunSuite {
     // artists: 4 txes × (3 × 2 attrs + batch id + txInstant) datoms
     assert(all("artists").datoms == 4 * 8)
     assert(logRows(onePass) == logRows(perFile))
-    // one instant for the whole data load; the import schema has its own
+  }
+
+  /** The full fixture's batch files, loaded by one `loadAll` into a
+    * fresh store: its tx entities' `(e, tx, instant)`. */
+  private lazy val loadAllTxes: Seq[(String, Long, String)] = {
     import org.apache.spark.sql.functions.col
-    val instants = onePass.eav.filter(col("a") === Store.txInstantAttr && col("e") =!= "tx|import-schema-1")
-      .select("v").distinct().count()
-    assert(instants == 1)
+    val store = freshStore()
+    new Loader(spark, registry, store).loadAll(batchesDir)
+    store.eav.filter(col("a") === Store.txInstantAttr).select("e", "tx", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+  }
+
+  test("a fresh loadAll stamps one txInstant for every tx entity, the import schema's included") {
+    val importSchema = loadAllTxes.filter(_._1 == "tx|import-schema-1")
+    assert(importSchema.size == 1)
+    // one tx entity per batch of every type, plus the import schema's
+    assert(loadAllTxes.size == 1 + types.map(fx.batches(_, 100)).sum)
+    assert(loadAllTxes.map(_._3).distinct.size == 1, "one instant for the whole load")
+  }
+
+  test("every tx entity has its own tx, and the import schema's is the smallest") {
+    val txes = loadAllTxes.map(_._2)
+    assert(txes.distinct.size == txes.size)
+    assert(loadAllTxes.minBy(_._2)._1 == "tx|import-schema-1")
+    assert(loadAllTxes.filter(_._1 == "tx|schema-1").map(_._2) == Seq(1L))
+  }
+
+  test("loadAll over a batch directory with no batch files still transacts the import schema") {
+    import org.apache.spark.sql.functions.col
+    val store = freshStore()
+    val empty = java.nio.file.Files.createTempDirectory("nobatches").toString
+    assert(new Loader(spark, inlineRegistry, store).loadAll(empty).isEmpty)
+    assert(store.appliedBatchIds.collect().map(_.getString(0)).toSeq == Seq("import-schema-1"))
+    assert(store.eav.filter(col("e") === s"ident|${Mbrainz.batchIdAttr}" && col("a") === "db/unique")
+      .select("v").collect().map(_.getString(0)).toSeq == Seq("db.unique/value"))
   }
 
   test("a second loadAll applies nothing and leaves the log unchanged") {
@@ -200,7 +248,8 @@ class LoaderSpec extends AnyFunSuite {
     val before = store.eav.count()
     val again = loader.loadAll(dir)
     assert(txesOf(again) == inlineTypes.map(_ -> 0L).toMap)
-    assert(loader.ensureImportSchema().txes == 0)
+    // nor is the import schema re-applied: a load of no batch files adds nothing
+    assert(loader.load(Nil).isEmpty)
     assert(store.eav.count() == before)
   }
 

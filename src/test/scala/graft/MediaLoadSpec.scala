@@ -36,7 +36,6 @@ class MediaLoadSpec extends AnyFunSuite {
     val registry = SchemaRegistry.load(s"$entities/schema.edn")
     val store = new Store(spark, java.nio.file.Files.createTempDirectory("mlstore").toString)
     val loader = new Loader(spark, registry, store)
-    loader.ensureImportSchema()
     loader.loadBatchFile("schema", s"$batches/schema.edn")
     val stats = loader.loadBatchFile("media", s"$batches/media.edn")
     assert(stats.txes == 1)

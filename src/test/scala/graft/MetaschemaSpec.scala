@@ -57,7 +57,6 @@ class MetaschemaSpec extends AnyFunSuite {
     Seq("schema", "enums", "super-enums", "artists").foreach(b.createBatchFile)
     val store = new Store(spark, java.nio.file.Files.createTempDirectory("msstore").toString)
     val loader = new Loader(spark, registry, store)
-    loader.ensureImportSchema()
     Seq("schema", "enums", "super-enums", "artists").foreach(t =>
       loader.loadBatchFile(t, s"$batches/$t.edn"))
 

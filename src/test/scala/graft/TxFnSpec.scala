@@ -698,7 +698,6 @@ class TxFnSpec extends AnyFunSuite {
     val preds = Map("artist/name" -> Seq(
       "no-z-names" -> (!col("v").startsWith("z"))))
     val loader = new graft.pipeline.Loader(spark, registry, st, attrPreds = preds)
-    loader.ensureImportSchema()
     val line =
       """{:batch-ident {:db/id "datomic.tx", :mbrainz.initial-import/batch-id "artists-9"}, :data [""" +
         """{:artist/gid #uuid "77777777-7777-4777-8777-777777777777", :artist/name "Good", :artist/sortName "G"} """ +
@@ -722,7 +721,6 @@ class TxFnSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("txinst").toString)
     val loader = new graft.pipeline.Loader(spark, registry, st)
     val before = new java.util.Date(System.currentTimeMillis() - 1000)
-    loader.ensureImportSchema()
     val line =
       """{:batch-ident {:db/id "datomic.tx", :mbrainz.initial-import/batch-id "artists-1"}, :data [""" +
         """{:artist/gid #uuid "66666666-6666-4666-8666-666666666666", :artist/name "N", :artist/sortName "S"}]}"""
