@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.spark.{SparkThrowable, TaskContext}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
@@ -35,14 +37,54 @@ final class Batcher(spark: SparkSession, basedir: String, val outDir: String, ba
   private lazy val dims: Transform.Dims = Transform.Dims.load(spark, entitiesDir)
   locally { val p = new Path(outDir); p.getFileSystem(hadoopConf).mkdirs(p) }
 
-  /** Skips types whose source file is absent (e.g. the stripped
-    * media.edn, `.MISSING_LARGE_BLOBS`). */
-  def runAll(types: Seq[String] = Mbrainz.importOrder): Map[String, Long] =
-    types.flatMap { t =>
-      val (file, write) = source(t)
+  /** Writes every type of `types` whose source file exists, each as
+    * its own Spark job, all at once, and returns once every job has
+    * finished. Skips types whose source file is absent (e.g. the
+    * stripped media.edn, `.MISSING_LARGE_BLOBS`).
+    *
+    * Why concurrently: each entity type's write ends in one task (its
+    * file is one ordered stream, [[Batching]]), so one type after
+    * another leaves all cores but one idle for most of the batcher;
+    * the types share nothing but the read-only dictionaries, so their
+    * jobs can run side by side. On a 4-core host (the benchmark's
+    * untraced `import`, seed 2) the batcher's jobs went from 7.8 s end
+    * to end to 4.1 s, media's (read, assembly shuffle, write) last.
+    * Jobs are submitted in `types` order: submitting the largest source
+    * file first (media) measured no faster, 1.45 s against 1.50 s at
+    * scale 0.05 and 3.02 s against 2.97 s at 0.2 (medians of
+    * in-process alternations).
+    *
+    * The pool has one thread per present type and is created by each
+    * call, on the calling thread: its threads start there and so
+    * inherit that thread's Spark local properties (job tags and groups,
+    * the active session), which a pool shared across calls would have
+    * captured from whichever call started it. It is shut down in a
+    * `finally`, so no thread outlives the call.
+    *
+    * Failure rule: every job runs to its end, so each type that can be
+    * written is committed; then the first failure in `types` order is
+    * rethrown, with every later type's failure added to it as
+    * suppressed. A failed type's previous batch file stays as it was
+    * ([[Batching.commit]]). */
+  def runAll(types: Seq[String] = Mbrainz.importOrder): Map[String, Long] = {
+    val present = types.map(t => t -> source(t)).filter { case (_, (file, _)) =>
       val p = new Path(s"$entitiesDir/$file")
-      if (p.getFileSystem(hadoopConf).exists(p)) Some(t -> write()) else None
-    }.toMap
+      p.getFileSystem(hadoopConf).exists(p)
+    }
+    val pool = Executors.newFixedThreadPool(present.size max 1, Batcher.threads)
+    try {
+      val jobs = present.map { case (t, (_, write)) =>
+        t -> pool.submit(new Callable[Long] { def call(): Long = write() })
+      }
+      val done = jobs.map { case (t, job) =>
+        t -> (try Right(job.get()) catch { case e: ExecutionException => Left(e.getCause) })
+      }
+      done.collect { case (_, Left(e)) => e } match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ => done.collect { case (t, Right(n)) => t -> n }.toMap
+      }
+    } finally pool.shutdown()
+  }
 
   /** Returns the number of batches written for `tpe`. */
   def createBatchFile(tpe: String): Long = source(tpe)._2()
@@ -147,5 +189,15 @@ final class Batcher(spark: SparkSession, basedir: String, val outDir: String, ba
           new IllegalStateException("Importer failed: " + u.getMessageParameters.get("errorMessage"), e)
         }.getOrElse(e)
     }
+  }
+}
+
+object Batcher {
+  /** Names the pool threads of [[Batcher.runAll]] `graft-batcher-N`. */
+  val threadPrefix = "graft-batcher-"
+
+  private val threads: ThreadFactory = new ThreadFactory {
+    private val n = new AtomicInteger()
+    def newThread(r: Runnable): Thread = new Thread(r, threadPrefix + n.incrementAndGet())
   }
 }

@@ -136,6 +136,88 @@ class BatcherSpec extends AnyFunSuite {
     }
   }
 
+  /** The full fixture's batch files, one `createBatchFile` per type,
+    * and their bytes by type. */
+  private lazy val perType: (String, Map[String, Array[Byte]]) = {
+    val out = java.nio.file.Files.createTempDirectory("batcherspecpertype").toString
+    val b = new Batcher(spark, MbrainzFixture.basedir, out, 100)
+    Mbrainz.importOrder.foreach(b.createBatchFile)
+    (out, Mbrainz.importOrder.map(t => t -> bytes(s"$out/$t.edn")).toMap)
+  }
+
+  private def bytes(path: String): Array[Byte] = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+
+  private val entityFiles = Seq("artists", "areleases", "areleases-artists", "labels", "releases",
+    "releases-artists", "media")
+
+  test("runAll's concurrent jobs write the files createBatchFile writes, reading each entity file once") {
+    val out = java.nio.file.Files.createTempDirectory("batcherspecrunall").toString
+    val b = new Batcher(spark, MbrainzFixture.basedir, out, 100)
+    val (written, _, counters) = QueryMetrics.measure(spark)(b.runAll())
+    assert(written.keySet == Mbrainz.importOrder.toSet)
+    Mbrainz.importOrder.foreach { t =>
+      assert(bytes(s"$out/$t.edn").sameElements(perType._2(t)), t)
+    }
+    assert(counters.inputRows == entityFiles.map(MbrainzFixture.forms).sum)
+  }
+
+  /** A copy of the full fixture's base whose entity file `<type>.edn`
+    * ends with `form`, for each `(type, form)`. */
+  private def fixtureWith(appended: (String, String)*): java.nio.file.Path = {
+    import java.nio.file.{Files, Paths, StandardOpenOption}
+    val base = Files.createTempDirectory("batcherspecmiss")
+    Files.createDirectory(base.resolve("entities"))
+    Files.list(Paths.get(MbrainzFixture.basedir, "entities")).forEach { f =>
+      Files.copy(f, base.resolve("entities").resolve(f.getFileName))
+    }
+    appended.foreach { case (tpe, form) =>
+      Files.write(base.resolve(s"entities/$tpe.edn"), s"\n$form\n".getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        StandardOpenOption.APPEND)
+    }
+    base
+  }
+
+  /** An artist whose country is in no dictionary: a super-enum miss. */
+  private val artistMiss = s"""{:gid #uuid "${uuid(999)}", :name "Z", :sortname "Z", :country "ZZ"}"""
+
+  test("a failed type under runAll: the others commit, its old file stays, no stage or pool thread is left") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val base = fixtureWith("artists" -> artistMiss)
+    val out = Files.createTempDirectory("batcherspecmissout")
+    val previous = out.resolve("artists.edn")
+    Files.copy(Paths.get(perType._1, "artists.edn"), previous, StandardCopyOption.REPLACE_EXISTING)
+
+    val ex = intercept[IllegalStateException](new Batcher(spark, base.toString, out.toString, 100).runAll())
+    assert(ex.getMessage.contains("artist/country"), ex.getMessage)
+    assert(ex.getMessage.contains("ZZ"), ex.getMessage)
+    Mbrainz.importOrder.filter(_ != "artists").foreach { t =>
+      assert(bytes(s"$out/$t.edn").sameElements(perType._2(t)), t)
+    }
+    assert(bytes(previous.toString).sameElements(perType._2("artists")))
+    val stages = Files.walk(out).filter(_.getFileName.toString.endsWith(".stage")).count()
+    assert(stages == 0)
+    val pool = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(_.getName.startsWith(Batcher.threadPrefix))
+    pool.foreach(_.join(10000))
+    assert(pool.forall(!_.isAlive), pool.filter(_.isAlive).map(_.getName).mkString(", "))
+  }
+
+  test("two failed types under runAll: the first in import order is thrown, the other suppressed") {
+    val t = MbrainzFixture.truth
+    val mediaMiss = s"""{:id 999999, :release #uuid "${t.releases.head.gid}", :position 99, :track_count 1,
+       | :format "NotAFormat", :name "X", :tracknum 1, :length 1000,
+       | :artist #uuid "${t.artistGids.head}"}""".stripMargin.replace("\n", "")
+    val base = fixtureWith("artists" -> artistMiss, "media" -> mediaMiss)
+    val out = java.nio.file.Files.createTempDirectory("batcherspectwomissout").toString
+    val ex = intercept[IllegalStateException](new Batcher(spark, base.toString, out, 100).runAll())
+    assert(ex.getMessage.contains("artist/country"), ex.getMessage)
+    val suppressed = ex.getSuppressed.toSeq
+    assert(suppressed.size == 1, suppressed.mkString("; "))
+    assert(suppressed.head.isInstanceOf[IllegalStateException], suppressed.head)
+    assert(suppressed.head.getMessage.contains("medium/format"), suppressed.head.getMessage)
+    assert(suppressed.head.getMessage.contains("NotAFormat"), suppressed.head.getMessage)
+  }
+
   test("batchIdOf reads the id of every batchLine and of nothing else") {
     val a = Mbrainz.batchIdAttr
     Seq("artists-1", "releases-artists-117", "import-schema-1", "x").foreach { id =>

@@ -206,13 +206,25 @@ class LoaderSpec extends AnyFunSuite {
   }
 
   /** The full fixture's batch files, loaded by one `loadAll` into a
-    * fresh store: its tx entities' `(e, tx, instant)`. */
-  private lazy val loadAllTxes: Seq[(String, Long, String)] = {
-    import org.apache.spark.sql.functions.col
+    * fresh store. */
+  private lazy val loadedAll: Store = {
     val store = freshStore()
     new Loader(spark, registry, store).loadAll(batchesDir)
-    store.eav.filter(col("a") === Store.txInstantAttr).select("e", "tx", "v").collect()
+    store
+  }
+
+  /** [[loadedAll]]'s tx entities' `(e, tx, instant)`. */
+  private lazy val loadAllTxes: Seq[(String, Long, String)] = {
+    import org.apache.spark.sql.functions.col
+    loadedAll.eav.filter(col("a") === Store.txInstantAttr).select("e", "tx", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+  }
+
+  test("a fresh loadAll writes at most one parquet file per attribute") {
+    val attrs = loadedAll.eav.select("a").distinct().count()
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(loadedAll.dir, "eav"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).count()
+    assert(files <= attrs, s"$files files for $attrs attributes")
   }
 
   test("a fresh loadAll stamps one txInstant for every tx entity, the import schema's included") {
