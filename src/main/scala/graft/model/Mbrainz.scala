@@ -182,6 +182,11 @@ object Mbrainz {
 
   val batchIdAttr: String = "mbrainz.initial-import/batch-id"
 
+  /** The super-enum dictionaries (`countries.edn`, …), in the order
+    * their entities appear in the `super-enums` batch file
+    * (importer.clj:198-201). */
+  val superEnums: Seq[String] = Seq("countries", "langs", "scripts")
+
   val byName: Map[String, EntityType] = Seq(
     artists, areleases, releases, labels, releasesArtists, areleasesArtists, media
   ).map(t => t.name -> t).toMap

@@ -83,13 +83,7 @@ object ClassifierTrain {
       .withColumn("y",
         when(lit(K.toLong) * col("n_the") >= col("n_tokens"), 1L).otherwise(-1L))
     // (doc, y, feature) counts + the bias feature — ONE corpus pass,
-    // materialized once, re-scanned by every round. Materialized
-    // PARTITIONED ON doc_id (localCheckpoint preserves the physical
-    // partitioning through LogicalRDD): every round's margins pass
-    // groups by (doc_id, y) and its gradient semi-joins on doc_id, so
-    // one build-time repartition replaces Rounds corpus-scale
-    // exchanges — the rounds reduce to map-side scans of the
-    // checkpointed blocks plus the bounded groupBy(j).
+    // materialized once, re-scanned by every round
     val feats = labeled
       .select(col("doc_id"), col("y"), explode(col("toks")).as("tok"))
       .select(col("doc_id"), col("y"),
@@ -97,7 +91,6 @@ object ClassifierTrain {
       .groupBy(col("doc_id"), col("y"), col("j")).agg(count(lit(1)).as("cnt"))
       .unionByName(labeled.select(col("doc_id"), col("y"),
         lit(D.toLong).as("j"), lit(1L).as("cnt")))
-      .repartition(col("doc_id"))
       .localCheckpoint(false)
     val nDocs = math.max(docs.count(), 1L)
 

@@ -23,16 +23,11 @@ object ConnectedComponents {
     * lexicographically, so hash/string ids cluster just as well. */
   def components(edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 50): DataFrame = {
-    // materialize the symmetrized edges PARTITIONED ON dst
-    // (localCheckpoint preserves physical partitioning through
-    // LogicalRDD): every round joins sym to the labels on dst, so one
-    // build-time repartition replaces an edge-scale exchange per
-    // round — only the node-scale labels side reshuffles each round.
     val sym = edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionByName(edges
         .select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct().repartition(col("dst")).localCheckpoint()
+      .distinct().localCheckpoint()
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).localCheckpoint(false)
     var it = 0

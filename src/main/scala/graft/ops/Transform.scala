@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.edn.Edn.EMap
 import graft.model.Mbrainz._
 import graft.sources.EdnSource
 
@@ -9,29 +10,30 @@ import graft.sources.EdnSource
   * resolution (reference `transform-entity`, importer.clj:166-188, and
   * `as-enum`/`as-super-enum`, importer.clj:215-224).
   *
-  * The reference resolves enums via in-memory maps per record; the
-  * Spark shape is a broadcast hash join per enum-typed column (J1) —
-  * the fact side never shuffles, and misses surface as nulls that
-  * `requireStrict` turns into a `could-not-import` task failure, like
-  * the reference's throw (importer.clj:212-214).
+  * Like the reference, each dictionary column is a lookup in an
+  * in-memory map, one per enum class or super-enum dictionary, carried
+  * into the plan as a map literal (`try_element_at`): one narrow
+  * projection, no join and no job of its own. Misses surface as nulls
+  * that `requireStrict` turns into a `could-not-import` task failure,
+  * like the reference's throw (importer.clj:212-214).
   */
 object Transform {
 
-  /** Broadcast dictionary tables, loaded once (S5, importer.clj:257-269). */
+  /** The four dictionaries, read once and held as parsed, in file order
+    * (`create-importer`, importer.clj:257-269): what
+    * [[EdnSource.readEnums]] and [[EdnSource.readSuperEnum]] return.
+    * The batcher renders the `enums` and `super-enums` batch files from
+    * them as well. */
   final case class Dims(
-      enums: DataFrame,                 // (enum_class, enum_in, enum_ident)
-      supers: Map[String, DataFrame])   // dict → (dict, dict_code, dict_ident)
+      enums: Vector[(String, String, String)],                 // (enum class, input, ident)
+      supers: Map[String, Vector[(String, String, EMap)]])     // dict → (code, ident, entity)
 
   object Dims {
-    def load(spark: SparkSession, entitiesDir: String): Dims = {
-      val enums = EdnSource.enumDim(spark, EdnSource.readEnums(s"$entitiesDir/enums.edn"))
-      val supers = Map(
-        "countries" -> s"$entitiesDir/countries.edn",
-        "langs" -> s"$entitiesDir/langs.edn",
-        "scripts" -> s"$entitiesDir/scripts.edn"
-      ).map { case (d, p) => d -> EdnSource.superDim(spark, d, EdnSource.readSuperEnum(p)) }
-      Dims(enums, supers)
-    }
+    /** Reads `enums.edn` and the `superEnums` files of `entitiesDir`.
+      * `spark` is unused: the dictionaries never become DataFrames. */
+    def load(spark: SparkSession, entitiesDir: String): Dims =
+      Dims(EdnSource.readEnums(s"$entitiesDir/enums.edn"),
+        superEnums.map(d => d -> EdnSource.readSuperEnum(s"$entitiesDir/$d.edn")).toMap)
   }
 
   /** Rename + resolve every mapping of `t`; output columns are
@@ -40,33 +42,22 @@ object Transform {
     * strict check. `keepCols` are input columns carried through as-is
     * (after `row_idx`). */
   def transform(df: DataFrame, t: EntityType, dims: Dims, keepCols: Seq[String] = Nil): DataFrame = {
-    var out = df
-    t.mappings.foreach { m =>
-      if (!df.columns.contains(m.inputKey)) {
+    def present(m: AttrMapping): Boolean = df.columns.contains(m.inputKey)
+    val mapped = t.mappings.map { m =>
+      def lookup(entries: Seq[(String, String)]) = try_element_at(typedLit(entries.toMap), col(m.inputKey))
+      (m.kind match {
         // unmapped input key (e.g. artists' misspelled date keys): the
         // target attr is simply never produced
-        out = out.withColumn(m.col, lit(null).cast(kindType(m.kind)))
-      } else m.kind match {
-        case KEnum(cls) =>
-          val dim = dims.enums.filter(col("enum_class") === cls)
-            .select(col("enum_in").as(s"${m.col}__in"), col("enum_ident").as(m.col))
-          out = out.join(broadcast(dim), out(m.inputKey) === col(s"${m.col}__in"), "left")
-            .withColumn(s"${m.col}__raw", out(m.inputKey))
-            .drop(s"${m.col}__in")
-        case KSuperEnum(dict) =>
-          val dim = dims.supers(dict)
-            .select(col("dict_code").as(s"${m.col}__in"), col("dict_ident").as(m.col))
-          out = out.join(broadcast(dim), out(m.inputKey) === col(s"${m.col}__in"), "left")
-            .withColumn(s"${m.col}__raw", out(m.inputKey))
-            .drop(s"${m.col}__in")
-        case _ =>
-          out = out.withColumn(m.col, out(m.inputKey))
-      }
+        case k if !present(m) => lit(null).cast(kindType(k))
+        // scoped to the enum class, like `as-enum`
+        case KEnum(cls) => lookup(dims.enums.collect { case (`cls`, in, ident) => in -> ident })
+        case KSuperEnum(dict) => lookup(dims.supers(dict).map { case (code, ident, _) => code -> ident })
+        case _ => col(m.inputKey)
+      }).as(m.col)
     }
-    val keep = col("row_idx") +: keepCols.map(col) ++: t.mappings.map(m => col(m.col)) ++:
-      t.mappings.collect { case m if isDict(m.kind) && df.columns.contains(m.inputKey) =>
-        col(s"${m.col}__raw") }
-    out.select(keep: _*)
+    val raws = t.mappings.collect { case m if isDict(m.kind) && present(m) =>
+      col(m.inputKey).as(s"${m.col}__raw") }
+    df.select(col("row_idx") +: keepCols.map(col) ++: mapped ++: raws: _*)
   }
 
   private def isDict(k: Kind): Boolean = k match {

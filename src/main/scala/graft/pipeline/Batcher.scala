@@ -23,7 +23,9 @@ import graft.sources.EdnSource
   * `batchSize` forms by [[Batching.lines]]. Dictionary types
   * (schema/enums/super-enums, ≤ 8k rows) build that stream on the
   * driver, like the reference's in-memory `threaded-onto`
-  * (importer.clj:252-255). Entity types read, transform and render in
+  * (importer.clj:252-255); enums and super-enums render the one
+  * dictionary load (`Transform.Dims`) that entity types resolve
+  * against. Entity types read, transform and render in
   * Spark (narrow whole-stage-codegen chain; media adds one shuffle for
   * assembly), then the rendered forms are sorted and chunked in the
   * one task that writes the file: the file is one sequential stream
@@ -98,14 +100,12 @@ final class Batcher(spark: SparkSession, basedir: String, val outDir: String, ba
         case other => throw new IllegalArgumentException(s"schema.edn not a vector: $other")
       }))
     case "enums" => ("enums.edn", () => driverBatches(tpe,
-      EdnSource.readEnums(s"$entitiesDir/enums.edn").map { case (_, in, ident) =>
+      dims.enums.map { case (_, in, ident) =>
         val ns = ident.substring(0, ident.indexOf('/'))
         "{:db/ident :" + ident + ", :" + ns + "/name \"" + Edn.escape(in) + "\"}"
       }))
     case "super-enums" => ("countries.edn", () => driverBatches(tpe,
-      Seq("countries", "langs", "scripts").flatMap { d =>
-        EdnSource.readSuperEnum(s"$entitiesDir/$d.edn").map { case (_, _, ent) => Edn.print(ent) }
-      }))
+      Mbrainz.superEnums.flatMap(dims.supers(_).map { case (_, _, ent) => Edn.print(ent) })))
     case "media" => ("media.edn", () => writeType(tpe, mediaForms()))
     case name => (s"$name.edn", () => {
       val t = Mbrainz.byName(name)

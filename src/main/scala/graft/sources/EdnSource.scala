@@ -135,25 +135,6 @@ object EdnSource {
     }
   }
 
-  /** Small in-memory dims → broadcast-join DataFrames (SURVEY §2 S5). */
-  def enumDim(spark: SparkSession, enums: Vector[(String, String, String)]): DataFrame = {
-    val rows = enums.map { case (c, in, ident) => Row(c, in, ident) }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("enum_class", StringType, nullable = false),
-        StructField("enum_in", StringType, nullable = false),
-        StructField("enum_ident", StringType, nullable = false))))
-  }
-
-  def superDim(spark: SparkSession, dict: String, entries: Vector[(String, String, EMap)]): DataFrame = {
-    val rows = entries.map { case (code, ident, _) => Row(dict, code, ident) }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(
-        StructField("dict", StringType, nullable = false),
-        StructField("dict_code", StringType, nullable = false),
-        StructField("dict_ident", StringType, nullable = false))))
-  }
-
   /** Whole-file read for the SMALL dictionary files only (enums /
     * super-enums, a few KB); entity-scale reads go through
     * `parseFile` / the V2 connector, which stream. */

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.edn.Edn
 import graft.edn.Edn._
 import graft.model.Mbrainz
-import graft.ops.EdnRender
+import graft.ops.{EdnRender, Transform}
 import graft.pipeline.Batcher
 import graft.sources.EdnSource
 import EdnFixtures.uuid
@@ -134,6 +134,22 @@ class BatcherSpec extends AnyFunSuite {
       val (_, _, counters) = QueryMetrics.measure(spark)(b.createBatchFile(tpe))
       assert(counters.inputRows == MbrainzFixture.forms(tpe), tpe)
     }
+  }
+
+  test("an entity type's batch file is one stage: its dictionary columns are lookups, not joins") {
+    val out = java.nio.file.Files.createTempDirectory("batcherspecstages").toString
+    val b = new Batcher(spark, MbrainzFixture.basedir, out, 100)
+    Seq("artists", "releases").foreach { tpe =>
+      val (_, _, counters) = QueryMetrics.measure(spark)(b.createBatchFile(tpe))
+      assert(counters.stages == 1, tpe)
+    }
+    val entities = s"${MbrainzFixture.basedir}/entities"
+    val t = Mbrainz.releases
+    val releases = Transform.transform(EdnSource.readEntities(spark, s"$entities/releases.edn", t), t,
+      Transform.Dims.load(spark, entities))
+    releases.collect()
+    val plan = releases.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"), plan)
   }
 
   /** The full fixture's batch files, one `createBatchFile` per type,

@@ -76,9 +76,12 @@ class MediaSpec extends AnyFunSuite {
     def artist(n: Int, country: String) =
       s"""{:gid #uuid "${uuid(n)}", :name "A$n", :sortname "A$n", :country "$country"}"""
     // (type, forms that resolve, a last form that misses, its attr and raw value):
-    // an enum miss and a super-enum miss
+    // an enum miss, a super-enum miss, and an input of another enum
+    // class ("Male" is a gender, not an artist type)
+    val maleType = s"""{:gid #uuid "${uuid(3)}", :name "A3", :sortname "A3", :type "Male", :country "GB"}"""
     Seq(("media", Seq(track(1, "CD"), track(2, "Vinyl")), track(3, "NotAFormat"), "medium/format", "NotAFormat"),
-      ("artists", Seq(artist(1, "GB"), artist(2, "US")), artist(3, "ZZ"), "artist/country", "ZZ"))
+      ("artists", Seq(artist(1, "GB"), artist(2, "US")), artist(3, "ZZ"), "artist/country", "ZZ"),
+      ("artists", Seq(artist(1, "GB"), artist(2, "US")), maleType, "artist/type", "Male"))
       .foreach { case (tpe, good, miss, attr, value) =>
         def input(forms: Seq[String]) = java.nio.file.Files.write(base.resolve(s"entities/$tpe.edn"),
           forms.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
