@@ -39,14 +39,9 @@ object Mbrainz {
   /** Raw input field as parsed from the entity EDN (uuid ⇒ string). */
   final case class InField(name: String, isLong: Boolean = false)
 
-  final case class EntityType(
-      name: String,
-      inFields: Seq[InField],
-      mappings: Seq[AttrMapping],
-      /** spec-required input keys (entities.clj:37-51) */
-      required: Seq[String])
+  final case class EntityType(name: String, inFields: Seq[InField], mappings: Seq[AttrMapping])
 
-  def colName(attr: String): String = attr.replace("/", "__").replace("_", "_")
+  def colName(attr: String): String = attr.replace("/", "__")
 
   private val dateTriples: Seq[InField] = Seq(
     InField("begin_date_year", isLong = true), InField("begin_date_month", isLong = true),
@@ -75,8 +70,7 @@ object Mbrainz {
       AttrMapping("begin_date_date", "artist/startDay", KLong),
       AttrMapping("end_date_year", "artist/endYear", KLong),
       AttrMapping("end_date_month", "artist/endMonth", KLong),
-      AttrMapping("end_date_day", "artist/endDay", KLong)),
-    required = Seq("gid", "name", "sortname"))
+      AttrMapping("end_date_day", "artist/endDay", KLong)))
 
   val areleases: EntityType = EntityType(
     name = "areleases",
@@ -85,8 +79,7 @@ object Mbrainz {
       AttrMapping("gid", "abstractRelease/gid", KUuid),
       AttrMapping("name", "abstractRelease/name", KStr),
       AttrMapping("type", "abstractRelease/type", KEnum("release_group_type")),
-      AttrMapping("artist_credit", "abstractRelease/artistCredit", KStr)),
-    required = Seq("gid", "name", "artist_credit"))
+      AttrMapping("artist_credit", "abstractRelease/artistCredit", KStr)))
 
   val releases: EntityType = EntityType(
     name = "releases",
@@ -110,8 +103,7 @@ object Mbrainz {
       AttrMapping("date_year", "release/year", KLong),
       AttrMapping("date_month", "release/month", KLong),
       AttrMapping("date_day", "release/day", KLong),
-      AttrMapping("release_group", "release/abstractRelease", KRefMap("abstractRelease/gid"))),
-    required = Seq("gid", "name", "release_group"))
+      AttrMapping("release_group", "release/abstractRelease", KRefMap("abstractRelease/gid"))))
 
   val labels: EntityType = EntityType(
     name = "labels",
@@ -128,24 +120,21 @@ object Mbrainz {
       AttrMapping("begin_date_day", "label/startDay", KLong),
       AttrMapping("end_date_year", "label/endYear", KLong),
       AttrMapping("end_date_month", "label/endMonth", KLong),
-      AttrMapping("end_date_day", "label/endDay", KLong)),
-    required = Seq("gid", "name", "sort_name"))
+      AttrMapping("end_date_day", "label/endDay", KLong)))
 
   val releasesArtists: EntityType = EntityType(
     name = "releases-artists",
     inFields = Seq(InField("release"), InField("artist")),
     mappings = Seq(
       AttrMapping("release", "release/gid", KHoist("release/gid")),
-      AttrMapping("artist", "release/artists", KRefMap("artist/gid"))),
-    required = Seq("release", "artist"))
+      AttrMapping("artist", "release/artists", KRefMap("artist/gid"))))
 
   val areleasesArtists: EntityType = EntityType(
     name = "areleases-artists",
     inFields = Seq(InField("release_group"), InField("artist")),
     mappings = Seq(
       AttrMapping("release_group", "abstractRelease/gid", KHoist("abstractRelease/gid")),
-      AttrMapping("artist", "abstractRelease/artists", KRefMap("artist/gid"))),
-    required = Seq("release_group", "artist"))
+      AttrMapping("artist", "abstractRelease/artists", KRefMap("artist/gid"))))
 
   /** Media input: contiguous track rows sharing medium `:id`
     * (`importer.clj:236-247`); medium attrs from the first row, track
@@ -170,15 +159,38 @@ object Mbrainz {
     InField("artist"))
 
   val media: EntityType = EntityType("media", mediaInFields,
-    mediumMappings ++ trackMappings, required = Seq("id", "release"))
+    mediumMappings ++ trackMappings)
 
   /** Import order (`importer.clj:40-44`). The reference needs it for FK
     * / upsert dependencies between types; graft's one-pass loader does
-    * not (`pipeline.Loader`), but a type's index here fixes its tx
-    * range. */
+    * not (`pipeline.Loader`), but it fixes each type's tx range: batch
+    * `<type>-n` is transacted at tx [[batchTx]]`(txRangeIndex(type), n)`
+    * (`store.Datoms.batchDatoms`). */
   val importOrder: Seq[String] = Seq("schema", "enums", "super-enums",
     "artists", "areleases", "areleases-artists", "labels", "releases",
     "releases-artists", "media")
+
+  /** Width of one type's tx range: an import type's batch numbers must
+    * stay below it, or its txes would run into the next type's. */
+  val txRange: Long = 1000000L
+
+  /** A type's tx-range index: its place in [[importOrder]], or
+    * `importOrder.size` for any other type (an update batch), so that
+    * its txes lie above every import type's and a later update wins
+    * over the imported value. */
+  def txRangeIndex(tpe: String): Int = {
+    val i = importOrder.indexOf(tpe)
+    if (i < 0) importOrder.size else i
+  }
+
+  /** The tx of batch `<type>-n`, `typeIdx` being the type's
+    * [[txRangeIndex]]: `typeIdx * txRange + n`. Fails when an import
+    * type's `n` would leave its range. */
+  def batchTx(typeIdx: Int, n: Long): Long = {
+    require(typeIdx >= importOrder.size || n < txRange,
+      s"an import type's batch number must be below $txRange, got $n")
+    typeIdx * txRange + n
+  }
 
   val batchIdAttr: String = "mbrainz.initial-import/batch-id"
 

@@ -60,9 +60,12 @@ private[pipeline] final case class LoadRow(tpe: String, e: String, a: String, v:
   * entities at transact time (importer.clj:343-348). Graft resolves
   * nothing at load time — e-keys are deterministic strings
   * (`store/Datoms`), refs are stored as those keys, and each tx is
-  * fixed by `typeIdx * 1e6 + n` — so the resolved state does not depend
-  * on the order in which types are written. The import-schema takes
-  * tx 0, unused by data batches (`n >= 1`), so it sorts first.
+  * fixed by the batch's type and number (`Mbrainz.batchTx`) — so the
+  * resolved state does not depend on the order in which types are
+  * written. A type outside `Mbrainz.importOrder` (an update) gets the
+  * range above every import type's, so its txes are the latest. The
+  * import-schema takes tx 0, unused by data batches (`n >= 1`), so it
+  * sorts first.
   *
   * `:db/txInstant` is one wall-clock instant per [[load]] call, shared
   * by every transaction of that call, the import-schema's included.
@@ -94,7 +97,7 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
     // Non-canonical lines fall back to the full parse.
     val lines = (files.map { case (tpe, path) =>
       spark.read.textFile(path).filter(length(trim(col("value"))) > 0)
-        .select(lit(tpe).as("_1"), lit(math.max(Mbrainz.importOrder.indexOf(tpe), 0)).as("_2"),
+        .select(lit(tpe).as("_1"), lit(Mbrainz.txRangeIndex(tpe)).as("_2"),
           col("value").as("_3"))
     } :+ spark.createDataFrame(Seq((Loader.importSchemaType, 0, Loader.importSchemaLine))))
       .reduce(_ union _).as(Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.STRING))

@@ -34,15 +34,16 @@ object Relational {
   private def money(c: Column): Column = (sum(dec(c)) * 100).cast("long")
   private def money4(c: Column): Column = (sum(c) * 10000).cast("long")
 
-  /** Synthetic datom log for the store-semantics queries: one datom
-    * per row of `src` (an orders frame) on entity `o_orderkey`.
-    * `op = None` leaves the op column out — the store reads a log
-    * without one as all asserts. */
-  private def orderLog(src: DataFrame, v: Column, tx: Long, a: String = "order/price",
-      vLong: Column = lit(null).cast("long"), op: Option[Boolean] = None): DataFrame =
-    src.select(Seq(col("o_orderkey").cast("string").as("e"), lit(a).as("a"),
-      v.cast("string").as("v"), vLong.as("v_long"), lit(false).as("is_ref"),
-      lit(tx).as("tx")) ++ op.map(lit(_).as("op")): _*)
+  /** Synthetic datom log for the store-semantics queries, in
+    * `Store.schema`'s columns: one datom per row of `src` (an orders
+    * frame, unless `e` names another entity column), `v` rendered as
+    * text. `op = None` leaves the op column out — the store reads a
+    * log without one as all asserts. */
+  private def orderLog(src: DataFrame, v: Column, tx: Column, a: String = "order/price",
+      vLong: Column = lit(null).cast("long"), op: Option[Boolean] = None,
+      e: Column = col("o_orderkey").cast("string"), isRef: Boolean = false): DataFrame =
+    src.select(Seq(e.as("e"), lit(a).as("a"), v.cast("string").as("v"), vLong.as("v_long"),
+      lit(isRef).as("is_ref"), tx.as("tx")) ++ op.map(lit(_).as("op")): _*)
 
   /** Scratch dirs for the physical-layout queries (q83/q84/q85/q88):
     * one STABLE directory per (tag, source dir) instead of a fresh
@@ -400,8 +401,8 @@ object Relational {
   def q30_time_travel(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val cents = (dec(col("o_totalprice")) * 100).cast("long")
-    val log = orderLog(o, cents, 1L).unionByName(
-      orderLog(o, cents * 2, 2L).filter(pmod(col("e").cast("long"), lit(10)) === 0))
+    val log = orderLog(o, cents, lit(1L)).unionByName(
+      orderLog(o, cents * 2, lit(2L)).filter(pmod(col("e").cast("long"), lit(10)) === 0))
     graft.store.Store.resolveAtHorizons(log, Seq(1L, 2L), Seq.empty)
       .groupBy(col("asof_tx"))
       .agg(count(lit(1)).as("n_entities"),
@@ -424,9 +425,9 @@ object Relational {
     val o = orders(s, d)
     val k = col("o_orderkey")
     val c = cents(col("o_totalprice"))
-    val log = orderLog(o, c, 1L)
-      .unionByName(orderLog(o.filter(pmod(k, lit(10)) === 0), c * 2, 2L))
-      .unionByName(orderLog(o.filter(pmod(k, lit(100)) === 0), c + 1, 3L))
+    val log = orderLog(o, c, lit(1L))
+      .unionByName(orderLog(o.filter(pmod(k, lit(10)) === 0), c * 2, lit(2L)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(100)) === 0), c + 1, lit(3L)))
     graft.store.Store.sinceAtHorizons(log, Seq(0L, 1L, 2L), Seq.empty)
       .groupBy(col("since_tx"))
       .agg(count(lit(1)).as("n_entities"),
@@ -468,9 +469,10 @@ object Relational {
     val o = orders(s, d)
     val cents = (dec(col("o_totalprice")) * 100).cast("long")
     val key = col("o_orderkey")
-    val log = orderLog(o, cents, 1L, op = Some(true))
-      .unionByName(orderLog(o.filter(pmod(key, lit(10)) === 0), cents, 2L, op = Some(false)))
-      .unionByName(orderLog(o.filter(pmod(key, lit(20)) === 0), cents * 2, 3L, op = Some(true)))
+    val log = orderLog(o, cents, lit(1L), op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(key, lit(10)) === 0), cents, lit(2L), op = Some(false)))
+      .unionByName(orderLog(o.filter(pmod(key, lit(20)) === 0), cents * 2, lit(3L),
+        op = Some(true)))
     graft.store.Store.resolveAtHorizons(log, Seq(1L, 2L, 3L), Seq.empty)
       .groupBy(col("asof_tx"))
       .agg(count(lit(1)).as("n_entities"),
@@ -824,10 +826,7 @@ object Relational {
     * `Store.indexRange`; the oracle is a plain range predicate. */
   def q47_index_range(s: SparkSession, d: String): DataFrame = {
     val c = cents(col("o_totalprice"))
-    val eav = orders(s, d).select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      c.cast("string").as("v"), c.as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
+    val eav = orderLog(orders(s, d), c, lit(1L), vLong = c, op = Some(true))
     graft.store.Store.indexRange(eav, "order/price", 5000000L, 6000000L)
       .select(col("e").cast("long").as("e"), col("v_long").as("price_cents"))
   }
@@ -841,10 +840,7 @@ object Relational {
   def q48_cas(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    val state = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      c.cast("string").as("v"), c.as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
+    val state = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
     val k = col("o_orderkey")
     val ops = o.filter(pmod(k, lit(4)) < 2).select(
       col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
@@ -902,9 +898,6 @@ object Relational {
       col("l_partkey").cast("string"), lit("-"), col("l_suppkey").cast("string"))
     val price = cents(col("o_totalprice"))
     val qty = cents(col("l_quantity"))
-    def datoms(e: Column, a: String, v: Column, vLong: Column, isRef: Boolean, src: DataFrame) =
-      src.select(e.as("e"), lit(a).as("a"), v.cast("string").as("v"),
-        vLong.as("v_long"), lit(isRef).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
     val loe = concat(lit("o"), col("l_orderkey").cast("string"))
     // materialize the synthesized log ONCE: retractEntityTx reads it
     // for the component edges and the dead-datom scan, and the final
@@ -916,12 +909,12 @@ object Relational {
     // its cents rendered as text, so store v only for ref rows and
     // reconstruct the rest — the materialized block and every scan of
     // it carry ~20 fewer bytes per datom.
-    val narrow = datoms(oe, "order/price", lit(null), price, isRef = false, o)
-      .unionByName(datoms(loe, "order/line", le, lit(null).cast("long"), isRef = true, li))
-      .unionByName(datoms(le, "line/qty", lit(null), qty, isRef = false, li))
-      .unionByName(datoms(concat(lit("c"), col("o_custkey").cast("string")),
-        "cust/order", oe, lit(null).cast("long"), isRef = true, o))
-      .drop("tx", "op")
+    val narrow = orderLog(o, lit(null), lit(1L), vLong = price, e = oe)
+      .unionByName(orderLog(li, le, lit(1L), a = "order/line", e = loe, isRef = true))
+      .unionByName(orderLog(li, lit(null), lit(1L), a = "line/qty", vLong = qty, e = le))
+      .unionByName(orderLog(o, oe, lit(1L), a = "cust/order",
+        e = concat(lit("c"), col("o_custkey").cast("string")), isRef = true))
+      .drop("tx")
       .localCheckpoint()
     val log = narrow
       .withColumn("v", coalesce(col("v"), col("v_long").cast("string")))
@@ -993,14 +986,9 @@ object Relational {
   def q53_speculative_with(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    val state = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      c.cast("string").as("v"), c.as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
-    val txData = o.filter(pmod(col("o_orderkey"), lit(10)) === 0).select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      (c * 2).cast("string").as("v"), (c * 2).as("v_long"),
-      lit(false).as("is_ref"), lit(2L).as("tx"), lit(true).as("op"))
+    val state = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+    val txData = orderLog(o.filter(pmod(col("o_orderkey"), lit(10)) === 0), c * 2, lit(2L),
+      vLong = c * 2, op = Some(true))
     val base = graft.store.Store.resolve(state, Seq.empty)
       .agg(count(lit(1)).as("n_base"), sum(col("v_long")).cast("long").as("base_cents"))
     val speculative = graft.store.Store.withDb(state, txData, Seq.empty)
@@ -1074,13 +1062,10 @@ object Relational {
     val oe = concat(lit("o"), col("o_orderkey").cast("string"))
     val le = concat(lit("l"), col("l_orderkey").cast("string"), lit("-"),
       col("l_linenumber").cast("string"))
-    def refs(e: Column, a: String, v: Column, src: DataFrame) =
-      src.select(e.as("e"), lit(a).as("a"), v.as("v"),
-        lit(null).cast("long").as("v_long"), lit(true).as("is_ref"),
-        lit(1L).as("tx"), lit(true).as("op"))
-    val log = refs(concat(lit("c"), col("o_custkey").cast("string")), "cust/order", oe, o)
-      .unionByName(refs(concat(lit("o"), col("l_orderkey").cast("string")),
-        "order/line", le, li))
+    val log = orderLog(o, oe, lit(1L), a = "cust/order", op = Some(true),
+        e = concat(lit("c"), col("o_custkey").cast("string")), isRef = true)
+      .unionByName(orderLog(li, le, lit(1L), a = "order/line", op = Some(true),
+        e = concat(lit("o"), col("l_orderkey").cast("string")), isRef = true))
     val targets = o.filter(pmod(col("o_orderkey"), lit(100)) === 0)
       .select(concat(lit("o"), col("o_orderkey").cast("string")).as("e"))
     graft.store.Store.vaet(log, targets)
@@ -1261,21 +1246,18 @@ object Relational {
     val o = orders(s, d)
     val oe = concat(lit("o"), col("o_orderkey").cast("string"))
     val day = unix_date(col("o_orderdate").cast("date")).cast("long")
-    def dat(a: String, v: Column, tx: Long, op: Boolean, src: DataFrame) =
-      src.select(oe.as("e"), lit(a).as("a"), v.cast("string").as("v"),
-        lit(null).cast("long").as("v_long"), lit(false).as("is_ref"),
-        lit(tx).as("tx"), lit(op).as("op"))
+    val ce = concat(lit("c"), col("o_custkey").cast("string"))
     val T = "order/cust+day"
     val srcs = Seq("order/cust", "order/day")
     val loaded = o.filter(pmod(col("o_orderkey"), lit(3)) === 0)
-    val b1 = dat("order/cust", concat(lit("c"), col("o_custkey").cast("string")), 1L, op = true, loaded)
-      .unionByName(dat("order/day", day, 1L, op = true, loaded))
+    val b1 = orderLog(loaded, ce, lit(1L), a = "order/cust", op = Some(true), e = oe)
+      .unionByName(orderLog(loaded, day, lit(1L), a = "order/day", op = Some(true), e = oe))
     val upd = o.filter(pmod(col("o_orderkey"), lit(10)) === 0)
-    val b2 = dat("order/day", day + 30, 2L, op = true, upd)
+    val b2 = orderLog(upd, day + 30, lit(2L), a = "order/day", op = Some(true), e = oe)
     val ret = o.filter(pmod(col("o_orderkey"), lit(100)) === 0)
-    val b3 = dat("order/cust", concat(lit("c"), col("o_custkey").cast("string")), 3L, op = false, ret)
-      .unionByName(dat("order/day", day, 3L, op = false, ret))
-      .unionByName(dat("order/day", day + 30, 3L, op = false, ret))
+    val b3 = orderLog(ret, ce, lit(3L), a = "order/cust", op = Some(false), e = oe)
+      .unionByName(orderLog(ret, day, lit(3L), a = "order/day", op = Some(false), e = oe))
+      .unionByName(orderLog(ret, day + 30, lit(3L), a = "order/day", op = Some(false), e = oe))
     // b1 is a projection of the orders scan — recompute beats
     // materializing 300k rows; log2/log3 DO checkpoint (each embeds
     // the previous maintenance output, which must not re-execute in
@@ -1313,12 +1295,12 @@ object Relational {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
     val hb = "order/heartbeat"
-    val log = orderLog(o, c, 1L, vLong = c, op = Some(true))
-      .unionByName(orderLog(o, lit("h1"), 1L, a = hb, op = Some(true)))
+    val log = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o, lit("h1"), lit(1L), a = hb, op = Some(true)))
       .unionByName(orderLog(o.filter(pmod(col("o_orderkey"), lit(2)) === 0),
-        lit("h2"), 2L, a = hb, op = Some(true)))
+        lit("h2"), lit(2L), a = hb, op = Some(true)))
       .unionByName(orderLog(o.filter(pmod(col("o_orderkey"), lit(10)) === 0),
-        lit("h2"), 3L, a = hb, op = Some(false)))
+        lit("h2"), lit(3L), a = hb, op = Some(false)))
     graft.store.Store.dropNoHistory(log, Seq("order/heartbeat"), Seq.empty)
       .groupBy(col("a"))
       .agg(count(lit(1)).as("n_rows"),
@@ -1351,19 +1333,19 @@ object Relational {
     // slower). Materialization pays only for expensive-per-row or
     // data-collapsing subtrees (see d60/d28/mm10).
     val tag = "order/tag"
-    val hist = orderLog(o, c, 1L, vLong = c, op = Some(true))
-      .unionByName(orderLog(o.filter(pmod(k, lit(4)) === 0), c * 2, 2L,
+    val hist = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(4)) === 0), c * 2, lit(2L),
         vLong = c * 2, op = Some(true)))
-      .unionByName(orderLog(o, lit("t1"), 1L, a = tag, op = Some(true)))
-      .unionByName(orderLog(o.filter(pmod(k, lit(3)) === 0), lit("t2"), 2L,
+      .unionByName(orderLog(o, lit("t1"), lit(1L), a = tag, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(3)) === 0), lit("t2"), lit(2L),
         a = tag, op = Some(true)))
     val delta = orderLog(o.filter(pmod(k, lit(5)) === 0 && pmod(k, lit(20)) =!= 0),
-        c * 3, 3L, vLong = c * 3, op = Some(true))
-      .unionByName(orderLog(o.filter(pmod(k, lit(20)) === 0), c * 2, 3L,
+        c * 3, lit(3L), vLong = c * 3, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(20)) === 0), c * 2, lit(3L),
         vLong = c * 2, op = Some(false))) // card-one retraction → hybrid
-      .unionByName(orderLog(o.filter(pmod(k, lit(6)) === 0), lit("t2"), 3L,
+      .unionByName(orderLog(o.filter(pmod(k, lit(6)) === 0), lit("t2"), lit(3L),
         a = tag, op = Some(false)))
-      .unionByName(orderLog(o.filter(pmod(k, lit(7)) === 0), lit("t3"), 3L,
+      .unionByName(orderLog(o.filter(pmod(k, lit(7)) === 0), lit("t3"), lit(3L),
         a = tag, op = Some(true)))
     val many = Seq(tag)
     val snapshot = Store.resolve(hist, many).localCheckpoint()
@@ -1479,13 +1461,9 @@ object Relational {
   def q63_index_pull(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    val eav = o.select(col("o_orderkey").cast("string").as("e"),
-        lit("order/price").as("a"), c.cast("string").as("v"), c.as("v_long"),
-        lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
-      .unionByName(o.select(col("o_orderkey").cast("string").as("e"),
-        lit("order/priority").as("a"), col("o_orderpriority").as("v"),
-        lit(null).cast("long").as("v_long"), lit(false).as("is_ref"),
-        lit(1L).as("tx"), lit(true).as("op")))
+    val eav = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o, col("o_orderpriority"), lit(1L), a = "order/priority",
+        op = Some(true)))
     graft.store.Store.indexPull(eav, new graft.model.SchemaRegistry(Map.empty),
         "order/price", vFrom = 5000000L, limit = 100,
         graft.query.Pull.parsePattern("[:order/price :order/priority]"))
@@ -1506,17 +1484,16 @@ object Relational {
   def q61_asof_instant(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    def txInstant(ms: Long, tx: Long) = s.range(1).select(
-      lit(s"tx|$tx").as("e"), lit(graft.store.Store.txInstantAttr).as("a"),
-      lit(java.time.Instant.ofEpochMilli(ms).toString).as("v"), lit(ms).as("v_long"),
-      lit(false).as("is_ref"), lit(tx).as("tx"), lit(true).as("op"))
     val t1 = java.time.Instant.parse("2020-01-15T00:00:00Z").toEpochMilli
     val t2 = java.time.Instant.parse("2020-03-10T00:00:00Z").toEpochMilli
-    val log = orderLog(o, c, 1L, vLong = c, op = Some(true))
-      .unionByName(orderLog(o, c * 2, 2L, vLong = c * 2, op = Some(true))
+    val log = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o, c * 2, lit(2L), vLong = c * 2, op = Some(true))
         .filter(pmod(col("e").cast("long"), lit(10)) === 0))
-      .unionByName(txInstant(t1, 1L))
-      .unionByName(txInstant(t2, 2L))
+      .unionByName(Seq(t1 -> 1L, t2 -> 2L).map { case (ms, tx) =>
+        orderLog(s.range(1).toDF(), lit(java.time.Instant.ofEpochMilli(ms).toString), lit(tx),
+          a = graft.store.Store.txInstantAttr, vLong = lit(ms), op = Some(true),
+          e = lit(s"tx|$tx"))
+      }.reduce(_ unionByName _))
     val horizons = Seq(
       java.time.Instant.parse("2020-02-01T00:00:00Z").toEpochMilli,
       t2 // exact boundary: at-or-before is INCLUSIVE
@@ -1545,9 +1522,9 @@ object Relational {
   def q58_excision(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    val log = orderLog(o, c, 1L, vLong = c, op = Some(true))
+    val log = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
       .unionByName(orderLog(o.filter(pmod(col("o_orderkey"), lit(10)) === 0),
-        c * 2, 2L, vLong = c * 2, op = Some(true)))
+        c * 2, lit(2L), vLong = c * 2, op = Some(true)))
     val targets = o.filter(pmod(col("o_orderkey"), lit(20)) === 0)
       .select(col("o_orderkey").cast("string").as("e"))
     val excised = graft.store.Store.excise(log, targets, tx = 3L)
@@ -1598,14 +1575,8 @@ object Relational {
   def q67_attr_preds(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    val price = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      c.cast("string").as("v"), c.as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
-    val prio = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("order/priority").as("a"),
-      col("o_orderpriority").as("v"), lit(null).cast("long").as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
+    val price = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+    val prio = orderLog(o, col("o_orderpriority"), lit(1L), a = "order/priority", op = Some(true))
     val preds = Map(
       "order/price" -> Seq(
         "price-positive" -> (col("v_long") > 0),
@@ -1633,18 +1604,13 @@ object Relational {
     import graft.store.{Store, TxFns}
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    val state = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("acct/balance").as("a"),
-      c.cast("string").as("v"), c.as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
+    val state = orderLog(o, c, lit(1L), a = "acct/balance", vLong = c, op = Some(true))
     val incBalance: TxFns.TxFn = (ctx, args) => {
       val cur = ctx.state.filter(col("a") === "acct/balance")
         .select(col("e"), col("v_long").as("__cur"))
-      args.join(cur, Seq("e"), "left")
-        .select(col("e"), lit("acct/balance").as("a"),
-          (coalesce(col("__cur"), lit(0L)) + col("amount")).cast("string").as("v"),
-          (coalesce(col("__cur"), lit(0L)) + col("amount")).as("v_long"),
-          lit(false).as("is_ref"), lit(ctx.tx).as("tx"), lit(true).as("op"))
+      val balance = coalesce(col("__cur"), lit(0L)) + col("amount")
+      orderLog(args.join(cur, Seq("e"), "left"), balance, lit(ctx.tx), a = "acct/balance",
+        vLong = balance, op = Some(true), e = col("e"))
     }
     val fns = TxFns.builtins.install("acct/inc-balance", incBalance)
     val args = o.filter(pmod(col("o_orderkey"), lit(7)) === 0)
@@ -1668,15 +1634,9 @@ object Relational {
   def q69_seek_datoms(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
-    val price = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      c.cast("string").as("v"), c.as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
-    val cust = o.select(
-      col("o_orderkey").cast("string").as("e"), lit("order/cust").as("a"),
-      col("o_custkey").cast("string").as("v"),
-      col("o_custkey").as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
+    val price = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+    val cust = orderLog(o, col("o_custkey"), lit(1L), a = "order/cust",
+      vLong = col("o_custkey"), op = Some(true))
     graft.store.Store.seekDatoms(cust.unionByName(price), "avet",
         "order/cust", 1490L, 200)
       .select(col("a"), col("v_long"), col("e"))
@@ -1758,17 +1718,15 @@ object Relational {
   def q78_log_tx_range(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val k = col("o_orderkey")
-    def ev(a: String, v: Column, vl: Column, tx: Long, op: Boolean, pred: Column) =
-      o.filter(pred).select(k.cast("string").as("e"), lit(a).as("a"),
-        v.cast("string").as("v"), vl.cast("long").as("v_long"),
-        lit(false).as("is_ref"), lit(tx).as("tx"), lit(op).as("op"))
     val c = cents(col("o_totalprice"))
-    val log = ev("order/price", c, c, 1L, op = true, lit(true))
-      .unionByName(ev("order/price", c * 2, c * 2, 2L, op = true, pmod(k, lit(10)) === 0))
-      .unionByName(ev("order/status", col("o_orderstatus"), lit(null), 3L, op = true,
-        pmod(k, lit(20)) === 0))
-      .unionByName(ev("order/status", col("o_orderstatus"), lit(null), 4L, op = false,
-        pmod(k, lit(50)) === 0))
+    val status = col("o_orderstatus")
+    val log = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(10)) === 0), c * 2, lit(2L),
+        vLong = c * 2, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(20)) === 0), status, lit(3L),
+        a = "order/status", op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(50)) === 0), status, lit(4L),
+        a = "order/status", op = Some(false)))
     graft.store.Store.txRange(log, 2L, 4L)
       .groupBy(col("tx").as("t"))
       .agg(count(lit(1)).as("n_datoms"),
@@ -1839,19 +1797,16 @@ object Relational {
     val o = orders(s, d)
     val k = col("o_orderkey")
     val c = cents(col("o_totalprice"))
-    def ev(v: Column, tx: Long, pred: Column) = o.filter(pred)
-      .select(k.cast("string").as("e"), lit("order/price").as("a"),
-        v.cast("string").as("v"), v.cast("long").as("v_long"),
-        lit(false).as("is_ref"), lit(tx).as("tx"), lit(true).as("op"))
-    val log = ev(c, 1L, lit(true))
-      .unionByName(ev(c * 2, 2L, pmod(k, lit(10)) === 0))
-      .unionByName(ev(c * 3, 3L, pmod(k, lit(100)) === 0))
+    val log = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(10)) === 0), c * 2, lit(2L),
+        vLong = c * 2, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(100)) === 0), c * 3, lit(3L),
+        vLong = c * 3, op = Some(true)))
     // tx entities: one :db/txInstant per transaction, as the loader stamps
-    val txInstants = s.range(1, 4).select(
-      concat(lit("tx|"), col("id")).as("e"), lit(graft.store.Store.txInstantAttr).as("a"),
-      lit(null).cast("string").as("v"),
-      (lit(1700000000000L) + col("id") * 86400000L).as("v_long"),
-      lit(false).as("is_ref"), col("id").as("tx"), lit(true).as("op"))
+    val txInstants = orderLog(s.range(1, 4).toDF(), lit(null), col("id"),
+      a = graft.store.Store.txInstantAttr,
+      vLong = lit(1700000000000L) + col("id") * 86400000L, op = Some(true),
+      e = concat(lit("tx|"), col("id")))
     val full = log.unionByName(txInstants)
     val hist = full.filter(col("a") === "order/price") // attr-partition prune
     val w = Window.partitionBy(col("e")).orderBy(col("tx"))
@@ -1890,39 +1845,36 @@ object Relational {
   def q81_restore_audit(s: SparkSession, d: String): DataFrame = {
     import graft.store.Store
     val o = orders(s, d)
-    val oe = col("o_orderkey").cast("string")
     val c = cents(col("o_totalprice"))
     val k = col("o_orderkey")
-    def dat(a: String, v: Column, vl: Column, tx: Long, op: Boolean, pred: Column) =
-      o.filter(pred).select(oe.as("e"), lit(a).as("a"), v.cast("string").as("v"),
-        vl.as("v_long"), lit(false).as("is_ref"), lit(tx).as("tx"), lit(op).as("op"))
-    val t = lit(true)
     // NOTE (round 12): hist/delta materialization tried and REVERTED
     // (see q75's note — recompute of scan-rooted unions beat the
     // checkpoint at sf1; ~8 M sf0.1 input records re-read is cheaper
     // than it looks next to a wide block write)
-    val hist = dat("order/price", c, c, 1L, op = true, t)
-      .unionByName(dat("order/price", c * 2, c * 2, 2L, op = true, pmod(k, lit(4)) === 0))
-      .unionByName(dat("order/tag", lit("t1"), lit(null).cast("long"), 1L, op = true, t))
-      .unionByName(dat("order/tag", lit("t2"), lit(null).cast("long"), 2L, op = true,
-        pmod(k, lit(3)) === 0))
-    val delta = dat("order/price", c * 3, c * 3, 3L, op = true,
-        pmod(k, lit(5)) === 0 && pmod(k, lit(20)) =!= 0)
-      .unionByName(dat("order/price", c * 2, c * 2, 3L, op = false,
-        pmod(k, lit(20)) === 0))                     // card-one retract → resurface
-      .unionByName(dat("order/tag", lit("t1"), lit(null).cast("long"), 3L, op = false,
-        pmod(k, lit(9)) === 0))
-      .unionByName(dat("order/tag", lit("t2"), lit(null).cast("long"), 3L, op = false,
-        pmod(k, lit(6)) === 0))
-      .unionByName(dat("order/price", lit(999L), lit(999L), 4L, op = false,
-        pmod(k, lit(11)) === 0))                     // STALE retract — must no-op
-      .unionByName(dat("order/price", c * 4, c * 4, 4L, op = true,
-        pmod(k, lit(40)) === 0))                     // re-assert after retract
-      .unionByName(dat("order/tag", lit("t1"), lit(null).cast("long"), 4L, op = true,
-        pmod(k, lit(18)) === 0))                     // t1 back for some retractees
-      .unionByName(dat("order/tag", lit("t2"), lit(null).cast("long"), 4L, op = true,
-        pmod(k, lit(12)) === 0))                     // mix of resurrect + set no-op
-    val many = Seq("order/tag")
+    val tag = "order/tag"
+    val hist = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(4)) === 0), c * 2, lit(2L),
+        vLong = c * 2, op = Some(true)))
+      .unionByName(orderLog(o, lit("t1"), lit(1L), a = tag, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(3)) === 0), lit("t2"), lit(2L),
+        a = tag, op = Some(true)))
+    val delta = orderLog(o.filter(pmod(k, lit(5)) === 0 && pmod(k, lit(20)) =!= 0),
+        c * 3, lit(3L), vLong = c * 3, op = Some(true))
+      .unionByName(orderLog(o.filter(pmod(k, lit(20)) === 0), c * 2, lit(3L),
+        vLong = c * 2, op = Some(false)))           // card-one retract → resurface
+      .unionByName(orderLog(o.filter(pmod(k, lit(9)) === 0), lit("t1"), lit(3L),
+        a = tag, op = Some(false)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(6)) === 0), lit("t2"), lit(3L),
+        a = tag, op = Some(false)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(11)) === 0), lit(999L), lit(4L),
+        vLong = lit(999L), op = Some(false)))      // STALE retract — must no-op
+      .unionByName(orderLog(o.filter(pmod(k, lit(40)) === 0), c * 4, lit(4L),
+        vLong = c * 4, op = Some(true)))           // re-assert after retract
+      .unionByName(orderLog(o.filter(pmod(k, lit(18)) === 0), lit("t1"), lit(4L),
+        a = tag, op = Some(true)))                 // t1 back for some retractees
+      .unionByName(orderLog(o.filter(pmod(k, lit(12)) === 0), lit("t2"), lit(4L),
+        a = tag, op = Some(true)))                 // mix of resurrect + set no-op
+    val many = Seq(tag)
     val full = hist.unionByName(delta)
     val restored = Store.resolve(full, many)                       // cold path
     val snapshot = Store.resolve(hist, many).localCheckpoint()
@@ -1972,17 +1924,17 @@ object Relational {
     val o = orders(s, d)
     val oe = col("o_orderkey").cast("string")
     val k = col("o_orderkey")
-    def dat(a: String, v: Column, tx: Long, op: Boolean, pred: Column) =
-      o.filter(pred).select(oe.as("e"), lit(a).as("a"), v.cast("string").as("v"),
-        lit(null).cast("long").as("v_long"), lit(false).as("is_ref"),
-        lit(tx).as("tx"), lit(op).as("op"))
-    val t = lit(true)
-    val log = dat("order/status", lit("S1"), 1L, op = true, t)
-      .unionByName(dat("order/code", oe, 1L, op = true, t))
-      .unionByName(dat("order/status", lit("S2"), 2L, op = true, pmod(k, lit(2)) === 0))
-      .unionByName(dat("order/status", lit("S3"), 3L, op = true, pmod(k, lit(3)) === 0))
-      .unionByName(dat("order/status", lit("S2"), 4L, op = false, pmod(k, lit(4)) === 0))
-      .unionByName(dat("order/status", lit("S1"), 4L, op = false, pmod(k, lit(5)) === 0))
+    val status = "order/status"
+    val log = orderLog(o, lit("S1"), lit(1L), a = status, op = Some(true))
+      .unionByName(orderLog(o, oe, lit(1L), a = "order/code", op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(2)) === 0), lit("S2"), lit(2L),
+        a = status, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(3)) === 0), lit("S3"), lit(3L),
+        a = status, op = Some(true)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(4)) === 0), lit("S2"), lit(4L),
+        a = status, op = Some(false)))
+      .unionByName(orderLog(o.filter(pmod(k, lit(5)) === 0), lit("S1"), lit(4L),
+        a = status, op = Some(false)))
     val alterTx = 2L
     val aliases = Map("order/status" -> "order/state")
     val flipped = SchemaAlter.resolveCardFlip(log, "order/status", alterTx, Seq.empty)
@@ -2038,11 +1990,10 @@ object Relational {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))
     val k = col("o_orderkey")
-    def dat(a: String, vl: Column) = o.select(
-      col("o_orderkey").cast("string").as("e"), lit(a).as("a"),
-      vl.cast("string").as("v"), vl.cast("long").as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
-    val state = dat("order/price", c).unionByName(dat("order/bucket", pmod(k, lit(1000))))
+    val bucket = pmod(k, lit(1000))
+    val state = orderLog(o, c, lit(1L), vLong = c, op = Some(true))
+      .unionByName(orderLog(o, bucket, lit(1L), a = "order/bucket", vLong = bucket.cast("long"),
+        op = Some(true)))
     val path = scratchDir("avet", d)
     IndexLayout.materializeAvet(state, path, buckets = 16)
     IndexLayout.avetRange(s, path, "order/price", 5000000L, 6000000L)
@@ -2318,10 +2269,7 @@ object Relational {
   def q88_index_compaction(s: SparkSession, d: String): DataFrame = {
     import graft.store.IndexLayout
     val c = cents(col("o_totalprice"))
-    val all = orders(s, d).select(
-      col("o_orderkey").cast("string").as("e"), lit("order/price").as("a"),
-      c.cast("string").as("v"), c.cast("long").as("v_long"),
-      lit(false).as("is_ref"), lit(1L).as("tx"), lit(true).as("op"))
+    val all = orderLog(orders(s, d), c, lit(1L), vLong = c, op = Some(true))
     val base = all.filter(col("e").cast("long") % 5 =!= 0)
     val tail = all.filter(col("e").cast("long") % 5 === 0)
     val path = scratchDir("avetc", d)

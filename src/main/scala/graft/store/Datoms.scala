@@ -2,7 +2,7 @@ package graft.store
 
 import graft.edn.Edn
 import graft.edn.Edn._
-import graft.model.SchemaRegistry
+import graft.model.{Mbrainz, SchemaRegistry}
 
 /** tx-data entity maps → EAV datoms.
   *
@@ -113,16 +113,18 @@ object Datoms {
     if (datoms.isEmpty) Vector(Datom(e, "db/id", e, None, isRef = false, tx)) else datoms
   }
 
-  /** Datoms for a whole batch line `{:batch-ident {...}, :data [...]}`. */
+  /** Datoms for a whole batch line `{:batch-ident {...}, :data [...]}`,
+    * all at tx `Mbrainz.batchTx(typeIdx, n)` for batch id `<type>-n`
+    * (`typeIdx` is `Mbrainz.txRangeIndex`). */
   def batchDatoms(batchLine: String, registry: SchemaRegistry, typeIdx: Int): (String, Vector[Datom]) = {
     val b = Edn.parse(batchLine).asInstanceOf[EMap]
     val ident = b.getKw("batch-ident").get.asInstanceOf[EMap]
-    val batchId = ident.getKw(graft.model.Mbrainz.batchIdAttr) match {
+    val batchId = ident.getKw(Mbrainz.batchIdAttr) match {
       case Some(EStr(s)) => s
       case other => throw new IllegalArgumentException(s"batch without id: $other")
     }
     val n = batchId.substring(batchId.lastIndexOf('-') + 1).toLong
-    val tx = typeIdx.toLong * 1000000L + n
+    val tx = Mbrainz.batchTx(typeIdx, n)
     var anonN = 0
     val anon = () => { anonN += 1; s"anon|$batchId|$anonN" }
     val data = b.getKw("data").get.asInstanceOf[EVec].items

@@ -43,10 +43,19 @@ final class Store(spark: SparkSession, val dir: String) {
     * job per read. Files written before retraction support have no
     * `op` column; their rows read as asserts. */
   def eav: DataFrame =
-    if (exists)
-      spark.read.schema(Store.schema).parquet(eavPath)
-        .withColumn("op", coalesce(col("op"), lit(true)))
+    if (exists) withOpDefault(spark.read.schema(Store.schema).parquet(eavPath))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Store.schema)
+
+  /** The log as a stream of the files appended to it, with [[eav]]'s
+    * schema and `op` default; a trigger reads at most
+    * `maxFilesPerTrigger` new files (all of them when `None`). */
+  def eavStream(maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    withOpDefault(spark.readStream.schema(Store.schema)
+      .options(maxFilesPerTrigger.map(n => "maxFilesPerTrigger" -> n.toString).toMap)
+      .parquet(eavPath))
+
+  private def withOpDefault(log: DataFrame): DataFrame =
+    log.withColumn("op", coalesce(col("op"), lit(true)))
 
   /** Appends datoms to the log. Precondition: every tx is non-negative
     * (checked per row; a negative one fails the write). */

@@ -257,9 +257,7 @@ object Streams {
         .partitionBy("tx").parquet(reportDir)
     def pointer(t: Long, cnt: Long): Unit =
       onReport(TxReportPointer(t, cnt, s"$reportDir/tx=$t"))
-    val q = spark.readStream.schema(graft.store.Store.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(s"${store.dir}/eav")
+    val q = store.eavStream(Some(maxFilesPerTrigger))
       .filter(col("tx") > basis)
       .writeStream
       .outputMode(OutputMode.Append)
@@ -324,10 +322,9 @@ object Streams {
     * live view; a cluster deployment points the same aggregation at a
     * real sink. State is one row per attribute — bounded by schema
     * size, not log length. */
-  def liveDbStats(spark: SparkSession, store: graft.store.Store, viewName: String)(
+  def liveDbStats(store: graft.store.Store, viewName: String)(
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(graft.store.Store.schema)
-      .parquet(s"${store.dir}/eav")
+    store.eavStream()
       .groupBy(col("a"))
       .agg(count(lit(1)).as("n_datoms"),
         sum(when(col("op"), 1L).otherwise(-1L)).as("net_datoms"))

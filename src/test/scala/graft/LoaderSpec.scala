@@ -242,6 +242,66 @@ class LoaderSpec extends AnyFunSuite {
     assert(loadAllTxes.filter(_._1 == "tx|schema-1").map(_._2) == Seq(1L))
   }
 
+  /** A fresh store holding the fixture's schema, enum and artist
+    * batches, and a loader on it. */
+  private def importedArtists(): (Store, Loader) = {
+    val store = freshStore()
+    val loader = new Loader(spark, registry, store)
+    loader.loadAll(batchesDir, Seq("schema", "enums", "super-enums", "artists"))
+    (store, loader)
+  }
+
+  /** A batch file of type `update`, batch `update-n`, renaming the
+    * fixture's first artist to `name`; returns the artist's entity. */
+  private def renameFirstArtist(loader: Loader, n: Int, name: String): String = {
+    val gid = fx.field(fx.artists.head, "gid").get
+    val f = java.nio.file.Files.createTempFile("update", ".edn")
+    java.nio.file.Files.write(f, graft.ops.EdnRender.batchLine(Mbrainz.batchIdAttr, s"update-$n",
+      Seq(s"""{:artist/gid #uuid "$gid", :artist/name "$name"}""")).getBytes)
+    assert(loader.loadBatchFile("update", f.toString).txes == 1)
+    s"artist/gid|$gid"
+  }
+
+  /** The tx of batch `batchId`'s tx entity, once per `:db/txInstant`. */
+  private def txOf(store: Store, batchId: String): Seq[Long] = {
+    import org.apache.spark.sql.functions.col
+    store.eav.filter(col("e") === s"tx|$batchId" && col("a") === Store.txInstantAttr)
+      .select("tx").collect().map(_.getLong(0)).toSeq
+  }
+
+  test("a batch outside the import order gets its own tx, above every imported one") {
+    val (store, loader) = importedArtists()
+    renameFirstArtist(loader, 1, "Renamed")
+    val update = txOf(store, "update-1")
+    assert(update.size == 1)
+    assert(update != txOf(store, "schema-1"), "update-1 shares schema-1's tx")
+    import org.apache.spark.sql.functions.{col, max}
+    val imported = store.eav.filter(col("e") =!= "tx|update-1" && col("a") === Store.txInstantAttr)
+      .agg(max(col("tx"))).head.getLong(0)
+    assert(update.head > imported)
+  }
+
+  test("a rename loaded after the import as update-5 is the current value") {
+    import org.apache.spark.sql.functions.col
+    val (store, loader) = importedArtists()
+    val e = renameFirstArtist(loader, 5, "Renamed Later")
+    val names = store.current(registry).filter(col("e") === e && col("a") === "artist/name")
+      .select("v").collect().map(_.getString(0)).toSeq
+    assert(names == Seq("Renamed Later"))
+  }
+
+  test("an import type's batch number must stay below its tx range") {
+    val store = freshStore()
+    val f = java.nio.file.Files.createTempFile("overflow", ".edn")
+    java.nio.file.Files.write(f, inlineLines("artists").head
+      .replace("\"artists-1\"", s"\"artists-${Mbrainz.txRange}\"").getBytes)
+    val e = intercept[Exception](
+      new Loader(spark, inlineRegistry, store).loadBatchFile("artists", f.toString))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("must be below")), e.toString)
+    assert(!store.exists || store.eav.count() == 0)
+  }
+
   test("loadAll over a batch directory with no batch files still transacts the import schema") {
     import org.apache.spark.sql.functions.col
     val store = freshStore()

@@ -239,7 +239,7 @@ class StreamingSpec extends AnyFunSuite {
         .withColumn("v_long", lit(null).cast("long"))
         .withColumn("is_ref", lit(false))
     store.append(datoms(("e1", "x/a", "v1", 1L, true), ("e2", "x/b", "v2", 1L, true)))
-    val q = Streams.liveDbStats(spark, store, "live_stats")(ckpt)
+    val q = Streams.liveDbStats(store, "live_stats")(ckpt)
     try {
       q.processAllAvailable()
       def stats() = spark.table("live_stats").collect()
@@ -252,6 +252,32 @@ class StreamingSpec extends AnyFunSuite {
       assert(stats() == Map("x/a" -> ((2L, 2L)), "x/b" -> ((2L, 0L))),
         s"live view must reflect the new tx: ${stats()}")
     } finally q.stop()
+  }
+
+  test("tx reports and live db-stats read a log written without an op column as asserts") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("oplessstream").toString
+    Seq(("e1", "x/a", "v1", 1L), ("e2", "x/b", "v2", 1L), ("e3", "x/a", "v3", 2L))
+      .toDF("e", "a", "v", "tx")
+      .withColumn("v_long", lit(null).cast("long")).withColumn("is_ref", lit(false))
+      .write.partitionBy("a").parquet(s"$dir/eav")
+    val store = new graft.store.Store(spark, dir)
+    val stats = Streams.liveDbStats(store, "oplessstats")(
+      java.nio.file.Files.createTempDirectory("oplessstatsckpt").toString)
+    try {
+      stats.processAllAvailable()
+      val got = spark.table("oplessstats").collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(got == Map("x/a" -> ((2L, 2L)), "x/b" -> ((1L, 1L))), s"net_datoms: $got")
+    } finally stats.stop()
+    val reports = new java.util.concurrent.ConcurrentLinkedQueue[Streams.TxReport]()
+    val q = Streams.txReportQueue(spark, store, basis = 0L)(
+      java.nio.file.Files.createTempDirectory("oplessckpt").toString)(reports.add(_))
+    try q.processAllAvailable() finally q.close()
+    val seen = reports.toArray(Array.empty[Streams.TxReport])
+    assert(seen.map(_.t).toSeq == Seq(1L, 2L))
+    val ops = seen.toSeq.flatMap(_.datoms).map(_.getAs[Any]("op"))
+    assert(ops == Seq(true, true, true), s"ops: $ops")
   }
 
   test("d/sync: blocks until the basis reaches t, times out if it never does") {
