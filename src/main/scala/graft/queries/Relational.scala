@@ -1238,8 +1238,8 @@ object Relational {
     * through the shared encoding). Day values are epoch days (no
     * date-format parity risk). Stage budget: three sequential
     * maintenance rounds — each resolves only attr-pruned,
-    * touched-entity state (batch-bounded, the appendWithTupleAttrs
-    * shape) — plus the final resolve; the cost IS the transactional
+    * touched-entity state (batch-bounded, `Store.tupleMaintenanceTx`
+    * per batch) — plus the final resolve; the cost IS the transactional
     * write machinery under test, ~linear in batch sizes. */
   def q73_tuple_maintenance(s: SparkSession, d: String): DataFrame = {
     import graft.store.Store

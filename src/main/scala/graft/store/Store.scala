@@ -10,7 +10,7 @@ import graft.model.SchemaRegistry
   * Scale posture: the log is append-only and partitioned by attribute
   * (`a`) — Datomic's AEVT analog — so attribute-filtered scans prune
   * partitions and loads never rewrite history (no read-modify-write of
-  * a growing store; compaction is an offline concern). Idempotency
+  * a growing store). [[append]] is the only writer. Idempotency
   * state (applied batch ids) lives IN the log as datoms on the tx
   * entity, exactly like the reference (`already-transacted`,
   * batch.clj:46-60) — there is no separate ledger to drift.
@@ -19,46 +19,26 @@ final class Store(spark: SparkSession, val dir: String) {
 
   private val eavPath = s"$dir/eav"
 
-  /** All store filesystem ops go through Hadoop FileSystem — the store
-    * dir can be `file:`, `hdfs:` or an object store; `java.io.File`
-    * would silently break everything but local disk. */
-  private def fs(path: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
+  /** Whether the log has been written. Asked through Hadoop FileSystem
+    * — the store dir can be `file:`, `hdfs:` or an object store;
+    * `java.io.File` would silently break everything but local disk. */
   def exists: Boolean = {
-    val (f, p) = fs(eavPath)
-    val there = f.exists(p)
-    // an interrupted compact (crash between the two renames) leaves
-    // the data in eav_old with no eav — surface that loudly instead
-    // of silently reading an empty store
-    if (!there && f.exists(new org.apache.hadoop.fs.Path(s"$dir/eav_old")))
-      throw new IllegalStateException(
-        s"store at $dir: interrupted compact — recover by renaming eav_old back to eav")
-    there
+    val p = new org.apache.hadoop.fs.Path(eavPath)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
   /** The log, read with the fixed `Store.schema`: no schema-inference
     * job per read. Files written before retraction support have no
     * `op` column; their rows read as asserts. */
   def eav: DataFrame =
-    if (exists) withOpDefault(spark.read.schema(Store.schema).parquet(eavPath))
+    if (exists) spark.read.schema(Store.schema).parquet(eavPath)
+      .withColumn("op", coalesce(col("op"), lit(true)))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Store.schema)
 
-  /** The log as a stream of the files appended to it, with [[eav]]'s
-    * schema and `op` default; a trigger reads at most
-    * `maxFilesPerTrigger` new files (all of them when `None`). */
-  def eavStream(maxFilesPerTrigger: Option[Int] = None): DataFrame =
-    withOpDefault(spark.readStream.schema(Store.schema)
-      .options(maxFilesPerTrigger.map(n => "maxFilesPerTrigger" -> n.toString).toMap)
-      .parquet(eavPath))
-
-  private def withOpDefault(log: DataFrame): DataFrame =
-    log.withColumn("op", coalesce(col("op"), lit(true)))
-
-  /** Appends datoms to the log. Precondition: every tx is non-negative
-    * (checked per row; a negative one fails the write). */
+  /** Appends datoms to the log: the store's only writer (`Loader.load`
+    * calls it; a retraction is a datom with `op` = false). Precondition:
+    * every tx is non-negative (checked per row; a negative one fails
+    * the write). */
   def append(datoms: DataFrame): Unit = {
     Store.withOp(datoms).withColumn("tx", Store.checkedTx)
       .select(Store.schema.fieldNames.map(col): _*)
@@ -66,83 +46,18 @@ final class Store(spark: SparkSession, val dir: String) {
     markSnapshotStale()
   }
 
-  /** `:db.attr/preds`-enforced append: datoms whose attribute declares
-    * predicates must pass ALL of them (`ops/Validate.attrPreds`);
-    * passing datoms append, failing ones do NOT land and come back as
-    * error-as-data rows whose `errors` column names the failed
-    * predicates — the `ensureTx` convention. The annotated batch
-    * materializes once (localCheckpoint) so the append and the
-    * returned rejects share one evaluation; tx batches are bounded,
-    * so the checkpoint is small. */
-  def appendChecked(datoms: DataFrame,
-      preds: Map[String, Seq[(String, Column)]]): DataFrame = {
-    val annotated = graft.ops.Validate.attrPreds(datoms, preds).localCheckpoint()
-    append(annotated.filter(size(col("errors")) === 0).drop("errors"))
-    annotated.filter(size(col("errors")) > 0)
-  }
-
-  /** Transactor-maintained composite tuples — Datomic auto-maintains
-    * `:db/tupleAttrs` attributes whenever any source attr of an
-    * entity changes; this is that write path. Appends `datoms`, then
-    * for every registry attribute declaring `tupleAttrs`:
-    *  - entities TOUCHED by a source-attr datom get their tuple
-    *    re-derived from post-append current state (missing slots
-    *    render nil) and asserted at the batch's max tx;
-    *  - touched entities left with NO visible source values get their
-    *    existing tuple datoms retracted (Datomic retracts the
-    *    composite when its sources go away).
-    * Scale shape: the touched set is bounded by the tx batch; every
-    * resolve here is attr-pruned AND semi-joined to it, so
-    * maintenance cost follows the batch, not the store. */
-  def appendWithTupleAttrs(datoms: DataFrame, registry: SchemaRegistry): Unit = {
-    val composites = registry.attrs.values.filter(_.tupleAttrs.nonEmpty).toSeq.sortBy(_.ident)
-    if (composites.isEmpty) { append(datoms); return }
-    val batch = Store.withOp(datoms).localCheckpoint()
-    append(batch)
-    val txRow = batch.agg(max(col("tx"))).collect()(0)
-    val tx = if (txRow.isNullAt(0)) 0L else txRow.getLong(0)
-    composites.foreach { cd =>
-      val m = Store.tupleMaintenanceTx(eav, batch, cd.ident, cd.tupleAttrs, tx)
-      if (m.limit(1).count() > 0) append(m)
-    }
-  }
-
-  /** Datomic `d/entid` — resolve an ident (or any unique-identity
-    * value via (attr, v)) to its entity id. Driver-side bounded
-    * lookup over the attribute's pruned partition. */
-  def entid(registry: SchemaRegistry, ident: String): Option[String] =
-    entidBy(registry, "db/ident", ident)
-
-  def entidBy(registry: SchemaRegistry, attr: String, v: String): Option[String] =
-    current(registry).filter(col("a") === attr && col("v") === v)
-      .select(col("e")).limit(1).collect().headOption.map(_.getString(0))
-
-  /** Datomic `d/ident` — the `:db/ident` of an entity id (None when
-    * the entity carries no ident). */
-  def identOf(registry: SchemaRegistry, e: String): Option[String] =
-    current(registry).filter(col("a") === "db/ident" && col("e") === e)
-      .select(col("v")).limit(1).collect().headOption.map(_.getString(0))
-
-  /** Datomic `[:db/retract e a v]`: append retraction datoms
-    * (op=false). A retraction hides the exact (e, a, v) it names —
-    * retracting a stale value a later assert already superseded is a
-    * no-op, exactly as in Datomic. History keeps everything;
-    * `asOf` horizons before the retraction still see the value. */
-  def retract(datoms: DataFrame): Unit =
-    append(datoms.withColumn("op", lit(false)))
-
   /** Applied batch ids (J5 input): datoms asserting the batch-id attr. */
   def appliedBatchIds: DataFrame =
     eav.filter(col("a") === graft.model.Mbrainz.batchIdAttr)
       .select(col("v").as("batch_id")).distinct()
 
-  /** Wide relational view of one entity namespace (the reference's
-    * metaschema declares exactly this decomposition,
-    * `metaschema/mbrainz.edn` — attrs as tables, refs as joins):
-    * pivot the current-state EAV rows of `ns/...` attrs into one row
-    * per entity. Card-many attrs become sorted arrays. The pivot is a
-    * single groupBy(e); attribute partition pruning keeps the scan to
-    * the namespace's partitions. */
+  /** Wide relational view of one entity namespace — the reference's
+    * `metaschema/mbrainz.edn` relational view (attrs as tables, refs
+    * as joins; SURVEY.md §1.3), read-only over [[current]]: pivot the
+    * current-state EAV rows of `ns/...` attrs into one row per entity.
+    * Card-many attrs become sorted arrays. The pivot is a single
+    * groupBy(e); attribute partition pruning keeps the scan to the
+    * namespace's partitions. */
   def entityTable(registry: SchemaRegistry, ns: String): DataFrame = {
     val attrs = registry.attrs.values.filter(_.ident.startsWith(ns + "/")).toSeq.sortBy(_.ident)
     require(attrs.nonEmpty, s"no attrs in namespace $ns")
@@ -156,9 +71,11 @@ final class Store(spark: SparkSession, val dir: String) {
     cur.groupBy(col("e")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** SQL surface: registers `eav`, `eav_current`, and one wide view
-    * per entity namespace (artist, release, …) as temp views so the
-    * whole store is queryable via `spark.sql(...)`. */
+  /** SQL surface of the reference's `metaschema/mbrainz.edn`
+    * relational view: registers `eav`, `eav_current`, and one wide
+    * [[entityTable]] per entity namespace (artist, release, …) as temp
+    * views so the whole store is queryable via `spark.sql(...)`.
+    * Read-only; nothing here writes the log. */
   def registerViews(registry: SchemaRegistry): Unit = {
     eav.createOrReplaceTempView("eav")
     current(registry).createOrReplaceTempView("eav_current")
@@ -169,41 +86,16 @@ final class Store(spark: SparkSession, val dir: String) {
       }
   }
 
-  /** Offline compaction: rewrite the log to its resolved current state
-    * (collapses superseded card-one values and duplicate card-many
-    * assertions). Returns the compacted row count. */
-  def compact(registry: SchemaRegistry): Long = {
-    val resolved = current(registry)
-      .withColumn("tx", lit(0L))
-      .withColumn("op", lit(true))
-      .select(Store.schema.fieldNames.map(col): _*)
-      .cache()
-    val n = resolved.count()
-    val tmpPath = s"$dir/eav_compact"
-    // a stale eav_compact from a previous failed run must not block
-    // every future compact
-    resolved.write.mode(SaveMode.Overwrite).partitionBy("a").parquet(tmpPath)
-    resolved.unpersist()
-    val (f, old) = fs(eavPath)
-    val bak = new org.apache.hadoop.fs.Path(s"$dir/eav_old")
-    val tmp = new org.apache.hadoop.fs.Path(tmpPath)
-    require(f.rename(old, bak), "compact: could not move old log")
-    require(f.rename(tmp, old), "compact: could not install new log")
-    f.delete(bak, true)
-    invalidateSnapshot()
-    n
-  }
-
   /** Cached resolved snapshot behind `current` — Datomic's live-index-
     * vs-log distinction: the log is the durable record, the current
     * view is a MAINTAINED index, not something every query rebuilds.
     * Without it each query pays a full-log resolve; with it the first
     * `current` call materializes the snapshot and every later read
     * scans it. Keyed by the registry's card-many attr set
-    * (a different registry is a different resolution). Invalidated by
-    * `append`/`retract`/`compact`. On a cluster the same role is
-    * played by persisting to storage — `compact` is the offline form —
-    * but a session-level persisted view is the right default for a
+    * (a different registry is a different resolution). Marked stale
+    * by `append` and brought up to date by the next read. On a cluster
+    * the same role is played by persisting to storage, but a
+    * session-level persisted view is the right default for a
     * query-heavy workload. */
   @transient private var snapshot: Option[(Set[String], DataFrame)] = None
   // incremental-maintenance state: the snapshot's basis tx and the
@@ -216,16 +108,9 @@ final class Store(spark: SparkSession, val dir: String) {
     * incrementally (vs serving the cache or fully re-resolving). */
   @transient private[graft] var lastCurrentIncremental: Boolean = false
 
-  private def invalidateSnapshot(): Unit = synchronized {
-    snapshot.foreach(_._2.unpersist(blocking = false))
-    snapshot = None
-    snapStale = false
-  }
-
   /** Appends don't discard the maintained snapshot — they mark it
     * stale; the next `current` read merges the log TAIL into it
-    * (`Store.resolveIncremental`) instead of re-resolving history.
-    * Structural rewrites (`compact`) still fully invalidate. */
+    * (`Store.resolveIncremental`) instead of re-resolving history. */
   private def markSnapshotStale(): Unit = synchronized { snapStale = true }
 
   /** Current-state view: card-many attrs accumulate (distinct union),
@@ -319,14 +204,6 @@ final class Store(spark: SparkSession, val dir: String) {
     * precedes every transaction (an as-of there is the empty db). */
   def txAtInstant(date: java.util.Date): Long = Store.txAtInstant(eav, date)
 
-  /** `d/as-of` by wall clock — "state as of March 31". */
-  def asOfInstant(registry: SchemaRegistry, date: java.util.Date): DataFrame =
-    asOf(registry, txAtInstant(date))
-
-  /** `d/since` by wall clock: datoms of transactions AFTER the latest
-    * tx at-or-before `date`. */
-  def sinceInstant(date: java.util.Date): DataFrame = since(txAtInstant(date))
-
   /** Datoms in the half-open tx interval [from, until) — Datomic's
     * `d/tx-range` log walk; both bounds prune parquet row groups. */
   def txRange(from: Long, until: Long): DataFrame =
@@ -341,9 +218,9 @@ final class Store(spark: SparkSession, val dir: String) {
   }
 
   /** Full assertion history (Datomic `d/history` analog). The log IS
-    * the history — this store is assert-only, like the reference
-    * importer (upserts supersede by tx; nothing is destroyed until
-    * offline `compact`). */
+    * the history — the log is append-only, like the reference
+    * importer's (upserts supersede by tx; nothing is rewritten in
+    * place). */
   def history: DataFrame = eav
 
   /** History honoring `:db/noHistory` (Datomic's churn valve: set it
@@ -398,7 +275,7 @@ object Store {
     * stay inside whole-stage codegen. */
   val partShift = 42
   val partSpan: Long = 1L << partShift            // 2^42 t-values per partition
-  val partDb = 0L; val partTx = 3L; val partUser = 4L
+  val partUser = 4L
 
   /** Compose an entity id from a partition index and an in-partition
     * t (both column-wise; `t` must be < 2^42). True bit ops, not
@@ -745,8 +622,9 @@ object Store {
   /** Datomic schema-as-data (`:db.install/attribute`): attributes are
     * INSTALLED by transacting their definition maps — `{:db/ident
     * :doc/tags, :db/valueType :db.type/string, :db/cardinality
-    * :db.cardinality/many}` through `TxFns.transactEdn` becomes plain
-    * datoms under the `db/…` attributes — and the registry that drives
+    * :db.cardinality/many}` expands (`Datoms.entityDatoms`) to plain
+    * datoms under the `db/…` attributes, appended like any other —
+    * and the registry that drives
     * upsert/resolution semantics is DERIVED from the db value, so
     * schema lives in the database like Datomic's, not in a config
     * file. Driver-side collect over the `db/…` attribute partitions
@@ -887,10 +765,11 @@ object Store {
     resolve(state.unionByName(withOp(txData), allowMissingColumns = true), manyAttrs)
   }
 
-  /** The maintenance datoms ONE batch implies for ONE composite — the
-    * static core behind the instance `appendWithTupleAttrs` (and the
-    * q73 harness query, which composes it statelessly over
-    * synthesized logs). `logAfter` is the log INCLUDING the batch:
+  /** The maintenance datoms ONE batch implies for ONE composite
+    * (Datomic's transactor-maintained `:db/tupleAttrs`; the q73
+    * harness query composes it statelessly over synthesized logs, and
+    * a writer appends its output after the batch). `logAfter` is the
+    * log INCLUDING the batch:
     *  - touched entities (any source-attr datom in the batch) get
     *    their composite re-derived from current source state;
     *  - touched entities with NO visible source values left get every
@@ -1143,7 +1022,7 @@ object Store {
     * `db/excise`, target, tx) records THAT an excision happened
     * without recording what was removed — exactly Datomic's audit
     * shape. Unlike the rest of the store this rewrites rather than
-    * appends; at scale it is an offline compact-style pass over the
+    * appends; at scale it is an offline rewrite pass over the
     * attribute partitions (two semi-joins, shuffle ∝ log). */
   def excise(log: DataFrame, targets: DataFrame, tx: Long): DataFrame = {
     val t = targets.select(col("e")).distinct()

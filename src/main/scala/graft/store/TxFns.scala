@@ -16,11 +16,12 @@ import graft.model.SchemaRegistry
   * row-at-a-time Datomic shape is the degenerate 1-row case).
   *
   * All functions of one transaction see the SAME pre-tx state — the
-  * atomicity Datomic gives tx fns — because `transact` resolves the
-  * state once and every expansion runs against that value; the union
-  * of their outputs lands as one tx. A tx function that detects an
-  * illegal transition must THROW (like `:db/cas` on a stale expected
-  * value): the transaction then aborts with nothing appended.
+  * atomicity Datomic gives tx fns — because [[expand]] runs every
+  * invocation against the one `TxCtx.state` value; the caller then
+  * appends the union of their outputs as one tx (`Store.append`). A
+  * tx function that detects an illegal transition must THROW (like
+  * `:db/cas` on a stale expected value): the expansion then fails
+  * before anything is appended.
   */
 object TxFns {
 
@@ -74,130 +75,8 @@ object TxFns {
     * would append, without touching any store. */
   def expand(ctx: TxCtx, fns: Registry,
       invocations: Seq[(String, DataFrame)]): DataFrame = {
-    require(invocations.nonEmpty, "transact: no invocations")
+    require(invocations.nonEmpty, "expand: no invocations")
     invocations.map { case (name, args) => fns(name)(ctx, args) }
       .reduce(_ unionByName _)
-  }
-
-  /** Run invocations as ONE transaction against a store: every
-    * function sees the same pre-tx state; the combined expansion
-    * appends atomically at `tx` (a throwing function — e.g. a failed
-    * cas — aborts before anything lands). */
-  def transact(store: Store, registry: SchemaRegistry, fns: Registry,
-      invocations: Seq[(String, DataFrame)], tx: Long): Unit = {
-    val ctx = TxCtx(store.current(registry), registry, tx)
-    store.append(expand(ctx, fns, invocations))
-  }
-
-  /** Datomic's ACTUAL tx-data surface for transaction functions: one
-    * EDN tx-data vector whose elements are
-    *  - entity MAPS — the normal assert expansion
-    *    (`Datoms.entityDatoms`, same path the loader takes),
-    *  - `[:db/add e a v]` / `[:db/retract e a v]` vector forms, and
-    *  - `[:fn-name arg …]` — a REGISTRY function named in the data,
-    *    exactly how Datomic resolves `:db/fn` entities in tx data.
-    * All occurrences of one function batch into a single
-    * set-oriented call; every function sees the same pre-tx state;
-    * maps, add/retract forms and every expansion land as ONE tx.
-    *
-    * Arg shaping: `db/cas` gets its canonical (e, a, expected, new_v,
-    * new_v_long) columns; `db.fn/retractEntity` gets (e); any other
-    * function receives positional STRING columns (arg0, arg1, …) —
-    * an EDN-invocable custom fn declares that shape (the Scala-side
-    * `transact` keeps full control of its arg schema). Entity refs in
-    * vector forms follow the store's key encodings: keyword →
-    * `ident|…`, 1-entry lookup map → `attr|value`. */
-  def transactEdn(store: Store, registry: SchemaRegistry, fns: Registry,
-      ednText: String, tx: Long): Unit = {
-    import graft.edn.Edn
-    import graft.edn.Edn._
-    val spark = store.eav.sparkSession
-    import spark.implicits._
-
-    val forms = Edn.parse(ednText) match {
-      case EVec(items) => items
-      case other => throw new IllegalArgumentException(
-        s"tx data must be a vector, got: ${Edn.print(other)}")
-    }
-    def entityRef(e: Edn): String = e match {
-      case k: EKw => s"ident|${k.qualified}"
-      case m: EMap if m.entries.size == 1 =>
-        val (k, v) = m.entries.head
-        Datoms.refKey(k.asInstanceOf[EKw].qualified, v)
-      case other => Datoms.scalarText(other)
-    }
-    var anonN = 0
-    val anon = () => { anonN += 1; s"anon|txfn|$tx|$anonN" }
-    val direct = Vector.newBuilder[Datoms.Datom] // maps + add forms
-    val retracts = Vector.newBuilder[Datoms.Datom]
-    val calls = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Seq[Edn]]]
-    forms.foreach {
-      case m: EMap =>
-        direct ++= Datoms.entityDatoms(m, registry, s"txfn-$tx", tx, anon)
-      case EVec((op: EKw) +: args) => op.qualified match {
-        case dir @ ("db/add" | "db/retract") =>
-          require(args.size == 3, s"[:$dir e a v] takes exactly 3 args")
-          val Seq(e, a, v) = args.toSeq
-          val attr = a match {
-            case k: EKw => k.qualified
-            case other => throw new IllegalArgumentException(
-              s"[:$dir …] attribute must be a keyword, got: ${Edn.print(other)}")
-          }
-          val isRef = registry.isRef(attr)
-          val (vTxt, vLong) = v match {
-            case k: EKw if isRef => (s"ident|${k.qualified}", None)
-            case m: EMap if isRef => (entityRef(m), None)
-            case ELong(l) => (l.toString, Some(l))
-            case other => (Datoms.scalarText(other), None)
-          }
-          val d = Datoms.Datom(entityRef(e), attr, vTxt, vLong, isRef, tx)
-          if (dir == "db/add") direct += d else retracts += d
-        case name =>
-          calls.getOrElseUpdate(name,
-            scala.collection.mutable.ArrayBuffer.empty) += args
-      }
-      case other => throw new IllegalArgumentException(
-        s"tx-data element must be a map or vector form: ${Edn.print(other)}")
-    }
-
-    def datomDf(ds: Vector[Datoms.Datom], op: Boolean): Option[DataFrame] =
-      if (ds.isEmpty) None
-      else Some(ds.map(d => (d.e, d.a, d.v, d.vLong, d.isRef, d.tx))
-        .toDF("e", "a", "v", "v_long", "is_ref", "tx")
-        .withColumn("op", lit(op)))
-
-    val ctx = TxCtx(store.current(registry), registry, tx)
-    val fnDatoms = calls.toSeq.map { case (name, argLists) =>
-      val arity = argLists.head.size
-      require(argLists.forall(_.size == arity),
-        s":$name invoked with mixed arities in one tx")
-      val args: DataFrame = name match {
-        case "db/cas" =>
-          require(arity == 4, "[:db/cas e a old new] takes 4 args")
-          argLists.toSeq.map { case Seq(e, a, old, nv) =>
-            val nvLong = nv match { case ELong(l) => Some(l); case _ => None }
-            (entityRef(e), a.asInstanceOf[EKw].qualified,
-              old match { case ENil => None; case o => Some(Datoms.scalarText(o)) },
-              Datoms.scalarText(nv), nvLong)
-          }.toDF("e", "a", "expected", "new_v", "new_v_long")
-        case "db.fn/retractEntity" =>
-          require(arity == 1, "[:db.fn/retractEntity e] takes 1 arg")
-          argLists.toSeq.map { case Seq(e) => entityRef(e) }.toDF("e")
-        case _ =>
-          val rows = argLists.toSeq.map(_.map(Datoms.scalarText))
-          spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.map(org.apache.spark.sql.Row.fromSeq), 1),
-            org.apache.spark.sql.types.StructType((0 until arity).map(i =>
-              org.apache.spark.sql.types.StructField(s"arg$i",
-                org.apache.spark.sql.types.StringType))))
-      }
-      fns(name)(ctx, args)
-    }
-
-    val all = (datomDf(direct.result(), op = true).toSeq ++
-      datomDf(retracts.result(), op = false).toSeq ++ fnDatoms)
-    require(all.nonEmpty, "transactEdn: empty transaction")
-    store.append(all.reduce(_ unionByName _))
   }
 }

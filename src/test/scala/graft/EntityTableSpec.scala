@@ -7,8 +7,8 @@ import graft.pipeline.{Batcher, Loader}
 import graft.store.Store
 
 /** Wide entity tables pivoted from the EAV store (the metaschema's
-  * relational view) + offline compaction, on the generated mbrainz
-  * input ([[MbrainzFixture]]). */
+  * relational view), on the generated mbrainz input
+  * ([[MbrainzFixture]]). */
 class EntityTableSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -73,26 +73,5 @@ class EntityTableSpec extends AnyFunSuite {
     val sub = token.take(2).toLowerCase
     assert(!fx.truth.fulltextValues.exists(_._2.toLowerCase.split("[^a-z0-9]+").contains(sub)))
     assert(graft.query.Explore.fulltext(store, registry, sub).collect().isEmpty)
-  }
-
-  test("compaction collapses history but preserves current state") {
-    // separate store so the shared fixture stays intact
-    val st = new Store(spark, java.nio.file.Files.createTempDirectory("cstore").toString)
-    val loader = new Loader(spark, registry, st)
-    def line(batch: String, name: String) =
-      s"""{:batch-ident {:db/id "datomic.tx", :mbrainz.initial-import/batch-id "$batch"}, :data [""" +
-        s"""{:artist/gid #uuid "55555555-5555-4555-8555-555555555555", :artist/name "$name", :artist/sortName "S"}]}"""
-    def load(batch: String, name: String): Unit = {
-      val f = java.nio.file.Files.createTempFile("c", ".edn")
-      java.nio.file.Files.write(f, line(batch, name).getBytes)
-      loader.loadBatchFile("artists", f.toString); ()
-    }
-    load("artists-1", "Old"); load("artists-2", "New")
-    val before = st.eav.filter(col("a") === "artist/name").count()
-    assert(before == 2)
-    st.compact(registry)
-    assert(st.eav.filter(col("a") === "artist/name").count() == 1)
-    val cur = st.current(registry).filter(col("a") === "artist/name").collect()
-    assert(cur.map(_.getAs[String]("v")).toSeq == Seq("New"))
   }
 }

@@ -25,8 +25,8 @@ class StoreSpec extends AnyFunSuite {
     assert(eav.filter(col("op")).count() == 4)
     assert(eav.filter(col("a") === "release/year").select("v_long").as[Long].collect().toSeq == Seq(1999L))
     // a later file with op keeps its retraction beside the op-less files
-    store.retract(Seq(("artist/gid|2", "artist/name", "Two", Option.empty[Long], false, 3L))
-      .toDF("e", "a", "v", "v_long", "is_ref", "tx"))
+    store.append(Seq(("artist/gid|2", "artist/name", "Two", Option.empty[Long], false, 3L))
+      .toDF("e", "a", "v", "v_long", "is_ref", "tx").withColumn("op", lit(false)))
     val after = store.eav
     assert(after.filter(!col("op")).select("e", "tx").as[(String, Long)].collect().toSeq ==
       Seq(("artist/gid|2", 3L)))

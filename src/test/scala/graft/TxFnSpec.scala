@@ -193,12 +193,21 @@ class TxFnSpec extends AnyFunSuite {
 
   test(":db.install/attribute: schema transacted as data drives resolution semantics") {
     val store = new Store(spark, java.nio.file.Files.createTempDirectory("schemadb").toString)
+    import spark.implicits._
+    import graft.edn.Edn
     val reg0 = graft.model.SchemaRegistry.fromEdn("[]")
-    // install a card-many attr and a unique-identity attr AS TX DATA
-    graft.store.TxFns.transactEdn(store, reg0, graft.store.TxFns.builtins,
+    // install a card-many attr and a unique-identity attr AS TX DATA:
+    // each definition map expands to plain datoms under `db/…` attrs
+    val defs = Edn.parse(
       """[{:db/ident :doc/tags, :db/valueType :db.type/string, :db/cardinality :db.cardinality/many}
-        | {:db/ident :doc/gid, :db/valueType :db.type/string, :db/unique :db.unique/identity}]""".stripMargin,
-      1L)
+        | {:db/ident :doc/gid, :db/valueType :db.type/string, :db/unique :db.unique/identity}]""".stripMargin)
+      .asInstanceOf[Edn.EVec].items
+    val installed = defs.collect { case m: Edn.EMap =>
+      graft.store.Datoms.entityDatoms(m, reg0, "install", 1L,
+        () => sys.error("every definition map is keyed by its :db/ident"))
+    }.flatten
+    store.append(installed.map(d => (d.e, d.a, d.v, d.vLong, d.isRef, d.tx))
+      .toDF("e", "a", "v", "v_long", "is_ref", "tx"))
     val reg = Store.schemaFromDb(store.current(reg0))
     assert(reg.isMany("doc/tags"), "installed cardinality surfaces in the derived registry")
     assert(reg.uniqueIdentityAttrs.contains("doc/gid"))
@@ -356,43 +365,35 @@ class TxFnSpec extends AnyFunSuite {
     def tupleOf(e: String): Seq[String] =
       st.current(reg).filter(col("a") === "order/cust+date" && col("e") === e)
         .select("v").collect().map(_.getString(0)).toSeq
+    // the transactor's write: the batch, then the composite datoms it
+    // implies at the batch's tx
+    def transact(batch: org.apache.spark.sql.DataFrame, tx: Long): Unit = {
+      st.append(batch)
+      st.append(Store.tupleMaintenanceTx(st.eav, batch, "order/cust+date",
+        reg("order/cust+date").tupleAttrs, tx))
+    }
     // tx1: both sources land → composite derived automatically
-    st.appendWithTupleAttrs(datoms(
-      ("o1", "order/cust", "c9", 1L), ("o1", "order/date", "d1", 1L)), reg)
+    transact(datoms(
+      ("o1", "order/cust", "c9", 1L), ("o1", "order/date", "d1", 1L)), 1L)
     assert(tupleOf("o1") == Seq("[c9 d1]"))
     // tx2: one source changes → the composite supersedes (transactor
     // behavior: touching ANY source re-derives)
-    st.appendWithTupleAttrs(datoms(("o1", "order/date", "d2", 2L)), reg)
+    transact(datoms(("o1", "order/date", "d2", 2L)), 2L)
     assert(tupleOf("o1") == Seq("[c9 d2]"))
     // an untouched entity is never visited
-    st.appendWithTupleAttrs(datoms(("o2", "order/cust", "c5", 3L)), reg)
+    transact(datoms(("o2", "order/cust", "c5", 3L)), 3L)
     assert(tupleOf("o1") == Seq("[c9 d2]") && tupleOf("o2") == Seq("[c5 nil]"))
     // tx4: retract EVERY asserted source value of o1 (the engine's
     // documented resolution resurfaces older unretracted values —
     // PropertySpec's reference model — so clearing an attr means
     // retracting its history, as the loader's retraction path does)
     // → the composite retracts too
-    st.appendWithTupleAttrs(
+    transact(
       datoms(("o1", "order/cust", "c9", 4L), ("o1", "order/date", "d1", 4L),
         ("o1", "order/date", "d2", 4L))
-        .withColumn("op", lit(false)), reg)
+        .withColumn("op", lit(false)), 4L)
     assert(tupleOf("o1").isEmpty, "orphaned composite must be retracted")
     assert(tupleOf("o2") == Seq("[c5 nil]"), "other entities untouched")
-  }
-
-  test("entid/ident: unique-value <-> entity-id resolution both ways") {
-    val st = new Store(spark,
-      java.nio.file.Files.createTempDirectory("entid").toString)
-    val reg = new graft.model.SchemaRegistry(Map.empty)
-    st.append(datoms(
-      ("e7", "db/ident", "artist.type/person", 1L),
-      ("e8", "db/ident", "artist.type/group", 1L),
-      ("e9", "x/name", "plain", 1L)))
-    assert(st.entid(reg, "artist.type/person").contains("e7"))
-    assert(st.entid(reg, "no.such/ident").isEmpty)
-    assert(st.identOf(reg, "e8").contains("artist.type/group"))
-    assert(st.identOf(reg, "e9").isEmpty, "an entity without :db/ident has no ident")
-    assert(st.entidBy(reg, "x/name", "plain").contains("e9"))
   }
 
   test("typed tuples: round-trip through the text encoding, nil slots, arity gate") {
@@ -474,7 +475,7 @@ class TxFnSpec extends AnyFunSuite {
     st.append(datoms(("d1", "dev/heartbeat", "t2", 2L),
       ("d1", "dev/name", "beta", 2L)))
     // retract tag "a" at tx 3
-    st.retract(datoms(("d1", "dev/tags", "a", 3L)))
+    st.append(datoms(("d1", "dev/tags", "a", 3L)).withColumn("op", lit(false)))
     st.append(datoms(("d1", "dev/heartbeat", "t3", 4L)))
     val hist = st.history(reg).select("e", "a", "v", "op")
     val hb = hist.filter(col("a") === "dev/heartbeat").collect()
@@ -496,7 +497,7 @@ class TxFnSpec extends AnyFunSuite {
     assert(st.history.filter(col("a") === "dev/heartbeat").count() === 3)
     // retract-then-REASSERT: the live value survives with its later tx
     // (only superseded/retracted values vanish, not the attr)
-    st.retract(datoms(("d1", "dev/heartbeat", "t3", 5L)))
+    st.append(datoms(("d1", "dev/heartbeat", "t3", 5L)).withColumn("op", lit(false)))
     st.append(datoms(("d1", "dev/heartbeat", "t9", 6L)))
     val hb2 = st.history(reg).filter(col("a") === "dev/heartbeat")
       .select("v", "tx").collect()
@@ -575,23 +576,6 @@ class TxFnSpec extends AnyFunSuite {
       s"collateral row e3 must fall with its transaction: $out")
   }
 
-  test(":db.attr/preds: appendChecked keeps rejects out of the log, error-as-data back") {
-    val st = new Store(spark,
-      java.nio.file.Files.createTempDirectory("preds").toString)
-    val preds = Map("acct/balance" -> Seq("non-negative" -> (col("v_long") >= 0L)))
-    val batch = datoms(
-      ("e1", "acct/balance", "10", 1L),
-      ("e2", "acct/balance", "-1", 1L))
-      .withColumn("v_long", col("v").cast("long"))
-    val rejected = st.appendChecked(batch, preds).collect()
-    assert(rejected.length === 1 &&
-      rejected(0).getString(rejected(0).fieldIndex("e")) === "e2")
-    assert(rejected(0).getSeq[String](rejected(0).fieldIndex("errors"))
-      === Seq("non-negative"))
-    val logged = st.eav.select("e").collect().map(_.getString(0)).toSet
-    assert(logged === Set("e1"), "the violating datom must not land")
-  }
-
   test(":db/fn: custom inc-balance installs next to builtins and transacts through a store") {
     import graft.store.TxFns
     val st = new Store(spark,
@@ -614,8 +598,9 @@ class TxFnSpec extends AnyFunSuite {
     val fns = TxFns.builtins.install("acct/inc-balance", incBalance)
     assert(fns.names === Set("db/cas", "db.fn/retractEntity", "acct/inc-balance"))
     import spark.implicits._
-    TxFns.transact(st, reg, fns,
-      Seq("acct/inc-balance" -> Seq(("a1", 50L), ("a3", 7L)).toDF("e", "amount")), tx = 2L)
+    // one tx: expand every invocation against the pre-tx state, append
+    st.append(TxFns.expand(TxFns.TxCtx(st.current(reg), reg, 2L), fns,
+      Seq("acct/inc-balance" -> Seq(("a1", 50L), ("a3", 7L)).toDF("e", "amount"))))
     val bal = st.current(reg).filter(col("a") === "acct/balance")
       .select("e", "v_long").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // a1 bumped from its REAL current value, a2 untouched, a3 created from 0
@@ -623,43 +608,6 @@ class TxFnSpec extends AnyFunSuite {
     // unknown name fails loudly
     val ex = intercept[IllegalArgumentException](fns("nope"))
     assert(ex.getMessage.contains("acct/inc-balance"))
-  }
-
-  test(":db/fn: tx functions invoked FROM tx data (transactEdn mixed vector forms)") {
-    import graft.store.TxFns
-    val st = new Store(spark,
-      java.nio.file.Files.createTempDirectory("txedn").toString)
-    val reg = new graft.model.SchemaRegistry(Map.empty)
-    st.append(datoms(("a1", "acct/balance", "100", 1L))
-      .withColumn("v_long", col("v").cast("long")))
-    // EDN-invocable custom fn: positional string args (arg0 = entity,
-    // arg1 = amount), reads the entity's CURRENT balance from state
-    val incBalance: TxFns.TxFn = (ctx, args) => {
-      val cur = ctx.state.filter(col("a") === "acct/balance")
-        .select(col("e"), col("v_long").as("__cur"))
-      args.select(col("arg0").as("e"), col("arg1").cast("long").as("amount"))
-        .join(cur, Seq("e"), "left")
-        .select(col("e"), lit("acct/balance").as("a"),
-          (coalesce(col("__cur"), lit(0L)) + col("amount")).cast("string").as("v"),
-          (coalesce(col("__cur"), lit(0L)) + col("amount")).as("v_long"),
-          lit(false).as("is_ref"), lit(ctx.tx).as("tx"), lit(true).as("op"))
-    }
-    val fns = TxFns.builtins.install("acct/inc-balance", incBalance)
-    TxFns.transactEdn(st, reg, fns,
-      """[{:db/id "t1", :acct/owner "alice"}
-        | [:db/add "a3" :acct/balance 7]
-        | [:db/retract "a1" :acct/note "old"]
-        | [:db/cas "a1" :acct/balance 100 150]
-        | [:acct/inc-balance "a2" 5]]""".stripMargin, tx = 2L)
-    val bal = st.current(reg).filter(col("a") === "acct/balance")
-      .select("e", "v_long").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // cas swapped a1 (correct expected); inc created a2 from 0; add made a3
-    assert(bal === Map("a1" -> 150L, "a2" -> 5L, "a3" -> 7L), bal.toString)
-    val owner = st.current(reg).filter(col("a") === "acct/owner")
-      .select("v").collect()(0).getString(0)
-    assert(owner === "alice", "map entity in the same tx data lands too")
-    // the orphan retraction of a never-asserted value is invisible
-    assert(st.current(reg).filter(col("a") === "acct/note").count() === 0)
   }
 
   test(":db/fn: builtin cas entry aborts the whole tx on a stale expected") {
@@ -674,7 +622,8 @@ class TxFnSpec extends AnyFunSuite {
       .toDF("e", "a", "expected", "new_v")
       .withColumn("new_v_long", col("new_v").cast("long"))
     intercept[IllegalStateException] {
-      TxFns.transact(st, reg, TxFns.builtins, Seq("db/cas" -> stale), tx = 2L)
+      st.append(TxFns.expand(TxFns.TxCtx(st.current(reg), reg, 2L), TxFns.builtins,
+        Seq("db/cas" -> stale)))
     }
     // nothing landed: the store still resolves to the original value
     val v = st.current(reg).filter(col("a") === "acct/balance")
@@ -684,7 +633,8 @@ class TxFnSpec extends AnyFunSuite {
     val ok = Seq(("a1", "acct/balance", "100", "50"))
       .toDF("e", "a", "expected", "new_v")
       .withColumn("new_v_long", col("new_v").cast("long"))
-    TxFns.transact(st, reg, TxFns.builtins, Seq("db/cas" -> ok), tx = 3L)
+    st.append(TxFns.expand(TxFns.TxCtx(st.current(reg), reg, 3L), TxFns.builtins,
+      Seq("db/cas" -> ok)))
     assert(st.current(reg).filter(col("a") === "acct/balance")
       .select("v").collect()(0).getString(0) === "50")
   }
@@ -715,7 +665,7 @@ class TxFnSpec extends AnyFunSuite {
     assert(st.eav.filter(col("a") === "artist/sortName").count() === 2)
   }
 
-  test("loader stamps one txInstant per transaction; asOfInstant reads through it") {
+  test("loader stamps one txInstant per tx; as-of by date reads through it") {
     val registry = graft.model.SchemaRegistry.load(MbrainzFixture.schemaPath)
     val st = new Store(spark,
       java.nio.file.Files.createTempDirectory("txinst").toString)
@@ -731,9 +681,9 @@ class TxFnSpec extends AnyFunSuite {
     assert(instants.length == 2, "one txInstant per tx (import-schema + artists-1)")
     assert(instants.forall(r => r.getString(r.fieldIndex("e")).startsWith("tx|")))
     // a horizon before the load sees nothing; one after sees the artist
-    assert(st.asOfInstant(registry, before)
+    assert(st.asOf(registry, st.txAtInstant(before))
       .filter(col("a") === "artist/name").count() == 0)
-    assert(st.asOfInstant(registry, new java.util.Date())
+    assert(st.asOf(registry, st.txAtInstant(new java.util.Date()))
       .filter(col("a") === "artist/name").count() == 1)
   }
 

@@ -92,9 +92,9 @@ class UpsertSpec extends AnyFunSuite {
       ("b1", "release/artists", "a1", 1L),
       ("b1", "release/artists", "a2", 2L)))
     // tx 3: retract the current name and one of the card-many values
-    store.retract(datoms(
+    store.append(datoms(
       ("b1", "release/name", "Old", 3L),
-      ("b1", "release/artists", "a1", 3L)))
+      ("b1", "release/artists", "a1", 3L)).withColumn("op", lit(false)))
     def vals(df: org.apache.spark.sql.DataFrame, a: String) =
       df.filter(col("e") === "b1" && col("a") === a)
         .select("v").collect().map(_.getString(0)).toSet
@@ -105,7 +105,7 @@ class UpsertSpec extends AnyFunSuite {
       "as-of before the retraction still sees the value")
     // tx 4: re-assert a new name; tx 5: a STALE retract of "Old" is a no-op
     store.append(datoms(("b1", "release/name", "New", 4L)))
-    store.retract(datoms(("b1", "release/name", "Old", 5L)))
+    store.append(datoms(("b1", "release/name", "Old", 5L)).withColumn("op", lit(false)))
     assert(vals(store.current(registry), "release/name") == Set("New"),
       "stale retraction must not hide the newer assert")
     assert(store.history.filter(col("e") === "b1").count() == 7, "history keeps everything")
@@ -158,7 +158,7 @@ class UpsertSpec extends AnyFunSuite {
     // the older unretracted value (the PropertySpec reference model),
     // which the discarded-history snapshot alone could never produce —
     // while the rest of the store still merges incrementally
-    store.retract(datoms(("b1", "release/name", "New", 3L)))
+    store.append(datoms(("b1", "release/name", "New", 3L)).withColumn("op", lit(false)))
     val c4 = cur()
     assert(c4 === full())
     assert(store.lastCurrentIncremental,
