@@ -29,7 +29,6 @@ final class SchemaRegistry(val attrs: Map[String, AttrDef]) extends Serializable
   def apply(attr: String): AttrDef = attrs.getOrElse(attr, SchemaRegistry.default(attr))
   def isMany(attr: String): Boolean = apply(attr).many
   def isRef(attr: String): Boolean = apply(attr).valueType == "ref"
-  def uniqueIdentityAttrs: Set[String] = attrs.values.filter(_.uniqueIdentity).map(_.ident).toSet
   def uniqueAttrs: Set[String] = attrs.values.filter(a => a.uniqueIdentity || a.uniqueValue).map(_.ident).toSet
 }
 

@@ -74,9 +74,8 @@ object Validate {
     * Grain note: Datomic ABORTS the whole transaction on an attr-pred
     * failure; the engine's default grain is the datom (rejects
     * quarantined error-as-data, the rest of the batch lands — the
-    * posture `quarantine` documents for 100 TB loads). For Datomic's
-    * all-or-nothing shape use [[attrPredsTx]]; to refuse the whole
-    * batch, gate on `errors` being empty everywhere
+    * posture `quarantine` documents for 100 TB loads). To refuse the
+    * whole batch, gate on `errors` being empty everywhere
     * (`requireValid`). */
   def attrPreds(datoms: DataFrame,
       preds: Map[String, Seq[(String, Column)]]): DataFrame = {
@@ -90,24 +89,6 @@ object Validate {
     if (checks.isEmpty)
       datoms.withColumn("errors", array().cast("array<string>"))
     else datoms.withColumn("errors", array_compact(array(checks: _*)))
-  }
-
-  /** Datomic-grain `:db.attr/preds`: the whole TRANSACTION aborts when
-    * any of its datoms fails an attribute predicate — `attrPreds`'
-    * per-datom errors rolled up to a per-tx verdict exactly like
-    * `ensureTx` (one keyed aggregation on `txCol`, broadcast back).
-    * Output adds `ensure_tx`, `errors`, and `tx_ok`; callers append
-    * `tx_ok` rows and quarantine the rest. */
-  def attrPredsTx(datoms: DataFrame, txCol: Column,
-      preds: Map[String, Seq[(String, Column)]]): DataFrame = {
-    Seq("ensure_tx", "tx_ok", "errors", "__ensure_bad").foreach(c =>
-      require(!datoms.columns.contains(c), s"attrPredsTx reserves output column '$c'"))
-    val annotated = attrPreds(datoms, preds).withColumn("ensure_tx", txCol)
-    val verdict = annotated.groupBy(col("ensure_tx"))
-      .agg(max(size(col("errors")) > 0).as("__ensure_bad"))
-    annotated.join(verdict, "ensure_tx") // AQE broadcasts when txs ≪ rows
-      .withColumn("tx_ok", !col("__ensure_bad"))
-      .drop("__ensure_bad")
   }
 
   /** Fail-fast mode (the reference's halt-when): throws on the first

@@ -71,12 +71,9 @@ private[pipeline] final case class LoadRow(tpe: String, e: String, a: String, v:
   * by every transaction of that call, the import-schema's included.
   */
 final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
-    concurrency: Int = 8,
-    attrPreds: Map[String, Seq[(String, org.apache.spark.sql.Column)]] = Map.empty) {
+    concurrency: Int = 8) {
 
-  /** `rejected` counts datoms dropped by `:db.attr/preds` (0 when no
-    * predicates are declared). */
-  final case class LoadStats(txes: Long, datoms: Long, rejected: Long = 0L)
+  final case class LoadStats(txes: Long, datoms: Long)
 
   /** Transact the fresh import-schema and batches of every `(type,
     * batch file)` in one pass; returns each given type's stats (zeros
@@ -119,25 +116,16 @@ final class Loader(spark: SparkSession, registry: SchemaRegistry, store: Store,
       ds.map(d => LoadRow(tpe, d.e, d.a, d.v, d.vLong, d.isRef, tx, tx_row = false)) :+
         LoadRow(tpe, s"tx|$batchId", Store.txInstantAttr, loadedAtIso,
           Some(loadedAtMs), is_ref = false, tx, tx_row = true)
-    }(Encoders.product[LoadRow]).toDF()
-    // `:db.attr/preds` enforcement point (Datomic validates attr preds
-    // on every assert at transact time): rejected datoms are counted
-    // and kept OUT of the log; the accepted set appends. Retractions
-    // pass unchecked (attrPreds' own rule) — moot here, the batcher
-    // emits asserts only.
-    val annotated = graft.ops.Validate.attrPreds(datoms, attrPreds).persist()
+    }(Encoders.product[LoadRow]).toDF().persist()
     try {
-      val ok = size(col("errors")) === 0
-      val stats = annotated.groupBy(col("tpe")).agg(
-        count(when(col("tx_row"), 1)), count(when(ok, 1)), count(when(!ok, 1)))
-        .collect().map(r => r.getString(0) -> LoadStats(r.getLong(1), r.getLong(2), r.getLong(3)))
-      // append keeps only the log's columns: `tpe`, `tx_row` and
-      // `errors` drop there
+      val stats = datoms.groupBy(col("tpe")).agg(count(when(col("tx_row"), 1)), count(lit(1)))
+        .collect().map(r => r.getString(0) -> LoadStats(r.getLong(1), r.getLong(2)))
+      // append keeps only the log's columns: `tpe` and `tx_row` drop there
       if (stats.nonEmpty) Retry.retrying(() => {
-        store.append(annotated.filter(ok).repartition(concurrency, col("a"))); ()
+        store.append(datoms.repartition(concurrency, col("a"))); ()
       }, Retry.transientIo)
       zeros ++ stats.filter { case (t, _) => zeros.contains(t) }
-    } finally { annotated.unpersist(); applied.destroy() }
+    } finally { datoms.unpersist(); applied.destroy() }
   }
 
   /** One batch file of one type: [[load]] of that file alone. */

@@ -36,7 +36,7 @@ object Manifest {
     val basedir = req("basedir") match {
       case EStr(s) => s; case o => fail(s":basedir must be a string: $o") }
     val conc = req("concurrency") match {
-      case ELong(n) if n > 0 => n.toInt; case o => fail(s":concurrency must be a positive int: $o") }
+      case ELong(n) if n > 0 && n <= Int.MaxValue => n.toInt; case o => fail(s":concurrency must be a positive int: $o") }
     val order = m.getKw("import-order") match {
       case Some(EVec(items)) => items.map {
         case k: EKw => k.name; case o => fail(s"bad import-order entry: $o") }

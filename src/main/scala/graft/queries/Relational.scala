@@ -410,8 +410,8 @@ object Relational {
   }
 
   // ── d/since: the incremental-consumer horizon ─────────────────────
-  /** Datomic `d/since` surfaced as a query (`Store.sinceAtHorizons`,
-    * the exact code `Store.since` feeds): a three-tx log over orders
+  /** Datomic `d/since` surfaced as a query (`Store.sinceAtHorizons`):
+    * a three-tx log over orders
     * (base price at tx 1, every 10th doubled at tx 2, every 100th
     * nudged at tx 3) read at since-horizons 0/1/2. Since FILTERS the
     * log rather than rewinding it — an entity untouched after the
@@ -1362,7 +1362,7 @@ object Relational {
   // ── Query-map :offset/:limit one-shot page ────────────────────────
   /** Datomic client query-map pagination — `d/q {:query … :offset 100
     * :limit 50}`: the Datalog result paged in ONE bounded job
-    * (`Datalog.page` — distinct tuple set, deterministic qseq order,
+    * (`Datalog.page` — distinct tuple set, sorted-column order,
     * TakeOrderedAndProject(offset, limit): top-(offset+limit) per
     * partition then a driver merge — no full sort, no full collect,
     * the same plan shape at any corpus size). The oracle replays the
@@ -1456,8 +1456,8 @@ object Relational {
     * entity) index order, each pulled with price + priority. The page
     * is a TakeOrderedAndProject over the attr-pruned scan (no full
     * sort); the pulls join against the 100-row page only. Ties at the
-    * page boundary break on the entity key's STRING order — the same
-    * order `Store.datoms`' AVET surface promises. */
+    * page boundary break on the entity key's STRING order, as in
+    * `Store.indexRange`. */
   def q63_index_pull(s: SparkSession, d: String): DataFrame = {
     val o = orders(s, d)
     val c = cents(col("o_totalprice"))

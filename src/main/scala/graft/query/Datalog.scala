@@ -428,13 +428,6 @@ object Datalog {
       case other => graft.store.Datoms.scalarText(other)
     }
 
-  /** Query the raw LOG (history semantics — every assertion ever,
-    * including later-retracted values). Datomic's `d/q` over
-    * `d/history`. */
-  def run(store: Store, registry: SchemaRegistry, q: Query,
-      args: Map[String, Edn] = Map.empty): DataFrame =
-    runOn(store.eav, registry, q, args)
-
   /** Query the resolved current state — `d/q` over `(d/db conn)`:
     * card-one last-wins, card-many unions, retractions applied. */
   def runCurrent(store: Store, registry: SchemaRegistry, q: Query,
@@ -447,52 +440,10 @@ object Datalog {
       args: Map[String, Edn] = Map.empty): DataFrame =
     runOn(store.asOf(registry, tx), registry, q, args)
 
-  /** Datomic `d/qseq` — bounded-memory iteration over ANY query
-    * result: pages of at most `pageSize` rows, produced lazily by a
-    * sorted key-cursor (each page is one bounded Spark job: cursor
-    * filter → sort → limit, a TakeOrderedAndProject — no full-result
-    * collect, no unbounded driver state). The iteration order is the
-    * lexicographic order of the output columns (sorted by name), the
-    * deterministic analog of Datomic's index order; like Datomic's
-    * seq-of-tuples, the iteration is over the DISTINCT tuple set.
-    * Rows with null bindings are not supported (a null key cell makes
-    * the cursor comparison indeterminate) — Datalog output vars are
-    * non-null by construction except via `get-else` defaults, which
-    * bind real values. Compose with `run`/`runCurrent`/`runOn`:
-    * `qseq(Datalog.runCurrent(store, reg, q), 10000)`. */
-  def qseq(result: DataFrame, pageSize: Int): Iterator[org.apache.spark.sql.Row] =
-    qseqPages(result, pageSize).flatten
-
-  /** The page-granular form of [[qseq]] (last page may be empty). */
-  def qseqPages(result: DataFrame, pageSize: Int): Iterator[Seq[org.apache.spark.sql.Row]] = {
-    require(pageSize > 0, s"qseq page size must be positive, got $pageSize")
-    val cols = result.columns.toSeq.sorted
-    val df = result.select(cols.map(col): _*).distinct()
-    val key = struct(cols.map(col): _*)
-    new Iterator[Seq[org.apache.spark.sql.Row]] {
-      private var lastRow: Option[org.apache.spark.sql.Row] = None
-      private var exhausted = false
-      def hasNext: Boolean = !exhausted
-      def next(): Seq[org.apache.spark.sql.Row] = {
-        if (exhausted) throw new NoSuchElementException("qseq: past last page")
-        val afterCursor = lastRow match {
-          case None => df
-          case Some(r) =>
-            df.filter(key > struct(cols.indices.map(i => lit(r.get(i))): _*))
-        }
-        val page = afterCursor.orderBy(cols.map(col): _*).limit(pageSize).collect().toSeq
-        if (page.size < pageSize) exhausted = true
-        if (page.nonEmpty) lastRow = Some(page.last)
-        page
-      }
-    }
-  }
-
   /** Datomic client query-map `:offset`/`:limit` — ONE deterministic
-    * result page, the one-shot complement of [[qseq]]'s cursor
-    * iteration: rows ordered lexicographically over the output columns
-    * sorted by name (the qseq order, the deterministic analog of
-    * Datomic's index order) over the DISTINCT tuple set, skipping
+    * result page: rows ordered lexicographically over the output
+    * columns sorted by name (the deterministic analog of Datomic's
+    * index order) over the DISTINCT tuple set, skipping
     * `offset` rows and returning at most `limit` (−1 = unbounded, like
     * the client's `:limit -1`). Plans as a single
     * TakeOrderedAndProject(offset, limit) job — top-(offset+limit)
@@ -505,47 +456,6 @@ object Datalog {
     val off = if (offset > 0) ordered.offset(offset) else ordered
     if (limit >= 0) off.limit(limit) else off
   }
-
-  /** Datomic client `:timeout` — materialize the query result under a
-    * wall-clock guard: the page runs as its own job group and the
-    * whole group is CANCELLED (tasks interrupted) when the deadline
-    * passes, throwing `TimeoutException` like the client's aborted
-    * query. On success the returned frame is the REALIZED result
-    * (the client api returns realized collections too, which is why
-    * `:timeout` composes with `:limit`/`:offset` bounding the page —
-    * guard unbounded results with qseq instead). */
-  def withTimeout(result: DataFrame, timeoutMs: Long): DataFrame = {
-    if (timeoutMs <= 0) return result
-    val sc = result.sparkSession.sparkContext
-    val group = s"datalog-timeout-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    try {
-      val fut = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = {
-          // job-group membership is thread-local: set it on the thread
-          // that triggers the jobs, so cancelGroup hits exactly them
-          sc.setJobGroup(group, s"datalog :timeout ${timeoutMs}ms",
-            interruptOnCancel = true)
-          try result.localCheckpoint(true) finally sc.clearJobGroup()
-        }
-      })
-      try fut.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          sc.cancelJobGroup(group)
-          throw new java.util.concurrent.TimeoutException(
-            s"Datalog query exceeded :timeout ${timeoutMs}ms (jobs cancelled)")
-      }
-    } finally pool.shutdown()
-  }
-
-  /** The client QUERY-MAP form — `d/q {:query … :args … :offset …
-    * :limit … :timeout …}` over the current db: one-shot pagination
-    * plus the wall-clock guard, composed over [[runCurrent]]. */
-  def runMap(store: Store, registry: SchemaRegistry, q: Query,
-      args: Map[String, Edn] = Map.empty, offset: Int = 0, limit: Int = -1,
-      timeoutMs: Long = -1L): DataFrame =
-    withTimeout(page(runCurrent(store, registry, q, args), offset, limit), timeoutMs)
 
   /** Dedupe-then-project: vars appearing twice in one clause become
     * equality filters; each var surfaces once as `var_<name>`. */
@@ -903,6 +813,9 @@ object Datalog {
     }.get
   }
 
+  /** Divergence guard of a recursive rule component's fixpoint. */
+  private val maxRuleRounds = 100
+
   /** Evaluate every rule reachable from the query, strongly-
     * connected-component-wise in dependency order (Tarjan). A
     * non-recursive component evaluates once; a recursive component —
@@ -919,8 +832,7 @@ object Datalog {
     * Recursive calls must be TOP-LEVEL body clauses: a same-component
     * call under (not …)/(or …) is unstratified and rejected. */
   private def evalRules(srcEav: Option[String] => DataFrame, registry: SchemaRegistry,
-      rules: Map[String, Seq[RuleDef]],
-      maxIters: Int, rootClauses: Seq[Clause]): Map[String, DataFrame] = {
+      rules: Map[String, Seq[RuleDef]], rootClauses: Seq[Clause]): Map[String, DataFrame] = {
     import scala.collection.mutable
     // evaluate only rules reachable from the query's clauses — a rule
     // set is a library; unused (possibly expensive) rules cost nothing
@@ -1028,8 +940,8 @@ object Datalog {
         var iters = 0
         while (counts.values.sum > 0) {
           iters += 1
-          require(iters <= maxIters,
-            s"rules {${scc.mkString(", ")}} did not converge in $maxIters rounds")
+          require(iters <= maxRuleRounds,
+            s"rules {${scc.mkString(", ")}} did not converge in $maxRuleRounds rounds")
           // snapshot the round's inputs BEFORE any update — synchronous
           // iteration: round k+1 reads round k's deltas and totals
           val delta0 = scc.map(n => n -> lastDelta(n)).toMap
@@ -1070,10 +982,6 @@ object Datalog {
     cache.toMap
   }
 
-  /** Plan the query over any EAV-shaped DataFrame (e, a, v).
-    * `extraSrcs` supplies the additional databases a multi-source
-    * query names in `:in` (`$2`, `$docs`, …), each an EAV-shaped
-    * frame; patterns address them as `[$2 ?e :attr ?v]`. */
   /** One row of Datomic's `:query-stats`: the size of the growing
     * join frame AFTER clause `idx` evaluated. `rowsIn` of clause k is
     * `rowsOut` of clause k-1 (the first clause's input is the source
@@ -1091,63 +999,19 @@ object Datalog {
     * grain. */
   def runOnWithStats(eav: DataFrame, registry: SchemaRegistry, q: Query,
       args0: Map[String, Edn], rules: Map[String, Seq[RuleDef]] = Map.empty,
-      maxRuleIters: Int = 100,
       extraSrcs: Map[String, DataFrame] = Map.empty): (DataFrame, Seq[ClauseStat]) = {
     val stats = scala.collection.mutable.ArrayBuffer.empty[ClauseStat]
-    val out = runOn(eav, registry, q, args0, rules, maxRuleIters, extraSrcs,
+    val out = runOn(eav, registry, q, args0, rules, extraSrcs,
       observe = (i, c, df) => stats += ClauseStat(i, c.toString, df.count()))
     (out, stats.toSeq)
   }
 
-  /** One row of the `io-stats` analog: [[ClauseStat]] plus what the
-    * STORAGE layer served to evaluate the clause — rows emitted by the
-    * file scans feeding it and the post-pruning byte volume of the
-    * files those scans selected. Datomic's io-stats reports
-    * storage-segment reads per query; on Spark the equivalent
-    * observable is the scan-leaf metrics. Constructed (in-memory)
-    * sources have no file scans and report 0 bytes. */
-  final case class ClauseIoStat(idx: Int, clause: String, rowsOut: Long,
-      scanRows: Long, scanBytes: Long)
-
-  /** Datomic `io-stats` analog: [[runOnWithStats]]' per-clause frame
-    * sizes, extended with storage-read metrics pulled from each
-    * clause frame's EXECUTED plan (numOutputRows / filesSize on the
-    * parquet scan leaves, after partition and row-group pruning). The
-    * count executes through our own QueryExecution so the metrics are
-    * read synchronously from the very plan that ran — no listener
-    * race. Same cost model as query-stats: one bounded job per
-    * clause, a DEBUG surface. */
-  def runOnWithIoStats(eav: DataFrame, registry: SchemaRegistry, q: Query,
-      args0: Map[String, Edn], rules: Map[String, Seq[RuleDef]] = Map.empty,
-      maxRuleIters: Int = 100,
-      extraSrcs: Map[String, DataFrame] = Map.empty): (DataFrame, Seq[ClauseIoStat]) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => leaves(a.executedPlan)
-      case s: QueryStageExec => leaves(s.plan)
-      case o if o.children.isEmpty => Seq(o)
-      case o => o.children.flatMap(leaves)
-    }
-    val stats = scala.collection.mutable.ArrayBuffer.empty[ClauseIoStat]
-    val out = runOn(eav, registry, q, args0, rules, maxRuleIters, extraSrcs,
-      observe = (i, c, df) => {
-        val qe = df.groupBy().count().queryExecution
-        val rowsOut = qe.executedPlan.executeCollect()(0).getLong(0)
-        val scans = leaves(qe.executedPlan).collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }
-        def metric(name: String) =
-          scans.flatMap(_.metrics.get(name)).map(_.value).sum
-        stats += ClauseIoStat(i, c.toString, rowsOut,
-          metric("numOutputRows"), metric("filesSize"))
-      })
-    (out, stats.toSeq)
-  }
-
+  /** Plan the query over any EAV-shaped DataFrame (e, a, v).
+    * `extraSrcs` supplies the additional databases a multi-source
+    * query names in `:in` (`$2`, `$docs`, …), each an EAV-shaped
+    * frame; patterns address them as `[$2 ?e :attr ?v]`. */
   def runOn(eav: DataFrame, registry: SchemaRegistry, q: Query,
       args0: Map[String, Edn], rules: Map[String, Seq[RuleDef]] = Map.empty,
-      maxRuleIters: Int = 100,
       extraSrcs: Map[String, DataFrame] = Map.empty,
       observe: (Int, Clause, DataFrame) => Unit = (_, _, _) => ()): DataFrame = {
     val missingSrcs = q.srcs.filterNot(extraSrcs.contains)
@@ -1203,7 +1067,7 @@ object Datalog {
       case TVar(n) if args.contains(n) && !collSet.contains(n) => TConst(args(n))
       case other => other
     }
-    val relations = evalRules(srcEav, registry, rules, maxRuleIters, q.patterns)
+    val relations = evalRules(srcEav, registry, rules, q.patterns)
     val joined0 = evalClauses(srcEav, registry, q.patterns, resolve,
       name => relations.getOrElse(name,
         throw new IllegalArgumentException(s"unknown rule: $name (no rule set passed?)")),

@@ -41,7 +41,7 @@ object Pull {
     * truncation); `None` means Datomic's implicit [[DefaultLimit]]
     * applies, `Some(NoLimit)` is the parsed `:limit nil` (no cap).
     * `default` coalesces a missing card-one value, `as` renames the
-    * output column, `xform` names a REGISTERED transform applied to
+    * output column, `xform` names a whitelisted transform applied to
     * stored values post-read (per element on card-many; the default
     * passes through untransformed, as in Datomic). */
   final case class PAttr(attr: String, limit: Option[Int] = None,
@@ -67,16 +67,12 @@ object Pull {
     * contents. */
   case object PWild extends Spec
 
-  /** `:xform` transform registry — the `:db/fn` discipline applied to
-    * pull: transforms run by NAME from a registered whitelist, never
-    * from arbitrary query text (a query string can only reference
-    * what the application installed). Registered fns must be
-    * null-preserving Column transforms (all builtins are); they apply
-    * to STORED values only — `:default` fills pass through untouched,
-    * as in Datomic. Seeded with the portable basics a porting user
-    * expects; `registerXform` installs custom ones. */
-  private val xforms = scala.collection.concurrent.TrieMap[String,
-      org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+  /** `:xform` transforms — the `:db/fn` discipline applied to pull:
+    * transforms run by NAME from a fixed whitelist, never from
+    * arbitrary query text. Each is a null-preserving Column transform
+    * applied to STORED values only — `:default` fills pass through
+    * untouched, as in Datomic. */
+  private val xforms = Map[String, org.apache.spark.sql.Column => org.apache.spark.sql.Column](
     "str/upper-case" -> (c => upper(c)),
     "str/lower-case" -> (c => lower(c)),
     "str/trim" -> (c => trim(c)),
@@ -84,14 +80,9 @@ object Pull {
     "parse-long" -> (c => c.cast("long")),
     "parse-double" -> (c => c.cast("double")))
 
-  def registerXform(name: String,
-      fn: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Unit =
-    xforms.put(name, fn)
-
   private def xformFn(name: String): org.apache.spark.sql.Column => org.apache.spark.sql.Column =
     xforms.getOrElse(name, throw new IllegalArgumentException(
-      s"pull :xform '$name' is not registered (have: ${xforms.keys.toSeq.sorted.mkString(", ")}); " +
-        "install it with Pull.registerXform"))
+      s"pull :xform '$name' is not registered (have: ${xforms.keys.toSeq.sorted.mkString(", ")})"))
 
   def parsePattern(text: String): Seq[Spec] = parsePattern(Edn.parse(text))
 
@@ -167,27 +158,6 @@ object Pull {
   def pull(store: Store, registry: SchemaRegistry, patternEdn: String,
       roots: DataFrame): DataFrame =
     pullFrom(store.current(registry), registry, parsePattern(patternEdn), roots)
-
-  /** `d/entity` analog: every attribute of the root entities as one
-    * wide row each — pull `[*]`. */
-  def entity(store: Store, registry: SchemaRegistry, roots: DataFrame): DataFrame =
-    pullFrom(store.current(registry), registry, Seq(PWild), roots)
-
-  /** `d/pull-many` — pull one pattern for an explicit entity-id list.
-    * The engine is set-oriented already (pullFrom hydrates a whole
-    * root DataFrame at once); Datomic returns results POSITIONALLY
-    * aligned with the input list, so the result carries an input
-    * ordinal and is sorted by it — `collect()` yields rows in input
-    * order (duplicated ids pull once, appear per occurrence). */
-  def pullMany(store: Store, registry: SchemaRegistry, patternEdn: String,
-      entityIds: Seq[String]): DataFrame = {
-    val spark = store.eav.sparkSession
-    import spark.implicits._
-    val ords = entityIds.zipWithIndex.toDF("e", "__ord")
-    val pulled = pull(store, registry, patternEdn,
-      entityIds.distinct.toDF("e"))
-    ords.join(pulled, Seq("e"), "left").orderBy(col("__ord")).drop("__ord")
-  }
 
   /** Pull over an already-resolved current-state EAV (e, a, v). */
   def pullFrom(cur: DataFrame, registry: SchemaRegistry, pattern: Seq[Spec],

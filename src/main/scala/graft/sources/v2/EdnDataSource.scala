@@ -48,8 +48,8 @@ object EdnDataSource {
   private[v2] def paths(properties: util.Map[String, String]): Seq[String] = {
     val p = Option(properties.get("paths"))
       .map { json => // Spark encodes multi-path load() as a JSON array
-        json.stripPrefix("[").stripSuffix("]").split(",")
-          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
+        new com.fasterxml.jackson.databind.ObjectMapper()
+          .readValue(json, classOf[Array[String]]).toSeq
       }
       .getOrElse(Option(properties.get("path")).toSeq)
     if (p.isEmpty) throw new IllegalArgumentException("edn source requires a path")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Datomic's covering indexes as PHYSICAL parquet layouts. The live
-  * store answers `index-range`/`datoms` by filtering the log view
+  * store answers `index-range` by filtering the log view
   * ([[Store.indexRange]]); at 100 TB the index must be a LAYOUT, not
   * a filter — Datomic itself keeps EAVT/AEVT/AVET/VAET as separately
   * sorted segment trees precisely so a range read touches only the

@@ -191,55 +191,6 @@ final class Store(spark: SparkSession, val dir: String) {
   def asOf(registry: SchemaRegistry, tx: Long): DataFrame =
     Store.resolve(eav.filter(col("tx") <= tx),
       registry.attrs.values.filter(_.many).map(_.ident).toSeq)
-
-  /** Datoms asserted after `tx` (Datomic `d/since` shape) — the
-    * incremental-consumer view: what changed since my last read. */
-  def since(tx: Long): DataFrame = eav.filter(col("tx") > tx)
-
-  /** Wall-clock → tx resolution (Datomic accepts a `java.util.Date`
-    * anywhere a tx id is accepted): the latest tx whose
-    * `:db/txInstant` is at-or-before `date`. The loader stamps one
-    * txInstant datom per transaction entity; this is one aggregate
-    * over that attribute's pruned partition. Returns -1 when `date`
-    * precedes every transaction (an as-of there is the empty db). */
-  def txAtInstant(date: java.util.Date): Long = Store.txAtInstant(eav, date)
-
-  /** Datoms in the half-open tx interval [from, until) — Datomic's
-    * `d/tx-range` log walk; both bounds prune parquet row groups. */
-  def txRange(from: Long, until: Long): DataFrame =
-    eav.filter(col("tx") >= from && col("tx") < until)
-
-  /** Datomic `d/basis-t`: the latest transaction in this database
-    * value (0 for an empty store). One aggregate over the tx column —
-    * parquet column stats answer it without reading data pages. */
-  def basisT: Long = {
-    val r = eav.agg(max(col("tx"))).collect()(0)
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
-
-  /** Full assertion history (Datomic `d/history` analog). The log IS
-    * the history — the log is append-only, like the reference
-    * importer's (upserts supersede by tx; nothing is rewritten in
-    * place). */
-  def history: DataFrame = eav
-
-  /** History honoring `:db/noHistory` (Datomic's churn valve: set it
-    * on counters/heartbeats so a 100 TB log doesn't retain every
-    * tick). For noHistory attrs only the CURRENTLY-VISIBLE datoms
-    * survive — superseded card-one values, retracted values, and
-    * retraction markers are all absent, exactly as if the old index
-    * segments were dropped; every other attr keeps its full history.
-    * `current`/`asOf` semantics are unchanged at the latest horizon
-    * (Datomic does not promise pre-supersession asOf reads of a
-    * noHistory attr, and neither do we — they may or may not
-    * resolve, here they don't once this view is the source). The
-    * noHistory subset is one keyed agg over those attrs' pruned
-    * partitions; shuffle ∝ their datoms, not the log. */
-  def history(registry: SchemaRegistry): DataFrame = {
-    val nh = registry.attrs.values.filter(_.noHistory).map(_.ident).toSeq
-    if (nh.isEmpty) eav else Store.dropNoHistory(eav, nh,
-      registry.attrs.values.filter(a => a.noHistory && a.many).map(_.ident).toSeq)
-  }
 }
 
 object Store {
@@ -249,9 +200,9 @@ object Store {
     * pruning like any numeric range). */
   val txInstantAttr = "db/txInstant"
 
-  /** Static `d/tx-range` over any log frame (instance method
-    * delegates the same filter to the parquet-backed eav): datoms in
-    * the half-open tx interval [from, until). On the persisted store
+  /** Datomic `d/tx-range` over any log frame (`Store.eav` or a
+    * synthesized one): datoms in the half-open tx interval
+    * [from, until). On the persisted store
     * both bounds prune row groups via the tx column's min/max stats,
     * so a log-tail walk reads the tail, not the log
     * (reference: the importer's `already-transacted` recovery scans
@@ -290,8 +241,11 @@ object Store {
   /** Recover the in-partition t from an eid. */
   def tOf(eid: Column): Column = eid.cast("long").bitwiseAND(lit(partSpan - 1))
 
-  /** Static core of date→tx resolution (instance `txAtInstant`
-    * delegates; harness queries use it over synthesized logs). */
+  /** Wall-clock → tx resolution over any log frame (Datomic accepts a
+    * `java.util.Date` anywhere a tx id is accepted): the latest tx
+    * whose `:db/txInstant` is at-or-before `date`, one aggregate over
+    * that attribute's pruned partition. Returns -1 when `date` precedes
+    * every transaction (an as-of there is the empty db). */
   def txAtInstant(log: DataFrame, date: java.util.Date): Long = {
     val r = log.filter(col("a") === txInstantAttr && col("v_long") <= date.getTime)
       .agg(max(col("tx"))).collect()(0)
@@ -587,98 +541,6 @@ object Store {
       .join(page, Seq("e"))
   }
 
-  /** Datomic `d/db-stats` analog: total datom count + per-attribute
-    * datom/entity counts over a database value. One aggregation over
-    * the (attribute-partitioned) scan. */
-  def dbStats(db: DataFrame): DataFrame =
-    db.groupBy(col("a").as("attr"))
-      .agg(count(lit(1)).as("n_datoms"), countDistinct(col("e")).as("n_entities"))
-
-  /** Datomic `d/datoms` — raw index access: the datom set in one of
-    * the four index orders, optionally narrowed by leading components
-    * (e for EAVT, a for AEVT/AVET, v for VAET — exactly the prefixes
-    * the corresponding Datomic index accepts). On the attribute-
-    * partitioned log an `a` component is partition pruning and an
-    * `e`/`v` component rides the parquet scan as a pushed filter; the
-    * order-by materializes only when the caller actually iterates in
-    * index order. */
-  def datoms(eav: DataFrame, index: String,
-      e: Option[String] = None, a: Option[String] = None,
-      v: Option[String] = None): DataFrame = {
-    val filtered = Seq(
-      e.map(col("e") === _), a.map(col("a") === _), v.map(col("v") === _))
-      .flatten.foldLeft(eav)((df, p) => df.filter(p))
-    index match {
-      case "eavt" => filtered.orderBy(col("e"), col("a"), col("v"), col("tx"))
-      case "aevt" => filtered.orderBy(col("a"), col("e"), col("v"), col("tx"))
-      case "avet" => filtered.orderBy(col("a"), col("v"), col("e"), col("tx"))
-      case "vaet" => filtered.filter(col("is_ref"))
-        .orderBy(col("v"), col("a"), col("e"), col("tx"))
-      case other => throw new IllegalArgumentException(
-        s"unknown index $other (want eavt|aevt|avet|vaet)")
-    }
-  }
-
-  /** Datomic schema-as-data (`:db.install/attribute`): attributes are
-    * INSTALLED by transacting their definition maps — `{:db/ident
-    * :doc/tags, :db/valueType :db.type/string, :db/cardinality
-    * :db.cardinality/many}` expands (`Datoms.entityDatoms`) to plain
-    * datoms under the `db/…` attributes, appended like any other —
-    * and the registry that drives
-    * upsert/resolution semantics is DERIVED from the db value, so
-    * schema lives in the database like Datomic's, not in a config
-    * file. Driver-side collect over the `db/…` attribute partitions
-    * only (schema is bounded metadata; the reference driver-parses its
-    * dictionary types the same way — importer.clj:271-277 transacts
-    * its import-schema first for exactly this reason). */
-  def schemaFromDb(db: DataFrame): graft.model.SchemaRegistry = {
-    import graft.model.AttrDef
-    val schemaAttrs = Seq("db/ident", "db/valueType", "db/cardinality",
-      "db/unique", "db/isComponent", "db/fulltext", "db/noHistory",
-      "db/tupleTypes", "db/tupleAttrs")
-    // The canonical input is a RESOLVED current-state view (one row
-    // per (e, a)); fed a raw log with re-asserted schema datoms the
-    // survivor per (e, a) must not depend on collect order, so pick
-    // max-(tx, v) — resolve's own card-one tiebreak (tx = 0 when the
-    // input is already resolved and carries no tx column).
-    val txCol = if (db.columns.contains("tx")) col("tx") else lit(0L)
-    val rows = db.filter(col("a").isin(schemaAttrs: _*))
-      .select(col("e"), col("a"), col("v"), txCol.as("tx")).collect()
-    val defs = rows.groupBy(_.getString(0)).values.flatMap { ds =>
-      val m = ds.groupBy(_.getString(1)).map { case (a, rs) =>
-        a -> rs.maxBy(r => (r.getLong(3), r.getString(2))).getString(2)
-      }
-      m.get("db/ident").map { ident =>
-        AttrDef(
-          ident = ident,
-          valueType = m.get("db/valueType")
-            .map(v => v.substring(v.lastIndexOf('/') + 1)).getOrElse("string"),
-          many = m.get("db/cardinality").contains("db.cardinality/many"),
-          uniqueIdentity = m.get("db/unique").contains("db.unique/identity"),
-          uniqueValue = m.get("db/unique").contains("db.unique/value"),
-          component = m.get("db/isComponent").contains("true"),
-          fulltext = m.get("db/fulltext").contains("true"),
-          noHistory = m.get("db/noHistory").contains("true"),
-          tupleTypes = m.get("db/tupleTypes").toSeq.flatMap { txt =>
-            graft.edn.Edn.parse(txt) match {
-              case graft.edn.Edn.EVec(ts) =>
-                ts.collect { case k: graft.edn.Edn.EKw => k.name }
-              case _ => Seq.empty
-            }
-          },
-          tupleAttrs = m.get("db/tupleAttrs").toSeq.flatMap { txt =>
-            graft.edn.Edn.parse(txt) match {
-              case graft.edn.Edn.EVec(ts) =>
-                ts.collect { case k: graft.edn.Edn.EKw => k.qualified }
-              case _ => Seq.empty
-            }
-          })
-      }
-    }
-    new graft.model.SchemaRegistry(
-      defs.map(d => d.ident -> d).toMap)
-  }
-
   /** Datomic `d/seek-datoms` — start at an index POINT and iterate to
     * the index's end, crossing component boundaries (the semantic that
     * separates it from `d/datoms`, whose components are equality
@@ -914,30 +776,6 @@ object Store {
     }
   }
 
-  /** Typed SCALAR render into the store's `v` text — the single-value
-    * mirror of [[tupleDatoms]]'s slot lanes, for loaders asserting
-    * `:db.type/bytes` / bigint / bigdec attrs (the established types
-    * render where they always did: longs/doubles/booleans via plain
-    * `cast("string")`, instants as ISO-8601 with epoch-millis in
-    * `v_long`). [[decodeScalar]] is the inverse. */
-  def encodeScalar(c: Column, valueType: String): Column = valueType match {
-    case "bytes" => base64(c.cast("binary"))
-    case "bigint" => c.cast("decimal(38,0)").cast("string")
-    case "bigdec" => c.cast("decimal(38,18)").cast("string")
-    case _ => c.cast("string")
-  }
-
-  /** Decode a typed scalar from `v` text (see [[encodeScalar]]). */
-  def decodeScalar(v: Column, valueType: String): Column = valueType match {
-    case "bytes" => unbase64(v)
-    case "bigint" => v.cast("decimal(38,0)")
-    case "bigdec" => v.cast("decimal(38,18)")
-    case "long" | "ref" => v.cast("long")
-    case "double" | "float" => v.cast("double")
-    case "boolean" => v.cast("boolean")
-    case _ => v
-  }
-
   /** `:db.fn/retractEntity`: retract a set of entities wholesale at
     * `tx`. Generates retraction datoms (op = false) for
     *  - every current datom whose E is a target,
@@ -1036,29 +874,6 @@ object Store {
       lit(tx).as("tx"), lit(true).as("op"))
     keep.unionByName(audit)
   }
-
-  /** Datomic `d/squuid`: a time-prefixed UUID — the top 32 bits are
-    * the epoch SECONDS, the rest random — so ids created over time
-    * sort roughly by creation moment (index locality for UUID keys,
-    * Datomic's documented motivation for squuid over random UUIDs).
-    * RFC-4122 version-4/variant-2 bits are set like
-    * `UUID.randomUUID`. Loader entity ids stay deterministic strings
-    * by design (`Datoms`); this is the API-surface helper a porting
-    * user reaches for. */
-  def squuid(): java.util.UUID = squuid(System.currentTimeMillis())
-
-  def squuid(epochMillis: Long): java.util.UUID = {
-    val rnd = java.util.concurrent.ThreadLocalRandom.current()
-    val msb = ((epochMillis / 1000L) << 32) | (rnd.nextLong() & 0xFFFFFFFFL)
-    val msbV = (msb & ~0x000000000000F000L) | 0x0000000000004000L // version 4
-    val lsb = (rnd.nextLong() >>> 2) | 0x8000000000000000L // variant 2
-    new java.util.UUID(msbV, lsb)
-  }
-
-  /** Datomic `d/squuid-time-millis`: the creation time encoded in a
-    * squuid (second precision). */
-  def squuidTimeMillis(u: java.util.UUID): Long =
-    (u.getMostSignificantBits >>> 32) * 1000L
 
   import org.apache.spark.sql.types._
   val schema: StructType = StructType(Seq(

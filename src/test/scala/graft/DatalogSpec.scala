@@ -35,7 +35,7 @@ class DatalogSpec extends AnyFunSuite {
       """[:find ?attr ?unique
         | :where [?e :db/unique ?unique]
         |        [?e :db/ident ?attr]]""".stripMargin)
-    val rows = Datalog.run(store, registry, q).collect()
+    val rows = Datalog.runOn(store.eav, registry, q, Map.empty).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows("artist/gid") == "db.unique/identity")
     assert(rows("mbrainz.initial-import/batch-id") == "db.unique/value")
@@ -49,7 +49,7 @@ class DatalogSpec extends AnyFunSuite {
         | :in $ ?attr
         | :where [?e ?attr _]]""".stripMargin)
     def countFor(attr: String): Long =
-      Datalog.run(store, registry, q, Map("attr" -> Edn.kw(attr))).collect()(0).getLong(0)
+      Datalog.runOn(store.eav, registry, q, Map("attr" -> Edn.kw(attr))).collect()(0).getLong(0)
     assert(countFor("artist/gid") == fx.truth.artistGids.size)
     assert(countFor("label/gid") == fx.truth.labelGids.size)
     assert(countFor("abstractRelease/gid") == fx.truth.areleaseGids.size)
@@ -58,7 +58,7 @@ class DatalogSpec extends AnyFunSuite {
   test("explore query 3: all batch ids (wildcard entity)") {
     val q = Datalog.parse(
       "[:find ?v :where [_ :mbrainz.initial-import/batch-id ?v]]")
-    val ids = Datalog.run(store, registry, q).collect().map(_.getString(0)).toSet
+    val ids = Datalog.runOn(store.eav, registry, q, Map.empty).collect().map(_.getString(0)).toSet
     assert(ids.contains("artists-1") && ids.contains("schema-1"))
     // import-schema + ⌈rows / 1000⌉ batches per type
     assert(ids.size == 1 + types.map(fx.batches(_, 1000)).sum)
@@ -70,7 +70,7 @@ class DatalogSpec extends AnyFunSuite {
       s"""[:find ?name
         | :where [?e :artist/country :country/$code]
         |        [?e :artist/name ?name]]""".stripMargin)
-    val names = Datalog.run(store, registry, q).collect().map(_.getString(0))
+    val names = Datalog.runOn(store.eav, registry, q, Map.empty).collect().map(_.getString(0))
     assert(names.contains(fx.pickedField("name")))
     val expected = fx.artists.filter(fx.field(_, "country").contains(code))
       .map(fx.field(_, "name").get).distinct
@@ -82,7 +82,7 @@ class DatalogSpec extends AnyFunSuite {
       """[:find ?type (count ?e) (min ?year)
         | :where [?e :artist/type ?type]
         |        [?e :artist/startYear ?year]]""".stripMargin)
-    val rows = Datalog.run(store, registry, q).collect()
+    val rows = Datalog.runOn(store.eav, registry, q, Map.empty).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toList
     val person = rows.find(_._1 == "ident|artist.type/person").get
     val persons = fx.artists.filter(a => fx.field(a, "type").contains("Person") &&
@@ -97,7 +97,7 @@ class DatalogSpec extends AnyFunSuite {
         | :where [?r :release/artists ?a]
         |        [?r :release/name ?release-name]
         |        [?a :artist/name ?artist-name]]""".stripMargin)
-    val rows = Datalog.run(store, registry, q).collect()
+    val rows = Datalog.runOn(store.eav, registry, q, Map.empty).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     // over the log: a duplicate-gid release contributes every name it
     // was ever asserted with
@@ -113,7 +113,7 @@ class DatalogSpec extends AnyFunSuite {
 
   test("unbound :in parameter is a clear error") {
     val q = Datalog.parse("[:find (count ?e) :in $ ?attr :where [?e ?attr _]]")
-    val e = intercept[IllegalArgumentException](Datalog.run(store, registry, q))
+    val e = intercept[IllegalArgumentException](Datalog.runOn(store.eav, registry, q, Map.empty))
     assert(e.getMessage.contains("unbound"))
   }
 
@@ -895,68 +895,16 @@ class DatalogSpec extends AnyFunSuite {
     assert(stats(1).clause.contains("region"), stats(1).clause)
   }
 
-  test("io-stats: per-clause storage reads are non-zero over a parquet-backed db") {
-    import spark.implicits._
-    // the io surface only exists over REAL storage — write the datoms
-    // as parquet first (the harness's constructed unions report 0
-    // bytes by design, documented on ClauseIoStat)
-    val dir = java.nio.file.Files.createTempDirectory("iostats").toString + "/eav"
-    Seq(
-      ("n1", "x/name", "a"), ("n2", "x/name", "b"), ("n3", "x/name", "c"),
-      ("n1", "x/region", "r0"), ("n2", "x/region", "r0"), ("n3", "x/region", "r1"))
-      .toDF("e", "a", "v").write.parquet(dir)
-    val eav = spark.read.parquet(dir)
-    val q = Datalog.parse(
-      """[:find ?e ?n
-        | :where [?e :x/name ?n]
-        |        [?e :x/region "r0"]
-        |        [(!= ?n "a")]]""".stripMargin)
-    val (out, io) = Datalog.runOnWithIoStats(eav, emptyRegistry, q, Map.empty)
-    assert(out.collect().map(_.getString(0)).toSeq === Seq("n2"))
-    // the frame sizes must agree exactly with the query-stats surface
-    assert(io.map(s => (s.idx, s.rowsOut)) === Seq((0, 3L), (1, 2L), (2, 1L)), io.toString)
-    // and every clause's evaluation actually read storage: bytes from
-    // the pruned parquet selection, rows from the scan leaves
-    io.foreach { s =>
-      assert(s.scanBytes > 0L, s"clause ${s.idx} read no bytes: $s")
-      assert(s.scanRows > 0L, s"clause ${s.idx} scanned no rows: $s")
-    }
-    // clause 0 (one attr pattern) cannot scan fewer rows than it emits
-    assert(io(0).scanRows >= io(0).rowsOut, io(0).toString)
-  }
-
-  test("qseq: page-stitched iteration equals the one-shot result (3 pages)") {
+  test("query-map :offset/:limit: one deterministic page in sorted-column order") {
     val q = Datalog.parse(
       """[:find ?name ?sort
         | :where [?e :artist/name ?name]
         |        [?e :artist/sortName ?sort]]""".stripMargin)
-    val result = Datalog.run(store, registry, q)
-    val oneShot = result.distinct().collect()
-      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(oneShot.size >= 9, s"need enough rows for 3 pages, got ${oneShot.size}")
-    val pageSize = oneShot.size / 3 + 1 // forces exactly 3 pages
-    val pages = Datalog.qseqPages(result, pageSize)
-      .filter(_.nonEmpty).toSeq
-    assert(pages.size === 3, s"expected 3 pages, got ${pages.size}")
-    assert(pages.forall(_.size <= pageSize))
-    // stitched pages = the full distinct result, in lexicographic order
-    val stitched = pages.flatten.map(r => (r.getString(0), r.getString(1))).toSeq
-    assert(stitched === oneShot)
-    // the flat iterator agrees
-    assert(Datalog.qseq(result, pageSize)
-      .map(r => (r.getString(0), r.getString(1))).toSeq === oneShot)
-  }
-
-  test("query-map :offset/:limit: one deterministic page, consistent with qseq order") {
-    val q = Datalog.parse(
-      """[:find ?name ?sort
-        | :where [?e :artist/name ?name]
-        |        [?e :artist/sortName ?sort]]""".stripMargin)
-    val result = Datalog.run(store, registry, q)
+    val result = Datalog.runOn(store.eav, registry, q, Map.empty)
     val all = result.distinct().collect()
       .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
     assert(all.size >= 5)
-    // offset+limit slices the same total order qseq iterates
+    // offset+limit slices the sorted distinct result
     val page = Datalog.page(result, offset = 2, limit = 2).collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(page === all.slice(2, 4), s"page mismatch: $page vs ${all.slice(2, 4)}")
@@ -964,34 +912,10 @@ class DatalogSpec extends AnyFunSuite {
     val tail = Datalog.page(result, offset = all.size - 1, limit = -1).collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(tail === all.takeRight(1))
-    // runMap composes the same page over the current db
-    val viaMap = Datalog.runMap(store, registry, q, offset = 2, limit = 2).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
-    val allCur = Datalog.runCurrent(store, registry, q).distinct().collect()
-      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(viaMap === allCur.slice(2, 4))
     // the page plans as one bounded TakeOrderedAndProject job
     val plan = Datalog.page(result, 2, 2).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan.take(500))
     intercept[IllegalArgumentException](Datalog.page(result, -1, 10))
-  }
-
-  test("query-map :timeout: generous deadline returns the realized page; tight one cancels") {
-    import org.apache.spark.sql.functions._
-    val q = Datalog.parse("[:find ?name :where [?e :artist/name ?name]]")
-    val paged = Datalog.page(Datalog.run(store, registry, q), 0, 5)
-    val ok = Datalog.withTimeout(paged, timeoutMs = 120000L)
-    assert(ok.count() == 5)
-    // a frame whose evaluation sleeps per partition: the 50 ms deadline
-    // cannot be met, the job group is cancelled, TimeoutException thrown
-    import spark.implicits._
-    val slow = spark.range(0, 8, 1, 8).as[Long]
-      .map { i => Thread.sleep(2000L); i }.toDF("x")
-    val t0 = System.nanoTime()
-    intercept[java.util.concurrent.TimeoutException](
-      Datalog.withTimeout(slow, timeoutMs = 50L))
-    assert((System.nanoTime() - t0) / 1e6 < 10000,
-      "cancellation must not wait for the slow job to finish")
   }
 
   test("recursive call under (not …) is rejected as unstratified") {

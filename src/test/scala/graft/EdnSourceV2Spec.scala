@@ -37,13 +37,17 @@ class EdnSourceV2Spec extends AnyFunSuite {
   }
 
   test("multi-file scan keeps total order via row_idx") {
-    val dir = java.nio.file.Files.createTempDirectory("multi")
-    java.nio.file.Files.write(dir.resolve("a.edn"), "{:gid \"g1\" :name \"n1\" :sortname \"s1\"}\n".getBytes)
-    java.nio.file.Files.write(dir.resolve("b.edn"), "{:gid \"g2\" :name \"n2\" :sortname \"s2\"}\n".getBytes)
-    val df = spark.read.format("edn").schema(EdnSource.schemaFor(Mbrainz.artists))
-      .load(dir.resolve("a.edn").toString, dir.resolve("b.edn").toString)
-    val rows = df.orderBy("row_idx").select("name").collect().map(_.getString(0))
-    assert(rows.toSeq == Seq("n1", "n2"))
+    val tmp = java.nio.file.Files.createTempDirectory("multi")
+    // Spark passes the paths as a JSON array: a comma in a path must
+    // not split it
+    for (dir <- Seq(tmp, java.nio.file.Files.createDirectory(tmp.resolve("a,b")))) {
+      java.nio.file.Files.write(dir.resolve("a.edn"), "{:gid \"g1\" :name \"n1\" :sortname \"s1\"}\n".getBytes)
+      java.nio.file.Files.write(dir.resolve("b.edn"), "{:gid \"g2\" :name \"n2\" :sortname \"s2\"}\n".getBytes)
+      val df = spark.read.format("edn").schema(EdnSource.schemaFor(Mbrainz.artists))
+        .load(dir.resolve("a.edn").toString, dir.resolve("b.edn").toString)
+      val rows = df.orderBy("row_idx").select("name").collect().map(_.getString(0))
+      assert(rows.toSeq == Seq("n1", "n2"), dir.toString)
+    }
   }
 
   test("a directory reads its visible files in name order, .edn.gz among them") {

@@ -198,8 +198,8 @@ class LoaderSpec extends AnyFunSuite {
     val loader = new Loader(spark, inlineRegistry, perFile)
     val each = inlineTypes.map(t => t -> loader.loadBatchFile(t, s"$dir/$t.edn")).toMap
     assert(txesOf(all) == Map("artists" -> 4L, "labels" -> 3L, "releases" -> 5L))
-    assert(all.map { case (t, s) => t -> (s.txes, s.datoms, s.rejected) } ==
-      each.map { case (t, s) => t -> (s.txes, s.datoms, s.rejected) })
+    assert(all.map { case (t, s) => t -> (s.txes, s.datoms) } ==
+      each.map { case (t, s) => t -> (s.txes, s.datoms) })
     // artists: 4 txes × (3 × 2 attrs + batch id + txInstant) datoms
     assert(all("artists").datoms == 4 * 8)
     assert(logRows(onePass) == logRows(perFile))
@@ -339,18 +339,6 @@ class LoaderSpec extends AnyFunSuite {
     assert(logRows(store) == logRows(full))
   }
 
-  test("attrPreds rejections are counted against the type they came from") {
-    import org.apache.spark.sql.functions.col
-    val dir = inlineBatches()
-    val store = freshStore()
-    val preds = Map("label/name" -> Seq("no-z-names" -> !col("v").startsWith("z")))
-    val stats = new Loader(spark, inlineRegistry, store, attrPreds = preds).loadAll(dir)
-    assert(stats.map { case (t, s) => t -> s.rejected } ==
-      Map("artists" -> 0L, "labels" -> 1L, "releases" -> 0L))
-    assert(stats("labels").datoms == 3 * 8 - 1)
-    assert(store.eav.filter(col("a") === "label/name" && col("v").startsWith("z")).count() == 0)
-  }
-
   test("load rejects a type named twice") {
     val dir = inlineBatches()
     val loader = new Loader(spark, inlineRegistry, freshStore())
@@ -365,6 +353,14 @@ class LoaderSpec extends AnyFunSuite {
     assert(Manifest.parse(base + "[:artists :labels]}").importOrder == Seq("artists", "labels"))
     val e = intercept[IllegalArgumentException](Manifest.parse(base + "[:artists :labels :artists]}"))
     assert(e.getMessage.contains("artists"))
+    // a :concurrency past Int.MaxValue is refused, not wrapped around
+    for (n <- Seq("2147483648", "4294967297")) {
+      val c = intercept[IllegalArgumentException](
+        Manifest.parse(s"""{:store-dir "s", :basedir "b", :concurrency $n}"""))
+      assert(c.getMessage.contains(":concurrency must be a positive int"), c.getMessage)
+    }
+    assert(Manifest.parse("""{:store-dir "s", :basedir "b", :concurrency 2147483647}""")
+      .concurrency == Int.MaxValue)
   }
 
   test("retry: transient failures back off then succeed") {

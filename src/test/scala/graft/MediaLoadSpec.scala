@@ -63,7 +63,7 @@ class MediaLoadSpec extends AnyFunSuite {
         | :where [?r :release/media ?m]
         |        [?m :medium/tracks ?t]
         |        [?t :track/name ?track-name]]""".stripMargin)
-    val names = Datalog.run(store, registry, q).collect().map(_.getString(0)).toSet
+    val names = Datalog.runOn(store.eav, registry, q, Map.empty).collect().map(_.getString(0)).toSet
     assert(names == Set("Track A", "Track B"))
   }
 }

@@ -318,19 +318,6 @@ class PlanSpec extends AnyFunSuite {
       s"benchmark gram set must broadcast:\n${p.take(800)}")
   }
 
-  test("qseq: each page is a TakeOrderedAndProject, never a full sort") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, struct}
-    val df = (1 to 100).map(i => (i, s"v$i")).toDF("a", "b")
-    // reproduce the page plan qseqPages builds (cursor + sort + limit)
-    val page = df.filter(struct(col("a"), col("b")) >
-        struct(lit(50), lit("v50")))
-      .orderBy(col("a"), col("b")).limit(10)
-    val p = page.queryExecution.executedPlan.toString
-    assert(p.contains("TakeOrderedAndProject"),
-      s"page must plan as top-k, not global sort:\n${p.take(600)}")
-  }
-
   test("d29: prefix-sum packing has no unpartitioned window") {
     val p = plan(graft.queries.Curate.d29_sequence_pack(spark, sf))
     assert(!(p.contains("Window") && p.contains("SinglePartition")),

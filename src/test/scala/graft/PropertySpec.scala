@@ -72,6 +72,18 @@ class PropertySpec extends AnyFunSuite {
       s"approx_count_distinct drifted past the 5% bound: $row")
   }
 
+  /** The brute-force visibility model: a value (e, a, v) is visible
+    * iff its latest op is an assert (same-tx tie → assert wins,
+    * matching max_by's struct tiebreak where op=true > op=false).
+    * Maps each visible value to its last assert tx. */
+  private def visibleModel(rows: Seq[(String, String, String, Long, Boolean)])
+      : Map[(String, String, String), Long] =
+    rows.groupBy(r => (r._1, r._2, r._3)).flatMap { case (key, ds) =>
+      val maxTx = ds.map(_._4).max
+      val opAtMax = ds.filter(_._4 == maxTx).map(_._5).max // true > false
+      if (opAtMax) Some(key -> ds.filter(_._5).map(_._4).max) else None
+    }
+
   test("resolve equals a brute-force reference model on 60 random logs") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -94,16 +106,10 @@ class PropertySpec extends AnyFunSuite {
       val got = graft.store.Store.resolve(df, Seq("many1"))
         .select("e", "a", "v").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      // reference model: a value is visible iff its latest op is an
-      // assert (same-tx tie → assert wins, matching max_by's struct
-      // tiebreak where op=true > op=false); card-one keeps the visible
-      // value with the greatest last-assert tx (tie → max v, matching
-      // the struct tiebreak on (v, ...))
-      val visible = rows.groupBy(r => (r._1, r._2, r._3)).flatMap { case ((e, a, v), ds) =>
-        val maxTx = ds.map(_._4).max
-        val opAtMax = ds.filter(_._4 == maxTx).map(_._5).max // true > false
-        if (opAtMax) Some(((e, a, v), ds.filter(_._5).map(_._4).max)) else None
-      }
+      // reference model: card-one keeps the visible value with the
+      // greatest last-assert tx (tie → max v, matching the struct
+      // tiebreak on (v, ...))
+      val visible = visibleModel(rows)
       val expected = visible.toSeq.flatMap { case ((e, a, v), lastAssert) =>
         if (a == "many1") Seq((e, a, v))
         else {
@@ -113,6 +119,40 @@ class PropertySpec extends AnyFunSuite {
         }
       }.toSet
       assert(got === expected, s"log: $rows")
+    }
+  }
+
+  test("fulltextHits equals the model's visible values holding every needle token on 60 random logs") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // x/name and x/title are fulltext attrs; x/note is not and never
+    // matches. Values share tokens across case and punctuation.
+    val genDatom: Gen[(String, String, String, Long, Boolean)] = for {
+      e <- Gen.oneOf("e1", "e2", "e3")
+      a <- Gen.oneOf("x/name", "x/title", "x/note")
+      v <- Gen.oneOf("Red Fox", "fox-trot", "Blue fox", "RED, fox!")
+      tx <- Gen.choose(1L, 5L)
+      op <- Gen.oneOf(true, false)
+    } yield (e, a, v, tx, op)
+    val genCase = for {
+      n <- Gen.choose(1, 25)
+      rows <- Gen.listOfN(n, genDatom)
+      needle <- Gen.oneOf("fox", "RED fox", "trot", "blue")
+    } yield (rows, needle)
+    def tokens(s: String) = s.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSet
+    samples(genCase, 60).foreach { case (rows, needle) =>
+      val df = rows.toDF("e", "a", "v", "tx", "op")
+        .withColumn("v_long", lit(null).cast("long"))
+        .withColumn("is_ref", lit(false))
+      val hits = graft.query.Explore.fulltextHits(df, Seq("x/name", "x/title"), needle)
+        .select("e", "a", "v", "tx").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)) -> r.getLong(3))
+      val expected = visibleModel(rows).filter { case ((_, a, v), _) =>
+        a != "x/note" && tokens(needle).subsetOf(tokens(v)) }
+      assert(hits.length === hits.toMap.size, s"one row per (e, a, v); log: $rows")
+      // the (e, a, v) set and each value's last assert tx
+      assert(hits.toMap === expected, s"needle: $needle, log: $rows")
     }
   }
 
@@ -337,7 +377,7 @@ class PropertySpec extends AnyFunSuite {
     assert(back.toSeq === rows.toSeq, "tuple round-trip must be lossless")
   }
 
-  test("exotic value lanes (bytes/bigint/bigdec) round-trip through tuple and scalar encoding") {
+  test("exotic value lanes (bytes/bigint/bigdec) round-trip through tuple encoding") {
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -372,13 +412,6 @@ class PropertySpec extends AnyFunSuite {
         Option(r.getDecimal(2)).map(_.toPlainString),
         Option(r.get(3)).map(_.asInstanceOf[Array[Byte]].toSeq))).sortBy(_._1).toSeq
     assert(back === want, "tuple lane must round-trip bytes/bigint/bigdec losslessly")
-    // scalar lane (encodeScalar/decodeScalar)
-    for ((cn, t) <- Seq(("bi", "bigint"), ("bd", "bigdec"), ("by", "bytes"))) {
-      val rt = df.select(col("id"), graft.store.Store.decodeScalar(
-          graft.store.Store.encodeScalar(col(cn), t), t).as("r"), col(cn))
-        .filter(not(col("r") <=> col(cn))).count()
-      assert(rt == 0L, s"scalar lane $t round-trip lost values")
-    }
   }
 
   test("dropNoHistory: current view preserved; nh rows = exactly the visible datoms") {

@@ -54,7 +54,8 @@ class PullSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("entity").toString)
     store.append(cur.withColumn("v_long", lit(null).cast("long"))
       .withColumn("is_ref", lit(false)).withColumn("tx", lit(1L)))
-    val row = Pull.entity(store, registry, roots("b2")).collect()(0)
+    val row = Pull.pullFrom(store.current(registry), registry, Seq(Pull.PWild), roots("b2"))
+      .collect()(0)
     assert(row.getAs[String]("band_name") === "Beta")
     assert(row.getAs[String]("label_name") === null, "absent attrs are null")
   }
@@ -96,30 +97,14 @@ class PullSpec extends AnyFunSuite {
       .withColumn("v_long", lit(null).cast("long"))
       .withColumn("is_ref", col("a") === "band/label" || col("a") === "album/band")
       .withColumn("tx", lit(1L)))
-    val out = Pull.pullMany(store, registry,
-        "[:band/name {:band/label [:label/name]}]", Seq("b1", "b2"))
+    val out = Pull.pull(store, registry,
+        "[:band/name {:band/label [:label/name]}]", roots("b1", "b2"))
       .collect().map(r => r.getAs[String]("e") -> r).toMap
     assert(out.keySet === Set("b1", "b2"))
     assert(out("b1").getAs[String]("band_name") == "Alpha")
     val lbl = out("b1").getStruct(out("b1").fieldIndex("band_label"))
     assert(lbl.getString(lbl.fieldIndex("label_name")) == "BigLabel")
     assert(out("b2").isNullAt(out("b2").fieldIndex("band_label")))
-  }
-
-  test("pull-many preserves input order, duplicates appear per occurrence") {
-    val store = new graft.store.Store(spark,
-      java.nio.file.Files.createTempDirectory("pullmanyord").toString)
-    store.append(cur
-      .withColumn("v_long", lit(null).cast("long"))
-      .withColumn("is_ref", col("a") === "band/label" || col("a") === "album/band")
-      .withColumn("tx", lit(1L)))
-    val rows = Pull.pullMany(store, registry,
-        "[:band/name]", Seq("b2", "b1", "b2"))
-      .collect()
-    assert(rows.map(_.getAs[String]("e")).toSeq === Seq("b2", "b1", "b2"),
-      rows.map(_.getAs[String]("e")).mkString(","))
-    assert(rows.map(_.getAs[String]("band_name")).toSeq
-      === Seq("Beta", "Alpha", "Beta"))
   }
 
   test("attr options: :default fills missing, :as renames, :limit truncates sorted") {
@@ -156,16 +141,11 @@ class PullSpec extends AnyFunSuite {
     assert(out("b1")._3 == Seq("JAZZ", "ROCK") && out("b2")._3 == null)
   }
 
-  test(":xform can change the column type; custom registered xforms resolve; unknown fails loudly") {
+  test(":xform can change the column type; unknown fails loudly") {
     val typed = Pull.pullFrom(cur, registry,
         Pull.parsePattern("[(:band/name :xform str/length)]"), roots("b1"))
       .collect()(0)
     assert(typed.getLong(typed.fieldIndex("band_name")) == 5L) // 'Alpha'
-    Pull.registerXform("test/reverse", c => reverse(c))
-    val rev = Pull.pullFrom(cur, registry,
-        Pull.parsePattern("[(:band/name :xform test/reverse)]"), roots("b1"))
-      .collect()(0)
-    assert(rev.getString(rev.fieldIndex("band_name")) == "ahplA")
     val ex = intercept[IllegalArgumentException] {
       Pull.pullFrom(cur, registry,
         Pull.parsePattern("[(:band/name :xform no.such/fn)]"), roots("b1")).collect()

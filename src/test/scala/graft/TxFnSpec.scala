@@ -157,27 +157,6 @@ class TxFnSpec extends AnyFunSuite {
       "doc1 keeps one of two copies of A; doc2 keeps only B")
   }
 
-  test("datoms: four index orders, leading components narrow the scan") {
-    val log = datoms(
-      ("e2", "price", "20", 1L), ("e1", "name", "A", 1L),
-      ("e1", "price", "10", 1L))
-      .unionByName(refDatoms(("e3", "owner", "e1", 1L)))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    assert(rows(Store.datoms(log, "eavt")) === Seq(
-      ("e1", "name", "A"), ("e1", "price", "10"),
-      ("e2", "price", "20"), ("e3", "owner", "e1")))
-    assert(rows(Store.datoms(log, "aevt", a = Some("price"))) === Seq(
-      ("e1", "price", "10"), ("e2", "price", "20")))
-    assert(rows(Store.datoms(log, "avet", a = Some("price"))) === Seq(
-      ("e1", "price", "10"), ("e2", "price", "20")))
-    // VAET only walks ref datoms; the string "e1" in price/name never shows
-    assert(rows(Store.datoms(log, "vaet", v = Some("e1"))) === Seq(
-      ("e3", "owner", "e1")))
-    assert(rows(Store.datoms(log, "eavt", e = Some("e2"))) === Seq(
-      ("e2", "price", "20")))
-  }
-
   test("filteredDb: reads through the filtered value never see trimmed datoms") {
     import org.apache.spark.sql.functions.{col => c}
     val log = datoms(
@@ -188,38 +167,7 @@ class TxFnSpec extends AnyFunSuite {
     val got = Store.resolve(trimmed, Seq.empty)
       .select("e", "a").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(got === Set(("e1", "name"), ("e2", "name")))
-    assert(Store.datoms(trimmed, "eavt", e = Some("e1")).count() === 1)
-  }
-
-  test(":db.install/attribute: schema transacted as data drives resolution semantics") {
-    val store = new Store(spark, java.nio.file.Files.createTempDirectory("schemadb").toString)
-    import spark.implicits._
-    import graft.edn.Edn
-    val reg0 = graft.model.SchemaRegistry.fromEdn("[]")
-    // install a card-many attr and a unique-identity attr AS TX DATA:
-    // each definition map expands to plain datoms under `db/…` attrs
-    val defs = Edn.parse(
-      """[{:db/ident :doc/tags, :db/valueType :db.type/string, :db/cardinality :db.cardinality/many}
-        | {:db/ident :doc/gid, :db/valueType :db.type/string, :db/unique :db.unique/identity}]""".stripMargin)
-      .asInstanceOf[Edn.EVec].items
-    val installed = defs.collect { case m: Edn.EMap =>
-      graft.store.Datoms.entityDatoms(m, reg0, "install", 1L,
-        () => sys.error("every definition map is keyed by its :db/ident"))
-    }.flatten
-    store.append(installed.map(d => (d.e, d.a, d.v, d.vLong, d.isRef, d.tx))
-      .toDF("e", "a", "v", "v_long", "is_ref", "tx"))
-    val reg = Store.schemaFromDb(store.current(reg0))
-    assert(reg.isMany("doc/tags"), "installed cardinality surfaces in the derived registry")
-    assert(reg.uniqueIdentityAttrs.contains("doc/gid"))
-    assert(!reg.isMany("doc/gid"))
-    // the derived registry changes RESOLUTION: two tags union under it,
-    // but last-wins under the pre-install default registry
-    store.append(datoms(("d1", "doc/tags", "a", 2L), ("d1", "doc/tags", "b", 3L)))
-    def tags(r: graft.model.SchemaRegistry) =
-      store.current(r).filter(col("e") === "d1" && col("a") === "doc/tags")
-        .select("v").collect().map(_.getString(0)).toSet
-    assert(tags(reg) == Set("a", "b"), "derived card-many unions values")
-    assert(tags(reg0) == Set("b"), "default registry (card-one) last-wins")
+    assert(trimmed.filter(c("e") === "e1").count() === 1)
   }
 
   test("excise: erases history AND inbound refs, leaves an audit datom") {
@@ -294,7 +242,7 @@ class TxFnSpec extends AnyFunSuite {
       "rows 1 and 3 are collateral rejections: clean rows in a failed tx")
   }
 
-  test("indexPull pages in (value, entity) order; dbStats counts per attr") {
+  test("indexPull pages in (value, entity) order") {
     import spark.implicits._
     val cur = Seq(
       ("e1", "score", "30", 30L), ("e2", "score", "10", 10L),
@@ -315,9 +263,6 @@ class TxFnSpec extends AnyFunSuite {
     // value order, e-string tiebreak, page cut after 3: e2(10) e4(10) e3(20)
     assert(page.toSeq == Seq(("e2", 10L, "B"), ("e4", 10L, "D"), ("e3", 20L, "C")),
       page.mkString(", "))
-    val stats = Store.dbStats(cur).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(stats == Map("score" -> ((4L, 4L)), "name" -> ((4L, 4L))), stats.toString)
   }
 
   test("txInstant: date→tx boundaries (exact instant, between txes, before first)") {
@@ -340,14 +285,6 @@ class TxFnSpec extends AnyFunSuite {
     // before the first tx → -1, and an as-of there is the empty db
     assert(Store.txAtInstant(log, date("2019-12-31T23:59:59Z")) == -1L)
     assert(Store.resolve(log.filter(col("tx") <= -1L), Seq.empty).count() == 0)
-  }
-
-  test("basisT: latest tx of the database value; 0 on an empty store") {
-    val st = new Store(spark,
-      java.nio.file.Files.createTempDirectory("basist").toString)
-    assert(st.basisT === 0L)
-    st.append(datoms(("e1", "x/a", "1", 3L), ("e2", "x/a", "2", 7L)))
-    assert(st.basisT === 7L)
   }
 
   test(":db/tupleAttrs auto-maintenance: derive on touch, supersede on change, retract when sources go") {
@@ -477,7 +414,8 @@ class TxFnSpec extends AnyFunSuite {
     // retract tag "a" at tx 3
     st.append(datoms(("d1", "dev/tags", "a", 3L)).withColumn("op", lit(false)))
     st.append(datoms(("d1", "dev/heartbeat", "t3", 4L)))
-    val hist = st.history(reg).select("e", "a", "v", "op")
+    def history = Store.dropNoHistory(st.eav, Seq("dev/heartbeat", "dev/tags"), Seq("dev/tags"))
+    val hist = history.select("e", "a", "v", "op")
     val hb = hist.filter(col("a") === "dev/heartbeat").collect()
     // superseded heartbeats t1/t2 are GONE; only the current t3 row remains
     assert(hb.map(_.getString(2)).toSeq === Seq("t3"), hb.mkString(","))
@@ -494,26 +432,15 @@ class TxFnSpec extends AnyFunSuite {
     assert(cur === Set(("d1", "dev/heartbeat", "t3"), ("d1", "dev/name", "beta"),
       ("d1", "dev/tags", "b")), cur.toString)
     // the registry-less raw log still has everything (the durable record)
-    assert(st.history.filter(col("a") === "dev/heartbeat").count() === 3)
+    assert(st.eav.filter(col("a") === "dev/heartbeat").count() === 3)
     // retract-then-REASSERT: the live value survives with its later tx
     // (only superseded/retracted values vanish, not the attr)
     st.append(datoms(("d1", "dev/heartbeat", "t3", 5L)).withColumn("op", lit(false)))
     st.append(datoms(("d1", "dev/heartbeat", "t9", 6L)))
-    val hb2 = st.history(reg).filter(col("a") === "dev/heartbeat")
+    val hb2 = history.filter(col("a") === "dev/heartbeat")
       .select("v", "tx").collect()
     assert(hb2.map(r => (r.getString(0), r.getLong(1))).toSeq === Seq(("t9", 6L)),
       hb2.mkString(","))
-  }
-
-  test("d/squuid: time-prefixed uuids sort by creation second; time round-trips") {
-    val t1 = 1700000000000L
-    val u1 = Store.squuid(t1)
-    val u2 = Store.squuid(t1 + 5000)
-    assert(Store.squuidTimeMillis(u1) === t1, "second-precision round-trip")
-    assert(Store.squuidTimeMillis(u2) === t1 + 5000)
-    assert(u1.toString < u2.toString, "later second sorts later as text")
-    assert(u1.version === 4 && u1.variant === 2, "well-formed RFC-4122")
-    assert(Store.squuid(t1) !== Store.squuid(t1), "same second still unique")
   }
 
   test("renderTuple guard also covers composite (deriveTupleAttr) tuples") {
@@ -559,21 +486,6 @@ class TxFnSpec extends AnyFunSuite {
       .withColumn("v_long", lit(-5L)).withColumn("op", lit(false))
     assert(Validate.attrPreds(retraction, preds)
       .select(col("errors")).collect()(0).getSeq[String](0).isEmpty)
-  }
-
-  test(":db.attr/preds: tx-grain variant aborts the whole transaction (Datomic semantics)") {
-    import graft.ops.Validate
-    val preds = Map("acct/balance" -> Seq("non-negative" -> (col("v_long") >= 0L)))
-    val rows = datoms(
-      ("e1", "acct/balance", "10", 1L),  // tx 1: clean
-      ("e2", "acct/balance", "-1", 2L),  // tx 2: violates
-      ("e3", "acct/balance", "20", 2L))  // tx 2: clean row, dies with its tx
-      .withColumn("v_long", col("v").cast("long"))
-    val out = Validate.attrPredsTx(rows, col("tx"), preds)
-      .select(col("e"), col("tx_ok")).collect()
-      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    assert(out === Map("e1" -> true, "e2" -> false, "e3" -> false),
-      s"collateral row e3 must fall with its transaction: $out")
   }
 
   test(":db/fn: custom inc-balance installs next to builtins and transacts through a store") {
@@ -639,32 +551,6 @@ class TxFnSpec extends AnyFunSuite {
       .select("v").collect()(0).getString(0) === "50")
   }
 
-  test(":db.attr/preds: the loader path drops rejected datoms and counts them") {
-    val registry = graft.model.SchemaRegistry.load(MbrainzFixture.schemaPath)
-    val st = new Store(spark,
-      java.nio.file.Files.createTempDirectory("loaderpreds").toString)
-    // predicate: artist names must not start with lowercase 'z' —
-    // fails for one artist in the fixture batch below
-    val preds = Map("artist/name" -> Seq(
-      "no-z-names" -> (!col("v").startsWith("z"))))
-    val loader = new graft.pipeline.Loader(spark, registry, st, attrPreds = preds)
-    val line =
-      """{:batch-ident {:db/id "datomic.tx", :mbrainz.initial-import/batch-id "artists-9"}, :data [""" +
-        """{:artist/gid #uuid "77777777-7777-4777-8777-777777777777", :artist/name "Good", :artist/sortName "G"} """ +
-        """{:artist/gid #uuid "88888888-8888-4888-8888-888888888888", :artist/name "zBad", :artist/sortName "Z"}]}"""
-    val f = java.nio.file.Files.createTempFile("preds", ".edn")
-    java.nio.file.Files.write(f, line.getBytes)
-    val stats = loader.loadBatchFile("artists", f.toString)
-    assert(stats.rejected === 1L, s"one artist/name datom must be rejected: $stats")
-    val names = st.eav.filter(col("a") === "artist/name")
-      .select("v").collect().map(_.getString(0)).toSet
-    assert(names === Set("Good"), "the violating name must not land")
-    // the rejected entity's OTHER datoms still landed (per-datom preds,
-    // not per-entity — Datomic's attr preds reject the offending datom's tx;
-    // the engine's error-as-data grain is the datom, documented in Validate)
-    assert(st.eav.filter(col("a") === "artist/sortName").count() === 2)
-  }
-
   test("loader stamps one txInstant per tx; as-of by date reads through it") {
     val registry = graft.model.SchemaRegistry.load(MbrainzFixture.schemaPath)
     val st = new Store(spark,
@@ -681,9 +567,9 @@ class TxFnSpec extends AnyFunSuite {
     assert(instants.length == 2, "one txInstant per tx (import-schema + artists-1)")
     assert(instants.forall(r => r.getString(r.fieldIndex("e")).startsWith("tx|")))
     // a horizon before the load sees nothing; one after sees the artist
-    assert(st.asOf(registry, st.txAtInstant(before))
+    assert(st.asOf(registry, Store.txAtInstant(st.eav, before))
       .filter(col("a") === "artist/name").count() == 0)
-    assert(st.asOf(registry, st.txAtInstant(new java.util.Date()))
+    assert(st.asOf(registry, Store.txAtInstant(st.eav, new java.util.Date()))
       .filter(col("a") === "artist/name").count() == 1)
   }
 

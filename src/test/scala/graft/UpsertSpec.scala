@@ -69,13 +69,13 @@ class UpsertSpec extends AnyFunSuite {
     assert(nameAt(store.current(registry)) == Seq("New Name"))
     assert(nameAt(store.asOf(registry, txs(0))) == Seq("Old Name"),
       "as-of the first tx must see the superseded value")
-    assert(nameAt(store.since(txs(0))) == Seq("New Name"),
+    assert(nameAt(store.eav.filter(col("tx") > txs(0))) == Seq("New Name"),
       "since the first tx must carry only the re-assertion")
-    assert(store.history.filter(col("e") === e && col("a") === "release/name").count() == 2)
+    assert(store.eav.filter(col("e") === e && col("a") === "release/name").count() == 2)
     // tx-range: half-open [from, until) over the log
-    assert(store.txRange(txs(0), txs(0) + 1)
+    assert(Store.txRange(store.eav, txs(0), txs(0) + 1)
       .filter(col("e") === e && col("a") === "release/name").count() == 1)
-    assert(store.txRange(txs(1) + 1, Long.MaxValue)
+    assert(Store.txRange(store.eav, txs(1) + 1, Long.MaxValue)
       .filter(col("e") === e && col("a") === "release/name").count() == 0)
   }
 
@@ -108,14 +108,14 @@ class UpsertSpec extends AnyFunSuite {
     store.append(datoms(("b1", "release/name", "Old", 5L)).withColumn("op", lit(false)))
     assert(vals(store.current(registry), "release/name") == Set("New"),
       "stale retraction must not hide the newer assert")
-    assert(store.history.filter(col("e") === "b1").count() == 7, "history keeps everything")
-    // Datalog view selection: run = history, runCurrent = resolved,
-    // runAsOf = horizon before the retraction
+    assert(store.eav.filter(col("e") === "b1").count() == 7, "history keeps everything")
+    // Datalog view selection: runOn(eav) = history, runCurrent =
+    // resolved, runAsOf = horizon before the retraction
     val q = graft.query.Datalog.parse("[:find ?n :where [?e :release/name ?n]]")
     def names(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getString(0)).toSet
     assert(names(graft.query.Datalog.runCurrent(store, registry, q)) == Set("New"))
-    assert(names(graft.query.Datalog.run(store, registry, q)) == Set("Old", "New"))
+    assert(names(graft.query.Datalog.runOn(store.eav, registry, q, Map.empty)) == Set("Old", "New"))
     assert(names(graft.query.Datalog.runAsOf(store, registry, 2L, q)) == Set("Old"))
   }
 
